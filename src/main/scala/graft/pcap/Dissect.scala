@@ -139,21 +139,41 @@ object Dissect {
       * the first occurrence of numeric fields). */
     var nested = false
 
+    /** Ids whose `kinds` went from 0 to non-zero since the last clear —
+      * every set pushes on first write, so a pooled vector resets only the
+      * slots a packet wrote, not all of the glossary. */
+    private var written = new Array[Int](64)
+    private var nWritten = 0
+    private def wrote(i: Int): Unit = {
+      if (nWritten == written.length) written = java.util.Arrays.copyOf(written, nWritten * 2)
+      written(nWritten) = i
+      nWritten += 1
+    }
+
     def clear(): Unit = {
-      java.util.Arrays.fill(objs, null)
-      java.util.Arrays.fill(kinds, 0.toByte)
+      var j = 0
+      while (j < nWritten) {
+        val i = written(j)
+        objs(i) = null
+        kinds(i) = 0
+        j += 1
+      }
+      nWritten = 0
     }
 
     def set(i: Int, value: Long): Unit = {
       if (i < 0 || (nested && kinds(i) != 0)) return // outer occurrence wins
+      if (kinds(i) == 0) wrote(i)
       longs(i) = value; kinds(i) = 2
     }
     def set(i: Int, value: Boolean): Unit = {
       if (i < 0 || (nested && kinds(i) != 0)) return
+      if (kinds(i) == 0) wrote(i)
       longs(i) = if (value) 1L else 0L; kinds(i) = 3
     }
     def set(i: Int, value: Double): Unit = {
       if (i < 0 || (nested && kinds(i) != 0)) return
+      if (kinds(i) == 0) wrote(i)
       longs(i) = java.lang.Double.doubleToRawLongBits(value); kinds(i) = 4
     }
     /** Object (string) store — also the landing spot for values that are
@@ -167,7 +187,10 @@ object Dissect {
         case d: java.lang.Double  => set(i, d.doubleValue)
         case x: java.lang.Integer => set(i, x.longValue)
         case _ =>
-          if (kinds(i) == 0 || !nested) { objs(i) = value; kinds(i) = 1 }
+          if (kinds(i) == 0 || !nested) {
+            if (kinds(i) == 0) wrote(i)
+            objs(i) = value; kinds(i) = 1
+          }
           else (objs(i), value) match {
             case (p: String, s: String) => objs(i) = p + "," + s
             case _ => // numeric/bool outer occurrence wins
@@ -260,6 +283,10 @@ object Dissect {
       buf(len + 3) = 0x92.toByte; buf(len + 4) = ' '
       len += 5
     }
+    /** Decimal render of `v`, with a minus sign when negative. */
+    def signed(v: Int): Unit =
+      if (v < 0) { ascii("-"); num(-v.toLong) } else num(v)
+    /** Decimal render of a non-negative value (negatives render as "0"). */
     def num(v: Long): Unit = {
       if (v <= 0) { ensure(1); buf(len) = '0'; len += 1; return }
       ensure(20)
@@ -558,16 +585,7 @@ object Dissect {
     * than the rest of a packet's dissection combined on the hot path. */
   private val hex2: Array[String] = Array.tabulate(256)(i => f"$i%02x")
 
-  private def macStr(d: Array[Byte], o: Int): String = {
-    val sb = new java.lang.StringBuilder(17)
-    var i = o
-    while (i < o + 6) {
-      if (i > o) sb.append(':')
-      sb.append(hex2(d(i) & 0xff))
-      i += 1
-    }
-    sb.toString
-  }
+  private def macStr(d: Array[Byte], o: Int): String = hexBytes(d, o, 6)
 
   private def ipv4Str(d: Array[Byte], o: Int): String =
     s"${u8(d, o)}.${u8(d, o + 1)}.${u8(d, o + 2)}.${u8(d, o + 3)}"
@@ -791,15 +809,23 @@ object Dissect {
     n
   }
 
+  private val hexDigits: Array[Byte] = "0123456789abcdef".getBytes("ISO-8859-1")
+
+  /** "0a:1b:…" — one Latin-1 byte array, no per-byte builder appends
+    * (payload columns render every captured byte of every packet). */
   private def hexBytes(d: Array[Byte], off: Int, len: Int): String = {
-    val sb = new java.lang.StringBuilder(len * 3)
+    if (len == 0) return ""
+    val out = new Array[Byte](len * 3 - 1)
     var i = 0
     while (i < len) {
-      if (i > 0) sb.append(':')
-      sb.append(hex2(d(off + i) & 0xff))
+      val b = d(off + i) & 0xff
+      val o = i * 3
+      if (i > 0) out(o - 1) = ':'
+      out(o) = hexDigits(b >> 4)
+      out(o + 1) = hexDigits(b & 0xf)
       i += 1
     }
-    sb.toString
+    new String(out, java.nio.charset.StandardCharsets.ISO_8859_1)
   }
 
   // --- main entry --------------------------------------------------------
@@ -1265,7 +1291,7 @@ object Dissect {
     }
   }
 
-  private val wlanMgmtNames: Map[Int, String] = Map(
+  private lazy val wlanMgmtNames: Map[Int, String] = Map(
     0 -> "Association Request", 1 -> "Association Response",
     4 -> "Probe Request", 5 -> "Probe Response", 8 -> "Beacon",
     10 -> "Disassociate", 11 -> "Authentication", 12 -> "Deauthentication")
@@ -1520,7 +1546,7 @@ object Dissect {
     else s"Generic Routing Encapsulation (0x${"%04x".format(proto)})"
   }
 
-  private val nhrpOpNames = Map(
+  private lazy val nhrpOpNames = Map(
     1 -> "Resolution Request", 2 -> "Resolution Reply",
     3 -> "Registration Request", 4 -> "Registration Reply",
     5 -> "Purge Request", 6 -> "Purge Reply", 7 -> "Error Indication")
@@ -1829,7 +1855,7 @@ object Dissect {
     }
   }
 
-  private val ntpModes = Array("reserved", "symmetric active", "symmetric passive",
+  private lazy val ntpModes = Array("reserved", "symmetric active", "symmetric passive",
     "client", "server", "broadcast", "control", "private")
 
   /** NTP (RFC 5905) over UDP/123: flags byte + stratum. Accepts any
@@ -1860,6 +1886,31 @@ object Dissect {
     s"NTP Version $vn, ${ntpModes(mode)}"
   }
 
+  // --- TCP ---------------------------------------------------------------
+  //
+  // One TCP segment runs through stages, each its own method so that every
+  // one stays far below HotSpot's 8,000-byte compile limit (MethodSizeSpec):
+  // options, sequence unwrap, analysis flags, desegment delivery, the
+  // app-layer claim chain (self-framed protocols, then the port ladders)
+  // and the info column. Per-packet values travel as parameters.
+
+  /** [[tcpAnalysis]] result bits (plus OutOfOrder from delivery). */
+  private final val SeqNotAdvanced = 1
+  private final val FastRetrans = 2
+  private final val SpuriousRetrans = 4
+  private final val Retrans = 8
+  private final val WindowFull = 16
+  private final val OutOfOrder = 32
+
+  /** [[tcpDeliver]] result: the segment arrived ahead of a hole and waits
+    * in the out-of-order buffer. */
+  private val OooHeld: Array[Byte] = new Array[Byte](0)
+
+  /** App-layer result: a dissector owns the run (an HTTP/2 conversation)
+    * but renders no info of its own — no later dissector may try it, and
+    * the plain TCP info applies. */
+  private val ClaimedNoInfo: String = new String("claimed-no-info")
+
   private def dissectTcp(
       d: Array[Byte], off: Int, ipEnd: Int,
       srcIp: String, dstIp: String,
@@ -1880,10 +1931,7 @@ object Dissect {
 
     val fin = (flags & 0x01) != 0
     val syn = (flags & 0x02) != 0
-    val rst = (flags & 0x04) != 0
-    val psh = (flags & 0x08) != 0
     val ack = (flags & 0x10) != 0
-    val urg = (flags & 0x20) != 0
 
     val (key, isFwd) = ConvKey.canonical(srcIp, sp, dstIp, dp)
     val conv = tracker.tcpConv(key)
@@ -1898,61 +1946,15 @@ object Dissect {
     v.set(Id_tcp_time_delta, if (conv.prevTsMicros < 0) 0L else nowUs - conv.prevTsMicros)
     conv.prevTsMicros = nowUs
 
-    // parse options (also records window scale into conversation state)
-    var mss = -1L
-    var wsShift = -1
-    var sackPerm = false
-    var tsVal = -1L
-    var tsEcr = -1L
-    val optParts = mutable.ArrayBuffer.empty[String]
-    var o = off + 20
-    val optEnd = off + hdrLen
-    var brk = false
-    while (o < optEnd && o < d.length && !brk) {
-      u8(d, o) match {
-        case 0 => brk = true
-        case 1 => o += 1 // NOP
-        case kind =>
-          if (o + 1 >= d.length) brk = true
-          else {
-            val l = u8(d, o + 1)
-            if (l < 2 || o + l > optEnd) brk = true
-            else {
-              kind match {
-                case 2 if l == 4 => mss = u16(d, o + 2).toLong; optParts += s"MSS=$mss"
-                case 3 if l == 3 => wsShift = u8(d, o + 2); optParts += s"WS=${1 << wsShift}"
-                case 4 => sackPerm = true; optParts += "SACK_PERM"
-                case 8 if l == 10 =>
-                  tsVal = u32(d, o + 2); tsEcr = u32(d, o + 6)
-                  optParts += s"TSval=$tsVal TSecr=$tsEcr"
-                case _ =>
-              }
-              o += l
-            }
-          }
-      }
-    }
+    // options (the window scale offered in a SYN goes into conversation state)
+    val wsShift = tcpOptions(d, off + 20, off + hdrLen, v, null)
     if (syn && wsShift >= 0) conv.wsShift(dir) = wsShift
 
     val relSeq = (rawSeq - conv.isn(dir)) & 0xffffffffL
-    // Serial-number unwrap (RFC 1982 style): conversation analysis state
-    // (reassembly cursor, ooo buffer keys, highest-nxtseq, keep-alive
-    // compare) lives in a monotonically EXTENDED sequence space, so a
-    // direction that transfers more than 4 GiB doesn't alias new data into
-    // retransmission territory when the 32-bit space wraps. Displayed
-    // tcp.seq/nxtseq stay 32-bit relative, matching tshark.
-    val SeqMod = 1L << 32
-    var extSeq = conv.seqEpoch(dir) * SeqMod + relSeq
-    if (conv.lastExtSeq(dir) >= 0) {
-      if (extSeq + (SeqMod >> 1) < conv.lastExtSeq(dir)) {
-        conv.seqEpoch(dir) += 1; extSeq += SeqMod // wrapped forward
-      } else if (extSeq > conv.lastExtSeq(dir) + (SeqMod >> 1) && extSeq >= SeqMod) {
-        extSeq -= SeqMod // stale pre-wrap straggler
-      }
-    }
-    if (extSeq > conv.lastExtSeq(dir)) conv.lastExtSeq(dir) = extSeq
+    val extSeq = unwrapSeq(conv, dir, relSeq)
     val otherIsn = conv.isn(1 - dir)
-    val relAck = if (ack && otherIsn >= 0) (rawAck - otherIsn) & 0xffffffffL else 0L
+    val hasAck = ack && otherIsn >= 0
+    val relAck = if (hasAck) (rawAck - otherIsn) & 0xffffffffL else 0L
     val winScale =
       if (syn) 1L
       else if (conv.scalingActive) (1L << conv.wsShift(dir))
@@ -1969,13 +1971,139 @@ object Dissect {
     v.set(Id_tcp_nxtseq, relSeq + segLen + (if (syn || fin) 1 else 0))
     v.set(Id_tcp_ack, relAck)
     v.set(Id_tcp_ack_raw, rawAck)
-    val nxtExt = extSeq + segLen + (if (syn || fin) 1 else 0)
     val pstart = off + hdrLen
     val plen = math.min(segLen, math.max(0, d.length - pstart))
     // SYN consumes one sequence number: data starts at extSeq + 1, so the
     // reassembly cursor can anchor even if the first data segment arrives
     // out of order
     if (tracker.desegment && syn && conv.expSeq(dir) < 0) conv.expSeq(dir) = extSeq + 1
+    var analysis = tcpAnalysis(conv, dir, tracker, v, flags, rawSeq, rawAck, rawWin,
+      relSeq, extSeq, segLen)
+
+    v.set(Id_tcp_hdr_len, hdrLen.toLong)
+    v.set(Id_tcp_flags, flags.toLong)
+    v.set(Id_tcp_flags_fin, fin)
+    v.set(Id_tcp_flags_syn, syn)
+    v.set(Id_tcp_flags_reset, (flags & 0x04) != 0)
+    v.set(Id_tcp_flags_push, (flags & 0x08) != 0)
+    v.set(Id_tcp_flags_ack, ack)
+    v.set(Id_tcp_flags_urg, (flags & 0x20) != 0)
+    v.set(Id_tcp_window_size_value, rawWin.toLong)
+    v.set(Id_tcp_window_size, calcWin)
+    v.set(Id_tcp_window_size_scalefactor,
+      if (syn) -1L else if (conv.scalingActive) winScale else -2L)
+    v.set(Id_tcp_checksum, u16(d, off + 16).toLong)
+    v.set(Id_tcp_urgent_pointer, u16(d, off + 18).toLong)
+    if (wanted.payloads && segLen > 0)
+      v.set(Id_tcp_payload, hexBytes(d, off + hdrLen, math.min(segLen, d.length - off - hdrLen)))
+
+    // Application-layer input. Plain per-packet scan: the raw segment.
+    // Under desegment: the seq-ordered run this packet makes available
+    // (tcpDeliver).
+    var appBuf: Array[Byte] = d
+    var appOff = pstart
+    var appLen = plen
+    if (tracker.desegment && plen > 0) {
+      val run =
+        if ((analysis & SeqNotAdvanced) != 0) null // any retransmission flavor: no new bytes
+        else tcpDeliver(d, pstart, plen, segLen, extSeq, conv, dir)
+      if (run eq OooHeld) { analysis |= OutOfOrder; appLen = 0 }
+      else if (run == null) appLen = 0
+      else if (run ne d) { appBuf = run; appOff = 0; appLen = run.length }
+    }
+    if ((analysis & OutOfOrder) != 0) v.set(Id_tcp_analysis_out_of_order, "1")
+
+    val appInfo =
+      if (appLen > 0) tcpApp(appBuf, appOff, appLen, sp, dp, conv, dir, v, protos, tracker, wanted)
+      else null
+    if (appInfo != null) appInfo
+    else if (!wanted.info) ""
+    else tcpInfo(d, off, hdrLen, sp, dp, flags, relSeq, if (hasAck) relAck else -1L, calcWin,
+      segLen, analysis, tracker, wanted)
+  }
+
+  /** Walks the TCP option list in [from, until). Without `ib` it records
+    * MSS, window scale and timestamps as fields and returns the window-scale
+    * shift (-1 when absent); with `ib` it appends the info column's option
+    * text instead (" MSS=1460 WS=128 SACK_PERM TSval=… TSecr=…"), so the
+    * text is only built when info is rendered. */
+  private def tcpOptions(d: Array[Byte], from: Int, until: Int, v: FieldVec, ib: InfoBuf): Int = {
+    var mss = -1L
+    var wsShift = -1
+    var tsVal = -1L
+    var tsEcr = -1L
+    var o = from
+    var brk = false
+    while (o < until && o < d.length && !brk) {
+      u8(d, o) match {
+        case 0 => brk = true
+        case 1 => o += 1 // NOP
+        case kind =>
+          if (o + 1 >= d.length) brk = true
+          else {
+            val l = u8(d, o + 1)
+            if (l < 2 || o + l > until) brk = true
+            else {
+              kind match {
+                case 2 if l == 4 =>
+                  mss = u16(d, o + 2).toLong
+                  if (ib != null) { ib.ascii(" MSS="); ib.num(mss) }
+                case 3 if l == 3 =>
+                  wsShift = u8(d, o + 2)
+                  if (ib != null) { ib.ascii(" WS="); ib.signed(1 << wsShift) }
+                case 4 => if (ib != null) ib.ascii(" SACK_PERM")
+                case 8 if l == 10 =>
+                  tsVal = u32(d, o + 2); tsEcr = u32(d, o + 6)
+                  if (ib != null) { ib.ascii(" TSval="); ib.num(tsVal); ib.ascii(" TSecr="); ib.num(tsEcr) }
+                case _ =>
+              }
+              o += l
+            }
+          }
+      }
+    }
+    if (ib == null) {
+      if (mss >= 0) v.set(Id_tcp_options_mss_val, mss)
+      if (wsShift >= 0) v.set(Id_tcp_options_wscale_shift, wsShift.toLong)
+      if (tsVal >= 0) {
+        v.set(Id_tcp_options_timestamp_tsval, tsVal)
+        v.set(Id_tcp_options_timestamp_tsecr, tsEcr)
+      }
+    }
+    wsShift
+  }
+
+  /** Serial-number unwrap (RFC 1982 style): conversation analysis state
+    * (reassembly cursor, ooo buffer keys, highest-nxtseq, keep-alive
+    * compare) lives in a monotonically EXTENDED sequence space, so a
+    * direction that transfers more than 4 GiB doesn't alias new data into
+    * retransmission territory when the 32-bit space wraps. Displayed
+    * tcp.seq/nxtseq stay 32-bit relative, matching tshark. */
+  private def unwrapSeq(conv: TcpConv, dir: Int, relSeq: Long): Long = {
+    val SeqMod = 1L << 32
+    var extSeq = conv.seqEpoch(dir) * SeqMod + relSeq
+    if (conv.lastExtSeq(dir) >= 0) {
+      if (extSeq + (SeqMod >> 1) < conv.lastExtSeq(dir)) {
+        conv.seqEpoch(dir) += 1; extSeq += SeqMod // wrapped forward
+      } else if (extSeq > conv.lastExtSeq(dir) + (SeqMod >> 1) && extSeq >= SeqMod) {
+        extSeq -= SeqMod // stale pre-wrap straggler
+      }
+    }
+    if (extSeq > conv.lastExtSeq(dir)) conv.lastExtSeq(dir) = extSeq
+    extSeq
+  }
+
+  /** Wireshark tcp.analysis.* flags for one segment, updating the
+    * direction's ACK and highest-nxtseq state. Returns the SeqNotAdvanced,
+    * FastRetrans, SpuriousRetrans, Retrans and WindowFull bits. */
+  private def tcpAnalysis(conv: TcpConv, dir: Int, tracker: Tracker, v: FieldVec,
+      flags: Int, rawSeq: Long, rawAck: Long, rawWin: Int, relSeq: Long, extSeq: Long,
+      segLen: Int): Int = {
+    val fin = (flags & 0x01) != 0
+    val syn = (flags & 0x02) != 0
+    val rst = (flags & 0x04) != 0
+    val ack = (flags & 0x10) != 0
+    val nxtExt = extSeq + segLen + (if (syn || fin) 1 else 0)
     // retransmission: under desegment the rule is exact — a data segment
     // is a retransmission iff it brings no bytes the stream hasn't already
     // consumed (below expSeq) or buffered (ooo). Without desegment, the
@@ -2042,784 +2170,895 @@ object Dissect {
       }
     if (windowFull) v("tcp.analysis.window_full") = "1"
     if (nxtExt > conv.maxNxtSeq(dir)) conv.maxNxtSeq(dir) = nxtExt
+    (if (seqNotAdvanced) SeqNotAdvanced else 0) | (if (isFastRetrans) FastRetrans else 0) |
+      (if (isSpurious) SpuriousRetrans else 0) | (if (isRetrans) Retrans else 0) |
+      (if (windowFull) WindowFull else 0)
+  }
 
-    v.set(Id_tcp_hdr_len, hdrLen.toLong)
-    v.set(Id_tcp_flags, flags.toLong)
-    v.set(Id_tcp_flags_fin, fin)
-    v.set(Id_tcp_flags_syn, syn)
-    v.set(Id_tcp_flags_reset, rst)
-    v.set(Id_tcp_flags_push, psh)
-    v.set(Id_tcp_flags_ack, ack)
-    v.set(Id_tcp_flags_urg, urg)
-    v.set(Id_tcp_window_size_value, rawWin.toLong)
-    v.set(Id_tcp_window_size, calcWin)
-    v.set(Id_tcp_window_size_scalefactor,
-      if (syn) -1L else if (conv.scalingActive) winScale else -2L)
-    v.set(Id_tcp_checksum, u16(d, off + 16).toLong)
-    v.set(Id_tcp_urgent_pointer, u16(d, off + 18).toLong)
-    if (mss >= 0) v.set(Id_tcp_options_mss_val, mss)
-    if (wsShift >= 0) v.set(Id_tcp_options_wscale_shift, wsShift.toLong)
-    if (tsVal >= 0) { v.set(Id_tcp_options_timestamp_tsval, tsVal); v.set(Id_tcp_options_timestamp_tsecr, tsEcr) }
-    if (wanted.payloads && segLen > 0)
-      v.set(Id_tcp_payload, hexBytes(d, off + hdrLen, math.min(segLen, d.length - off - hdrLen)))
-
-    // Application-layer input. Plain per-packet scan: the raw segment.
-    // Under desegment: the seq-ordered run this packet makes available —
-    // retransmitted bytes are dropped (already consumed or buffered),
-    // segments ahead of a hole wait in the per-direction ooo buffer and are
-    // delivered when the hole fills, so the completing PDU is reported on
-    // the hole-filling packet (tshark reassembly semantics).
-    var appBuf: Array[Byte] = d
-    var appOff = pstart
-    var appLen = plen
-    var outOfOrder = false
-    if (tracker.desegment && plen > 0) {
-      if (seqNotAdvanced) appLen = 0 // any retransmission flavor: no new bytes
-      else {
-        if (conv.expSeq(dir) < 0) conv.expSeq(dir) = extSeq // anchor at first data
-        if (extSeq > conv.expSeq(dir) && conv.oooBytes(dir) + plen > MaxCarry) {
-          // bound blown waiting for a hole that never fills: abandon the
-          // stream prefix and resync the cursor at this segment
-          conv.ooo(dir).clear(); conv.oooBytes(dir) = 0
-          conv.carry(dir) = Array.emptyByteArray; conv.carryKind(dir) = 0
-          conv.expSeq(dir) = extSeq
-        }
-        val exp = conv.expSeq(dir)
-        val segEnd = extSeq + plen
-        if (extSeq > exp) {
-          // ahead of a hole: buffer, nothing reaches the app layer yet
-          outOfOrder = true
-          appLen = 0
-          val m = conv.ooo(dir)
-          if (!m.containsKey(extSeq)) {
-            m.put(extSeq, java.util.Arrays.copyOfRange(d, pstart, pstart + plen))
-            conv.oooBytes(dir) += plen
+  /** Desegment delivery of a segment that brings new bytes: retransmitted
+    * bytes are dropped (already consumed or buffered), segments ahead of a
+    * hole wait in the per-direction ooo buffer and are delivered when the
+    * hole fills, so the completing PDU is reported on the hole-filling
+    * packet (tshark reassembly semantics). Returns `d` itself when the
+    * segment is the next in-order run (zero copy), a new buffer when
+    * buffered runs join it, [[OooHeld]] when it waits ahead of a hole, and
+    * null when it brings nothing past the cursor. */
+  private def tcpDeliver(d: Array[Byte], pstart: Int, plen: Int, segLen: Int, extSeq: Long,
+      conv: TcpConv, dir: Int): Array[Byte] = {
+    if (conv.expSeq(dir) < 0) conv.expSeq(dir) = extSeq // anchor at first data
+    if (extSeq > conv.expSeq(dir) && conv.oooBytes(dir) + plen > MaxCarry) {
+      // bound blown waiting for a hole that never fills: abandon the
+      // stream prefix and resync the cursor at this segment
+      conv.ooo(dir).clear(); conv.oooBytes(dir) = 0
+      conv.carry(dir) = Array.emptyByteArray; conv.carryKind(dir) = 0
+      conv.expSeq(dir) = extSeq
+    }
+    val exp = conv.expSeq(dir)
+    val segEnd = extSeq + plen
+    var run: Array[Byte] = null
+    if (extSeq > exp) {
+      // ahead of a hole: buffer, nothing reaches the app layer yet
+      run = OooHeld
+      val m = conv.ooo(dir)
+      if (!m.containsKey(extSeq)) {
+        m.put(extSeq, java.util.Arrays.copyOfRange(d, pstart, pstart + plen))
+        conv.oooBytes(dir) += plen
+      }
+    } else if (segEnd > exp) { // (at or below the cursor: already-consumed bytes only)
+      val skip = (exp - extSeq).toInt
+      val m = conv.ooo(dir)
+      if (m.isEmpty && skip == 0) {
+        conv.expSeq(dir) = segEnd // common case: in order, zero-copy
+        run = d
+      } else {
+        // deliver this segment's new bytes plus buffered runs that are
+        // now contiguous with the advancing cursor
+        val bb = new java.io.ByteArrayOutputStream(plen - skip + conv.oooBytes(dir))
+        bb.write(d, pstart + skip, plen - skip)
+        var cur = segEnd
+        var e = m.firstEntry()
+        while (e != null && e.getKey <= cur) {
+          val k = e.getKey.longValue(); val p = e.getValue
+          m.pollFirstEntry(); conv.oooBytes(dir) -= p.length
+          if (k + p.length > cur) {
+            val s = (cur - k).toInt
+            bb.write(p, s, p.length - s)
+            cur = k + p.length
           }
-        } else if (segEnd <= exp) {
-          appLen = 0 // only already-consumed bytes (partial overlap below cursor)
-        } else {
-          val skip = (exp - extSeq).toInt
-          val m = conv.ooo(dir)
-          if (m.isEmpty && skip == 0) {
-            conv.expSeq(dir) = segEnd // common case: in order, zero-copy
-          } else {
-            // deliver this segment's new bytes plus buffered runs that are
-            // now contiguous with the advancing cursor
-            val bb = new java.io.ByteArrayOutputStream(plen - skip + conv.oooBytes(dir))
-            bb.write(d, pstart + skip, plen - skip)
-            var cur = segEnd
-            var e = m.firstEntry()
-            while (e != null && e.getKey <= cur) {
-              val k = e.getKey.longValue(); val p = e.getValue
-              m.pollFirstEntry(); conv.oooBytes(dir) -= p.length
-              if (k + p.length > cur) {
-                val s = (cur - k).toInt
-                bb.write(p, s, p.length - s)
-                cur = k + p.length
-              }
-              e = m.firstEntry()
-            }
-            conv.expSeq(dir) = cur
-            appBuf = bb.toByteArray; appOff = 0; appLen = appBuf.length
-          }
+          e = m.firstEntry()
         }
-        // snaplen-truncated segment: the stream has a capture gap — resync
-        // past it and drop the carry rather than reassembling corrupt bytes
-        if (plen < segLen && conv.expSeq(dir) == segEnd) {
-          conv.expSeq(dir) = extSeq + segLen
-          conv.carry(dir) = Array.emptyByteArray; conv.carryKind(dir) = 0
-        }
+        conv.expSeq(dir) = cur
+        run = bb.toByteArray
       }
     }
-    if (outOfOrder) v.set(Id_tcp_analysis_out_of_order, "1")
+    // snaplen-truncated segment: the stream has a capture gap — resync
+    // past it and drop the carry rather than reassembling corrupt bytes
+    if (plen < segLen && conv.expSeq(dir) == segEnd) {
+      conv.expSeq(dir) = extSeq + segLen
+      conv.carry(dir) = Array.emptyByteArray; conv.carryKind(dir) = 0
+    }
+    run
+  }
 
-    // application layer: FIX (with optional desegmentation), HTTP, TLS
+  /** The app-layer claim chain for one delivered run (never empty): the
+    * protocols that frame themselves or own a conversation (FIX, HTTP/2,
+    * HTTP, WebSocket, TLS), then the port ladders. Null when nothing claims
+    * the run. */
+  private def tcpApp(
+      appBuf: Array[Byte], appOff: Int, appLen: Int, sp: Int, dp: Int,
+      conv: TcpConv, dir: Int,
+      v: FieldVec,
+      protos: mutable.ArrayBuffer[String],
+      tracker: Tracker,
+      wanted: Wanted): String = {
+    var appInfo = tcpFix(appBuf, appOff, appLen, conv, dir, v, protos, tracker, wanted)
+    if (appInfo == null) {
+      appInfo = tcpHttp2(appBuf, appOff, appLen, conv, dir, v, protos, tracker)
+      if (appInfo eq ClaimedNoInfo) return null
+    }
+    if (appInfo == null && tracker.desegment)
+      appInfo = tcpHttpDesegment(appBuf, appOff, appLen, conv, dir, v, protos)
+    if (appInfo == null && conv.wsUpgraded)
+      appInfo = tcpWebsocket(appBuf, appOff, appLen, conv, dir, v, protos, tracker)
+    if (appInfo == null) {
+      appInfo = dissectHttp(appBuf, appOff, appLen, v, protos)
+      if (appInfo != null && appInfo.startsWith("HTTP/1.1 101")) {
+        val txt = new String(appBuf, appOff, math.min(appLen, 1024),
+          "ISO-8859-1").toLowerCase(java.util.Locale.ROOT)
+        if (txt.contains("upgrade: websocket")) conv.wsUpgraded = true
+      }
+    }
+    if (appInfo == null) {
+      appInfo = dissectTls(appBuf, appOff, appLen, sp, dp, v, protos)
+      // DNS-over-TLS (RFC 7858): TLS on registered port 853 — payload
+      // stays encrypted; the transport marker is what analytics can see
+      if (appInfo != null && (sp == 853 || dp == 853))
+        appInfo += " (DNS-over-TLS)"
+    }
+    if (appInfo == null)
+      appInfo = tcpPortsA(appBuf, appOff, appLen, sp, dp, conv, dir, v, protos, tracker)
+    if (appInfo == null)
+      appInfo = tcpPortsB(appBuf, appOff, appLen, sp, dp, conv, dir, v, protos, tracker)
+    appInfo
+  }
+
+  /** FIX, with optional desegmentation. */
+  private def tcpFix(
+      appBuf: Array[Byte], appOff: Int, appLen: Int,
+      conv: TcpConv, dir: Int,
+      v: FieldVec,
+      protos: mutable.ArrayBuffer[String],
+      tracker: Tracker,
+      wanted: Wanted): String = {
     var appInfo: String = null
-    if (appLen > 0) {
-      val startsFix = appLen > 5 &&
-        appBuf(appOff) == '8' && appBuf(appOff + 1) == '=' && appBuf(appOff + 2) == 'F' &&
-        appBuf(appOff + 3) == 'I' && appBuf(appOff + 4) == 'X'
-      // an active HTTP carry owns the stream: a payload that happens to
-      // start with "8=FIX" mid-headers must not clobber it
-      if (tracker.desegment && conv.carryKind(dir) != 2 &&
-        (startsFix || (conv.carryKind(dir) == 1 && conv.carry(dir).nonEmpty))) {
-        // FIX reassembly: prepend this direction's carried tail, extract the
-        // messages COMPLETED by this segment, keep the new tail
-        val prev = conv.carry(dir)
-        val buf =
-          if (prev.isEmpty) java.util.Arrays.copyOfRange(appBuf, appOff, appOff + appLen)
-          else prev ++ java.util.Arrays.copyOfRange(appBuf, appOff, appOff + appLen)
-        val (msgs, consumed) = fixCompleteMessages(buf)
-        conv.carry(dir) =
-          if (buf.length - consumed > MaxCarry) Array.emptyByteArray
-          else java.util.Arrays.copyOfRange(buf, consumed, buf.length)
-        conv.carryKind(dir) = if (conv.carry(dir).nonEmpty) 1 else 0
-        if (msgs.nonEmpty) {
-          protos += "fix"
-          appInfo = msgs.mkString(", ")
-          v("fix.msgtype") = msgs.head
-        } else if (conv.carry(dir).nonEmpty) {
-          // mid-PDU segment: tshark-style continuation marker, no fix layer
-          appInfo = "[TCP segment of a reassembled PDU]"
-        }
-      } else if (startsFix) {
+    val startsFix = appLen > 5 &&
+      appBuf(appOff) == '8' && appBuf(appOff + 1) == '=' && appBuf(appOff + 2) == 'F' &&
+      appBuf(appOff + 3) == 'I' && appBuf(appOff + 4) == 'X'
+    // an active HTTP carry owns the stream: a payload that happens to
+    // start with "8=FIX" mid-headers must not clobber it
+    if (tracker.desegment && conv.carryKind(dir) != 2 &&
+      (startsFix || (conv.carryKind(dir) == 1 && conv.carry(dir).nonEmpty))) {
+      // FIX reassembly: prepend this direction's carried tail, extract the
+      // messages COMPLETED by this segment, keep the new tail
+      val prev = conv.carry(dir)
+      val buf =
+        if (prev.isEmpty) java.util.Arrays.copyOfRange(appBuf, appOff, appOff + appLen)
+        else prev ++ java.util.Arrays.copyOfRange(appBuf, appOff, appOff + appLen)
+      val (msgs, consumed) = fixCompleteMessages(buf)
+      conv.carry(dir) =
+        if (buf.length - consumed > MaxCarry) Array.emptyByteArray
+        else java.util.Arrays.copyOfRange(buf, consumed, buf.length)
+      conv.carryKind(dir) = if (conv.carry(dir).nonEmpty) 1 else 0
+      if (msgs.nonEmpty) {
         protos += "fix"
-        val msgs = fixMessages(appBuf, appOff, appLen,
-          if (wanted.info) Int.MaxValue else 1)
-        if (msgs.nonEmpty) {
-          // single-message segments (the overwhelming majority) reuse the
-          // cached name string — no mkString StringBuilder per row
-          if (wanted.info)
-            appInfo = if (msgs.length == 1) msgs.head else msgs.mkString(", ")
-          else appInfo = ""
-          v("fix.msgtype") = msgs.head
+        appInfo = msgs.mkString(", ")
+        v("fix.msgtype") = msgs.head
+      } else if (conv.carry(dir).nonEmpty) {
+        // mid-PDU segment: tshark-style continuation marker, no fix layer
+        appInfo = "[TCP segment of a reassembled PDU]"
+      }
+    } else if (startsFix) {
+      protos += "fix"
+      val msgs = fixMessages(appBuf, appOff, appLen,
+        if (wanted.info) Int.MaxValue else 1)
+      if (msgs.nonEmpty) {
+        // single-message segments (the overwhelming majority) reuse the
+        // cached name string — no mkString StringBuilder per row
+        if (wanted.info)
+          appInfo = if (msgs.length == 1) msgs.head else msgs.mkString(", ")
+        else appInfo = ""
+        v("fix.msgtype") = msgs.head
+      }
+    }
+    appInfo
+  }
+
+  /** HTTP/2: the 24-byte client connection preface marks the
+    * conversation; afterwards both directions sniff h2 frame headers
+    * (not HTTP/1 heuristics — h2 HEADERS are HPACK, not text). An
+    * h2-marked conversation OWNS its segments: a continuation that
+    * doesn't start on a frame boundary must fall back to the plain TCP
+    * rendering, never to the HTTP/1/TLS/DNS content heuristics (HPACK
+    * bytes would false-positive them) — [[ClaimedNoInfo]]. */
+  private def tcpHttp2(
+      appBuf: Array[Byte], appOff: Int, appLen: Int,
+      conv: TcpConv, dir: Int,
+      v: FieldVec,
+      protos: mutable.ArrayBuffer[String],
+      tracker: Tracker): String = {
+    var appInfo: String = null
+    var h2Claimed = false
+    // any kind-8 carry joins the segment up front, so a preface or
+    // frame split across segments completes here
+    val h2CarryPending = tracker.desegment &&
+      conv.carryKind(dir) == 8 && conv.carry(dir).nonEmpty
+    val hbuf =
+      if (h2CarryPending)
+        conv.carry(dir) ++ java.util.Arrays.copyOfRange(appBuf, appOff, appOff + appLen)
+      else appBuf
+    val hoff = if (h2CarryPending) 0 else appOff
+    val hlen = if (h2CarryPending) hbuf.length else appLen
+    val isPreface = isH2Preface(hbuf, hoff, hlen)
+    if (isPreface) conv.http2 = true
+    if (conv.http2) {
+      h2Claimed = true
+      if (tracker.desegment) {
+        // frame-boundary reassembly (carry kind 8): every frame
+        // COMPLETED by this run dissects; an incomplete trailing
+        // frame (or header) carries to the completing segment —
+        // the same shape as the ws/MQTT desegment paths.
+        val consumed = h2Consumed(hbuf, hoff, hlen, isPreface)
+        if (consumed < 0) {
+          // not frame-aligned (mid-frame continuation of a run we
+          // never saw the start of): plain TCP rendering, no carry
+          conv.carry(dir) = Array.emptyByteArray
+          conv.carryKind(dir) = 0
+          appInfo = dissectHttp2(hbuf, hoff, hlen, isPreface, conv, v, protos, dir)
+        } else {
+          if (consumed > 0)
+            appInfo = dissectHttp2(hbuf, hoff, consumed, isPreface, conv, v, protos, dir)
+          val rest = hlen - consumed
+          if (rest > 0 && rest <= MaxCarry &&
+              h2TailPlausible(hbuf, hoff + consumed, hoff + hlen)) {
+            conv.carry(dir) =
+              java.util.Arrays.copyOfRange(hbuf, hoff + consumed, hoff + hlen)
+            conv.carryKind(dir) = 8
+            if (appInfo == null) appInfo = "[TCP segment of a reassembled PDU]"
+          } else if (conv.carryKind(dir) == 8) {
+            conv.carry(dir) = Array.emptyByteArray
+            conv.carryKind(dir) = 0
+          }
+        }
+      } else {
+        appInfo = dissectHttp2(appBuf, appOff, appLen, isPreface, conv, v, protos, dir)
+      }
+    } else if (tracker.desegment && hlen < h2Preface.length &&
+        isH2PrefacePrefix(hbuf, hoff, hlen) && hlen <= MaxCarry) {
+      // a strict prefix of the client preface: carry (kind 8) and
+      // wait — nothing else can start with these bytes
+      conv.carry(dir) = java.util.Arrays.copyOfRange(hbuf, hoff, hoff + hlen)
+      conv.carryKind(dir) = 8
+      h2Claimed = true
+      appInfo = "[TCP segment of a reassembled PDU]"
+    } else if (h2CarryPending) {
+      // carried bytes turned out not to be h2 after all
+      conv.carry(dir) = Array.emptyByteArray
+      conv.carryKind(dir) = 0
+    }
+
+    if (h2Claimed && appInfo == null) ClaimedNoInfo else appInfo
+  }
+
+  /** HTTP reassembly (desegment only): buffer until the header block
+    * terminator arrives. */
+  private def tcpHttpDesegment(
+      appBuf: Array[Byte], appOff: Int, appLen: Int,
+      conv: TcpConv, dir: Int,
+      v: FieldVec,
+      protos: mutable.ArrayBuffer[String]): String = {
+    var appInfo: String = null
+    val httpCarry = conv.carryKind(dir) == 2 && conv.carry(dir).nonEmpty
+    val head = new String(appBuf, appOff, math.min(appLen, 10), "ISO-8859-1")
+    val looksHttpStart = head.startsWith("HTTP/1.") || httpMethods.exists(head.startsWith)
+    if (httpCarry || looksHttpStart) {
+      val seg = java.util.Arrays.copyOfRange(appBuf, appOff, appOff + appLen)
+      val buf = if (httpCarry) conv.carry(dir) ++ seg else seg
+      val hEnd = indexOfCrlfCrlf(buf)
+      if (hEnd >= 0) {
+        // chunked transfer coding: keep carrying past the header block
+        // until the terminal 0-chunk arrives, then decode the body
+        // (tshark reports the message on its final segment); bytes past
+        // the terminal chunk (a pipelined next message) are dropped
+        val chunked = isChunkedHeaders(buf, hEnd + 4)
+        val body = if (chunked) decodeChunked(buf, hEnd + 4) else null
+        if (chunked && body == null && buf.length <= MaxCarry) {
+          conv.carry(dir) = buf
+          conv.carryKind(dir) = 2
+          appInfo = "[TCP segment of a reassembled PDU]"
+        } else {
+          conv.carry(dir) = Array.emptyByteArray
+          conv.carryKind(dir) = 0
+          appInfo = dissectHttp(buf, 0, buf.length, v, protos)
+          if (body != null && appInfo != null) {
+            v("http.transfer_encoding") = "chunked"
+            // gzip entity coding: file_data carries the DECOMPRESSED
+            // body (tshark semantics); undecodable gzip keeps the raw
+            val hdrs = new String(buf, 0, hEnd, "ISO-8859-1")
+              .toLowerCase(java.util.Locale.ROOT).replace(" ", "")
+            val dec = if (hdrs.contains("content-encoding:gzip"))
+              gunzipBody(body) else null
+            if (dec != null) v("http.content_encoding") = "gzip"
+            v("http.file_data") = if (dec != null) dec else body
+          }
+          // the upgrade flip must also happen on the desegment path,
+          // or a 101 seen here would leave ws frames undissected
+          if (appInfo != null && appInfo.startsWith("HTTP/1.1 101")) {
+            val txt = new String(buf, 0, math.min(buf.length, 1024),
+              "ISO-8859-1").toLowerCase(java.util.Locale.ROOT)
+            if (txt.contains("upgrade: websocket")) conv.wsUpgraded = true
+          }
+        }
+      } else if (buf.length <= MaxCarry) {
+        conv.carry(dir) = buf
+        conv.carryKind(dir) = 2
+        appInfo = "[TCP segment of a reassembled PDU]"
+      } else {
+        conv.carry(dir) = Array.emptyByteArray
+        conv.carryKind(dir) = 0
+      }
+    }
+    appInfo
+  }
+
+  /** A completed websocket upgrade owns the conversation's bytes from the
+    * segment AFTER the 101 (the 101 itself still renders as HTTP).
+    * WebSocket framing is self-describing (header + declared payload
+    * length), so under desegment a frame spanning TCP segments carries
+    * (kind 7) until complete, then dissects — and unmasks — on the
+    * completing segment, tshark reassembly semantics. Without desegment
+    * only the header's fields surface (no payload text). */
+  private def tcpWebsocket(
+      appBuf: Array[Byte], appOff: Int, appLen: Int,
+      conv: TcpConv, dir: Int,
+      v: FieldVec,
+      protos: mutable.ArrayBuffer[String],
+      tracker: Tracker): String = {
+    var appInfo: String = null
+    if (tracker.desegment) {
+      // Like the MQTT multi-PDU path: every frame COMPLETED by this
+      // run dissects, and only the trailing partial frame carries
+      // (kind 7) to the completing segment.
+      val wsCarry = conv.carryKind(dir) == 7 && conv.carry(dir).nonEmpty
+      val seg = java.util.Arrays.copyOfRange(appBuf, appOff, appOff + appLen)
+      val buf = if (wsCarry) conv.carry(dir) ++ seg else seg
+      val infos = mutable.ArrayBuffer.empty[String]
+      var i = 0
+      var lastNeed = 0L
+      var stop = false
+      var bad = false
+      while (!stop) {
+        lastNeed = wsFrameLen(buf, i, buf.length - i)
+        if (lastNeed > 0 && buf.length - i >= lastNeed) {
+          val r = dissectWebsocket(buf, i, lastNeed.toInt, v, protos)
+          if (r == null) { stop = true; bad = infos.isEmpty && !wsCarry }
+          else { infos += r; i += lastNeed.toInt }
+        } else if (lastNeed == 0) {
+          stop = true; bad = infos.isEmpty && !wsCarry
+        } else {
+          stop = true // incomplete header or partial frame: wait
         }
       }
-      // HTTP/2: the 24-byte client connection preface marks the
-      // conversation; afterwards both directions sniff h2 frame headers
-      // (not HTTP/1 heuristics — h2 HEADERS are HPACK, not text). An
-      // h2-marked conversation OWNS its segments: a continuation that
-      // doesn't start on a frame boundary must fall back to the plain TCP
-      // rendering, never to the HTTP/1/TLS/DNS content heuristics (HPACK
-      // bytes would false-positive them).
-      var h2Claimed = false
-      if (appInfo == null) {
-        // any kind-8 carry joins the segment up front, so a preface or
-        // frame split across segments completes here
-        val h2CarryPending = tracker.desegment &&
-          conv.carryKind(dir) == 8 && conv.carry(dir).nonEmpty
-        val hbuf =
-          if (h2CarryPending)
-            conv.carry(dir) ++ java.util.Arrays.copyOfRange(appBuf, appOff, appOff + appLen)
-          else appBuf
-        val hoff = if (h2CarryPending) 0 else appOff
-        val hlen = if (h2CarryPending) hbuf.length else appLen
-        val isPreface = isH2Preface(hbuf, hoff, hlen)
-        if (isPreface) conv.http2 = true
-        if (conv.http2) {
-          h2Claimed = true
-          if (tracker.desegment) {
-            // frame-boundary reassembly (carry kind 8): every frame
-            // COMPLETED by this run dissects; an incomplete trailing
-            // frame (or header) carries to the completing segment —
-            // the same shape as the ws/MQTT desegment paths.
-            val consumed = h2Consumed(hbuf, hoff, hlen, isPreface)
-            if (consumed < 0) {
-              // not frame-aligned (mid-frame continuation of a run we
-              // never saw the start of): plain TCP rendering, no carry
-              conv.carry(dir) = Array.emptyByteArray
-              conv.carryKind(dir) = 0
-              appInfo = dissectHttp2(hbuf, hoff, hlen, isPreface, conv, v, protos, dir)
-            } else {
-              if (consumed > 0)
-                appInfo = dissectHttp2(hbuf, hoff, consumed, isPreface, conv, v, protos, dir)
-              val rest = hlen - consumed
-              if (rest > 0 && rest <= MaxCarry &&
-                  h2TailPlausible(hbuf, hoff + consumed, hoff + hlen)) {
-                conv.carry(dir) =
-                  java.util.Arrays.copyOfRange(hbuf, hoff + consumed, hoff + hlen)
-                conv.carryKind(dir) = 8
-                if (appInfo == null) appInfo = "[TCP segment of a reassembled PDU]"
-              } else if (conv.carryKind(dir) == 8) {
-                conv.carry(dir) = Array.emptyByteArray
-                conv.carryKind(dir) = 0
-              }
-            }
-          } else {
-            appInfo = dissectHttp2(appBuf, appOff, appLen, isPreface, conv, v, protos, dir)
-          }
-        } else if (tracker.desegment && hlen < h2Preface.length &&
-            isH2PrefacePrefix(hbuf, hoff, hlen) && hlen <= MaxCarry) {
-          // a strict prefix of the client preface: carry (kind 8) and
-          // wait — nothing else can start with these bytes
-          conv.carry(dir) = java.util.Arrays.copyOfRange(hbuf, hoff, hoff + hlen)
-          conv.carryKind(dir) = 8
-          h2Claimed = true
+      if (!bad) {
+        val rest = buf.length - i
+        if (rest > 0 && rest <= MaxCarry && lastNeed != 0) {
+          conv.carry(dir) = java.util.Arrays.copyOfRange(buf, i, buf.length)
+          conv.carryKind(dir) = 7
+        } else if (conv.carryKind(dir) == 7) {
+          conv.carry(dir) = Array.emptyByteArray
+          conv.carryKind(dir) = 0
+        }
+        if (infos.nonEmpty) {
+          // One "websocket" layer appended per frame; collapse only
+          // the trailing run (as the MQTT loop does).
+          while (protos.length >= 2 && protos.last == "websocket" &&
+                 protos(protos.length - 2) == "websocket")
+            protos.remove(protos.length - 1)
+          appInfo = infos.mkString(", ")
+        } else if (conv.carryKind(dir) == 7 && conv.carry(dir).nonEmpty) {
           appInfo = "[TCP segment of a reassembled PDU]"
-        } else if (h2CarryPending) {
-          // carried bytes turned out not to be h2 after all
+        }
+      } else {
+        conv.carry(dir) = Array.emptyByteArray
+        conv.carryKind(dir) = 0
+        appInfo = dissectWebsocket(appBuf, appOff, appLen, v, protos)
+      }
+    } else {
+      appInfo = dissectWebsocket(appBuf, appOff, appLen, v, protos)
+    }
+    appInfo
+  }
+
+  /** First part of the TCP port ladder, in claim order: where two
+    * dissectors share a port, the earlier one is tried first. */
+  private def tcpPortsA(
+      appBuf: Array[Byte], appOff: Int, appLen: Int, sp: Int, dp: Int,
+      conv: TcpConv, dir: Int,
+      v: FieldVec,
+      protos: mutable.ArrayBuffer[String],
+      tracker: Tracker): String = {
+    var appInfo: String = null
+    if (sp == 445 || dp == 445 || sp == 139 || dp == 139)
+      appInfo = dissectNbssSmb(appBuf, appOff, appLen, v, protos)
+    if (appInfo == null && (sp == 3389 || dp == 3389))
+      appInfo = dissectRdp(appBuf, appOff, appLen, v, protos)
+    if (appInfo == null && (sp == 3868 || dp == 3868))
+      appInfo = dissectDiameter(appBuf, appOff, appOff + appLen, v, protos)
+    if (appInfo == null && (sp == 554 || dp == 554))
+      appInfo = dissectRtsp(appBuf, appOff, appLen, v, protos)
+    if (appInfo == null && (sp == 135 || dp == 135))
+      appInfo = dissectDcerpc(appBuf, appOff, appLen, v, protos)
+    if (appInfo == null && (sp == 1080 || dp == 1080))
+      appInfo = dissectSocks(appBuf, appOff, appLen, fromServer = sp == 1080, v, protos)
+    if (appInfo == null && (sp == 21 || dp == 21))
+      appInfo = tcpFtp(appBuf, appOff, appLen, fromServer = sp == 21, conv, dir, v, protos, tracker)
+    if (appInfo == null && (sp == 22 || dp == 22))
+      appInfo = dissectSsh(appBuf, appOff, appLen, fromServer = sp == 22, v, protos)
+    if (appInfo == null && (sp == 5060 || dp == 5060))
+      appInfo = tcpSip(appBuf, appOff, appLen, conv, dir, v, protos, tracker)
+    if (appInfo == null && (sp == 88 || dp == 88))
+      appInfo = dissectKrb5(appBuf, appOff, appLen, overTcp = true, v, protos)
+    if (appInfo == null && (sp == 2049 || dp == 2049))
+      appInfo = dissectRpcNfs(appBuf, appOff, appLen, overTcp = true, v, protos, tracker)
+    if (appInfo == null && (sp == 389 || dp == 389))
+      appInfo = dissectLdap(appBuf, appOff, appLen, v, protos)
+    if (appInfo == null && (sp == 502 || dp == 502))
+      appInfo = dissectModbus(appBuf, appOff, appLen, v, protos)
+    if (appInfo == null && (sp == 102 || dp == 102))
+      appInfo = dissectS7(appBuf, appOff, appLen, v, protos)
+    if (appInfo == null && (sp == 102 || dp == 102))
+      appInfo = dissectMms(appBuf, appOff, appLen, v, protos)
+    if (appInfo == null && (sp == 20000 || dp == 20000))
+      appInfo = dissectDnp3(appBuf, appOff, appLen, v, protos)
+    if (appInfo == null && (sp == 2404 || dp == 2404))
+      appInfo = dissectIec104(appBuf, appOff, appLen, v, protos)
+    if (appInfo == null && (sp == 44818 || dp == 44818))
+      appInfo = dissectEnip(appBuf, appOff, appLen, v, protos)
+    if (appInfo == null && (sp == 4840 || dp == 4840))
+      appInfo = dissectOpcua(appBuf, appOff, appLen, v, protos)
+    if (appInfo == null && (sp == 6667 || dp == 6667))
+      appInfo = dissectIrc(appBuf, appOff, appLen, fromServer = sp == 6667, v, protos)
+    if (appInfo == null && (sp == 5222 || dp == 5222))
+      appInfo = dissectXmpp(appBuf, appOff, appLen, v, protos)
+    if (appInfo == null && (sp == 2775 || dp == 2775))
+      appInfo = dissectSmpp(appBuf, appOff, appLen, v, protos)
+    if (appInfo == null && (sp == 1723 || dp == 1723))
+      appInfo = dissectPptp(appBuf, appOff, appLen, v, protos)
+    if (appInfo == null && (sp == 49 || dp == 49))
+      appInfo = dissectTacplus(appBuf, appOff, appLen, v, protos)
+    if (appInfo == null && (sp == 23 || dp == 23))
+      appInfo = dissectTelnet(appBuf, appOff, appLen, v, protos)
+    if (appInfo == null && (sp == 25 || dp == 25 || sp == 587 || dp == 587))
+      appInfo = dissectSmtp(appBuf, appOff, appLen, fromServer = sp == 25 || sp == 587, v, protos)
+    if (appInfo == null && (sp == 110 || dp == 110))
+      appInfo = dissectPop(appBuf, appOff, appLen, fromServer = sp == 110, v, protos)
+    if (appInfo == null && (sp == 143 || dp == 143))
+      appInfo = dissectImap(appBuf, appOff, appLen, fromServer = sp == 143, v, protos)
+    if (appInfo == null && (sp == 179 || dp == 179))
+      appInfo = dissectBgp(appBuf, appOff, appLen, v, protos)
+    if (appInfo == null && (sp == 1883 || dp == 1883))
+      appInfo = tcpMqtt(appBuf, appOff, appLen, conv, dir, v, protos, tracker)
+    if (appInfo == null && (sp == 1433 || dp == 1433))
+      appInfo = dissectTds(appBuf, appOff, appLen, v, protos)
+    if (appInfo == null && (sp == 5672 || dp == 5672))
+      appInfo = dissectAmqp(appBuf, appOff, appLen, v, protos)
+    if (appInfo == null && (sp == 5432 || dp == 5432))
+      appInfo = dissectPgsql(appBuf, appOff, appLen, v, protos)
+    if (appInfo == null && (sp == 3306 || dp == 3306))
+      appInfo = dissectMysql(appBuf, appOff, appLen, fromServer = sp == 3306, v, protos)
+    if (appInfo == null && (sp == 6379 || dp == 6379))
+      appInfo = dissectRedis(appBuf, appOff, appLen, v, protos)
+    if (appInfo == null && (sp == 9092 || dp == 9092))
+      appInfo = dissectKafka(appBuf, appOff, appLen, fromServer = sp == 9092,
+        conv, v, protos)
+    if (appInfo == null && (sp == 9042 || dp == 9042))
+      appInfo = dissectCql(appBuf, appOff, appLen, v, protos)
+    if (appInfo == null && (sp == 11211 || dp == 11211))
+      appInfo = dissectMemcache(appBuf, appOff, appLen, fromServer = sp == 11211, v, protos)
+    if (appInfo == null && (sp == 27017 || dp == 27017))
+      appInfo = dissectMongo(appBuf, appOff, appLen, v, protos)
+    if (appInfo == null && (sp == 873 || dp == 873))
+      appInfo = dissectRsync(appBuf, appOff, appLen, fromServer = sp == 873,
+        conv, v, protos)
+    if (appInfo == null && (sp == 4730 || dp == 4730))
+      appInfo = dissectGearman(appBuf, appOff, appLen, v, protos)
+    if (appInfo == null && (sp == 8009 || dp == 8009))
+      appInfo = dissectAjp13(appBuf, appOff, appLen, fromServer = sp == 8009, v, protos)
+    if (appInfo == null && (sp == 8333 || dp == 8333))
+      appInfo = dissectBitcoin(appBuf, appOff, appLen, v, protos)
+    if (appInfo == null && (sp == 9000 || dp == 9000))
+      appInfo = dissectFcgi(appBuf, appOff, appLen, v, protos)
+    if (appInfo == null && dp == 4369)
+      appInfo = dissectEpmd(appBuf, appOff, appLen, v, protos)
+    if (appInfo == null && (sp == 3260 || dp == 3260))
+      appInfo = dissectIscsi(appBuf, appOff, appLen, v, protos)
+    if (appInfo == null && (sp == 854 || dp == 854))
+      appInfo = dissectDlepMessage(appBuf, appOff, appLen, v, protos)
+    if (appInfo == null && (sp == 1721 || dp == 1721))
+      appInfo = dissectH245(appBuf, appOff, appLen, v, protos)
+    if (appInfo == null && (sp == 5084 || dp == 5084))
+      appInfo = dissectLlrp(appBuf, appOff, appLen, v, protos)
+    if (appInfo == null && (sp == 6653 || dp == 6653))
+      appInfo = dissectOpenflow(appBuf, appOff, appLen, v, protos)
+    if (appInfo == null && (sp == 5900 || dp == 5900))
+      appInfo = dissectVnc(appBuf, appOff, appLen, fromServer = sp == 5900, v, protos)
+    if (appInfo == null && (sp == 61613 || dp == 61613))
+      appInfo = dissectStomp(appBuf, appOff, appLen, v, protos)
+    if (appInfo == null && (sp == 564 || dp == 564))
+      appInfo = dissect9p(appBuf, appOff, appLen, v, protos)
+    if (appInfo == null && (sp == 13400 || dp == 13400))
+      appInfo = dissectDoip(appBuf, appOff, appLen, v, protos)
+    appInfo
+  }
+
+  /** Second part of the TCP port ladder (see [[tcpPortsA]]). */
+  private def tcpPortsB(
+      appBuf: Array[Byte], appOff: Int, appLen: Int, sp: Int, dp: Int,
+      conv: TcpConv, dir: Int,
+      v: FieldVec,
+      protos: mutable.ArrayBuffer[String],
+      tracker: Tracker): String = {
+    var appInfo: String = null
+    if (sp == 4222 || dp == 4222)
+      appInfo = dissectNats(appBuf, appOff, appLen, v, protos)
+    if (appInfo == null &&
+      (sp == 104 || dp == 104 || sp == 11112 || dp == 11112))
+      appInfo = dissectDicom(appBuf, appOff, appLen, v, protos)
+    if (appInfo == null && (sp == 8583 || dp == 8583))
+      appInfo = dissectIso8583(appBuf, appOff, appLen, v, protos)
+    if (appInfo == null && (sp == 5555 || dp == 5555))
+      appInfo = dissectZmtp(appBuf, appOff, appLen, v, protos)
+    if (appInfo == null && (sp == 5555 || dp == 5555))
+      appInfo = dissectAdb(appBuf, appOff, appLen, v, protos)
+    if (appInfo == null && (sp == 21001 || dp == 21001))
+      appInfo = dissectSoupbin(appBuf, appOff, appLen, v, protos)
+    if (appInfo == null && (sp == 10051 || dp == 10051))
+      appInfo = dissectZabbix(appBuf, appOff, appLen, v, protos)
+    if (appInfo == null && (sp == 79 || dp == 79))
+      appInfo = dissectFinger(appBuf, appOff, appLen, fromServer = sp == 79, v, protos)
+    if (appInfo == null && (sp == 70 || dp == 70))
+      appInfo = dissectGopher(appBuf, appOff, appLen, fromServer = sp == 70, v, protos)
+    if (appInfo == null && (sp == 113 || dp == 113))
+      appInfo = dissectIdent(appBuf, appOff, appLen, fromServer = sp == 113, v, protos)
+    if (appInfo == null && (sp == 9418 || dp == 9418))
+      appInfo = dissectGit(appBuf, appOff, appLen, v, protos)
+    if (appInfo == null && (sp == 11210 || dp == 11210))
+      appInfo = dissectCouchbase(appBuf, appOff, appLen, v, protos)
+    if (appInfo == null && (sp == 1521 || dp == 1521))
+      appInfo = dissectTns(appBuf, appOff, appLen, v, protos)
+    if (appInfo == null && (sp == 5050 || dp == 5050))
+      appInfo = dissectYmsg(appBuf, appOff, appLen, v, protos)
+    if (appInfo == null && (sp == 3632 || dp == 3632))
+      appInfo = dissectDistcc(appBuf, appOff, appLen, v, protos)
+    if (appInfo == null && (sp == 5900 || dp == 5900))
+      appInfo = dissectSpice(appBuf, appOff, appLen, v, protos)
+    if (appInfo == null && (sp == 6000 || dp == 6000))
+      appInfo = dissectX11(appBuf, appOff, appLen, v, protos)
+    if (appInfo == null && (sp == 2855 || dp == 2855))
+      appInfo = dissectMsrp(appBuf, appOff, appLen, v, protos)
+    if (appInfo == null && (sp == 61616 || dp == 61616))
+      appInfo = dissectOpenwire(appBuf, appOff, appLen, v, protos)
+    if (appInfo == null && (sp == 2600 || dp == 2600))
+      appInfo = dissectZebra(appBuf, appOff, appLen, v, protos)
+    if (appInfo == null && (sp == 10000 || dp == 10000))
+      appInfo = dissectHpfeeds(appBuf, appOff, appLen, v, protos)
+    if (appInfo == null && (sp == 8020 || dp == 8020))
+      appInfo = dissectHdfs(appBuf, appOff, appLen, v, protos)
+    if (appInfo == null && (sp == 639 || dp == 639))
+      appInfo = dissectMsdp(appBuf, appOff, appLen, v, protos)
+    if (appInfo == null && (sp == 119 || dp == 119))
+      appInfo = dissectNntp(appBuf, appOff, appLen, fromServer = sp == 119, v, protos)
+    if (appInfo == null && (sp == 548 || dp == 548))
+      appInfo = dissectDsi(appBuf, appOff, appLen, fromServer = sp == 548, v, protos)
+    if (appInfo == null && (sp == 1790 || dp == 1790))
+      appInfo = dissectBmp(appBuf, appOff, appLen, v, protos)
+    if (appInfo == null && (sp == 10809 || dp == 10809))
+      appInfo = dissectNbd(appBuf, appOff, appLen, v, protos)
+    if (appInfo == null && (sp == 9090 || dp == 9090))
+      appInfo = dissectThrift(appBuf, appOff, appLen, v, protos)
+    if (appInfo == null && (sp == 6881 || dp == 6881))
+      appInfo = dissectBittorrent(appBuf, appOff, appLen, v, protos)
+    if (appInfo == null && (sp == 43 || dp == 43))
+      appInfo = dissectWhois(appBuf, appOff, appLen, fromServer = sp == 43, v, protos)
+    if (appInfo == null && (sp == 13 || dp == 13))
+      appInfo = dissectDaytime(appBuf, appOff, appLen, fromServer = sp == 13, v, protos)
+    if (appInfo == null && (sp == 515 || dp == 515))
+      appInfo = dissectLpd(appBuf, appOff, appLen, fromServer = sp == 515, v, protos)
+    if (appInfo == null && (sp == 512 || dp == 512))
+      appInfo = dissectRexec(appBuf, appOff, appLen, v, protos)
+    if (appInfo == null && (sp == 513 || dp == 513))
+      appInfo = dissectRlogin(appBuf, appOff, appLen, v, protos)
+    if (appInfo == null && (sp == 514 || dp == 514))
+      appInfo = dissectRsh(appBuf, appOff, appLen, v, protos)
+    if (appInfo == null && (sp == 1998 || dp == 1998))
+      appInfo = dissectXot(appBuf, appOff, appLen, v, protos)
+    if (appInfo == null && (sp == 4189 || dp == 4189))
+      appInfo = dissectPcep(appBuf, appOff, appLen, v, protos)
+    if (appInfo == null && (sp == 3288 || dp == 3288))
+      appInfo = dissectCops(appBuf, appOff, appLen, v, protos)
+    if (appInfo == null && (sp == 705 || dp == 705))
+      appInfo = dissectAgentx(appBuf, appOff, appLen, v, protos)
+    if (appInfo == null && (sp == 2002 || dp == 2002))
+      appInfo = dissectRpcap(appBuf, appOff, appLen, v, protos)
+    if (appInfo == null && (sp == 1935 || dp == 1935))
+      appInfo = dissectRtmpt(appBuf, appOff, appLen, v, protos)
+    if (appInfo == null && (sp == 2809 || dp == 2809))
+      appInfo = dissectGiop(appBuf, appOff, appLen, v, protos)
+    if (appInfo == null && (sp == 6346 || dp == 6346))
+      appInfo = dissectGnutella(appBuf, appOff, appLen, v, protos)
+    if (appInfo == null && (sp == 4662 || dp == 4662))
+      appInfo = dissectEdonkey(appBuf, appOff, appLen, v, protos)
+    if (appInfo == null && (sp == 1344 || dp == 1344))
+      appInfo = dissectIcap(appBuf, appOff, appLen, fromServer = sp == 1344, v, protos)
+    if (appInfo == null && (sp == 524 || dp == 524))
+      appInfo = dissectNcp(appBuf, appOff, appLen, v, protos)
+    if (appInfo == null && (sp == 24800 || dp == 24800))
+      appInfo = dissectSynergy(appBuf, appOff, appLen, v, protos)
+    if (appInfo == null && (sp == 3205 || dp == 3205))
+      appInfo = dissectIsns(appBuf, appOff, appLen, v, protos)
+    if (appInfo == null && (sp == 4420 || dp == 4420))
+      appInfo = dissectNvmeTcp(appBuf, appOff, appLen, v, protos)
+    if (appInfo == null && (sp == 2065 || dp == 2065))
+      appInfo = dissectDlsw(appBuf, appOff, appLen, v, protos)
+    if (appInfo == null && (sp == 10000 || dp == 10000))
+      appInfo = dissectNdmp(appBuf, appOff, appLen, v, protos)
+    if (appInfo == null && (sp == 1720 || dp == 1720))
+      appInfo = dissectQ931(appBuf, appOff, appLen, v, protos)
+    if (appInfo == null && (sp == 5190 || dp == 5190))
+      appInfo = dissectAim(appBuf, appOff, appLen, v, protos)
+    if (appInfo == null && (sp == 446 || dp == 446))
+      appInfo = dissectDrda(appBuf, appOff, appLen, v, protos)
+    if (appInfo == null && (sp == 5000 || dp == 5000))
+      appInfo = dissectHsms(appBuf, appOff, appLen, v, protos)
+    if (appInfo == null && (sp == 647 || dp == 647))
+      appInfo = dissectDhcpfo(appBuf, appOff, appLen, v, protos)
+    if (appInfo == null && (sp == 24007 || dp == 24007))
+      appInfo = dissectGlusterfs(appBuf, appOff, appLen, v, protos)
+    if (appInfo == null && (sp == 9300 || dp == 9300))
+      appInfo = dissectElasticsearch(appBuf, appOff, appLen, v, protos)
+    if (appInfo == null && (sp == 2000 || dp == 2000))
+      appInfo = dissectSkinny(appBuf, appOff, appLen, v, protos)
+    if (appInfo == null && (sp == 6789 || dp == 6789))
+      appInfo = dissectCeph(appBuf, appOff, appLen, v, protos)
+    if (appInfo == null && (sp == 3240 || dp == 3240))
+      appInfo = dissectUsbip(appBuf, appOff, appLen, v, protos)
+    if (appInfo == null && (sp == 5701 || dp == 5701))
+      appInfo = dissectHazelcast(appBuf, appOff, appLen, v, protos)
+    if (appInfo == null && (sp == 21064 || dp == 21064))
+      appInfo = dissectDlm3(appBuf, appOff, appLen, v, protos)
+    if (appInfo == null && (sp == 7272 || dp == 7272))
+      appInfo = dissectDbus(appBuf, appOff, appLen, v, protos)
+    if (appInfo == null && (sp == 650 || dp == 650))
+      appInfo = dissectObex(appBuf, appOff, appLen, v, protos)
+    if (appInfo == null && (sp == 53 || dp == 53))
+      appInfo = tcpDns(appBuf, appOff, appLen, conv, dir, v, protos, tracker)
+    appInfo
+  }
+
+  /** FTP: line-oriented — under desegment an incomplete trailing line
+    * carries across delivered runs (kind 4) and dissects on the run that
+    * completes its CRLF (tshark reassembly semantics); without desegment
+    * only whole-in-segment lines dissect. */
+  private def tcpFtp(
+      appBuf: Array[Byte], appOff: Int, appLen: Int, fromServer: Boolean,
+      conv: TcpConv, dir: Int,
+      v: FieldVec,
+      protos: mutable.ArrayBuffer[String],
+      tracker: Tracker): String = {
+    var appInfo: String = null
+    if (tracker.desegment) {
+      val ftpCarry = conv.carryKind(dir) == 4 && conv.carry(dir).nonEmpty
+      val seg = java.util.Arrays.copyOfRange(appBuf, appOff, appOff + appLen)
+      val buf = if (ftpCarry) conv.carry(dir) ++ seg else seg
+      var lastCrlf = -1
+      var i = buf.length - 2
+      while (lastCrlf < 0 && i >= 0) {
+        if (buf(i) == '\r' && buf(i + 1) == '\n') lastCrlf = i
+        i -= 1
+      }
+      if (lastCrlf >= 0)
+        appInfo = dissectFtp(buf, 0, lastCrlf + 2, fromServer = fromServer, v, protos)
+      val restLen = buf.length - (if (lastCrlf >= 0) lastCrlf + 2 else 0)
+      if (restLen > 0 && restLen <= MaxCarry && (appInfo != null || ftpCarry ||
+        looksFtpStart(buf, fromServer = fromServer))) {
+        conv.carry(dir) = java.util.Arrays.copyOfRange(buf, buf.length - restLen, buf.length)
+        conv.carryKind(dir) = 4
+        if (appInfo == null) appInfo = "[TCP segment of a reassembled PDU]"
+      } else if (conv.carryKind(dir) == 4) {
+        conv.carry(dir) = Array.emptyByteArray
+        conv.carryKind(dir) = 0
+      }
+    } else {
+      appInfo = dissectFtp(appBuf, appOff, appLen, fromServer = fromServer, v, protos)
+    }
+    appInfo
+  }
+
+  /** SIP over TCP (RFC 3261 §18.3): the message length is the header block
+    * plus Content-Length, so under desegment a message spanning segments
+    * carries (kind 5) until headers + body are complete and dissects on the
+    * completing segment — identical fields/RTP-port registration to the
+    * whole-in-segment case. Bytes past the message (a pipelined next one)
+    * are dropped, the HTTP-path simplification. */
+  private def tcpSip(
+      appBuf: Array[Byte], appOff: Int, appLen: Int,
+      conv: TcpConv, dir: Int,
+      v: FieldVec,
+      protos: mutable.ArrayBuffer[String],
+      tracker: Tracker): String = {
+    var appInfo: String = null
+    if (tracker.desegment) {
+      val sipCarry = conv.carryKind(dir) == 5 && conv.carry(dir).nonEmpty
+      val head = new String(appBuf, appOff, math.min(appLen, 12), "ISO-8859-1")
+      val looksSipStart = head.startsWith("SIP/2.0 ") ||
+        sipMethods.exists(m => head.startsWith(m + " "))
+      if (sipCarry || looksSipStart) {
+        val seg = java.util.Arrays.copyOfRange(appBuf, appOff, appOff + appLen)
+        val buf = if (sipCarry) conv.carry(dir) ++ seg else seg
+        val hEnd = indexOfCrlfCrlf(buf)
+        val want = if (hEnd < 0) -1 else hEnd + 4 + sipContentLength(buf, hEnd + 4)
+        if (hEnd >= 0 && want >= 0 && buf.length >= want) {
+          conv.carry(dir) = Array.emptyByteArray
+          conv.carryKind(dir) = 0
+          appInfo = dissectSip(buf, 0, want, v, protos, tracker)
+        } else if (buf.length <= MaxCarry) {
+          conv.carry(dir) = buf
+          conv.carryKind(dir) = 5
+          appInfo = "[TCP segment of a reassembled PDU]"
+        } else {
           conv.carry(dir) = Array.emptyByteArray
           conv.carryKind(dir) = 0
         }
       }
-      // HTTP reassembly: buffer until the header block terminator arrives
-      if (appInfo == null && !h2Claimed && tracker.desegment) {
-        val httpCarry = conv.carryKind(dir) == 2 && conv.carry(dir).nonEmpty
-        val head = new String(appBuf, appOff, math.min(appLen, 10), "ISO-8859-1")
-        val looksHttpStart = head.startsWith("HTTP/1.") || httpMethods.exists(head.startsWith)
-        if (httpCarry || looksHttpStart) {
-          val seg = java.util.Arrays.copyOfRange(appBuf, appOff, appOff + appLen)
-          val buf = if (httpCarry) conv.carry(dir) ++ seg else seg
-          val hEnd = indexOfCrlfCrlf(buf)
-          if (hEnd >= 0) {
-            // chunked transfer coding: keep carrying past the header block
-            // until the terminal 0-chunk arrives, then decode the body
-            // (tshark reports the message on its final segment); bytes past
-            // the terminal chunk (a pipelined next message) are dropped
-            val chunked = isChunkedHeaders(buf, hEnd + 4)
-            val body = if (chunked) decodeChunked(buf, hEnd + 4) else null
-            if (chunked && body == null && buf.length <= MaxCarry) {
-              conv.carry(dir) = buf
-              conv.carryKind(dir) = 2
-              appInfo = "[TCP segment of a reassembled PDU]"
-            } else {
-              conv.carry(dir) = Array.emptyByteArray
-              conv.carryKind(dir) = 0
-              appInfo = dissectHttp(buf, 0, buf.length, v, protos)
-              if (body != null && appInfo != null) {
-                v("http.transfer_encoding") = "chunked"
-                // gzip entity coding: file_data carries the DECOMPRESSED
-                // body (tshark semantics); undecodable gzip keeps the raw
-                val hdrs = new String(buf, 0, hEnd, "ISO-8859-1")
-                  .toLowerCase(java.util.Locale.ROOT).replace(" ", "")
-                val dec = if (hdrs.contains("content-encoding:gzip"))
-                  gunzipBody(body) else null
-                if (dec != null) v("http.content_encoding") = "gzip"
-                v("http.file_data") = if (dec != null) dec else body
-              }
-              // the upgrade flip must also happen on the desegment path,
-              // or a 101 seen here would leave ws frames undissected
-              if (appInfo != null && appInfo.startsWith("HTTP/1.1 101")) {
-                val txt = new String(buf, 0, math.min(buf.length, 1024),
-                  "ISO-8859-1").toLowerCase(java.util.Locale.ROOT)
-                if (txt.contains("upgrade: websocket")) conv.wsUpgraded = true
-              }
-            }
-          } else if (buf.length <= MaxCarry) {
-            conv.carry(dir) = buf
-            conv.carryKind(dir) = 2
-            appInfo = "[TCP segment of a reassembled PDU]"
-          } else {
-            conv.carry(dir) = Array.emptyByteArray
-            conv.carryKind(dir) = 0
-          }
+    } else {
+      appInfo = dissectSip(appBuf, appOff, appLen, v, protos, tracker)
+    }
+    appInfo
+  }
+
+  /** MQTT framing is the fixed header's varint length, so under desegment
+    * every PDU COMPLETED by this run dissects (multi-PDU segments list each
+    * message, tshark-style) and a trailing partial PDU carries (kind 6) to
+    * the completing segment. */
+  private def tcpMqtt(
+      appBuf: Array[Byte], appOff: Int, appLen: Int,
+      conv: TcpConv, dir: Int,
+      v: FieldVec,
+      protos: mutable.ArrayBuffer[String],
+      tracker: Tracker): String = {
+    var appInfo: String = null
+    if (tracker.desegment) {
+      val mqCarry = conv.carryKind(dir) == 6 && conv.carry(dir).nonEmpty
+      val seg = java.util.Arrays.copyOfRange(appBuf, appOff, appOff + appLen)
+      val buf = if (mqCarry) conv.carry(dir) ++ seg else seg
+      val infos = mutable.ArrayBuffer.empty[String]
+      var i = 0
+      var bad = false
+      var stop = false
+      while (!stop) {
+        mqttPduLen(buf, i, buf.length) match {
+          case -2 => stop = true; bad = i == 0 && !mqCarry
+          case -1 => stop = true
+          case n =>
+            val r = dissectMqtt(buf, i, n, v, protos)
+            if (r == null) { stop = true; bad = infos.isEmpty && !mqCarry }
+            else { infos += r; i += n }
         }
       }
-      // a completed websocket upgrade owns the conversation's bytes from
-      // the segment AFTER the 101 (the 101 itself still renders as HTTP)
-      // WebSocket framing is self-describing (header + declared payload
-      // length), so under desegment a frame spanning TCP segments carries
-      // (kind 7) until complete, then dissects — and unmasks — on the
-      // completing segment, tshark reassembly semantics. Without
-      // desegment only the header's fields surface (no payload text).
-      if (appInfo == null && !h2Claimed && conv.wsUpgraded) {
-        if (tracker.desegment) {
-          // Like the MQTT multi-PDU path: every frame COMPLETED by this
-          // run dissects, and only the trailing partial frame carries
-          // (kind 7) to the completing segment.
-          val wsCarry = conv.carryKind(dir) == 7 && conv.carry(dir).nonEmpty
-          val seg = java.util.Arrays.copyOfRange(appBuf, appOff, appOff + appLen)
-          val buf = if (wsCarry) conv.carry(dir) ++ seg else seg
-          val infos = mutable.ArrayBuffer.empty[String]
-          var i = 0
-          var lastNeed = 0L
-          var stop = false
-          var bad = false
-          while (!stop) {
-            lastNeed = wsFrameLen(buf, i, buf.length - i)
-            if (lastNeed > 0 && buf.length - i >= lastNeed) {
-              val r = dissectWebsocket(buf, i, lastNeed.toInt, v, protos)
-              if (r == null) { stop = true; bad = infos.isEmpty && !wsCarry }
-              else { infos += r; i += lastNeed.toInt }
-            } else if (lastNeed == 0) {
-              stop = true; bad = infos.isEmpty && !wsCarry
-            } else {
-              stop = true // incomplete header or partial frame: wait
-            }
-          }
-          if (!bad) {
-            val rest = buf.length - i
-            if (rest > 0 && rest <= MaxCarry && lastNeed != 0) {
-              conv.carry(dir) = java.util.Arrays.copyOfRange(buf, i, buf.length)
-              conv.carryKind(dir) = 7
-            } else if (conv.carryKind(dir) == 7) {
-              conv.carry(dir) = Array.emptyByteArray
-              conv.carryKind(dir) = 0
-            }
-            if (infos.nonEmpty) {
-              // One "websocket" layer appended per frame; collapse only
-              // the trailing run (as the MQTT loop does).
-              while (protos.length >= 2 && protos.last == "websocket" &&
-                     protos(protos.length - 2) == "websocket")
-                protos.remove(protos.length - 1)
-              appInfo = infos.mkString(", ")
-            } else if (conv.carryKind(dir) == 7 && conv.carry(dir).nonEmpty) {
-              appInfo = "[TCP segment of a reassembled PDU]"
-            }
-          } else {
-            conv.carry(dir) = Array.emptyByteArray
-            conv.carryKind(dir) = 0
-            appInfo = dissectWebsocket(appBuf, appOff, appLen, v, protos)
-          }
-        } else {
-          appInfo = dissectWebsocket(appBuf, appOff, appLen, v, protos)
+      if (!bad) {
+        val rest = buf.length - i
+        if (rest > 0 && rest <= MaxCarry && mqttPduLen(buf, i, buf.length) == -1) {
+          conv.carry(dir) = java.util.Arrays.copyOfRange(buf, i, buf.length)
+          conv.carryKind(dir) = 6
+        } else if (conv.carryKind(dir) == 6) {
+          conv.carry(dir) = Array.emptyByteArray
+          conv.carryKind(dir) = 0
         }
-      }
-      if (appInfo == null && !h2Claimed) {
-        appInfo = dissectHttp(appBuf, appOff, appLen, v, protos)
-        if (appInfo != null && appInfo.startsWith("HTTP/1.1 101")) {
-          val txt = new String(appBuf, appOff, math.min(appLen, 1024),
-            "ISO-8859-1").toLowerCase(java.util.Locale.ROOT)
-          if (txt.contains("upgrade: websocket")) conv.wsUpgraded = true
+        if (infos.nonEmpty) {
+          // The multi-PDU loop appended one "mqtt" per PDU; collapse
+          // only that trailing run (Wireshark keeps legitimately
+          // repeated layers elsewhere in the chain, e.g. ip:gre:ip).
+          while (protos.length >= 2 && protos.last == "mqtt" &&
+                 protos(protos.length - 2) == "mqtt")
+            protos.remove(protos.length - 1)
+          appInfo = infos.mkString(", ")
+        } else if (conv.carryKind(dir) == 6 && conv.carry(dir).nonEmpty) {
+          appInfo = "[TCP segment of a reassembled PDU]"
         }
+      } else if (conv.carryKind(dir) == 6) {
+        conv.carry(dir) = Array.emptyByteArray
+        conv.carryKind(dir) = 0
       }
-      if (appInfo == null && !h2Claimed) {
-        appInfo = dissectTls(appBuf, appOff, appLen, sp, dp, v, protos)
-        // DNS-over-TLS (RFC 7858): TLS on registered port 853 — payload
-        // stays encrypted; the transport marker is what analytics can see
-        if (appInfo != null && (sp == 853 || dp == 853))
-          appInfo += " (DNS-over-TLS)"
+    } else {
+      appInfo = dissectMqtt(appBuf, appOff, appLen, v, protos)
+    }
+    appInfo
+  }
+
+  /** DNS over TCP (RFC 1035 §4.2.2): 2-byte length prefix, then the
+    * standard message. Under desegment, partial messages carry across
+    * delivered runs (kind 3 — zone transfers span many segments) and every
+    * message COMPLETED by this run dissects; without desegment, only a
+    * message wholly inside this segment dissects. */
+  private def tcpDns(
+      appBuf: Array[Byte], appOff: Int, appLen: Int,
+      conv: TcpConv, dir: Int,
+      v: FieldVec,
+      protos: mutable.ArrayBuffer[String],
+      tracker: Tracker): String = {
+    var appInfo: String = null
+    if (tracker.desegment) {
+      val dnsCarry = conv.carryKind(dir) == 3 && conv.carry(dir).nonEmpty
+      val seg = java.util.Arrays.copyOfRange(appBuf, appOff, appOff + appLen)
+      val buf = if (dnsCarry) conv.carry(dir) ++ seg else seg
+      var i = 0
+      var lastInfo: String = null
+      var malformed = false
+      var brk = false
+      while (!brk && i + 2 <= buf.length) {
+        val mlen = u16(buf, i)
+        if (mlen < 12) { malformed = true; brk = true }
+        else if (i + 2 + mlen <= buf.length) {
+          val r = dissectDns(buf, i + 2, i + 2 + mlen, v, protos)
+          if (r != null) lastInfo = r
+          i += 2 + mlen
+        } else brk = true
       }
-      if (appInfo == null && !h2Claimed &&
-          (sp == 445 || dp == 445 || sp == 139 || dp == 139))
-        appInfo = dissectNbssSmb(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 3389 || dp == 3389))
-        appInfo = dissectRdp(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 3868 || dp == 3868))
-        appInfo = dissectDiameter(appBuf, appOff, appOff + appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 554 || dp == 554))
-        appInfo = dissectRtsp(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 135 || dp == 135))
-        appInfo = dissectDcerpc(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 1080 || dp == 1080))
-        appInfo = dissectSocks(appBuf, appOff, appLen, fromServer = sp == 1080, v, protos)
-      // FTP: line-oriented — under desegment an incomplete trailing line
-      // carries across delivered runs (kind 4) and dissects on the run
-      // that completes its CRLF (tshark reassembly semantics); without
-      // desegment only whole-in-segment lines dissect.
-      if (appInfo == null && !h2Claimed && (sp == 21 || dp == 21) && appLen > 0) {
-        if (tracker.desegment) {
-          val ftpCarry = conv.carryKind(dir) == 4 && conv.carry(dir).nonEmpty
-          val seg = java.util.Arrays.copyOfRange(appBuf, appOff, appOff + appLen)
-          val buf = if (ftpCarry) conv.carry(dir) ++ seg else seg
-          var lastCrlf = -1
-          var i = buf.length - 2
-          while (lastCrlf < 0 && i >= 0) {
-            if (buf(i) == '\r' && buf(i + 1) == '\n') lastCrlf = i
-            i -= 1
-          }
-          if (lastCrlf >= 0)
-            appInfo = dissectFtp(buf, 0, lastCrlf + 2, fromServer = sp == 21, v, protos)
-          val restLen = buf.length - (if (lastCrlf >= 0) lastCrlf + 2 else 0)
-          if (restLen > 0 && restLen <= MaxCarry && (appInfo != null || ftpCarry ||
-            looksFtpStart(buf, fromServer = sp == 21))) {
-            conv.carry(dir) = java.util.Arrays.copyOfRange(buf, buf.length - restLen, buf.length)
-            conv.carryKind(dir) = 4
-            if (appInfo == null) appInfo = "[TCP segment of a reassembled PDU]"
-          } else if (conv.carryKind(dir) == 4) {
-            conv.carry(dir) = Array.emptyByteArray
-            conv.carryKind(dir) = 0
-          }
-        } else {
-          appInfo = dissectFtp(appBuf, appOff, appLen, fromServer = sp == 21, v, protos)
-        }
+      if (malformed) {
+        // framing broke: this is not (or no longer) a sane DNS stream —
+        // drop the carry, keep whatever messages already dissected
+        conv.carry(dir) = Array.emptyByteArray
+        conv.carryKind(dir) = 0
+      } else {
+        val rest = java.util.Arrays.copyOfRange(buf, i, buf.length)
+        conv.carry(dir) = if (rest.length > MaxCarry) Array.emptyByteArray else rest
+        conv.carryKind(dir) = if (conv.carry(dir).nonEmpty) 3 else 0
       }
-      if (appInfo == null && !h2Claimed && (sp == 22 || dp == 22))
-        appInfo = dissectSsh(appBuf, appOff, appLen, fromServer = sp == 22, v, protos)
-      // SIP over TCP (RFC 3261 §18.3): the message length is the header
-      // block plus Content-Length, so under desegment a message spanning
-      // segments carries (kind 5) until headers + body are complete and
-      // dissects on the completing segment — identical fields/RTP-port
-      // registration to the whole-in-segment case. Bytes past the message
-      // (a pipelined next one) are dropped, the HTTP-path simplification.
-      if (appInfo == null && !h2Claimed && (sp == 5060 || dp == 5060) && appLen > 0) {
-        if (tracker.desegment) {
-          val sipCarry = conv.carryKind(dir) == 5 && conv.carry(dir).nonEmpty
-          val head = new String(appBuf, appOff, math.min(appLen, 12), "ISO-8859-1")
-          val looksSipStart = head.startsWith("SIP/2.0 ") ||
-            sipMethods.exists(m => head.startsWith(m + " "))
-          if (sipCarry || looksSipStart) {
-            val seg = java.util.Arrays.copyOfRange(appBuf, appOff, appOff + appLen)
-            val buf = if (sipCarry) conv.carry(dir) ++ seg else seg
-            val hEnd = indexOfCrlfCrlf(buf)
-            val want = if (hEnd < 0) -1 else hEnd + 4 + sipContentLength(buf, hEnd + 4)
-            if (hEnd >= 0 && want >= 0 && buf.length >= want) {
-              conv.carry(dir) = Array.emptyByteArray
-              conv.carryKind(dir) = 0
-              appInfo = dissectSip(buf, 0, want, v, protos, tracker)
-            } else if (buf.length <= MaxCarry) {
-              conv.carry(dir) = buf
-              conv.carryKind(dir) = 5
-              appInfo = "[TCP segment of a reassembled PDU]"
-            } else {
-              conv.carry(dir) = Array.emptyByteArray
-              conv.carryKind(dir) = 0
-            }
-          }
-        } else {
-          appInfo = dissectSip(appBuf, appOff, appLen, v, protos, tracker)
-        }
+      if (lastInfo != null) {
+        // a multi-message run adds "dns" once per message — dedupe
+        val dd = protos.distinct
+        protos.clear(); protos ++= dd
+        appInfo = lastInfo
+      } else if (conv.carry(dir).nonEmpty && conv.carryKind(dir) == 3) {
+        appInfo = "[TCP segment of a reassembled PDU]"
       }
-      if (appInfo == null && !h2Claimed && (sp == 88 || dp == 88))
-        appInfo = dissectKrb5(appBuf, appOff, appLen, overTcp = true, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 2049 || dp == 2049))
-        appInfo = dissectRpcNfs(appBuf, appOff, appLen, overTcp = true, v, protos, tracker)
-      if (appInfo == null && !h2Claimed && (sp == 389 || dp == 389))
-        appInfo = dissectLdap(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 502 || dp == 502))
-        appInfo = dissectModbus(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 102 || dp == 102))
-        appInfo = dissectS7(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 102 || dp == 102))
-        appInfo = dissectMms(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 20000 || dp == 20000))
-        appInfo = dissectDnp3(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 2404 || dp == 2404))
-        appInfo = dissectIec104(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 44818 || dp == 44818))
-        appInfo = dissectEnip(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 4840 || dp == 4840))
-        appInfo = dissectOpcua(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 6667 || dp == 6667))
-        appInfo = dissectIrc(appBuf, appOff, appLen, fromServer = sp == 6667, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 5222 || dp == 5222))
-        appInfo = dissectXmpp(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 2775 || dp == 2775))
-        appInfo = dissectSmpp(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 1723 || dp == 1723))
-        appInfo = dissectPptp(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 49 || dp == 49))
-        appInfo = dissectTacplus(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 23 || dp == 23))
-        appInfo = dissectTelnet(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 25 || dp == 25 || sp == 587 || dp == 587))
-        appInfo = dissectSmtp(appBuf, appOff, appLen, fromServer = sp == 25 || sp == 587, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 110 || dp == 110))
-        appInfo = dissectPop(appBuf, appOff, appLen, fromServer = sp == 110, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 143 || dp == 143))
-        appInfo = dissectImap(appBuf, appOff, appLen, fromServer = sp == 143, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 179 || dp == 179))
-        appInfo = dissectBgp(appBuf, appOff, appLen, v, protos)
-      // MQTT framing is the fixed header's varint length, so under
-      // desegment every PDU COMPLETED by this run dissects (multi-PDU
-      // segments list each message, tshark-style) and a trailing partial
-      // PDU carries (kind 6) to the completing segment.
-      if (appInfo == null && !h2Claimed && (sp == 1883 || dp == 1883) && appLen > 0) {
-        if (tracker.desegment) {
-          val mqCarry = conv.carryKind(dir) == 6 && conv.carry(dir).nonEmpty
-          val seg = java.util.Arrays.copyOfRange(appBuf, appOff, appOff + appLen)
-          val buf = if (mqCarry) conv.carry(dir) ++ seg else seg
-          val infos = mutable.ArrayBuffer.empty[String]
-          var i = 0
-          var bad = false
-          var stop = false
-          while (!stop) {
-            mqttPduLen(buf, i, buf.length) match {
-              case -2 => stop = true; bad = i == 0 && !mqCarry
-              case -1 => stop = true
-              case n =>
-                val r = dissectMqtt(buf, i, n, v, protos)
-                if (r == null) { stop = true; bad = infos.isEmpty && !mqCarry }
-                else { infos += r; i += n }
-            }
-          }
-          if (!bad) {
-            val rest = buf.length - i
-            if (rest > 0 && rest <= MaxCarry && mqttPduLen(buf, i, buf.length) == -1) {
-              conv.carry(dir) = java.util.Arrays.copyOfRange(buf, i, buf.length)
-              conv.carryKind(dir) = 6
-            } else if (conv.carryKind(dir) == 6) {
-              conv.carry(dir) = Array.emptyByteArray
-              conv.carryKind(dir) = 0
-            }
-            if (infos.nonEmpty) {
-              // The multi-PDU loop appended one "mqtt" per PDU; collapse
-              // only that trailing run (Wireshark keeps legitimately
-              // repeated layers elsewhere in the chain, e.g. ip:gre:ip).
-              while (protos.length >= 2 && protos.last == "mqtt" &&
-                     protos(protos.length - 2) == "mqtt")
-                protos.remove(protos.length - 1)
-              appInfo = infos.mkString(", ")
-            } else if (conv.carryKind(dir) == 6 && conv.carry(dir).nonEmpty) {
-              appInfo = "[TCP segment of a reassembled PDU]"
-            }
-          } else if (conv.carryKind(dir) == 6) {
-            conv.carry(dir) = Array.emptyByteArray
-            conv.carryKind(dir) = 0
-          }
-        } else {
-          appInfo = dissectMqtt(appBuf, appOff, appLen, v, protos)
-        }
-      }
-      if (appInfo == null && !h2Claimed && (sp == 1433 || dp == 1433))
-        appInfo = dissectTds(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 5672 || dp == 5672))
-        appInfo = dissectAmqp(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 5432 || dp == 5432))
-        appInfo = dissectPgsql(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 3306 || dp == 3306))
-        appInfo = dissectMysql(appBuf, appOff, appLen, fromServer = sp == 3306, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 6379 || dp == 6379))
-        appInfo = dissectRedis(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 9092 || dp == 9092))
-        appInfo = dissectKafka(appBuf, appOff, appLen, fromServer = sp == 9092,
-          conv, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 9042 || dp == 9042))
-        appInfo = dissectCql(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 11211 || dp == 11211))
-        appInfo = dissectMemcache(appBuf, appOff, appLen, fromServer = sp == 11211, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 27017 || dp == 27017))
-        appInfo = dissectMongo(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 873 || dp == 873))
-        appInfo = dissectRsync(appBuf, appOff, appLen, fromServer = sp == 873,
-          conv, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 4730 || dp == 4730))
-        appInfo = dissectGearman(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 8009 || dp == 8009))
-        appInfo = dissectAjp13(appBuf, appOff, appLen, fromServer = sp == 8009, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 8333 || dp == 8333))
-        appInfo = dissectBitcoin(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 9000 || dp == 9000))
-        appInfo = dissectFcgi(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && dp == 4369)
-        appInfo = dissectEpmd(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 3260 || dp == 3260))
-        appInfo = dissectIscsi(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 854 || dp == 854))
-        appInfo = dissectDlepMessage(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 1721 || dp == 1721))
-        appInfo = dissectH245(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 5084 || dp == 5084))
-        appInfo = dissectLlrp(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 6653 || dp == 6653))
-        appInfo = dissectOpenflow(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 5900 || dp == 5900))
-        appInfo = dissectVnc(appBuf, appOff, appLen, fromServer = sp == 5900, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 61613 || dp == 61613))
-        appInfo = dissectStomp(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 564 || dp == 564))
-        appInfo = dissect9p(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 13400 || dp == 13400))
-        appInfo = dissectDoip(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 4222 || dp == 4222))
-        appInfo = dissectNats(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed &&
-        (sp == 104 || dp == 104 || sp == 11112 || dp == 11112))
-        appInfo = dissectDicom(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 8583 || dp == 8583))
-        appInfo = dissectIso8583(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 5555 || dp == 5555))
-        appInfo = dissectZmtp(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 5555 || dp == 5555))
-        appInfo = dissectAdb(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 21001 || dp == 21001))
-        appInfo = dissectSoupbin(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 10051 || dp == 10051))
-        appInfo = dissectZabbix(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 79 || dp == 79))
-        appInfo = dissectFinger(appBuf, appOff, appLen, fromServer = sp == 79, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 70 || dp == 70))
-        appInfo = dissectGopher(appBuf, appOff, appLen, fromServer = sp == 70, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 113 || dp == 113))
-        appInfo = dissectIdent(appBuf, appOff, appLen, fromServer = sp == 113, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 9418 || dp == 9418))
-        appInfo = dissectGit(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 11210 || dp == 11210))
-        appInfo = dissectCouchbase(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 1521 || dp == 1521))
-        appInfo = dissectTns(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 5050 || dp == 5050))
-        appInfo = dissectYmsg(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 3632 || dp == 3632))
-        appInfo = dissectDistcc(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 5900 || dp == 5900))
-        appInfo = dissectSpice(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 6000 || dp == 6000))
-        appInfo = dissectX11(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 2855 || dp == 2855))
-        appInfo = dissectMsrp(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 61616 || dp == 61616))
-        appInfo = dissectOpenwire(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 2600 || dp == 2600))
-        appInfo = dissectZebra(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 10000 || dp == 10000))
-        appInfo = dissectHpfeeds(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 8020 || dp == 8020))
-        appInfo = dissectHdfs(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 639 || dp == 639))
-        appInfo = dissectMsdp(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 119 || dp == 119))
-        appInfo = dissectNntp(appBuf, appOff, appLen, fromServer = sp == 119, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 548 || dp == 548))
-        appInfo = dissectDsi(appBuf, appOff, appLen, fromServer = sp == 548, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 1790 || dp == 1790))
-        appInfo = dissectBmp(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 10809 || dp == 10809))
-        appInfo = dissectNbd(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 9090 || dp == 9090))
-        appInfo = dissectThrift(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 6881 || dp == 6881))
-        appInfo = dissectBittorrent(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 43 || dp == 43))
-        appInfo = dissectWhois(appBuf, appOff, appLen, fromServer = sp == 43, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 13 || dp == 13))
-        appInfo = dissectDaytime(appBuf, appOff, appLen, fromServer = sp == 13, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 515 || dp == 515))
-        appInfo = dissectLpd(appBuf, appOff, appLen, fromServer = sp == 515, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 512 || dp == 512))
-        appInfo = dissectRexec(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 513 || dp == 513))
-        appInfo = dissectRlogin(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 514 || dp == 514))
-        appInfo = dissectRsh(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 1998 || dp == 1998))
-        appInfo = dissectXot(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 4189 || dp == 4189))
-        appInfo = dissectPcep(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 3288 || dp == 3288))
-        appInfo = dissectCops(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 705 || dp == 705))
-        appInfo = dissectAgentx(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 2002 || dp == 2002))
-        appInfo = dissectRpcap(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 1935 || dp == 1935))
-        appInfo = dissectRtmpt(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 2809 || dp == 2809))
-        appInfo = dissectGiop(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 6346 || dp == 6346))
-        appInfo = dissectGnutella(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 4662 || dp == 4662))
-        appInfo = dissectEdonkey(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 1344 || dp == 1344))
-        appInfo = dissectIcap(appBuf, appOff, appLen, fromServer = sp == 1344, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 524 || dp == 524))
-        appInfo = dissectNcp(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 24800 || dp == 24800))
-        appInfo = dissectSynergy(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 3205 || dp == 3205))
-        appInfo = dissectIsns(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 4420 || dp == 4420))
-        appInfo = dissectNvmeTcp(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 2065 || dp == 2065))
-        appInfo = dissectDlsw(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 10000 || dp == 10000))
-        appInfo = dissectNdmp(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 1720 || dp == 1720))
-        appInfo = dissectQ931(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 5190 || dp == 5190))
-        appInfo = dissectAim(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 446 || dp == 446))
-        appInfo = dissectDrda(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 5000 || dp == 5000))
-        appInfo = dissectHsms(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 647 || dp == 647))
-        appInfo = dissectDhcpfo(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 24007 || dp == 24007))
-        appInfo = dissectGlusterfs(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 9300 || dp == 9300))
-        appInfo = dissectElasticsearch(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 2000 || dp == 2000))
-        appInfo = dissectSkinny(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 6789 || dp == 6789))
-        appInfo = dissectCeph(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 3240 || dp == 3240))
-        appInfo = dissectUsbip(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 5701 || dp == 5701))
-        appInfo = dissectHazelcast(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 21064 || dp == 21064))
-        appInfo = dissectDlm3(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 7272 || dp == 7272))
-        appInfo = dissectDbus(appBuf, appOff, appLen, v, protos)
-      if (appInfo == null && !h2Claimed && (sp == 650 || dp == 650))
-        appInfo = dissectObex(appBuf, appOff, appLen, v, protos)
-      // DNS over TCP (RFC 1035 §4.2.2): 2-byte length prefix, then the
-      // standard message. Under desegment, partial messages carry across
-      // delivered runs (kind 3 — zone transfers span many segments) and
-      // every message COMPLETED by this run dissects; without desegment,
-      // only a message wholly inside this segment dissects.
-      if (appInfo == null && !h2Claimed && (sp == 53 || dp == 53) && appLen > 0) {
-        if (tracker.desegment) {
-          val dnsCarry = conv.carryKind(dir) == 3 && conv.carry(dir).nonEmpty
-          val seg = java.util.Arrays.copyOfRange(appBuf, appOff, appOff + appLen)
-          val buf = if (dnsCarry) conv.carry(dir) ++ seg else seg
-          var i = 0
-          var lastInfo: String = null
-          var malformed = false
-          var brk = false
-          while (!brk && i + 2 <= buf.length) {
-            val mlen = u16(buf, i)
-            if (mlen < 12) { malformed = true; brk = true }
-            else if (i + 2 + mlen <= buf.length) {
-              val r = dissectDns(buf, i + 2, i + 2 + mlen, v, protos)
-              if (r != null) lastInfo = r
-              i += 2 + mlen
-            } else brk = true
-          }
-          if (malformed) {
-            // framing broke: this is not (or no longer) a sane DNS stream —
-            // drop the carry, keep whatever messages already dissected
-            conv.carry(dir) = Array.emptyByteArray
-            conv.carryKind(dir) = 0
-          } else {
-            val rest = java.util.Arrays.copyOfRange(buf, i, buf.length)
-            conv.carry(dir) = if (rest.length > MaxCarry) Array.emptyByteArray else rest
-            conv.carryKind(dir) = if (conv.carry(dir).nonEmpty) 3 else 0
-          }
-          if (lastInfo != null) {
-            // a multi-message run adds "dns" once per message — dedupe
-            val dd = protos.distinct
-            protos.clear(); protos ++= dd
-            appInfo = lastInfo
-          } else if (conv.carry(dir).nonEmpty && conv.carryKind(dir) == 3) {
-            appInfo = "[TCP segment of a reassembled PDU]"
-          }
-        } else if (appLen >= 14) {
-          val mlen = u16(appBuf, appOff)
-          if (mlen >= 12 && 2 + mlen <= appLen) {
-            val dnsInfo = dissectDns(appBuf, appOff + 2, appOff + 2 + mlen, v, protos)
-            if (dnsInfo != null) appInfo = dnsInfo
-          }
-        }
+    } else if (appLen >= 14) {
+      val mlen = u16(appBuf, appOff)
+      if (mlen >= 12 && 2 + mlen <= appLen) {
+        val dnsInfo = dissectDns(appBuf, appOff + 2, appOff + 2 + mlen, v, protos)
+        if (dnsInfo != null) appInfo = dnsInfo
       }
     }
+    appInfo
+  }
 
-    if (appInfo != null) appInfo
-    else if (!wanted.info) ""
-    else {
-      // Wireshark-style TCP info column; the bracketed flag list comes
-      // from a precomputed 64-entry table (no per-row buffer + mkString)
-      val flagBits = (if (syn) 1 else 0) | (if (fin) 2 else 0) | (if (rst) 4 else 0) |
-        (if (psh) 8 else 0) | (if (ack) 16 else 0) | (if (urg) 32 else 0)
-      if (wanted.infoBytes) {
-        // bytes-only hot path: UTF-8 straight into the tracker's reused
-        // buffer — no StringBuilder, no String, no charset encoder
-        val ib = tracker.infoBuf
-        ib.reset()
-        if (outOfOrder) ib.ascii("[TCP Out-Of-Order] ")
-        else if (tracker.desegment && isFastRetrans) ib.ascii("[TCP Fast Retransmission] ")
-        else if (tracker.desegment && isSpurious) ib.ascii("[TCP Spurious Retransmission] ")
-        else if (tracker.desegment && isRetrans) ib.ascii("[TCP Retransmission] ")
-        else if (tracker.desegment && windowFull) ib.ascii("[TCP Window Full] ")
-        ib.num(sp); ib.arrow(); ib.num(dp)
-        ib.ascii(" [")
-        ib.ascii(tcpFlagStrings(flagBits))
-        ib.ascii("] Seq=")
-        ib.num(relSeq)
-        if (ack && otherIsn >= 0) { ib.ascii(" Ack="); ib.num(relAck) }
-        ib.ascii(" Win=")
-        ib.num(calcWin)
-        ib.ascii(" Len=")
-        ib.num(segLen)
-        if (optParts.nonEmpty) { ib.ascii(" "); ib.ascii(optParts.mkString(" ")) }
-        InfoInBuf
-      } else {
-        val sb = new StringBuilder
-        if (outOfOrder) sb.append("[TCP Out-Of-Order] ")
-        else if (tracker.desegment && isFastRetrans) sb.append("[TCP Fast Retransmission] ")
-        else if (tracker.desegment && isSpurious) sb.append("[TCP Spurious Retransmission] ")
-        else if (tracker.desegment && isRetrans) sb.append("[TCP Retransmission] ")
-        else if (tracker.desegment && windowFull) sb.append("[TCP Window Full] ")
-        sb.append(sp).append(" → ").append(dp)
-        sb.append(" [").append(tcpFlagStrings(flagBits)).append("]")
-        sb.append(" Seq=").append(relSeq)
-        if (ack && otherIsn >= 0) sb.append(" Ack=").append(relAck)
-        sb.append(" Win=").append(calcWin)
-        sb.append(" Len=").append(segLen)
-        if (optParts.nonEmpty) sb.append(" ").append(optParts.mkString(" "))
-        sb.toString
-      }
+  /** The Wireshark-style TCP info column, into the tracker's reused UTF-8
+    * buffer on the scan's bytes-only path, else as a String. `relAck` < 0:
+    * no Ack part. The bracketed flag list comes from a precomputed
+    * 64-entry table. */
+  private def tcpInfo(
+      d: Array[Byte], off: Int, hdrLen: Int, sp: Int, dp: Int, flags: Int,
+      relSeq: Long, relAck: Long, calcWin: Long, segLen: Int, analysis: Int,
+      tracker: Tracker, wanted: Wanted): String = {
+    // tcpFlagStrings bits: SYN FIN RST PSH ACK URG (the header's FIN and
+    // SYN bits swapped)
+    val flagBits = (flags & 0x3c) | ((flags & 0x01) << 1) | ((flags & 0x02) >> 1)
+    val prefix =
+      if ((analysis & OutOfOrder) != 0) "[TCP Out-Of-Order] "
+      else if (!tracker.desegment) null
+      else if ((analysis & FastRetrans) != 0) "[TCP Fast Retransmission] "
+      else if ((analysis & SpuriousRetrans) != 0) "[TCP Spurious Retransmission] "
+      else if ((analysis & Retrans) != 0) "[TCP Retransmission] "
+      else if ((analysis & WindowFull) != 0) "[TCP Window Full] "
+      else null
+    val ib = tracker.infoBuf
+    ib.reset()
+    if (wanted.infoBytes) {
+      // bytes-only hot path: UTF-8 straight into the tracker's reused
+      // buffer — no StringBuilder, no String, no charset encoder
+      if (prefix != null) ib.ascii(prefix)
+      ib.num(sp); ib.arrow(); ib.num(dp)
+      ib.ascii(" [")
+      ib.ascii(tcpFlagStrings(flagBits))
+      ib.ascii("] Seq=")
+      ib.num(relSeq)
+      if (relAck >= 0) { ib.ascii(" Ack="); ib.num(relAck) }
+      ib.ascii(" Win=")
+      ib.num(calcWin)
+      ib.ascii(" Len=")
+      ib.num(segLen)
+      tcpOptions(d, off + 20, off + hdrLen, null, ib)
+      InfoInBuf
+    } else {
+      val sb = new StringBuilder
+      if (prefix != null) sb.append(prefix)
+      sb.append(sp).append(" → ").append(dp)
+      sb.append(" [").append(tcpFlagStrings(flagBits)).append("]")
+      sb.append(" Seq=").append(relSeq)
+      if (relAck >= 0) sb.append(" Ack=").append(relAck)
+      sb.append(" Win=").append(calcWin)
+      sb.append(" Len=").append(segLen)
+      tcpOptions(d, off + 20, off + hdrLen, null, ib) // ASCII option text
+      sb.append(new String(ib.buf, 0, ib.len, java.nio.charset.StandardCharsets.ISO_8859_1))
+      sb.toString
     }
   }
+
+  // --- UDP ---------------------------------------------------------------
+  //
+  // Header fields, then the expert/checksum items, then the port ladder in
+  // three parts (each its own method, far below HotSpot's 8,000-byte
+  // compile limit). A ladder part returns the first claiming dissector's
+  // info, or null to fall through to the next part.
 
   private def dissectUdp(
       d: Array[Byte], off: Int, ipEnd: Int,
@@ -2846,6 +3085,30 @@ object Dissect {
     v.set(Id_udp_port, sp.toLong)
     v.set(Id_udp_stream, conv.stream)
     v.set(Id_udp_length, len.toLong)
+    udpChecksum(d, off, len, dp, srcIp, dstIp, v)
+    v.set(Id_udp_pdu_size, payLen.toLong)
+    if (wanted.payloads && payLen > 0 && off + 8 < d.length)
+      v.set(Id_udp_payload, hexBytes(d, off + 8, math.min(payLen, d.length - off - 8)))
+    var info = udpPortsA(d, off, payLen, sp, dp, conv, v, protos, tracker, wanted)
+    if (info == null) info = udpPortsB(d, off, payLen, sp, dp, conv, v, protos, tracker, wanted)
+    if (info == null) info = udpPortsC(d, off, payLen, sp, dp, conv, v, protos, tracker, wanted)
+    if (info != null) info
+    else if (!wanted.info) ""
+    else if (wanted.infoBytes) {
+      val ib = tracker.infoBuf
+      ib.reset()
+      ib.num(sp); ib.arrow(); ib.num(dp)
+      ib.ascii(" Len=")
+      ib.num(payLen)
+      InfoInBuf
+    } else s"$sp → $dp Len=$payLen"
+  }
+
+  /** udp.checksum and the udp expert items. */
+  private def udpChecksum(
+      d: Array[Byte], off: Int, len: Int, dp: Int,
+      srcIp: String, dstIp: String,
+      v: FieldVec): Unit = {
     val ckStored = u16(d, off + 6)
     v.set(Id_udp_checksum, ckStored.toLong)
     // FT_NONE expert flags: PRESENT (label string) when the condition
@@ -2894,9 +3157,18 @@ object Dissect {
         v("udp.checksum.status") = if (calc == ckStored) 1L else 0L
       }
     }
-    v.set(Id_udp_pdu_size, payLen.toLong)
-    if (wanted.payloads && payLen > 0 && off + 8 < d.length)
-      v.set(Id_udp_payload, hexBytes(d, off + 8, math.min(payLen, d.length - off - 8)))
+  }
+
+  /** First part of the UDP port ladder, in claim order: where two
+    * dissectors share a port, or a heuristic sits between port checks, the
+    * earlier one is tried first. */
+  private def udpPortsA(
+      d: Array[Byte], off: Int, payLen: Int, sp: Int, dp: Int,
+      conv: UdpConv,
+      v: FieldVec,
+      protos: mutable.ArrayBuffer[String],
+      tracker: Tracker,
+      wanted: Wanted): String = {
     if (sp == 53 || dp == 53) {
       val dnsInfo = dissectDns(d, off + 8, math.min(off + 8 + payLen, d.length), v, protos)
       if (dnsInfo != null) return dnsInfo
@@ -3143,6 +3415,17 @@ object Dissect {
         math.min(payLen, d.length - off - 8), v, protos)
       if (doipInfo != null) return doipInfo
     }
+    null
+  }
+
+  /** Second part of the UDP port ladder (see [[udpPortsA]]). */
+  private def udpPortsB(
+      d: Array[Byte], off: Int, payLen: Int, sp: Int, dp: Int,
+      conv: UdpConv,
+      v: FieldVec,
+      protos: mutable.ArrayBuffer[String],
+      tracker: Tracker,
+      wanted: Wanted): String = {
     // NetBIOS Datagram Service (RFC 1002 §4.4, UDP 138)
     if ((sp == 138 || dp == 138) && payLen >= 10 && off + 18 <= d.length) {
       val mt = u8(d, off + 8)
@@ -3407,6 +3690,17 @@ object Dissect {
         v, protos)
       if (mnInfo != null) return mnInfo
     }
+    null
+  }
+
+  /** Third part of the UDP port ladder (see [[udpPortsA]]). */
+  private def udpPortsC(
+      d: Array[Byte], off: Int, payLen: Int, sp: Int, dp: Int,
+      conv: UdpConv,
+      v: FieldVec,
+      protos: mutable.ArrayBuffer[String],
+      tracker: Tracker,
+      wanted: Wanted): String = {
     // VXLAN-GPE (UDP 4790): VXLAN header with the P bit — next-protocol
     // discriminates the inner layer instead of assuming Ethernet
     if ((sp == 4790 || dp == 4790) && payLen >= 8 && off + 16 <= d.length &&
@@ -3680,18 +3974,10 @@ object Dissect {
         v, protos)
       if (bbInfo != null) return bbInfo
     }
-    if (!wanted.info) ""
-    else if (wanted.infoBytes) {
-      val ib = tracker.infoBuf
-      ib.reset()
-      ib.num(sp); ib.arrow(); ib.num(dp)
-      ib.ascii(" Len=")
-      ib.num(payLen)
-      InfoInBuf
-    } else s"$sp → $dp Len=$payLen"
+    null
   }
 
-  private val dhcpMsgNames: Map[Int, String] = Map(
+  private lazy val dhcpMsgNames: Map[Int, String] = Map(
     1 -> "Discover", 2 -> "Offer", 3 -> "Request", 4 -> "Decline",
     5 -> "ACK", 6 -> "NAK", 7 -> "Release", 8 -> "Inform")
 
@@ -3740,7 +4026,7 @@ object Dissect {
     s"DHCP $name - Transaction ID 0x${"%x".format(u32(d, off + 4))}"
   }
 
-  private val quicTypeNames = Array("Initial", "0-RTT", "Handshake", "Retry")
+  private lazy val quicTypeNames = Array("Initial", "0-RTT", "Handshake", "Retry")
 
   // ---- QUIC Initial packet protection (RFC 9001 §5) ------------------
   // Initial packets are encrypted with keys derived ONLY from the client's
@@ -3749,7 +4035,7 @@ object Dissect {
   // TLS ClientHello (SNI/ALPN/cipher suites) riding in CRYPTO frames.
 
   /** RFC 9001 §5.2 QUIC v1 initial salt. */
-  private val quicV1Salt: Array[Byte] =
+  private lazy val quicV1Salt: Array[Byte] =
     Array(0x38, 0x76, 0x2c, 0xf7, 0xf5, 0x59, 0x34, 0xb3, 0x4d, 0x17,
       0x9a, 0xe6, 0xa4, 0xc8, 0x0c, 0xad, 0xcc, 0xbb, 0x7f, 0x0a)
       .map(_.toByte)
@@ -4161,7 +4447,7 @@ object Dissect {
     line
   }
 
-  private val tlsHandshakeNames: Map[Int, String] = Map(
+  private lazy val tlsHandshakeNames: Map[Int, String] = Map(
     1 -> "Client Hello", 2 -> "Server Hello", 4 -> "New Session Ticket",
     8 -> "Encrypted Extensions", 11 -> "Certificate", 12 -> "Server Key Exchange",
     14 -> "Server Hello Done", 16 -> "Client Key Exchange", 20 -> "Finished")
@@ -4404,7 +4690,7 @@ object Dissect {
     null
   }
 
-  private val smb2CmdNames: Map[Int, String] = Map(
+  private lazy val smb2CmdNames: Map[Int, String] = Map(
     0 -> "Negotiate", 1 -> "Session Setup", 2 -> "Logoff", 3 -> "Tree Connect",
     4 -> "Tree Disconnect", 5 -> "Create", 6 -> "Close", 7 -> "Flush",
     8 -> "Read", 9 -> "Write", 10 -> "Lock", 11 -> "Ioctl", 12 -> "Cancel",
@@ -4438,7 +4724,7 @@ object Dissect {
     else dissectSmb1(d, off, end - off, v, protos)
   }
 
-  private val smb1CmdNames: Map[Int, String] = Map(
+  private lazy val smb1CmdNames: Map[Int, String] = Map(
     0x04 -> "Close", 0x25 -> "Trans", 0x2e -> "Read AndX", 0x2f -> "Write AndX",
     0x32 -> "Trans2", 0x71 -> "Tree Disconnect", 0x72 -> "Negotiate Protocol",
     0x73 -> "Session Setup AndX", 0x74 -> "Logoff AndX",
@@ -4619,7 +4905,7 @@ object Dissect {
     s"$name ${if (isResponse) "Response" else "Request"}"
   }
 
-  private val eigrpOpcodeNames: Map[Int, String] = Map(
+  private lazy val eigrpOpcodeNames: Map[Int, String] = Map(
     1 -> "Update", 3 -> "Query", 4 -> "Reply", 5 -> "Hello",
     10 -> "SIA-Query", 11 -> "SIA-Reply")
 
@@ -4641,10 +4927,10 @@ object Dissect {
     eigrpOpcodeNames.getOrElse(opcode, s"Opcode $opcode")
   }
 
-  private val hsrpStateNames: Map[Int, String] = Map(
+  private lazy val hsrpStateNames: Map[Int, String] = Map(
     0 -> "Initial", 1 -> "Learn", 2 -> "Listen", 4 -> "Speak",
     8 -> "Standby", 16 -> "Active")
-  private val hsrpOpcodeNames: Map[Int, String] =
+  private lazy val hsrpOpcodeNames: Map[Int, String] =
     Map(0 -> "Hello", 1 -> "Coup", 2 -> "Resign")
 
   /** HSRP v0 (RFC 2281, UDP 1985): hello/coup/resign header. */
@@ -4691,7 +4977,7 @@ object Dissect {
     if (cmd == 1) "Request" else "Response"
   }
 
-  private val bfdStateNames: Array[String] =
+  private lazy val bfdStateNames: Array[String] =
     Array("AdminDown", "Down", "Init", "Up")
 
   /** BFD control packet (RFC 5880 §4.1, UDP 3784). */
@@ -4843,7 +5129,7 @@ object Dissect {
     info
   }
 
-  private val diameterCmdNames: Map[Int, String] = Map(
+  private lazy val diameterCmdNames: Map[Int, String] = Map(
     257 -> "Capabilities-Exchange", 258 -> "Re-Auth", 271 -> "Accounting",
     272 -> "Credit-Control", 274 -> "Abort-Session", 275 -> "Session-Termination",
     280 -> "Device-Watchdog", 282 -> "Disconnect-Peer")
@@ -4944,7 +5230,7 @@ object Dissect {
     }
   }
 
-  private val sshMsgNames: Map[Int, String] = Map(
+  private lazy val sshMsgNames: Map[Int, String] = Map(
     1 -> "Disconnect", 2 -> "Ignore", 3 -> "Unimplemented", 4 -> "Debug",
     5 -> "Service Request", 6 -> "Service Accept",
     20 -> "Key Exchange Init", 21 -> "New Keys",
@@ -5016,7 +5302,7 @@ object Dissect {
     }
   }
 
-  private val sipMethods = Set("INVITE", "ACK", "BYE", "CANCEL", "REGISTER",
+  private lazy val sipMethods = Set("INVITE", "ACK", "BYE", "CANCEL", "REGISTER",
     "OPTIONS", "SUBSCRIBE", "NOTIFY", "INFO", "MESSAGE", "REFER", "UPDATE",
     "PRACK", "PUBLISH")
 
@@ -5173,7 +5459,7 @@ object Dissect {
     f"PT=${rtpPtName(pt)}, SSRC=0x$ssrc%08X, Seq=$seq, Time=$ts"
   }
 
-  private val krbMsgNames: Map[Int, String] = Map(
+  private lazy val krbMsgNames: Map[Int, String] = Map(
     10 -> "AS-REQ", 11 -> "AS-REP", 12 -> "TGS-REQ", 13 -> "TGS-REP",
     14 -> "AP-REQ", 15 -> "AP-REP", 20 -> "KRB-SAFE", 21 -> "KRB-PRIV",
     22 -> "KRB-CRED", 30 -> "KRB-ERROR")
@@ -5311,7 +5597,7 @@ object Dissect {
     else (-1, p)
   }
 
-  private val snmpPduNames: Map[Int, String] = Map(
+  private lazy val snmpPduNames: Map[Int, String] = Map(
     0 -> "get-request", 1 -> "get-next-request", 2 -> "get-response",
     3 -> "set-request", 4 -> "trap", 5 -> "getBulkRequest",
     6 -> "informRequest", 7 -> "snmpV2-trap", 8 -> "report")
@@ -5434,14 +5720,14 @@ object Dissect {
     }
   }
 
-  private val nfs3ProcNames: Map[Int, String] = Map(
+  private lazy val nfs3ProcNames: Map[Int, String] = Map(
     0 -> "NULL", 1 -> "GETATTR", 2 -> "SETATTR", 3 -> "LOOKUP", 4 -> "ACCESS",
     5 -> "READLINK", 6 -> "READ", 7 -> "WRITE", 8 -> "CREATE", 9 -> "MKDIR",
     10 -> "SYMLINK", 11 -> "MKNOD", 12 -> "REMOVE", 13 -> "RMDIR",
     14 -> "RENAME", 15 -> "LINK", 16 -> "READDIR", 17 -> "READDIRPLUS",
     18 -> "FSSTAT", 19 -> "FSINFO", 20 -> "PATHCONF", 21 -> "COMMIT")
 
-  private val mountProcNames: Map[Int, String] = Map(
+  private lazy val mountProcNames: Map[Int, String] = Map(
     0 -> "NULL", 1 -> "MNT", 2 -> "DUMP", 3 -> "UMNT", 4 -> "UMNTALL",
     5 -> "EXPORT")
 
@@ -5565,7 +5851,7 @@ object Dissect {
     }
   }
 
-  private val dcerpcPtypeNames: Map[Int, String] = Map(
+  private lazy val dcerpcPtypeNames: Map[Int, String] = Map(
     0 -> "Request", 2 -> "Response", 3 -> "Fault", 11 -> "Bind",
     12 -> "Bind_ack", 13 -> "Bind_nak", 14 -> "Alter_context",
     15 -> "Alter_context_resp", 17 -> "Auth3", 18 -> "Shutdown")
@@ -5604,7 +5890,7 @@ object Dissect {
     } else name
   }
 
-  private val ldapOpNames: Map[Int, String] = Map(
+  private lazy val ldapOpNames: Map[Int, String] = Map(
     0 -> "bindRequest", 1 -> "bindResponse", 2 -> "unbindRequest",
     3 -> "searchRequest", 4 -> "searchResEntry", 5 -> "searchResDone",
     6 -> "modifyRequest", 7 -> "modifyResponse", 8 -> "addRequest",
@@ -5787,7 +6073,7 @@ object Dissect {
     }
   }
 
-  private val radiusCodeNames: Map[Int, String] = Map(
+  private lazy val radiusCodeNames: Map[Int, String] = Map(
     1 -> "Access-Request", 2 -> "Access-Accept", 3 -> "Access-Reject",
     4 -> "Accounting-Request", 5 -> "Accounting-Response",
     11 -> "Access-Challenge", 12 -> "Status-Server", 13 -> "Status-Client")
@@ -5815,7 +6101,7 @@ object Dissect {
     }
   }
 
-  private val modbusFuncNames: Map[Int, String] = Map(
+  private lazy val modbusFuncNames: Map[Int, String] = Map(
     1 -> "Read Coils", 2 -> "Read Discrete Inputs", 3 -> "Read Holding Registers",
     4 -> "Read Input Registers", 5 -> "Write Single Coil",
     6 -> "Write Single Register", 15 -> "Write Multiple Coils",
@@ -5944,7 +6230,7 @@ object Dissect {
     }
   }
 
-  private val smppCmdNames: Map[Long, String] = Map(
+  private lazy val smppCmdNames: Map[Long, String] = Map(
     0x00000001L -> "bind_receiver", 0x00000002L -> "bind_transmitter",
     0x00000004L -> "submit_sm", 0x00000005L -> "deliver_sm",
     0x00000006L -> "unbind", 0x00000009L -> "bind_transceiver",
@@ -6003,7 +6289,7 @@ object Dissect {
     name
   }
 
-  private val pptpCtrlNames: Map[Int, String] = Map(
+  private lazy val pptpCtrlNames: Map[Int, String] = Map(
     1 -> "Start-Control-Connection-Request", 2 -> "Start-Control-Connection-Reply",
     3 -> "Stop-Control-Connection-Request", 4 -> "Stop-Control-Connection-Reply",
     5 -> "Echo-Request", 6 -> "Echo-Reply",
@@ -6064,10 +6350,10 @@ object Dissect {
   // (CIP), OPC UA binary — header-level triage like the other tiers.
   // -------------------------------------------------------------------
 
-  private val s7RosctrNames: Map[Int, String] = Map(
+  private lazy val s7RosctrNames: Map[Int, String] = Map(
     1 -> "Job", 2 -> "Ack", 3 -> "Ack_Data", 7 -> "Userdata")
 
-  private val s7FuncNames: Map[Int, String] = Map(
+  private lazy val s7FuncNames: Map[Int, String] = Map(
     0xf0 -> "Setup communication", 0x04 -> "Read Var", 0x05 -> "Write Var",
     0x1a -> "Request download", 0x1b -> "Download block",
     0x1c -> "Download ended", 0x1d -> "Start upload", 0x1e -> "Upload",
@@ -6111,7 +6397,7 @@ object Dissect {
     s"ROSCTR:[${s7RosctrNames.getOrElse(rosctr, rosctr.toString)}]$funcPart"
   }
 
-  private val dnp3FuncNames: Map[Int, String] = Map(
+  private lazy val dnp3FuncNames: Map[Int, String] = Map(
     0 -> "Confirm", 1 -> "Read", 2 -> "Write", 3 -> "Select", 4 -> "Operate",
     5 -> "Direct Operate", 13 -> "Cold Restart", 14 -> "Warm Restart",
     20 -> "Enable Unsolicited", 21 -> "Disable Unsolicited",
@@ -6149,7 +6435,7 @@ object Dissect {
     info
   }
 
-  private val iecTypeNames: Map[Int, String] = Map(
+  private lazy val iecTypeNames: Map[Int, String] = Map(
     1 -> "M_SP_NA_1", 3 -> "M_DP_NA_1", 9 -> "M_ME_NA_1", 13 -> "M_ME_NC_1",
     30 -> "M_SP_TB_1", 36 -> "M_ME_TF_1", 45 -> "C_SC_NA_1", 46 -> "C_DC_NA_1",
     100 -> "C_IC_NA_1", 103 -> "C_CS_NA_1")
@@ -6200,12 +6486,12 @@ object Dissect {
     }
   }
 
-  private val enipCmdNames: Map[Int, String] = Map(
+  private lazy val enipCmdNames: Map[Int, String] = Map(
     0x0004 -> "List Services", 0x0063 -> "List Identity",
     0x0065 -> "Register Session", 0x0066 -> "Unregister Session",
     0x006f -> "Send RR Data", 0x0070 -> "Send Unit Data")
 
-  private val cipServiceNames: Map[Int, String] = Map(
+  private lazy val cipServiceNames: Map[Int, String] = Map(
     0x01 -> "Get Attributes All", 0x05 -> "Reset",
     0x0e -> "Get Attribute Single", 0x10 -> "Set Attribute Single",
     0x4c -> "Read Tag", 0x4d -> "Write Tag")
@@ -6259,7 +6545,7 @@ object Dissect {
     info
   }
 
-  private val opcuaMsgNames: Map[String, String] = Map(
+  private lazy val opcuaMsgNames: Map[String, String] = Map(
     "HEL" -> "Hello", "ACK" -> "Acknowledge", "ERR" -> "Error",
     "OPN" -> "OpenSecureChannel", "CLO" -> "CloseSecureChannel",
     "MSG" -> "Message")
@@ -6295,7 +6581,7 @@ object Dissect {
     opcuaMsgNames(t) + " message"
   }
 
-  private val bgpTypeNames: Map[Int, String] = Map(
+  private lazy val bgpTypeNames: Map[Int, String] = Map(
     1 -> "OPEN Message", 2 -> "UPDATE Message",
     3 -> "NOTIFICATION Message", 4 -> "KEEPALIVE Message",
     5 -> "ROUTE-REFRESH Message")
@@ -6347,7 +6633,7 @@ object Dissect {
     * for the single-group v1/v2 forms — the group address. The v3 report
     * (0x22) carries group records, not one address, so only type-level
     * fields are emitted for it. */
-  private val dvmrpCodeNames = Map(
+  private lazy val dvmrpCodeNames = Map(
     1 -> "Probe", 2 -> "Route Report", 3 -> "Ask Neighbors",
     4 -> "Neighbors", 5 -> "Ask Neighbors 2", 6 -> "Neighbors 2",
     7 -> "Prune", 8 -> "Graft", 9 -> "Graft-Ack")
@@ -6431,7 +6717,7 @@ object Dissect {
     if (inner != null) inner else s"AH (SPI=0x${"%08x".format(spi)})"
   }
 
-  private val ssdpMethods = Set("M-SEARCH", "NOTIFY", "GET", "POST",
+  private lazy val ssdpMethods = Set("M-SEARCH", "NOTIFY", "GET", "POST",
     "SUBSCRIBE", "UNSUBSCRIBE")
 
   /** SSDP (UDP 1900): HTTP-framed discovery — the start line reuses the
@@ -6491,7 +6777,7 @@ object Dissect {
     line
   }
 
-  private val wsOpcodeNames: Map[Int, String] = Map(
+  private lazy val wsOpcodeNames: Map[Int, String] = Map(
     0 -> "Continuation", 1 -> "Text", 2 -> "Binary",
     8 -> "Connection Close", 9 -> "Ping", 10 -> "Pong")
 
@@ -6632,7 +6918,7 @@ object Dissect {
     } else s"$vname ${tlsContentName(ctype)}"
   }
 
-  private val rtspMethods = Set("OPTIONS", "DESCRIBE", "ANNOUNCE", "SETUP",
+  private lazy val rtspMethods = Set("OPTIONS", "DESCRIBE", "ANNOUNCE", "SETUP",
     "PLAY", "PAUSE", "TEARDOWN", "GET_PARAMETER", "SET_PARAMETER",
     "REDIRECT", "RECORD")
 
@@ -6685,7 +6971,7 @@ object Dissect {
     line
   }
 
-  private val socksCmdNames: Map[Int, String] =
+  private lazy val socksCmdNames: Map[Int, String] =
     Map(1 -> "Connect", 2 -> "Bind", 3 -> "UdpAssociate")
 
   /** SOCKS (TCP 1080): v5 greeting / request / reply and the v4 request —
@@ -6750,12 +7036,12 @@ object Dissect {
     } else null
   }
 
-  private val syslogFacilityNames: Array[String] = Array(
+  private lazy val syslogFacilityNames: Array[String] = Array(
     "KERN", "USER", "MAIL", "DAEMON", "AUTH", "SYSLOG", "LPR", "NEWS",
     "UUCP", "CRON", "AUTHPRIV", "FTP", "NTP", "AUDIT", "ALERT", "CLOCK",
     "LOCAL0", "LOCAL1", "LOCAL2", "LOCAL3", "LOCAL4", "LOCAL5", "LOCAL6",
     "LOCAL7")
-  private val syslogLevelNames: Array[String] = Array(
+  private lazy val syslogLevelNames: Array[String] = Array(
     "EMERG", "ALERT", "CRIT", "ERR", "WARNING", "NOTICE", "INFO", "DEBUG")
 
   /** Syslog (RFC 3164, UDP 514): `<PRI>` then the free-form message;
@@ -6831,7 +7117,7 @@ object Dissect {
     }
   }
 
-  private val ospfTypeNames: Map[Int, String] = Map(
+  private lazy val ospfTypeNames: Map[Int, String] = Map(
     1 -> "Hello Packet", 2 -> "DB Description", 3 -> "LS Request",
     4 -> "LS Update", 5 -> "LS Acknowledge")
 
@@ -6897,7 +7183,7 @@ object Dissect {
     else "Name query"
   }
 
-  private val stunTypeNames: Map[Int, String] = Map(
+  private lazy val stunTypeNames: Map[Int, String] = Map(
     0x0001 -> "Binding Request", 0x0101 -> "Binding Success Response",
     0x0111 -> "Binding Error Response", 0x0011 -> "Binding Indication",
     // TURN methods (RFC 8656) share the STUN header and cookie
@@ -6930,7 +7216,7 @@ object Dissect {
     stunTypeNames.getOrElse(tpe, f"STUN type=0x$tpe%04x")
   }
 
-  private val dhcpv6MsgNames: Map[Int, String] = Map(
+  private lazy val dhcpv6MsgNames: Map[Int, String] = Map(
     1 -> "Solicit", 2 -> "Advertise", 3 -> "Request", 4 -> "Confirm",
     5 -> "Renew", 6 -> "Rebind", 7 -> "Reply", 8 -> "Release",
     9 -> "Decline", 10 -> "Reconfigure", 11 -> "Information-request",
@@ -6951,7 +7237,7 @@ object Dissect {
     f"$name XID: 0x$xid%06x"
   }
 
-  private val wgTypeNames: Map[Int, String] = Map(
+  private lazy val wgTypeNames: Map[Int, String] = Map(
     1 -> "Handshake Initiation", 2 -> "Handshake Response",
     3 -> "Cookie Reply", 4 -> "Transport Data")
 
@@ -6975,7 +7261,7 @@ object Dissect {
     f"$name, $which=0x$idx%08x"
   }
 
-  private val mqttTypeNames: Map[Int, String] = Map(
+  private lazy val mqttTypeNames: Map[Int, String] = Map(
     1 -> "Connect Command", 2 -> "Connect Ack", 3 -> "Publish Message",
     4 -> "Publish Ack", 5 -> "Publish Received", 6 -> "Publish Release",
     7 -> "Publish Complete", 8 -> "Subscribe Request", 9 -> "Subscribe Ack",
@@ -7071,7 +7357,7 @@ object Dissect {
     name
   }
 
-  private val sctpChunkNames: Map[Int, String] = Map(
+  private lazy val sctpChunkNames: Map[Int, String] = Map(
     0 -> "DATA", 1 -> "INIT", 2 -> "INIT_ACK", 3 -> "SACK",
     4 -> "HEARTBEAT", 5 -> "HEARTBEAT_ACK", 6 -> "ABORT", 7 -> "SHUTDOWN",
     8 -> "SHUTDOWN_ACK", 9 -> "ERROR", 10 -> "COOKIE_ECHO",
@@ -7204,7 +7490,7 @@ object Dissect {
     f"GTP <$mname> TEID=0x$teid%08x"
   }
 
-  private val ikeExchangeNames: Map[Int, String] = Map(
+  private lazy val ikeExchangeNames: Map[Int, String] = Map(
     34 -> "IKE_SA_INIT", 35 -> "IKE_AUTH", 36 -> "CREATE_CHILD_SA",
     37 -> "INFORMATIONAL")
 
@@ -7261,7 +7547,7 @@ object Dissect {
     s"$kind - Tunnel $tunnel Session $session"
   }
 
-  private val tdsTypeNames: Map[Int, String] = Map(
+  private lazy val tdsTypeNames: Map[Int, String] = Map(
     1 -> "SQL batch", 2 -> "Pre-TDS7 Login", 3 -> "Remote Procedure Call",
     4 -> "Response", 6 -> "Attention Signal", 7 -> "Bulk Load",
     14 -> "Transaction Manager Request", 17 -> "SSPI Message",
@@ -7284,10 +7570,10 @@ object Dissect {
     name
   }
 
-  private val amqpFrameNames: Map[Int, String] = Map(
+  private lazy val amqpFrameNames: Map[Int, String] = Map(
     1 -> "Method", 2 -> "Content header", 3 -> "Content body", 8 -> "Heartbeat")
 
-  private val amqpMethodNames: Map[(Int, Int), String] = Map(
+  private lazy val amqpMethodNames: Map[(Int, Int), String] = Map(
     (10, 10) -> "Connection.Start", (10, 11) -> "Connection.Start-Ok",
     (10, 30) -> "Connection.Tune", (10, 31) -> "Connection.Tune-Ok",
     (10, 40) -> "Connection.Open", (10, 41) -> "Connection.Open-Ok",
@@ -7338,7 +7624,7 @@ object Dissect {
     name
   }
 
-  private val pgsqlTypeNames: Map[Char, String] = Map(
+  private lazy val pgsqlTypeNames: Map[Char, String] = Map(
     'Q' -> "Simple query", 'P' -> "Parse", 'B' -> "Bind", 'E' -> "Execute",
     'D' -> "Data row", 'T' -> "Row description", 'C' -> "Command completion",
     'R' -> "Authentication request", 'S' -> "Parameter status",
@@ -7368,7 +7654,7 @@ object Dissect {
     name
   }
 
-  private val mysqlCommandNames: Map[Int, String] = Map(
+  private lazy val mysqlCommandNames: Map[Int, String] = Map(
     0 -> "Sleep", 1 -> "Quit", 2 -> "Init DB", 3 -> "Query",
     4 -> "Field List", 5 -> "Create DB", 6 -> "Drop DB", 7 -> "Refresh",
     8 -> "Shutdown", 9 -> "Statistics", 12 -> "Process Kill",
@@ -7410,9 +7696,9 @@ object Dissect {
     } else null
   }
 
-  private val redisCommandRe = "\\A\\*\\d+\r\n\\$\\d+\r\n([A-Za-z]+)\r\n".r
+  private lazy val redisCommandRe = "\\A\\*\\d+\r\n\\$\\d+\r\n([A-Za-z]+)\r\n".r
 
-  private val iscsiOpcodeNames: Map[Int, String] = Map(
+  private lazy val iscsiOpcodeNames: Map[Int, String] = Map(
     0x00 -> "NOP Out", 0x01 -> "SCSI Command", 0x02 -> "Task Management Function",
     0x03 -> "Login Command", 0x04 -> "Text Command", 0x05 -> "SCSI Data Out",
     0x06 -> "Logout Command", 0x20 -> "NOP In", 0x21 -> "SCSI Response",
@@ -7445,7 +7731,7 @@ object Dissect {
     iscsiOpcodeNames(op)
   }
 
-  private val llrpTypeNames: Map[Int, String] = Map(
+  private lazy val llrpTypeNames: Map[Int, String] = Map(
     1 -> "GET_READER_CAPABILITIES", 3 -> "GET_READER_CONFIG",
     20 -> "ADD_ROSPEC", 21 -> "DELETE_ROSPEC", 22 -> "START_ROSPEC",
     61 -> "RO_ACCESS_REPORT", 62 -> "KEEPALIVE", 63 -> "READER_EVENT_NOTIFICATION")
@@ -7471,7 +7757,7 @@ object Dissect {
     llrpTypeNames.getOrElse(typ, s"LLRP message ($typ)")
   }
 
-  private val openvpnOpcodeNames: Map[Int, String] = Map(
+  private lazy val openvpnOpcodeNames: Map[Int, String] = Map(
     1 -> "P_CONTROL_HARD_RESET_CLIENT_V1", 2 -> "P_CONTROL_HARD_RESET_SERVER_V1",
     3 -> "P_CONTROL_SOFT_RESET_V1", 4 -> "P_CONTROL_V1", 5 -> "P_ACK_V1",
     6 -> "P_DATA_V1", 7 -> "P_CONTROL_HARD_RESET_CLIENT_V2",
@@ -7581,7 +7867,7 @@ object Dissect {
     }
   }
 
-  private val openflowTypeNames: Map[Int, String] = Map(
+  private lazy val openflowTypeNames: Map[Int, String] = Map(
     0 -> "OFPT_HELLO", 1 -> "OFPT_ERROR", 2 -> "OFPT_ECHO_REQUEST",
     3 -> "OFPT_ECHO_REPLY", 5 -> "OFPT_FEATURES_REQUEST",
     6 -> "OFPT_FEATURES_REPLY", 8 -> "OFPT_GET_CONFIG_REPLY",
@@ -7605,7 +7891,7 @@ object Dissect {
     openflowTypeNames.getOrElse(typ, s"OFPT ($typ)")
   }
 
-  private val bvlcFunctionNames: Map[Int, String] = Map(
+  private lazy val bvlcFunctionNames: Map[Int, String] = Map(
     0x00 -> "BVLC-Result", 0x04 -> "Forwarded-NPDU",
     0x0a -> "Original-Unicast-NPDU", 0x0b -> "Original-Broadcast-NPDU")
 
@@ -7645,9 +7931,9 @@ object Dissect {
     name
   }
 
-  private val eapCodeNames: Map[Int, String] = Map(
+  private lazy val eapCodeNames: Map[Int, String] = Map(
     1 -> "Request", 2 -> "Response", 3 -> "Success", 4 -> "Failure")
-  private val eapTypeNames: Map[Int, String] = Map(
+  private lazy val eapTypeNames: Map[Int, String] = Map(
     1 -> "Identity", 2 -> "Notification", 3 -> "Legacy Nak (Response Only)",
     4 -> "MD5-Challenge EAP (EAP-MD5-CHALLENGE)",
     13 -> "TLS EAP (EAP-TLS)", 21 -> "Tunneled TLS EAP (EAP-TTLS)",
@@ -7702,7 +7988,7 @@ object Dissect {
     else { v("vnc.client_proto_ver") = ver; s"Client protocol version: $ver" }
   }
 
-  private val stompCommands = Set(
+  private lazy val stompCommands = Set(
     "CONNECT", "CONNECTED", "STOMP", "SEND", "SUBSCRIBE", "UNSUBSCRIBE",
     "ACK", "NACK", "BEGIN", "COMMIT", "ABORT", "DISCONNECT", "MESSAGE",
     "RECEIPT", "ERROR")
@@ -7724,7 +8010,7 @@ object Dissect {
     cmd
   }
 
-  private val p9MsgNames: Map[Int, String] = Map(
+  private lazy val p9MsgNames: Map[Int, String] = Map(
     100 -> "Tversion", 101 -> "Rversion", 102 -> "Tauth", 103 -> "Rauth",
     104 -> "Tattach", 105 -> "Rattach", 107 -> "Rerror", 108 -> "Tflush",
     109 -> "Rflush", 110 -> "Twalk", 111 -> "Rwalk", 112 -> "Topen",
@@ -7752,7 +8038,7 @@ object Dissect {
     s"$name tag=$tag"
   }
 
-  private val mgcpVerbs = Set(
+  private lazy val mgcpVerbs = Set(
     "EPCF", "CRCX", "MDCX", "DLCX", "RQNT", "NTFY", "AUEP", "AUCX", "RSIP")
 
   /** MGCP (UDP 2427/2727, RFC 3435 §3): a text command line
@@ -7781,7 +8067,7 @@ object Dissect {
     } else null
   }
 
-  private val someipMsgTypes = Map(
+  private lazy val someipMsgTypes = Map(
     0x00 -> "Request", 0x01 -> "Request no return", 0x02 -> "Notification",
     0x80 -> "Response", 0x81 -> "Error",
     0x20 -> "Request (TP)", 0x21 -> "Request no return (TP)",
@@ -7815,7 +8101,7 @@ object Dissect {
     f"$name Service 0x$service%04x Method 0x$method%04x"
   }
 
-  private val doipPayloadTypes = Map(
+  private lazy val doipPayloadTypes = Map(
     0x0000 -> "Generic DoIP header NACK",
     0x0001 -> "Vehicle identification request",
     0x0002 -> "Vehicle identification request (EID)",
@@ -7868,7 +8154,7 @@ object Dissect {
     name
   }
 
-  private val gtpv2MsgNames = Map(
+  private lazy val gtpv2MsgNames = Map(
     1 -> "Echo Request", 2 -> "Echo Response",
     3 -> "Version Not Supported Indication",
     32 -> "Create Session Request", 33 -> "Create Session Response",
@@ -7910,7 +8196,7 @@ object Dissect {
     name
   }
 
-  private val pfcpMsgNames = Map(
+  private lazy val pfcpMsgNames = Map(
     1 -> "Heartbeat Request", 2 -> "Heartbeat Response",
     3 -> "PFD Management Request", 4 -> "PFD Management Response",
     5 -> "Association Setup Request", 6 -> "Association Setup Response",
@@ -7952,7 +8238,7 @@ object Dissect {
     name
   }
 
-  private val natsVerbs = Set(
+  private lazy val natsVerbs = Set(
     "INFO", "CONNECT", "PUB", "HPUB", "SUB", "UNSUB", "MSG", "HMSG",
     "PING", "PONG", "+OK", "-ERR")
 
@@ -7993,7 +8279,7 @@ object Dissect {
     if (line.length <= 60) line else line.substring(0, 60)
   }
 
-  private val dicomPduNames = Map(
+  private lazy val dicomPduNames = Map(
     1 -> "A-ASSOCIATE-RQ", 2 -> "A-ASSOCIATE-AC", 3 -> "A-ASSOCIATE-RJ",
     4 -> "P-DATA-TF", 5 -> "A-RELEASE-RQ", 6 -> "A-RELEASE-RP", 7 -> "A-ABORT")
 
@@ -8055,7 +8341,7 @@ object Dissect {
     s"MTI $mti"
   }
 
-  private val bitcoinMagics =
+  private lazy val bitcoinMagics =
     Set(0xD9B4BEF9L, 0x0709110BL, 0xDAB5BFFAL, 0x40CF030AL) // main/test3/regtest/signet
 
   /** Bitcoin P2P (TCP 8333): 24-byte message header — LE network magic,
@@ -8180,7 +8466,7 @@ object Dissect {
     } else s"${if ((b0 & 1) != 0) "Message frame (more)" else "Message frame"}, len $fLen"
   }
 
-  private val soupTypes = Map(
+  private lazy val soupTypes = Map(
     'L' -> "Login Request", 'A' -> "Login Accepted", 'J' -> "Login Rejected",
     'S' -> "Sequenced Data", 'U' -> "Unsequenced Data", 'H' -> "Server Heartbeat",
     'R' -> "Client Heartbeat", 'O' -> "Logout Request", '+' -> "Debug",
@@ -8280,7 +8566,7 @@ object Dissect {
     s"Zabbix protocol, len $dlen${if ((flags & 2) != 0) " (compressed)" else ""}"
   }
 
-  private val srtCtrlNames = Map(
+  private lazy val srtCtrlNames = Map(
     0 -> "HANDSHAKE", 1 -> "KEEPALIVE", 2 -> "ACK", 3 -> "NAK",
     5 -> "SHUTDOWN", 6 -> "ACKACK", 7 -> "DROPREQ", 8 -> "PEERERROR")
 
@@ -8364,7 +8650,7 @@ object Dissect {
     line
   }
 
-  private val couchbaseOpNames = Map(
+  private lazy val couchbaseOpNames = Map(
     0x00 -> "Get", 0x01 -> "Set", 0x02 -> "Add", 0x04 -> "Delete",
     0x0a -> "No-op", 0x10 -> "Stat", 0x1f -> "SASL Auth", 0x89 -> "Select Bucket")
 
@@ -8385,7 +8671,7 @@ object Dissect {
     s"$dirn: ${couchbaseOpNames.getOrElse(opcode, f"opcode 0x$opcode%02x")}"
   }
 
-  private val tnsTypeNames = Map(
+  private lazy val tnsTypeNames = Map(
     1 -> "Connect", 2 -> "Accept", 4 -> "Refuse", 5 -> "Redirect",
     6 -> "Data", 11 -> "Resend", 12 -> "Marker", 14 -> "Abort")
 
@@ -8405,7 +8691,7 @@ object Dissect {
     name
   }
 
-  private val icpOpNames = Map(
+  private lazy val icpOpNames = Map(
     1 -> "ICP_QUERY", 2 -> "ICP_HIT", 3 -> "ICP_MISS", 4 -> "ICP_ERR",
     10 -> "ICP_SECHO", 11 -> "ICP_DECHO", 21 -> "ICP_MISS_NOFETCH",
     22 -> "ICP_DENIED")
@@ -8612,7 +8898,7 @@ object Dissect {
     if (inner != null) inner else "EtherIP"
   }
 
-  private val aoeCmdNames = Map(
+  private lazy val aoeCmdNames = Map(
     0 -> "Issue ATA Command", 1 -> "Query Config Information",
     2 -> "Mac Mask List", 3 -> "Reserve/Release")
 
@@ -8699,7 +8985,7 @@ object Dissect {
     s"ZServ v$ver command ${u16(d, off + 4)}"
   }
 
-  private val hpfeedsOpNames = Map(
+  private lazy val hpfeedsOpNames = Map(
     0 -> "ERROR", 1 -> "INFO", 2 -> "AUTH", 3 -> "PUBLISH", 4 -> "SUBSCRIBE")
 
   /** hpfeeds (TCP 10000): u32 message length + opcode. */
@@ -8769,7 +9055,7 @@ object Dissect {
   // encoding, RFC 2332 — NHRP lives in dissectGre's inner dispatch).
   // ------------------------------------------------------------------
 
-  private val rsvpMsgNames = Map(
+  private lazy val rsvpMsgNames = Map(
     1 -> "PATH", 2 -> "RESV", 3 -> "PATH ERROR", 4 -> "RESV ERROR",
     5 -> "PATH TEAR", 6 -> "RESV TEAR", 7 -> "CONFIRM")
 
@@ -8791,7 +9077,7 @@ object Dissect {
     s"$name Message"
   }
 
-  private val wccpMsgNames = Map(
+  private lazy val wccpMsgNames = Map(
     10 -> "Here I am", 11 -> "I see you", 12 -> "Redirect assign",
     13 -> "Removal query")
 
@@ -8810,7 +9096,7 @@ object Dissect {
     s"2.0 ${wccpMsgNames(typ.toInt)}"
   }
 
-  private val srvlocFnNames = Map(
+  private lazy val srvlocFnNames = Map(
     1 -> "Service Request", 2 -> "Service Reply", 3 -> "Service Registration",
     4 -> "Service Deregister", 5 -> "Service Acknowledge",
     6 -> "Attribute Request", 7 -> "Attribute Reply",
@@ -8837,7 +9123,7 @@ object Dissect {
     name
   }
 
-  private val megacoCommands =
+  private lazy val megacoCommands =
     Seq("Add", "Modify", "Subtract", "Move", "Notify", "ServiceChange",
       "AuditValue", "AuditCapabilities")
 
@@ -8878,7 +9164,7 @@ object Dissect {
     }
   }
 
-  private val mqttsnMsgNames = Map(
+  private lazy val mqttsnMsgNames = Map(
     0x00 -> "ADVERTISE", 0x01 -> "SEARCHGW", 0x02 -> "GWINFO",
     0x04 -> "CONNECT", 0x05 -> "CONNACK",
     0x06 -> "WILLTOPICREQ", 0x07 -> "WILLTOPIC",
@@ -8924,7 +9210,7 @@ object Dissect {
     name
   }
 
-  private val finsCmdNames = Map(
+  private lazy val finsCmdNames = Map(
     0x0101 -> "Memory Area Read", 0x0102 -> "Memory Area Write",
     0x0103 -> "Memory Area Fill", 0x0501 -> "Controller Data Read",
     0x0601 -> "Controller Status Read", 0x0701 -> "Clock Read",
@@ -8959,7 +9245,7 @@ object Dissect {
     if ((icf & 0x40) == 0) s"Command: $name" else s"Response: $name"
   }
 
-  private val knxServiceNames = Map(
+  private lazy val knxServiceNames = Map(
     0x0201 -> "SEARCH_REQUEST", 0x0202 -> "SEARCH_RESPONSE",
     0x0203 -> "DESCRIPTION_REQUEST", 0x0204 -> "DESCRIPTION_RESPONSE",
     0x0205 -> "CONNECT_REQUEST", 0x0206 -> "CONNECT_RESPONSE",
@@ -9055,7 +9341,7 @@ object Dissect {
     if (cmd == 1) "Request" else "Response"
   }
 
-  private val pimTypeNames = Map(
+  private lazy val pimTypeNames = Map(
     0 -> "Hello", 1 -> "Register", 2 -> "Register-stop", 3 -> "Join/Prune",
     4 -> "Bootstrap", 5 -> "Assert", 8 -> "Candidate-RP-Advertisement")
 
@@ -9088,7 +9374,7 @@ object Dissect {
     name
   }
 
-  private val msdpTypeNames = Map(
+  private lazy val msdpTypeNames = Map(
     1 -> "IPv4 Source-Active", 2 -> "IPv4 Source-Active Request",
     3 -> "IPv4 Source-Active Response", 4 -> "KeepAlive")
 
@@ -9194,7 +9480,7 @@ object Dissect {
     } else "Response"
   }
 
-  private val fcgiTypeNames: Map[Int, String] = Map(
+  private lazy val fcgiTypeNames: Map[Int, String] = Map(
     1 -> "FCGI_BEGIN_REQUEST", 2 -> "FCGI_ABORT_REQUEST", 3 -> "FCGI_END_REQUEST",
     4 -> "FCGI_PARAMS", 5 -> "FCGI_STDIN", 6 -> "FCGI_STDOUT", 7 -> "FCGI_STDERR",
     8 -> "FCGI_DATA", 9 -> "FCGI_GET_VALUES", 10 -> "FCGI_GET_VALUES_RESULT",
@@ -9290,7 +9576,7 @@ object Dissect {
     }
   }
 
-  private val kafkaApiNames: Map[Int, String] = Map(
+  private lazy val kafkaApiNames: Map[Int, String] = Map(
     0 -> "Produce", 1 -> "Fetch", 2 -> "ListOffsets", 3 -> "Metadata",
     8 -> "OffsetCommit", 9 -> "OffsetFetch", 10 -> "FindCoordinator",
     11 -> "JoinGroup", 12 -> "Heartbeat", 13 -> "LeaveGroup",
@@ -9344,7 +9630,7 @@ object Dissect {
     }
   }
 
-  private val cqlOpcodeNames: Map[Int, String] = Map(
+  private lazy val cqlOpcodeNames: Map[Int, String] = Map(
     0 -> "ERROR", 1 -> "STARTUP", 2 -> "READY", 3 -> "AUTHENTICATE",
     5 -> "OPTIONS", 6 -> "SUPPORTED", 7 -> "QUERY", 8 -> "RESULT",
     9 -> "PREPARE", 10 -> "EXECUTE", 11 -> "REGISTER", 12 -> "EVENT",
@@ -9384,10 +9670,10 @@ object Dissect {
     name
   }
 
-  private val memcacheRequests = Set("get", "gets", "set", "add", "replace",
+  private lazy val memcacheRequests = Set("get", "gets", "set", "add", "replace",
     "append", "prepend", "cas", "delete", "incr", "decr", "touch", "stats",
     "flush_all", "version", "verbosity", "quit")
-  private val memcacheResponses = Set("VALUE", "END", "STORED", "NOT_STORED",
+  private lazy val memcacheResponses = Set("VALUE", "END", "STORED", "NOT_STORED",
     "EXISTS", "NOT_FOUND", "DELETED", "TOUCHED", "OK", "ERROR", "VERSION",
     "STAT", "CLIENT_ERROR", "SERVER_ERROR")
 
@@ -9420,7 +9706,7 @@ object Dissect {
     }
   }
 
-  private val mongoOpcodeNames: Map[Int, String] = Map(
+  private lazy val mongoOpcodeNames: Map[Int, String] = Map(
     1 -> "OP_REPLY", 2001 -> "OP_UPDATE", 2002 -> "OP_INSERT",
     2004 -> "OP_QUERY", 2005 -> "OP_GET_MORE", 2006 -> "OP_DELETE",
     2007 -> "OP_KILL_CURSORS", 2010 -> "OP_COMMAND",
@@ -9522,7 +9808,7 @@ object Dissect {
     } else null
   }
 
-  private val gearmanTypeNames: Map[Int, String] = Map(
+  private lazy val gearmanTypeNames: Map[Int, String] = Map(
     1 -> "CAN_DO", 2 -> "CANT_DO", 3 -> "RESET_ABILITIES", 4 -> "PRE_SLEEP",
     6 -> "NOOP", 7 -> "SUBMIT_JOB", 8 -> "JOB_CREATED", 9 -> "GRAB_JOB",
     10 -> "NO_JOB", 11 -> "JOB_ASSIGN", 12 -> "WORK_STATUS",
@@ -9570,7 +9856,7 @@ object Dissect {
     s"[$magic] $name"
   }
 
-  private val ajpMethodNames: Map[Int, String] = Map(
+  private lazy val ajpMethodNames: Map[Int, String] = Map(
     1 -> "OPTIONS", 2 -> "GET", 3 -> "HEAD", 4 -> "POST", 5 -> "PUT",
     6 -> "DELETE", 7 -> "TRACE", 8 -> "PROPFIND", 9 -> "PROPPATCH",
     10 -> "MKCOL", 11 -> "COPY", 12 -> "MOVE", 13 -> "LOCK", 14 -> "UNLOCK",
@@ -9579,7 +9865,7 @@ object Dissect {
     23 -> "UPDATE", 24 -> "LABEL", 25 -> "MERGE", 26 -> "BASELINE_CONTROL",
     27 -> "MKACTIVITY")
 
-  private val ajpCodeNames: Map[Int, String] = Map(
+  private lazy val ajpCodeNames: Map[Int, String] = Map(
     2 -> "FORWARD_REQUEST", 3 -> "SEND_BODY_CHUNK", 4 -> "SEND_HEADERS",
     5 -> "END_RESPONSE", 6 -> "GET_BODY_CHUNK", 7 -> "SHUTDOWN",
     9 -> "CPONG", 10 -> "CPING")
@@ -9633,7 +9919,7 @@ object Dissect {
     } else codeName
   }
 
-  private val dccpTypeNames: Array[String] = Array("Request", "Response",
+  private lazy val dccpTypeNames: Array[String] = Array("Request", "Response",
     "Data", "Ack", "DataAck", "CloseReq", "Close", "Reset", "Sync", "SyncAck")
 
   /** DCCP (RFC 4340, IP protocol 33): generic header; the X bit selects
@@ -9659,7 +9945,7 @@ object Dissect {
     s"$sp → $dp [$name] Seq=$seq"
   }
 
-  private val pppoedCodeNames: Map[Int, String] = Map(
+  private lazy val pppoedCodeNames: Map[Int, String] = Map(
     0x09 -> "Active Discovery Initiation (PADI)",
     0x07 -> "Active Discovery Offer (PADO)",
     0x19 -> "Active Discovery Request (PADR)",
@@ -9889,7 +10175,7 @@ object Dissect {
     "LACPDU"
   }
 
-  private val ptpMsgNames: Map[Int, String] = Map(
+  private lazy val ptpMsgNames: Map[Int, String] = Map(
     0 -> "Sync", 1 -> "Delay_Req", 2 -> "Path_Delay_Req", 3 -> "Path_Delay_Resp",
     8 -> "Follow_Up", 9 -> "Delay_Resp", 10 -> "Path_Delay_Resp_Follow_Up",
     11 -> "Announce", 12 -> "Signalling", 13 -> "Management")
@@ -9915,9 +10201,9 @@ object Dissect {
     s"${ptpMsgNames.getOrElse(msgId, f"Reserved (0x$msgId%x)")} Message"
   }
 
-  private val coapMethodNames: Map[Int, String] = Map(
+  private lazy val coapMethodNames: Map[Int, String] = Map(
     1 -> "GET", 2 -> "POST", 3 -> "PUT", 4 -> "DELETE")
-  private val coapTypeNames: Array[String] = Array("CON", "NON", "ACK", "RST")
+  private lazy val coapTypeNames: Array[String] = Array("CON", "NON", "ACK", "RST")
 
   /** CoAP (RFC 7252, UDP 5683): version-1 fixed header — type, code
     * (class.detail), message id. */
@@ -10006,7 +10292,7 @@ object Dissect {
     s"${coapTypeNames(tpe)} $codeName MID=$mid"
   }
 
-  private val smtpCommands = Set("HELO", "EHLO", "MAIL", "RCPT", "DATA",
+  private lazy val smtpCommands = Set("HELO", "EHLO", "MAIL", "RCPT", "DATA",
     "RSET", "VRFY", "EXPN", "HELP", "NOOP", "QUIT", "AUTH", "STARTTLS",
     "BDAT")
 
@@ -10109,7 +10395,7 @@ object Dissect {
     }
   }
 
-  private val telnetCmdNames: Map[Int, String] = Map(
+  private lazy val telnetCmdNames: Map[Int, String] = Map(
     251 -> "Will", 252 -> "Won't", 253 -> "Do", 254 -> "Don't")
 
   /** Telnet (TCP 23): IAC negotiation walk — the first command/option is
@@ -10197,7 +10483,7 @@ object Dissect {
     ftype <= 9 && at + 9 + flen > end
   }
 
-  private val http2FrameNames: Map[Int, String] = Map(
+  private lazy val http2FrameNames: Map[Int, String] = Map(
     0 -> "DATA", 1 -> "HEADERS", 2 -> "PRIORITY", 3 -> "RST_STREAM",
     4 -> "SETTINGS", 5 -> "PUSH_PROMISE", 6 -> "PING", 7 -> "GOAWAY",
     8 -> "WINDOW_UPDATE", 9 -> "CONTINUATION")
@@ -10205,13 +10491,13 @@ object Dissect {
   /** Reason phrases for the h2 HEADERS info line (h2 carries only the
     * :status code; the phrase matches what tshark renders for the codes
     * the HPACK static table can express). */
-  private val httpStatusPhrases: Map[String, String] = Map(
+  private lazy val httpStatusPhrases: Map[String, String] = Map(
     "200" -> "OK", "204" -> "No Content", "206" -> "Partial Content",
     "304" -> "Not Modified", "400" -> "Bad Request", "404" -> "Not Found",
     "500" -> "Internal Server Error")
 
   /** HPACK static table, RFC 7541 Appendix A (1-based; "" = no value). */
-  private val hpackStatic: Array[(String, String)] = Array(
+  private lazy val hpackStatic: Array[(String, String)] = Array(
     ("", ""),
     (":authority", ""), (":method", "GET"), (":method", "POST"),
     (":path", "/"), (":path", "/index.html"), (":scheme", "http"),
@@ -10237,7 +10523,7 @@ object Dissect {
   /** RFC 7541 Appendix B Huffman code table — (code, bit length) per
     * symbol 0–255 plus EOS (256). Public constants vendored verbatim;
     * codes are ≤30 bits so an Int holds them. */
-  private val hpackHuffLens: Array[Int] = Array(
+  private lazy val hpackHuffLens: Array[Int] = Array(
     13, 23, 28, 28, 28, 28, 28, 28, 28, 24, 30, 28, 28, 30, 28, 28,
     28, 28, 28, 28, 28, 28, 30, 28, 28, 28, 28, 28, 28, 28, 28, 28,
      6, 10, 10, 12, 13,  6,  8, 11, 10, 10,  8, 11,  8,  6,  6,  6,
@@ -10255,7 +10541,7 @@ object Dissect {
     20, 24, 20, 21, 22, 21, 21, 23, 22, 22, 25, 25, 24, 24, 26, 23,
     26, 27, 26, 26, 27, 27, 27, 27, 27, 28, 27, 27, 27, 27, 27, 26,
     30)
-  private val hpackHuffCodes: Array[Int] = Array(
+  private lazy val hpackHuffCodes: Array[Int] = Array(
     0x1ff8, 0x7fffd8, 0xfffffe2, 0xfffffe3, 0xfffffe4, 0xfffffe5,
     0xfffffe6, 0xfffffe7, 0xfffffe8, 0xffffea, 0x3ffffffc, 0xfffffe9,
     0xfffffea, 0x3ffffffd, 0xfffffeb, 0xfffffec, 0xfffffed, 0xfffffee,
@@ -13711,7 +13997,7 @@ object Dissect {
   private def btDirPrefix(dir: Int): String =
     if (dir == 0) "Sent " else if (dir == 1) "Rcvd " else ""
 
-  private val hciCmdNames: Map[Int, String] = Map(
+  private lazy val hciCmdNames: Map[Int, String] = Map(
     0x0401 -> "Inquiry", 0x0405 -> "Create Connection",
     0x0406 -> "Disconnect", 0x0409 -> "Accept Connection Request",
     0x0C03 -> "Reset", 0x0C13 -> "Change Local Name",
@@ -13720,17 +14006,17 @@ object Dissect {
     0x2006 -> "LE Set Advertising Parameters", 0x200A -> "LE Set Advertising Enable",
     0x200B -> "LE Set Scan Parameters", 0x200C -> "LE Set Scan Enable")
 
-  private val hciEvtNames: Map[Int, String] = Map(
+  private lazy val hciEvtNames: Map[Int, String] = Map(
     0x03 -> "Connect Complete", 0x05 -> "Disconnect Complete",
     0x0E -> "Command Complete", 0x0F -> "Command Status",
     0x13 -> "Number of Completed Packets", 0x3E -> "LE Meta")
 
-  private val btPsmNames: Map[Int, String] = Map(
+  private lazy val btPsmNames: Map[Int, String] = Map(
     0x0001 -> "SDP", 0x0003 -> "RFCOMM", 0x0005 -> "TCS-BIN",
     0x000F -> "BNEP", 0x0011 -> "HID Control", 0x0013 -> "HID Interrupt",
     0x0017 -> "AVCTP", 0x0019 -> "AVDTP", 0x001F -> "ATT")
 
-  private val gattUuidNames: Map[Int, String] = Map(
+  private lazy val gattUuidNames: Map[Int, String] = Map(
     0x1800 -> "Generic Access Profile", 0x1801 -> "Generic Attribute Profile",
     0x2800 -> "GATT Primary Service Declaration",
     0x2801 -> "GATT Secondary Service Declaration",
@@ -13905,7 +14191,7 @@ object Dissect {
     }
   }
 
-  private val btSdpPduNames: Map[Int, String] = Map(
+  private lazy val btSdpPduNames: Map[Int, String] = Map(
     0x01 -> "Error Response",
     0x02 -> "Service Search Request", 0x03 -> "Service Search Response",
     0x04 -> "Service Attribute Request", 0x05 -> "Service Attribute Response",
@@ -13927,7 +14213,7 @@ object Dissect {
     btDirPrefix(dir) + btSdpPduNames.getOrElse(pdu, f"PDU 0x$pdu%02x")
   }
 
-  private val btRfcommTypeNames: Map[Int, String] = Map(
+  private lazy val btRfcommTypeNames: Map[Int, String] = Map(
     0x2f -> "SABM", 0x63 -> "UA", 0x0f -> "DM", 0x43 -> "DISC", 0xef -> "UIH")
 
   /** RFCOMM (TS 07.10 basic option): address (EA|C/R|DLCI), control with
@@ -13959,7 +14245,7 @@ object Dissect {
       s" Channel=${dlci >> 1}"
   }
 
-  private val btleAdvPduNames: Map[Int, String] = Map(
+  private lazy val btleAdvPduNames: Map[Int, String] = Map(
     0 -> "ADV_IND", 1 -> "ADV_DIRECT_IND", 2 -> "ADV_NONCONN_IND",
     3 -> "SCAN_REQ", 4 -> "SCAN_RSP", 5 -> "CONNECT_IND", 6 -> "ADV_SCAN_IND")
 
@@ -14314,7 +14600,7 @@ object Dissect {
     "OSI presentation data"
   }
 
-  private val h225RasNames: Map[Int, String] = Map(
+  private lazy val h225RasNames: Map[Int, String] = Map(
     0 -> "gatekeeperRequest", 1 -> "gatekeeperConfirm", 2 -> "gatekeeperReject",
     3 -> "registrationRequest", 4 -> "registrationConfirm",
     5 -> "registrationReject", 9 -> "admissionRequest",
