@@ -43,7 +43,7 @@ object Verify {
       case c => c.toString
     } + "\""
     // oracleSqlAll (not oracleSql): the generated ANN oracles embed the
-    // fitted centroids/codebooks this run's queries used (AnnIndexes cache)
+    // fitted centroids/codebooks this run's queries used (Artifacts cache)
     val json = SparkEntry.oracleSqlAll(spark, sfDir)
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)

@@ -2,60 +2,18 @@ package graft.functions
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.Artifacts
 import graft.api.Tables
 
-/** Per-session cache of fitted ANN index state (IVF centroids, PQ
-  * codebooks) keyed by (session, data dir, params).
-  *
-  * Two reasons it exists:
-  *  - **Oracle exactness**: the DuckDB oracle SQL for the k-means family
-  *    embeds the fitted centroids/codebooks as literals
-  *    ([[graft.queries.AnnOracles]]). The query plan and the generated
-  *    oracle MUST see the *same* fit, so both go through this cache
-  *    within a Verify run.
-  *  - **The 100 TB shape**: fitting is a one-off batch job
-  *    ([[Ivf.persist]] / [[Pq.persist]]); re-fitting k-means inside every
-  *    query was only ever a small-scale artifact. Sharing one fit across
-  *    the ivf/ivf_batch/pq/ivfpq queries of a run mirrors how the
-  *    persisted index is used in production.
-  *
-  * Per-key `computeIfAbsent` keeps concurrent callers from racing two
-  * fits of the same key into existence (they would differ only by
-  * reduction order, but the oracle contract wants exactly one) while
-  * leaving unrelated keys — and unrelated queries — free to run.
+/** The fitted ANN index state (IVF centroids, PQ codebooks) and the
+  * persisted index tables, fitted once per (session, data dir, params)
+  * through [[graft.Artifacts]] so every query and its generated oracle see
+  * the same fit.
   */
 object AnnIndexes {
 
-  private val cache = new java.util.concurrent.ConcurrentHashMap[
-    (Int, String), (java.lang.ref.WeakReference[SparkSession], AnyRef)]()
-
-  private def key(spark: SparkSession, rest: String): (Int, String) =
-    (System.identityHashCode(spark), rest)
-
-  // the entry holds its session WEAKLY: a stopped session is collectable
-  // (the fit refits if its owner was collected), and a long-lived JVM
-  // churning sessions doesn't pin the dead ones. Reference equality on
-  // the referent still forces a refit when an identityHashCode is reused
-  // by a NEW session, so a stale fit can never serve the wrong session.
-  private def getOrFit[T <: AnyRef](spark: SparkSession, rest: String)(fit: => T): T = {
-    // opportunistic sweep: drop entries whose session has been collected
-    // (the cache holds a handful of keys, so this is O(few) per call)
-    val it = cache.entrySet().iterator()
-    while (it.hasNext) if (it.next().getValue._1.get() eq null) it.remove()
-    cache.compute(key(spark, rest), (_, old) =>
-      if (old != null && (old._1.get() eq spark)) old
-      else (new java.lang.ref.WeakReference(spark), fit))._2.asInstanceOf[T]
-  }
-
   def embeddings(spark: SparkSession, dir: String): DataFrame =
     Tables.load(spark, dir, "embeddings")
-
-  /** The fit-cache guard for non-ANN derived state that follows the same
-    * fit-once/serve-many contract (e.g. dedup cluster labels persisted as
-    * a catalog table). Values must be plain data or table NAMES — never a
-    * DataFrame, which would pin the session through the weak reference. */
-  def cached[T <: AnyRef](spark: SparkSession, key: String)(fit: => T): T =
-    getOrFit(spark, key)(fit)
 
   /** The IVF index every sim_ann_ivf* query (and its oracle) shares. Only
     * the fitted CENTROIDS are cached (plain arrays — no DataFrame, so the
@@ -63,7 +21,7 @@ object AnnIndexes {
     * reference); the cell-assignment plan is rebuilt per call, which is
     * plan construction only — no refit, no job. */
   def ivf(spark: SparkSession, dir: String, k: Int = 16): Ivf.Index = {
-    val cents = getOrFit(spark, s"ivf:$dir:$k") {
+    val cents = Artifacts.cached(spark, s"ivf:$dir:$k") {
       Ivf.build(spark, embeddings(spark, dir), k = k).centroids
     }
     Ivf.fromCentroids(cents, embeddings(spark, dir))
@@ -104,23 +62,9 @@ object AnnIndexes {
     * from the catalog tables, so the query exercises the load path
     * end-to-end. */
   def ivfPersisted(spark: SparkSession, dir: String, k: Int = 16): Ivf.Index = {
-    val name = ("graft_ivf_" + dir.replaceAll("[^A-Za-z0-9]", "_") + s"_$k")
-      .toLowerCase
-    // fit OUTSIDE the guard below: ConcurrentHashMap.compute must not nest
-    // (the shared-fit lookup is itself a compute on this map)
     val fitted = ivf(spark, dir, k)
-    getOrFit(spark, s"ivfpersist:$dir:$k") {
-      // leftover warehouse dirs from a PRIOR run are not in this run's
-      // in-memory catalog — drop-and-delete so saveAsTable can recreate
-      for (suffix <- Seq("_centroids", "_assigned")) {
-        spark.sql(s"DROP TABLE IF EXISTS $name$suffix")
-        val wh = spark.conf.get("spark.sql.warehouse.dir")
-        val p = new org.apache.hadoop.fs.Path(wh, name + suffix)
-        val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (fs.exists(p)) fs.delete(p, true)
-      }
-      Ivf.persist(fitted, name)
-      name
+    val name = Artifacts.table(spark, s"ivf$k", dir, Seq("_centroids", "_assigned")) {
+      Ivf.persist(fitted, _)
     }
     Ivf.loadIndex(spark, name)
   }
@@ -131,7 +75,7 @@ object AnnIndexes {
     * production IVF index does not refit per ingest). Shared with the
     * generated oracle so both see identical literals. */
   def ivfBase(spark: SparkSession, dir: String, k: Int = 16): Array[Array[Double]] =
-    getOrFit(spark, s"ivfbase:$dir:$k") {
+    Artifacts.cached(spark, s"ivfbase:$dir:$k") {
       Ivf.build(spark,
         embeddings(spark, dir).filter(org.apache.spark.sql.functions.col("vec_id") % 10 =!= 7),
         k = k).centroids
@@ -143,28 +87,18 @@ object AnnIndexes {
     * served from [[Pq.loadIvfPq]] with zero k-means jobs in the lineage. */
   def ivfPqPersisted(spark: SparkSession, dir: String, m: Int = 8, k: Int = 16)
       : (Ivf.Index, Pq.Codebook, org.apache.spark.sql.DataFrame) = {
-    val name = ("graft_ivfpq_" + dir.replaceAll("[^A-Za-z0-9]", "_") + s"_${m}_$k")
-      .toLowerCase
-    // fits resolved OUTSIDE the guard (no nested compute, see ivfPersisted)
     val index = ivf(spark, dir, k)
     val cb = pq(spark, dir, m, k)
-    getOrFit(spark, s"ivfpqpersist:$dir:$m:$k") {
-      for (suffix <- Seq("_centroids", "_codebook", "_codes")) {
-        spark.sql(s"DROP TABLE IF EXISTS $name$suffix")
-        val wh = spark.conf.get("spark.sql.warehouse.dir")
-        val p = new org.apache.hadoop.fs.Path(wh, name + suffix)
-        val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (fs.exists(p)) fs.delete(p, true)
-      }
-      Pq.persistIvfPq(index, cb, Pq.encode(index.assigned, cb), name)
-      name
+    val name = Artifacts.table(spark, s"ivfpq_${m}_$k", dir,
+        Seq("_centroids", "_codebook", "_codes")) {
+      Pq.persistIvfPq(index, cb, Pq.encode(index.assigned, cb), _)
     }
     Pq.loadIvfPq(spark, name)
   }
 
   /** The PQ codebook every sim_ann_pq/ivfpq query (and its oracle) shares. */
   def pq(spark: SparkSession, dir: String, m: Int = 8, k: Int = 16): Pq.Codebook =
-    getOrFit(spark, s"pq:$dir:$m:$k") {
+    Artifacts.cached(spark, s"pq:$dir:$m:$k") {
       Pq.fit(spark, embeddings(spark, dir), m = m, k = k)
     }
 
@@ -180,15 +114,7 @@ object AnnIndexes {
   def int8Persisted(spark: SparkSession, dir: String, dim: Int = 64)
       : (DataFrame, Array[(Double, Double)]) = {
     import org.apache.spark.sql.functions._
-    val name = ("graft_int8_" + dir.replaceAll("[^A-Za-z0-9]", "_")).toLowerCase
-    getOrFit(spark, s"int8persist:$dir") {
-      for (suffix <- Seq("_codes", "_stats")) {
-        spark.sql(s"DROP TABLE IF EXISTS $name$suffix")
-        val wh = spark.conf.get("spark.sql.warehouse.dir")
-        val p = new org.apache.hadoop.fs.Path(wh, name + suffix)
-        val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (fs.exists(p)) fs.delete(p, true)
-      }
+    val name = Artifacts.table(spark, "int8", dir, Seq("_codes", "_stats")) { base =>
       val emb = embeddings(spark, dir)
       // exact per-dim min/max — the same comparisons the oracle derives
       val st = emb.select((1 to dim).flatMap(d => Seq(
@@ -199,15 +125,14 @@ object AnnIndexes {
       import spark.implicits._
       mnmx.zipWithIndex.map { case ((mn, mx), i) => (i + 1, mn, mx) }.toSeq
         .toDF("dim", "mn", "mx")
-        .write.mode("overwrite").saveAsTable(name + "_stats")
+        .write.mode("overwrite").saveAsTable(base + "_stats")
       val codeCols = array((1 to dim).map { d =>
         val (mn, mx) = mnmx(d - 1)
         (least(lit(255L), floor((element_at(col("embedding"), d).cast("double") - mn)
           * 256.0 / (mx - mn))) - 128L).cast("tinyint")
       }: _*)
       emb.select(col("vec_id"), col("label"), codeCols.as("codes"))
-        .write.mode("overwrite").saveAsTable(name + "_codes")
-      name
+        .write.mode("overwrite").saveAsTable(base + "_codes")
     }
     val loaded = spark.table(name + "_stats").collect()
       .map(r => (r.getInt(0), (r.getDouble(1), r.getDouble(2))))
@@ -227,14 +152,14 @@ object AnnIndexes {
     * rotation decorrelates dims across subspaces before the per-subspace
     * k-means, the OPQ idea with a deterministic signed permutation). */
   def opqPq(spark: SparkSession, dir: String, m: Int = 8, k: Int = 16): Pq.Codebook =
-    getOrFit(spark, s"opq:$dir:$m:$k") {
+    Artifacts.cached(spark, s"opq:$dir:$m:$k") {
       Pq.fit(spark, rotatedEmbeddings(spark, dir), m = m, k = k)
     }
 
   /** IVF coarse quantizer fitted in the OPQ-rotated space — pairs with
     * [[opqPq]] for the full OPQ + IVF-PQ composition. */
   def opqIvf(spark: SparkSession, dir: String, k: Int = 16): Ivf.Index = {
-    val cents = getOrFit(spark, s"opqivf:$dir:$k") {
+    val cents = Artifacts.cached(spark, s"opqivf:$dir:$k") {
       Ivf.build(spark, rotatedEmbeddings(spark, dir), k = k).centroids
     }
     Ivf.fromCentroids(cents, rotatedEmbeddings(spark, dir))

@@ -53,17 +53,9 @@ object GraphQueries {
     * lineitem⋈orders join + distinct (85 MB shuffle in gr_pagerank alone);
     * at 100 TB the edge extraction is a one-off batch job and analytics
     * read the edge table. */
-  private def graphTables(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
+  private def graphTables(s: SparkSession, dir: String): String = {
     import s.implicits._
-    val base = ("graft_graph_" + dir.replaceAll("[^A-Za-z0-9]", "_")).toLowerCase
-    graft.functions.AnnIndexes.cached(s, s"graph:$dir") {
-      val wh = s.conf.get("spark.sql.warehouse.dir")
-      for (t <- Seq(s"${base}_pairs", s"${base}_pairs_bycust", s"${base}_edges")) {
-        s.sql(s"DROP TABLE IF EXISTS $t")
-        val p = new org.apache.hadoop.fs.Path(wh, t)
-        val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-        if (fs.exists(p)) fs.delete(p, true)
-      }
+    graft.Artifacts.table(s, "graph", dir, Seq("_pairs", "_pairs_bycust", "_edges")) { base =>
       val p = pairsFrame(s, dir).cache()
       // both bucketings of the bipartite projection: BSP kernels that
       // alternate sides (gr_hits) join each half-step against the copy
@@ -80,22 +72,17 @@ object GraphQueries {
         .bucketBy(16, "src").sortBy("src")
         .saveAsTable(s"${base}_edges")
       p.unpersist()
-      base
     }
-    (s.table(s"${base}_pairs"), s.table(s"${base}_edges"))
   }
 
-  private def pairsByCust(s: SparkSession, dir: String): DataFrame = {
-    graphTables(s, dir)
-    val base = ("graft_graph_" + dir.replaceAll("[^A-Za-z0-9]", "_")).toLowerCase
-    s.table(s"${base}_pairs_bycust")
-  }
+  private def pairsByCust(s: SparkSession, dir: String): DataFrame =
+    s.table(graphTables(s, dir) + "_pairs_bycust")
 
   private def pairs(s: SparkSession, dir: String): DataFrame =
-    graphTables(s, dir)._1
+    s.table(graphTables(s, dir) + "_pairs")
 
   private def edges(s: SparkSession, dir: String): DataFrame =
-    graphTables(s, dir)._2
+    s.table(graphTables(s, dir) + "_edges")
 
   /** Build the persisted graph artifacts eagerly (the Bench prep step). */
   private[graft] def prepare(s: SparkSession, dir: String): Unit = {
@@ -451,25 +438,12 @@ object GraphQueries {
     * gr_modularity both consume it, so the 3 BSP label rounds run once
     * per (session, dir), exactly like the CC base labels. */
   private def lpaLabels(s: SparkSession, dir: String): DataFrame = {
-    val name = ("graft_lpa_labels_" + dir.replaceAll("[^A-Za-z0-9]", "_"))
-      .toLowerCase
-    // Resolve the graph artifact BEFORE entering the guard: edges() runs
-    // cached("graph:…"), and ConcurrentHashMap.compute must not nest —
-    // same-bin collisions throw/livelock (ivfPersisted hoists its inner
-    // fit the same way; prepare() pre-populating does NOT help, the inner
-    // compute still executes inside the outer one).
     val e = edges(s, dir)
-    graft.functions.AnnIndexes.cached(s, s"lpalabels:$dir") {
-      s.sql(s"DROP TABLE IF EXISTS $name")
-      val wh = s.conf.get("spark.sql.warehouse.dir")
-      val p = new org.apache.hadoop.fs.Path(wh, name)
-      val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(p)) fs.delete(p, true)
+    val name = graft.Artifacts.table(s, "lpa_labels", dir) { base =>
       lpaLabelsFrame(s, e)
         .write.mode("overwrite")
         .bucketBy(16, "node").sortBy("node")
-        .saveAsTable(name)
-      name
+        .saveAsTable(base)
     }
     s.table(name)
   }

@@ -581,21 +581,13 @@ object MultimodalQueries {
   private def mediaTable(s: org.apache.spark.sql.SparkSession, dir: String,
       kind: String)(frame: => org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
-    val name = (s"graft_${kind}_" + dir.replaceAll("[^A-Za-z0-9]", "_"))
-      .toLowerCase
-    graft.functions.AnnIndexes.cached(s, s"$kind:$dir") {
-      s.sql(s"DROP TABLE IF EXISTS $name")
-      val wh = s.conf.get("spark.sql.warehouse.dir")
-      val p = new org.apache.hadoop.fs.Path(wh, name)
-      val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(p)) fs.delete(p, true)
+    val name = graft.Artifacts.table(s, kind, dir) { base =>
       // parallel file layout at write time: the decode runs over the
       // documents scan's single input split, so an un-repartitioned save
       // would leave every downstream probe single-split (guide §6 —
       // output sizing determines reader parallelism)
       frame.repartition(s.sparkContext.defaultParallelism)
-        .write.mode("overwrite").saveAsTable(name)
-      name
+        .write.mode("overwrite").saveAsTable(base)
     }
     s.table(name)
   }

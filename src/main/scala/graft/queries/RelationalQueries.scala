@@ -1278,33 +1278,24 @@ object RelationalQueries {
     "q44_bucketed_join",
     (s, dir) => {
       import s.implicits._
-      // The bucketed tables are written ONCE per (session, dir) — the
-      // AnnIndexes.cached write-once guard, same as the dedup cluster
-      // labels — so repeated runs (and the bench) measure the JOIN, not
-      // the table build (VERDICT r6 wrong #3).
-      graft.functions.AnnIndexes.cached(s, s"q44buckets:$dir") {
-        for (name <- Seq("graft_q44_orders", "graft_q44_customer")) {
-          s.sql(s"DROP TABLE IF EXISTS $name")
-          val wh = s.conf.get("spark.sql.warehouse.dir")
-          val p = new org.apache.hadoop.fs.Path(wh, name)
-          val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-          if (fs.exists(p)) fs.delete(p, true)
-        }
+      // The bucketed tables are written ONCE per (session, dir) through
+      // the artifact store, so repeated runs (and the bench) measure the
+      // JOIN, not the table build (VERDICT r6 wrong #3).
+      val name = graft.Artifacts.table(s, "q44", dir, Seq("_orders", "_customer")) { base =>
         // prune to the join/agg columns before writing — the bucketed table
         // carries only what downstream reads (at 100 TB an unpruned bucketed
         // copy of a fact table doubles storage for nothing)
         t(s, dir, "orders").select($"o_custkey", $"o_totalprice")
           .write.mode("overwrite")
           .bucketBy(8, "o_custkey").sortBy("o_custkey")
-          .saveAsTable("graft_q44_orders")
+          .saveAsTable(s"${base}_orders")
         t(s, dir, "customer").select($"c_custkey", $"c_mktsegment")
           .write.mode("overwrite")
           .bucketBy(8, "c_custkey").sortBy("c_custkey")
-          .saveAsTable("graft_q44_customer")
-        "written"
+          .saveAsTable(s"${base}_customer")
       }
-      s.table("graft_q44_orders").hint("merge")
-        .join(s.table("graft_q44_customer"), $"o_custkey" === $"c_custkey")
+      s.table(s"${name}_orders").hint("merge")
+        .join(s.table(s"${name}_customer"), $"o_custkey" === $"c_custkey")
         .groupBy($"c_mktsegment")
         .agg(count(lit(1)).as("n_orders"), dsum($"o_totalprice").as("sum_price"))
         .orderBy($"c_mktsegment")

@@ -6,8 +6,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.Artifacts
 import graft.api.{GraftQuery, Tables}
-import graft.functions.AnnIndexes
 
 /** Model-based document SCORING operators for training-data curation —
   * the fit-once/score-many family: DSIR importance weights (Xie et al.
@@ -27,7 +27,7 @@ import graft.functions.AnnIndexes
   *
   * Scale notes (100 TB): fits are one-off aggregate jobs collecting a
   * few hundred rows (the same contract as the k-means centroids in
-  * [[AnnIndexes]]); scoring is one (doc, feature) shuffle joined against
+  * [[graft.functions.AnnIndexes]]); scoring is one (doc, feature) shuffle joined against
   * a BROADCAST model table — no driver-side loops, no re-fit per query.
   */
 object ScoringQueries {
@@ -71,7 +71,7 @@ object ScoringQueries {
     * query plan and its generated oracle see the identical quantized
     * table. */
   private def dsirFit(s: SparkSession, dir: String): Array[JBigDecimal] =
-    AnnIndexes.cached(s, s"dsir:$dir") {
+    Artifacts.cached(s, s"dsir:$dir") {
       val rows = bigrams(docs(s, dir))
         .select(expr(bucketExpr("bg")).as("bucket"),
           when(col("lang") === "en", 1L).otherwise(0L).as("t"))
@@ -160,7 +160,7 @@ object ScoringQueries {
     * remaining mass; p(w) = (c_w + 1)/(N + 257) so the distribution sums
     * to one. Returns (vocab word → −log2 p quantized, UNK −log2 p). */
   private def lmFit(s: SparkSession, dir: String): (Array[(String, JBigDecimal)], JBigDecimal) =
-    AnnIndexes.cached(s, s"unigramlm:$dir") {
+    Artifacts.cached(s, s"unigramlm:$dir") {
       import s.implicits._
       val counts = docs(s, dir)
         .select(explode(expr("filter(split(text, ' '), x -> x != '')")).as("w"))
@@ -246,7 +246,7 @@ object ScoringQueries {
     * default −log2 p), all DECIMAL(12,6)-quantized. */
   private def bigramFit(s: SparkSession, dir: String)
       : (Array[String], Array[(String, String, JBigDecimal)], Array[(String, JBigDecimal)]) =
-    AnnIndexes.cached(s, s"bigramlm:$dir") {
+    Artifacts.cached(s, s"bigramlm:$dir") {
       import s.implicits._
       val words = docs(s, dir)
         .select(explode(expr("filter(split(text, ' '), x -> x != '')")).as("w"))
@@ -362,7 +362,7 @@ object ScoringQueries {
     * counts, materialized as INTEGER quotas out of a 100-doc budget —
     * the query side never touches floating point. */
   private def mixFit(s: SparkSession, dir: String): Array[(String, Long)] =
-    AnnIndexes.cached(s, s"mixquota:$dir") {
+    Artifacts.cached(s, s"mixquota:$dir") {
       import s.implicits._
       val counts = docs(s, dir).groupBy($"lang").agg(count(lit(1)).as("c"))
         .orderBy($"lang").as[(String, Long)].collect()
@@ -435,7 +435,7 @@ object ScoringQueries {
     * transcendental-free contract as the DSIR/LM fits: the query side only
     * ever sees the quantized literal. */
   private def bm25Fit(s: SparkSession, dir: String): (Long, Long, Seq[(String, JBigDecimal)]) =
-    AnnIndexes.cached(s, s"bm25:$dir") {
+    Artifacts.cached(s, s"bm25:$dir") {
       import s.implicits._
       val toks = docs(s, dir)
         .select(expr("filter(split(text, ' '), x -> x != '')").as("w"))
@@ -594,7 +594,7 @@ object ScoringQueries {
     * set is bounded by the longest document (~387 values at sf0.01), a
     * driver-trivial collect at any corpus size. */
   private def entLogFit(s: SparkSession, dir: String): Array[(Long, JBigDecimal)] =
-    AnnIndexes.cached(s, s"entlog:$dir") {
+    Artifacts.cached(s, s"entlog:$dir") {
       import s.implicits._
       val d = docs(s, dir).filter(length($"text") >= 1)
       val ks = d

@@ -320,28 +320,19 @@ object SimilarityQueries {
     "sim_ivf_append",
     (s, dir) => {
       import s.implicits._
-      val name = ("graft_ivfappend_" + dir.replaceAll("[^A-Za-z0-9]", "_"))
-        .toLowerCase
       val emb = graft.functions.AnnIndexes.embeddings(s, dir)
       val cents = graft.functions.AnnIndexes.ivfBase(s, dir, k = 16)
-      graft.functions.AnnIndexes.cached(s, s"ivfappend:$dir") {
-        for (suffix <- Seq("_centroids", "_assigned")) {
-          s.sql(s"DROP TABLE IF EXISTS $name$suffix")
-          val wh = s.conf.get("spark.sql.warehouse.dir")
-          val p = new org.apache.hadoop.fs.Path(wh, name + suffix)
-          val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-          if (fs.exists(p)) fs.delete(p, true)
-        }
+      val name = graft.Artifacts.table(s, "ivfappend", dir,
+          Seq("_centroids", "_assigned")) { base =>
         graft.functions.Ivf.persist(
           graft.functions.Ivf.fromCentroids(cents, emb.filter($"vec_id" % 10 =!= 7)),
-          name)
+          base)
         // the ingest append: fixed centroids, same bucket spec, mode append
         graft.functions.Ivf.fromCentroids(cents, emb.filter($"vec_id" % 10 === 7))
           .assigned
           .write.mode("append")
           .bucketBy(16, "cell").sortBy("cell")
-          .saveAsTable(s"${name}_assigned")
-        name
+          .saveAsTable(s"${base}_assigned")
       }
       val loaded = graft.functions.Ivf.loadIndex(s, name)
       val q = emb.filter($"vec_id" === 0)
@@ -369,30 +360,21 @@ object SimilarityQueries {
     "sim_ivf_delete",
     (s, dir) => {
       import s.implicits._
-      val name = ("graft_ivfdelete_" + dir.replaceAll("[^A-Za-z0-9]", "_"))
-        .toLowerCase
       val emb = graft.functions.AnnIndexes.embeddings(s, dir)
       val index = graft.functions.AnnIndexes.ivf(s, dir, k = 16)
-      graft.functions.AnnIndexes.cached(s, s"ivfdelete:$dir") {
-        for (suffix <- Seq("_centroids", "_assigned", "_tombstones", "_compacted")) {
-          s.sql(s"DROP TABLE IF EXISTS $name$suffix")
-          val wh = s.conf.get("spark.sql.warehouse.dir")
-          val p = new org.apache.hadoop.fs.Path(wh, name + suffix)
-          val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-          if (fs.exists(p)) fs.delete(p, true)
-        }
-        graft.functions.Ivf.persist(index, name)
+      val name = graft.Artifacts.table(s, "ivfdelete", dir,
+          Seq("_centroids", "_assigned", "_tombstones", "_compacted")) { base =>
+        graft.functions.Ivf.persist(index, base)
         // the DELETE: tombstones only — no rewrite of the base table
         emb.filter($"vec_id" % 10 === 3).select($"vec_id")
-          .write.mode("overwrite").saveAsTable(s"${name}_tombstones")
+          .write.mode("overwrite").saveAsTable(s"${base}_tombstones")
         // the COMPACTION: one scheduled rewrite folds the tombstones in,
         // keeping the cell-bucketed serving layout
-        s.table(s"${name}_assigned")
-          .join(broadcast(s.table(s"${name}_tombstones")), Seq("vec_id"), "left_anti")
+        s.table(s"${base}_assigned")
+          .join(broadcast(s.table(s"${base}_tombstones")), Seq("vec_id"), "left_anti")
           .write.mode("overwrite")
           .bucketBy(16, "cell").sortBy("cell")
-          .saveAsTable(s"${name}_compacted")
-        name
+          .saveAsTable(s"${base}_compacted")
       }
       val compacted = graft.functions.Ivf.Index(
         index.centroids, s.table(s"${name}_compacted"))

@@ -373,14 +373,7 @@ object TextQueries {
     * 3-gram table feeds dd_lsh_eval's exact-Jaccard truth arm the same
     * way the 5-gram table feeds the ngram/containment/sweep family. */
   private[graft] def shingleTableN(s: SparkSession, dir: String, n: Int): DataFrame = {
-    val name = (s"graft_shingle${n}_" + dir.replaceAll("[^A-Za-z0-9]", "_"))
-      .toLowerCase
-    graft.functions.AnnIndexes.cached(s, s"shingle$n:$dir") {
-      s.sql(s"DROP TABLE IF EXISTS $name")
-      val wh = s.conf.get("spark.sql.warehouse.dir")
-      val p = new org.apache.hadoop.fs.Path(wh, name)
-      val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(p)) fs.delete(p, true)
+    val name = graft.Artifacts.table(s, s"shingle$n", dir) { base =>
       val all = shingleRows(
         docs(s, dir).withColumn("tokens", split(col("text"), " ")), n)
       val rare = all.groupBy(col("shingle"))
@@ -390,8 +383,7 @@ object TextQueries {
       all.join(rare, Seq("shingle"), "left_semi")
         .write.mode("overwrite")
         .bucketBy(16, "shingle").sortBy("shingle")
-        .saveAsTable(name)
-      name
+        .saveAsTable(base)
     }
     s.table(name)
   }
@@ -556,21 +548,11 @@ object TextQueries {
     * At 100 TB this IS the production shape: sign the corpus in one batch
     * job, serve every dedup/eval pass from the signature table. */
   private[graft] def minhashSigTable(s: SparkSession, dir: String): DataFrame = {
-    val name = ("graft_minhash_sig_" + dir.replaceAll("[^A-Za-z0-9]", "_"))
-      .toLowerCase
-    graft.functions.AnnIndexes.cached(s, s"minhashsig:$dir") {
-      // leftover warehouse dirs from a PRIOR run are not in this run's
-      // in-memory catalog — drop-and-delete so saveAsTable can recreate
-      s.sql(s"DROP TABLE IF EXISTS $name")
-      val wh = s.conf.get("spark.sql.warehouse.dir")
-      val p = new org.apache.hadoop.fs.Path(wh, name)
-      val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(p)) fs.delete(p, true)
+    val name = graft.Artifacts.table(s, "minhash_sig", dir) { base =>
       minhashSigFrame(s, dir)
         .write.mode("overwrite")
         .bucketBy(16, "doc_id").sortBy("doc_id")
-        .saveAsTable(name)
-      name
+        .saveAsTable(base)
     }
     s.table(name)
   }
@@ -915,36 +897,22 @@ object TextQueries {
     * (label once, serve many). Returns (labelTable, bandTable). */
   private[graft] def ccBaseTables(s: SparkSession, dir: String): (String, String) = {
     import s.implicits._
-    val name = ("graft_ccbase_" + dir.replaceAll("[^A-Za-z0-9]", "_"))
-      .toLowerCase
-    val bandName = ("graft_ccbands_" + dir.replaceAll("[^A-Za-z0-9]", "_"))
-      .toLowerCase
-    // resolve the signature artifact OUTSIDE the guard below: both run
-    // under AnnIndexes.cached and ConcurrentHashMap.compute must not nest
     val sigTable = minhashSigTable(s, dir)
-    graft.functions.AnnIndexes.cached(s, s"ccbase:$dir") {
-      val wh = s.conf.get("spark.sql.warehouse.dir")
-      for (t <- Seq(name, bandName)) {
-        s.sql(s"DROP TABLE IF EXISTS $t")
-        val p = new org.apache.hadoop.fs.Path(wh, t)
-        val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-        if (fs.exists(p)) fs.delete(p, true)
-      }
+    val name = graft.Artifacts.table(s, "ccbase", dir, Seq("", "_bands")) { base =>
       val sig = sigTable.filter($"doc_id" % 10 =!= 7)
       val bands = sigBands(sig)
       // the BAND INDEX persists next to the labels: later batches probe
       // the table — zero corpus signature recompute in the serving path
-      bands.write.saveAsTable(bandName)
-      val persisted = s.table(bandName)
+      bands.write.saveAsTable(base + "_bands")
+      val persisted = s.table(base + "_bands")
       val basePairs = persisted.as("a").join(persisted.as("b"),
         col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket") &&
           col("a.doc_id") < col("b.doc_id"))
         .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
         .distinct()
-      ccFixpoint(basePairs).write.saveAsTable(name)
-      name
+      ccFixpoint(basePairs).write.saveAsTable(base)
     }
-    (name, bandName)
+    (name, name + "_bands")
   }
 
   val ddCcIncremental = GraftQuery(
@@ -1121,19 +1089,11 @@ object TextQueries {
     * job, serve every banded pair pass from the table. `dd_simhash` (the
     * FIT query) still computes the signature pipeline itself. */
   private[graft] def simhashTable(s: SparkSession, dir: String): DataFrame = {
-    val name = ("graft_simhash_" + dir.replaceAll("[^A-Za-z0-9]", "_"))
-      .toLowerCase
-    graft.functions.AnnIndexes.cached(s, s"simhash:$dir") {
-      s.sql(s"DROP TABLE IF EXISTS $name")
-      val wh = s.conf.get("spark.sql.warehouse.dir")
-      val p = new org.apache.hadoop.fs.Path(wh, name)
-      val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(p)) fs.delete(p, true)
+    val name = graft.Artifacts.table(s, "simhash", dir) { base =>
       ddSimhash.fn(s, dir)
         .write.mode("overwrite")
         .bucketBy(16, "doc_id").sortBy("doc_id")
-        .saveAsTable(name)
-      name
+        .saveAsTable(base)
     }
     s.table(name)
   }
@@ -1443,24 +1403,11 @@ object TextQueries {
     * dd_dedup_report. */
   private def clusterTable(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val name = ("graft_ddclusters_" + dir.replaceAll("[^A-Za-z0-9]", "_"))
-      .toLowerCase
-    // Resolve the MinHash signature artifact BEFORE entering the guard:
-    // constructing the pair plan runs cached("minhashsig:…"), and
-    // ConcurrentHashMap.compute must not nest — same-bin collisions
-    // throw/livelock (ivfPersisted and ccBaseTables hoist their inner
-    // fits the same way).
     val pairs = lshCandidatePairs(s, dir)
-    graft.functions.AnnIndexes.cached(s, s"ddclusters:$dir") {
-      s.sql(s"DROP TABLE IF EXISTS $name")
-      val wh = s.conf.get("spark.sql.warehouse.dir")
-      val p = new org.apache.hadoop.fs.Path(wh, name)
-      val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (fs.exists(p)) fs.delete(p, true)
+    val name = graft.Artifacts.table(s, "ddclusters", dir) { base =>
       ccFixpoint(pairs)
         .select($"doc_id", $"label".as("cluster"))
-        .write.saveAsTable(name)
-      name
+        .write.saveAsTable(base)
     }
     s.table(name)
   }

@@ -1,0 +1,38 @@
+package graft
+
+import java.nio.file.{Files, Path, Paths}
+
+import scala.jdk.CollectionConverters._
+
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Keeps [[Artifacts]] the only place that names, cleans up or guards a
+  * derived catalog table: the hand-rolled steps it replaced must not grow
+  * back anywhere else in `src/main/scala`. Writing the tables themselves
+  * (`saveAsTable` inside an `Artifacts.table` write closure, or in
+  * `Ivf`/`Pq.persist`) stays with the caller and is not checked here. */
+class ArtifactStoreSourceSpec extends AnyFunSuite {
+
+  private val forbidden = Seq(
+    "(?i)DROP\\s+TABLE\\s+IF\\s+EXISTS" -> "drops an artifact table",
+    "spark\\.sql\\.warehouse\\.dir" -> "builds a warehouse path",
+    "\\bfs\\.delete\\(" -> "deletes a warehouse path",
+    java.util.regex.Pattern.quote("""replaceAll("[^A-Za-z0-9]", "_")""") ->
+      "mangles a dir into a table name",
+    "WeakReference\\[SparkSession\\]" -> "keeps a second per-session cache")
+
+  test("artifact naming, cleanup and guarding live only in Artifacts.scala") {
+    val root = Paths.get("src/main/scala")
+    val sources: Seq[Path] = Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+    assert(sources.exists(_.getFileName.toString == "Artifacts.scala"),
+      s"engine sources not found under ${root.toAbsolutePath}")
+    val hits = for {
+      f <- sources if f.getFileName.toString != "Artifacts.scala"
+      (line, n) <- Files.readAllLines(f).asScala.zipWithIndex
+      (re, what) <- forbidden if re.r.findFirstIn(line).isDefined
+    } yield s"${root.relativize(f)}:${n + 1} $what: ${line.trim}"
+    assert(hits.isEmpty, hits.mkString(
+      "route derived catalog tables through Artifacts.table instead:\n", "\n", ""))
+  }
+}

@@ -21,7 +21,7 @@ class NewOperatorsR12Spec extends SparkSpec {
 
     // the serving-through-tombstones path over the UNCOMPACTED base must
     // answer identically to the compacted table the query served from
-    val name = ("graft_ivfdelete_" + sf.replaceAll("[^A-Za-z0-9]", "_")).toLowerCase
+    val name = Artifacts.name("ivfdelete", sf)
     val index = graft.functions.AnnIndexes.ivf(spark, sf, k = 16)
     val filtered = graft.functions.Ivf.Index(
       index.centroids,
