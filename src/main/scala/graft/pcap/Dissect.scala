@@ -49,16 +49,25 @@ object Dissect {
     val Id_frame_time_epoch_ns: Int = FieldIds.id("frame.time_epoch_ns")
     val Id_frame_time_relative: Int = FieldIds.id("frame.time_relative")
     val Id_frame_time_delta: Int = FieldIds.id("frame.time_delta")
+    val Id_frame_raw: Int = FieldIds.id("frame.raw")
     val Id_eth_dst: Int = FieldIds.id("eth.dst")
     val Id_eth_src: Int = FieldIds.id("eth.src")
     val Id_eth_type: Int = FieldIds.id("eth.type")
+    val Id_eth_addr: Int = FieldIds.id("eth.addr")
+    val Id_eth_ig: Int = FieldIds.id("eth.ig")
     val Id_vlan_id: Int = FieldIds.id("vlan.id")
     val Id_ip_version: Int = FieldIds.id("ip.version")
     val Id_ip_hdr_len: Int = FieldIds.id("ip.hdr_len")
     val Id_ip_dsfield: Int = FieldIds.id("ip.dsfield")
+    val Id_ip_tos: Int = FieldIds.id("ip.tos")
+    val Id_ip_dsfield_dscp: Int = FieldIds.id("ip.dsfield.dscp")
+    val Id_ip_dsfield_ecn: Int = FieldIds.id("ip.dsfield.ecn")
     val Id_ip_len: Int = FieldIds.id("ip.len")
     val Id_ip_id: Int = FieldIds.id("ip.id")
     val Id_ip_flags: Int = FieldIds.id("ip.flags")
+    val Id_ip_flags_rb: Int = FieldIds.id("ip.flags.rb")
+    val Id_ip_flags_df: Int = FieldIds.id("ip.flags.df")
+    val Id_ip_flags_mf: Int = FieldIds.id("ip.flags.mf")
     val Id_ip_frag_offset: Int = FieldIds.id("ip.frag_offset")
     val Id_ip_ttl: Int = FieldIds.id("ip.ttl")
     val Id_ip_proto: Int = FieldIds.id("ip.proto")
@@ -67,6 +76,10 @@ object Dissect {
     val Id_ip_dst: Int = FieldIds.id("ip.dst")
     val Id_ip_addr: Int = FieldIds.id("ip.addr")
     val Id_ipv6_version: Int = FieldIds.id("ipv6.version")
+    val Id_ipv6_tclass: Int = FieldIds.id("ipv6.tclass")
+    val Id_ipv6_tclass_dscp: Int = FieldIds.id("ipv6.tclass.dscp")
+    val Id_ipv6_tclass_ecn: Int = FieldIds.id("ipv6.tclass.ecn")
+    val Id_ipv6_flow: Int = FieldIds.id("ipv6.flow")
     val Id_ipv6_plen: Int = FieldIds.id("ipv6.plen")
     val Id_ipv6_nxt: Int = FieldIds.id("ipv6.nxt")
     val Id_ipv6_hlim: Int = FieldIds.id("ipv6.hlim")
@@ -115,6 +128,7 @@ object Dissect {
     val Id_udp_checksum: Int = FieldIds.id("udp.checksum")
     val Id_udp_pdu_size: Int = FieldIds.id("udp.pdu.size")
     val Id_udp_payload: Int = FieldIds.id("udp.payload")
+    val Id_fix_msgtype: Int = FieldIds.id("fix.msgtype")
   }
 
   /** Write-side view: `v.set(Id_tcp_srcport, x)` resolves the field id and
@@ -130,8 +144,15 @@ object Dissect {
   final class FieldVec {
     val objs = new Array[Any](FieldIds.count)
     val longs = new Array[Long](FieldIds.count)
-    /** 0 = empty, 1 = object, 2 = long, 3 = boolean, 4 = double. */
+    /** 0 = empty, 1 = object, 2 = long, 3 = boolean, 4 = double,
+      * 5 = UTF-8 text in `bytes(i)[0, byteLens(i))`. */
     val kinds = new Array[Byte](FieldIds.count)
+    /** Kind-5 storage: one reused array per slot, so addresses and hex
+      * payloads render straight to the bytes the scan's row wraps, with no
+      * String between. Like the pooled vector itself, valid until the next
+      * dissect call. */
+    val bytes = new Array[Array[Byte]](FieldIds.count)
+    val byteLens = new Array[Int](FieldIds.count)
     /** Tunnel recursion (GRE/VXLAN inner layers) flips this on: a field
       * already written by an OUTER layer then follows tshark's
       * multi-occurrence rendering — strings comma-append, non-strings keep
@@ -193,9 +214,52 @@ object Dissect {
           }
           else (objs(i), value) match {
             case (p: String, s: String) => objs(i) = p + "," + s
+            case (_, s: String) if kinds(i) == 5 => setText(i, s)
             case _ => // numeric/bool outer occurrence wins
           }
       }
+    }
+
+    /** Opens a kind-5 write of `n` bytes into slot `i` and returns the
+      * offset in `bytes(i)` to write them at, or -1 when the write is
+      * dropped. Nested writes follow [[set]]: after an outer text value
+      * they append as ",inner"; after a numeric one they drop. */
+    def reserve(i: Int, n: Int): Int = {
+      if (i < 0) return -1
+      var at = 0
+      if (kinds(i) == 0) wrote(i)
+      else if (nested) {
+        if (kinds(i) == 1) objs(i) match {
+          case s: String =>
+            val b = s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+            bytes(i) = b; byteLens(i) = b.length; objs(i) = null
+          case _ => return -1
+        }
+        else if (kinds(i) != 5) return -1
+        at = byteLens(i) + 1
+      }
+      val end = at + n
+      val b = bytes(i)
+      if (b == null || b.length < end) {
+        val grown = new Array[Byte](math.max(end, 64))
+        if (at > 0) System.arraycopy(b, 0, grown, 0, at - 1)
+        bytes(i) = grown
+      }
+      if (at > 0) bytes(i)(at - 1) = ','
+      kinds(i) = 5
+      byteLens(i) = end
+      at
+    }
+
+    /** Kind-5 copy of `src[from, from + n)`. */
+    def setBytes(i: Int, src: Array[Byte], from: Int, n: Int): Unit = {
+      val at = reserve(i, n)
+      if (at >= 0) System.arraycopy(src, from, bytes(i), at, n)
+    }
+
+    private def setText(i: Int, s: String): Unit = {
+      val b = s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+      setBytes(i, b, 0, b.length)
     }
     def update(name: String, value: Long): Unit = set(FieldIds.id(name), value)
     def update(name: String, value: Boolean): Unit = set(FieldIds.id(name), value)
@@ -209,7 +273,8 @@ object Dissect {
       case 1 => objs(i)
       case 2 => java.lang.Long.valueOf(longs(i))
       case 3 => java.lang.Boolean.valueOf(longs(i) != 0L)
-      case _ => java.lang.Double.valueOf(java.lang.Double.longBitsToDouble(longs(i)))
+      case 4 => java.lang.Double.valueOf(java.lang.Double.longBitsToDouble(longs(i)))
+      case _ => new String(bytes(i), 0, byteLens(i), java.nio.charset.StandardCharsets.UTF_8)
     }
     def get(name: String): Option[Any] = {
       val i = FieldIds.id(name)
@@ -246,9 +311,13 @@ object Dissect {
     * (`infoBytes`/`infoLen`, the scan's bytes-only hot path — valid only
     * until the next dissect call, the same lifetime contract as a reused
     * reader row). [[info]] materializes a String from the bytes for
-    * non-scan consumers. */
+    * non-scan consumers.
+    *
+    * `chain` is the [[ChainIntern]] slot of `protocols`: a memo keyed on it
+    * holds while its stored chain is still `eq` to `protocols`. */
   final class Dissected(
       val vec: FieldVec,
+      val chain: Int,
       val protocols: String,
       private val infoStr: String,
       val infoBytes: Array[Byte] = null,
@@ -321,14 +390,48 @@ object Dissect {
 
   // --- conversation state ------------------------------------------------
 
-  private final case class ConvKey(a: String, ap: Int, b: String, bp: Int)
+  /** A conversation's two endpoints as address bits and ports: IPv4 in the
+    * low 32 bits of `aLo`/`bLo`, IPv6 as two longs each; `ports` packs both
+    * ports and the IP version. Canonical order: endpoint `a` is the lower
+    * (address, port), comparing unsigned, so both directions share a key. */
+  private final class ConvKey(
+      val aHi: Long, val aLo: Long, val bHi: Long, val bLo: Long, val ports: Long) {
+    override def equals(o: Any): Boolean = o match {
+      case k: ConvKey =>
+        aLo == k.aLo && bLo == k.bLo && ports == k.ports && aHi == k.aHi && bHi == k.bHi
+      case _ => false
+    }
+    override def hashCode: Int = {
+      var h = aHi * 0x9e3779b97f4a7c15L + aLo
+      h = h * 0x9e3779b97f4a7c15L + bHi
+      h = h * 0x9e3779b97f4a7c15L + bLo
+      h = h * 0x9e3779b97f4a7c15L + ports
+      (h ^ (h >>> 32)).toInt
+    }
+  }
 
+  /** Endpoint addresses as the L4 dissectors receive them: the source is
+    * `ips[at, at + len)` and the destination follows it (the IPv4 and IPv6
+    * header layouts), `len` being 4 or 16. */
   private object ConvKey {
-    def canonical(srcIp: String, srcPort: Int, dstIp: String, dstPort: Int): (ConvKey, Boolean) = {
-      // direction-0 is the first-seen orientation; canonicalize by ordering
-      val fwd = (srcIp < dstIp) || (srcIp == dstIp && srcPort <= dstPort)
-      if (fwd) (ConvKey(srcIp, srcPort, dstIp, dstPort), true)
-      else (ConvKey(dstIp, dstPort, srcIp, srcPort), false)
+    /** True when the source endpoint sorts first (or both are equal). */
+    def srcFirst(ips: Array[Byte], at: Int, len: Int, sp: Int, dp: Int): Boolean = {
+      var i = 0
+      while (i < len) {
+        val c = (ips(at + i) & 0xff) - (ips(at + len + i) & 0xff)
+        if (c != 0) return c < 0
+        i += 1
+      }
+      sp <= dp
+    }
+
+    def apply(ips: Array[Byte], at: Int, len: Int, sp: Int, dp: Int, srcFirst: Boolean): ConvKey = {
+      val a = if (srcFirst) at else at + len
+      val b = if (srcFirst) at + len else at
+      val ports = (if (srcFirst) (sp.toLong << 16) | dp else (dp.toLong << 16) | sp) |
+        (if (len == 16) 1L << 32 else 0L)
+      if (len == 16) new ConvKey(u64(ips, a), u64(ips, a + 8), u64(ips, b), u64(ips, b + 8), ports)
+      else new ConvKey(0L, u32(ips, a), 0L, u32(ips, b), ports)
     }
   }
 
@@ -472,6 +575,61 @@ object Dissect {
     }
   }
 
+  private final val ChainBits = 10
+  /** Slots in a tracker's [[ChainIntern]]; [[Dissected.chain]] is below it. */
+  final val ChainSlots = 1 << ChainBits
+  private final val ChainProbes = 8
+
+  /** Interns the per-packet `frame.protocols` chain by content, so the
+    * joined String is built once per distinct chain, not once per packet.
+    * A chain hashes its elements' cached String hashes and compares the
+    * elements only on a hash match. Open addressing over [[ChainSlots]]
+    * slots; a chain whose probe window is full takes its home slot, so no
+    * chain is locked out by the ones a capture happened to show first. */
+  private final class ChainIntern {
+    private val keys = new Array[Array[String]](ChainSlots)
+    private val hashes = new Array[Int](ChainSlots)
+    val joined = new Array[String](ChainSlots)
+
+    /** Slot of the previous packet's chain: runs of one chain skip the hash. */
+    private var last = 0
+
+    def intern(protos: mutable.ArrayBuffer[String]): Int = {
+      if (same(keys(last), protos)) return last
+      val n = protos.length
+      var h = n
+      var j = 0
+      while (j < n) { h = h * 31 + protos(j).hashCode; j += 1 }
+      h ^= h >>> 16
+      val home = (h * 0x9e3779b9) >>> (32 - ChainBits)
+      var s = home
+      var probe = 0
+      while (probe < ChainProbes) {
+        val k = keys(s)
+        if (k == null) return put(s, h, protos)
+        if (hashes(s) == h && same(k, protos)) { last = s; return s }
+        s = (s + 1) & (ChainSlots - 1)
+        probe += 1
+      }
+      put(home, h, protos)
+    }
+
+    private def same(k: Array[String], protos: mutable.ArrayBuffer[String]): Boolean = {
+      if (k == null || k.length != protos.length) return false
+      var j = 0
+      while (j < k.length && { val a = k(j); val b = protos(j); (a eq b) || a == b }) j += 1
+      j == k.length
+    }
+
+    private def put(s: Int, h: Int, protos: mutable.ArrayBuffer[String]): Int = {
+      keys(s) = protos.toArray
+      hashes(s) = h
+      joined(s) = protos.mkString(":")
+      last = s
+      s
+    }
+  }
+
   /** Per-file mutable tracker; create one per PartitionReader.
     * @param desegment reassemble application PDUs (FIX) that span TCP
     *   segments, like tshark's desegmentation: the message is reported on
@@ -482,44 +640,16 @@ object Dissect {
     *   when each Dissected is fully consumed before the next dissect call
     *   (the PartitionReader pattern); tests that hold several Dissected
     *   objects must keep the default. */
-  /** Interns the per-packet `frame.protocols` chain string: captures carry
-    * a handful of distinct layer chains, so joining the same chain once and
-    * returning the cached string removes a StringBuilder + String
-    * allocation per packet. Linear probe over ≤64 cached chains — the
-    * element arrays are tiny and comparisons almost always short-circuit
-    * on length. */
-  private final class ChainCache {
-    private val keys = new java.util.ArrayList[Array[String]]
-    private val vals = new java.util.ArrayList[String]
-    def joined(protos: mutable.ArrayBuffer[String]): String = {
-      val n = protos.length
-      var i = 0
-      while (i < keys.size) {
-        val k = keys.get(i)
-        if (k.length == n) {
-          var j = 0
-          var ok = true
-          while (ok && j < n) { ok = k(j) == protos(j); j += 1 }
-          if (ok) return vals.get(i)
-        }
-        i += 1
-      }
-      val arr = new Array[String](n)
-      protos.copyToArray(arr)
-      val s = protos.mkString(":")
-      if (keys.size < 64) { keys.add(arr); vals.add(s) }
-      s
-    }
-  }
-
   final class Tracker(val desegment: Boolean = false, val reuseBuffers: Boolean = false) {
     private[Dissect] val pooledVec = if (reuseBuffers) new FieldVec else null
     private[Dissect] val pooledProtos =
       if (reuseBuffers) mutable.ArrayBuffer.empty[String] else null
-    private[Dissect] val chains = new ChainCache
+    private[Dissect] val chains = new ChainIntern
+    /** Address-pair render scratch for [[putPair]]: two IPv6 texts + ','. */
+    private[Dissect] val addrs = new Array[Byte](79)
     private[Dissect] lazy val infoBuf = new InfoBuf
-    private val tcpConvs = mutable.HashMap.empty[ConvKey, TcpConv]
-    private val udpConvs = mutable.HashMap.empty[ConvKey, UdpConv]
+    private val tcpConvs = new java.util.HashMap[ConvKey, TcpConv]
+    private val udpConvs = new java.util.HashMap[ConvKey, UdpConv]
     private var nextTcpStream = 0L
     private var nextUdpStream = 0L
     private[Dissect] var firstPacketMicros = -1L
@@ -545,10 +675,16 @@ object Dissect {
     private[Dissect] def btRegisterCid(cid: Int, psm: Int): Unit =
       if (btCidPsm.size < 256) btCidPsm(cid) = psm
 
-    private[Dissect] def tcpConv(k: ConvKey): TcpConv =
-      tcpConvs.getOrElseUpdate(k, { val c = new TcpConv(nextTcpStream); nextTcpStream += 1; c })
-    private[Dissect] def udpConv(k: ConvKey): UdpConv =
-      udpConvs.getOrElseUpdate(k, { val c = new UdpConv(nextUdpStream); nextUdpStream += 1; c })
+    private[Dissect] def tcpConv(k: ConvKey): TcpConv = {
+      var c = tcpConvs.get(k)
+      if (c == null) { c = new TcpConv(nextTcpStream); nextTcpStream += 1; tcpConvs.put(k, c) }
+      c
+    }
+    private[Dissect] def udpConv(k: ConvKey): UdpConv = {
+      var c = udpConvs.get(k)
+      if (c == null) { c = new UdpConv(nextUdpStream); nextUdpStream += 1; udpConvs.put(k, c) }
+      c
+    }
 
     // IP fragment reassembly (desegment only): pending datagrams keyed by
     // (version, src, dst, id), insertion-order bounded so a capture full of
@@ -585,30 +721,70 @@ object Dissect {
     * than the rest of a packet's dissection combined on the hot path. */
   private val hex2: Array[String] = Array.tabulate(256)(i => f"$i%02x")
 
+  private def u64(d: Array[Byte], o: Int): Long = (u32(d, o) << 32) | u32(d, o + 4)
+
   private def macStr(d: Array[Byte], o: Int): String = hexBytes(d, o, 6)
 
-  private def ipv4Str(d: Array[Byte], o: Int): String =
-    s"${u8(d, o)}.${u8(d, o + 1)}.${u8(d, o + 2)}.${u8(d, o + 3)}"
+  private def ipv4Str(d: Array[Byte], o: Int): String = {
+    val b = new Array[Byte](15)
+    latin1(b, ipv4Into(d, o, b, 0))
+  }
 
   private def ipv6Str(d: Array[Byte], o: Int): String = {
-    // canonical RFC 5952 compression
-    val groups = (0 until 8).map(i => u16(d, o + i * 2))
-    // find longest zero run (>=2)
+    val b = new Array[Byte](39)
+    latin1(b, ipv6Into(d, o, b, 0))
+  }
+
+  private def latin1(b: Array[Byte], n: Int): String =
+    new String(b, 0, n, java.nio.charset.StandardCharsets.ISO_8859_1)
+
+  /** Dotted-quad render of `d[o, o + 4)` into `out` at `at`; returns the
+    * end offset (at most 15 bytes). */
+  private def ipv4Into(d: Array[Byte], o: Int, out: Array[Byte], at: Int): Int = {
+    var p = at
+    var i = 0
+    while (i < 4) {
+      if (i > 0) { out(p) = '.'; p += 1 }
+      val x = u8(d, o + i)
+      if (x >= 100) { out(p) = ('0' + x / 100).toByte; p += 1 }
+      if (x >= 10) { out(p) = ('0' + x / 10 % 10).toByte; p += 1 }
+      out(p) = ('0' + x % 10).toByte
+      p += 1
+      i += 1
+    }
+    p
+  }
+
+  /** RFC 5952 render of `d[o, o + 16)` into `out` at `at` (lowercase hex
+    * groups, the first longest run of two or more zero groups as "::");
+    * returns the end offset (at most 39 bytes). */
+  private def ipv6Into(d: Array[Byte], o: Int, out: Array[Byte], at: Int): Int = {
     var bestStart = -1; var bestLen = 0; var i = 0
     while (i < 8) {
-      if (groups(i) == 0) {
+      if (u16(d, o + i * 2) == 0) {
         var j = i
-        while (j < 8 && groups(j) == 0) j += 1
+        while (j < 8 && u16(d, o + j * 2) == 0) j += 1
         if (j - i > bestLen) { bestLen = j - i; bestStart = i }
         i = j
       } else i += 1
     }
-    if (bestLen < 2) groups.map(g => f"$g%x").mkString(":")
-    else {
-      val pre = groups.take(bestStart).map(g => f"$g%x").mkString(":")
-      val post = groups.drop(bestStart + bestLen).map(g => f"$g%x").mkString(":")
-      s"$pre::$post"
+    if (bestLen < 2) bestStart = -1
+    var p = at
+    i = 0
+    while (i < 8) {
+      if (i == bestStart) {
+        out(p) = ':'; out(p + 1) = ':'; p += 2
+        i += bestLen
+      } else {
+        if (i > 0 && i != bestStart + bestLen) { out(p) = ':'; p += 1 }
+        val g = u16(d, o + i * 2)
+        var shift = 12
+        while (shift > 0 && (g >> shift) == 0) shift -= 4
+        while (shift >= 0) { out(p) = hexDigits((g >> shift) & 0xf); p += 1; shift -= 4 }
+        i += 1
+      }
     }
+    p
   }
 
   /** Wireshark FIX MsgType (tag 35) names, FIX 4.x standard CamelCase. */
@@ -811,21 +987,42 @@ object Dissect {
 
   private val hexDigits: Array[Byte] = "0123456789abcdef".getBytes("ISO-8859-1")
 
-  /** "0a:1b:…" — one Latin-1 byte array, no per-byte builder appends
-    * (payload columns render every captured byte of every packet). */
-  private def hexBytes(d: Array[Byte], off: Int, len: Int): String = {
-    if (len == 0) return ""
-    val out = new Array[Byte](len * 3 - 1)
+  /** "0a:1b:…" render of `d[off, off + len)` into `out` at `at`; returns
+    * the end offset (`len * 3 - 1` bytes, none for an empty range). */
+  private def hexInto(d: Array[Byte], off: Int, len: Int, out: Array[Byte], at: Int): Int = {
     var i = 0
     while (i < len) {
       val b = d(off + i) & 0xff
-      val o = i * 3
+      val o = at + i * 3
       if (i > 0) out(o - 1) = ':'
       out(o) = hexDigits(b >> 4)
       out(o + 1) = hexDigits(b & 0xf)
       i += 1
     }
-    new String(out, java.nio.charset.StandardCharsets.ISO_8859_1)
+    if (len == 0) at else at + len * 3 - 1
+  }
+
+  private def hexBytes(d: Array[Byte], off: Int, len: Int): String = {
+    if (len == 0) return ""
+    val out = new Array[Byte](len * 3 - 1)
+    latin1(out, hexInto(d, off, len, out, 0))
+  }
+
+  /** Hex column write, rendered straight into the field's byte slot
+    * (payload columns render every captured byte of every packet). */
+  private def putHex(v: FieldVec, i: Int, d: Array[Byte], off: Int, len: Int): Unit = {
+    val at = v.reserve(i, if (len == 0) 0 else len * 3 - 1)
+    if (at >= 0) hexInto(d, off, len, v.bytes(i), at)
+  }
+
+  /** Writes one address pair's two columns and its "Source or
+    * Destination" column from `scratch`, which holds "first,second" with
+    * the comma at `comma` and ends at `end`. */
+  private def putPair(v: FieldVec, firstId: Int, secondId: Int, pairId: Int,
+      scratch: Array[Byte], comma: Int, end: Int): Unit = {
+    v.setBytes(firstId, scratch, 0, comma)
+    v.setBytes(secondId, scratch, comma + 1, end - comma - 1)
+    v.setBytes(pairId, scratch, 0, end)
   }
 
   // --- main entry --------------------------------------------------------
@@ -864,9 +1061,12 @@ object Dissect {
     v.set(Id_frame_time_delta, timeDeltaMicros)
 
     val d = rec.data
-    if (wanted.raw) v("frame.raw") = hexBytes(d, 0, d.length)
+    if (wanted.raw) putHex(v, Id_frame_raw, d, 0, d.length)
     try {
-      if (!wanted.layers) return new Dissected(v, "", "")
+      if (!wanted.layers) {
+        val c = tracker.chains.intern(protos)
+        return new Dissected(v, c, tracker.chains.joined(c), "")
+      }
       linktype match {
         case 1 => // Ethernet
           val s = dissectEthFrom(d, 0, v, protos, tracker, wanted)
@@ -1157,10 +1357,10 @@ object Dissect {
       case _: ArrayIndexOutOfBoundsException => // truncated capture: keep what we have
     }
 
+    val c = tracker.chains.intern(protos)
     if (info eq InfoInBuf)
-      new Dissected(v, tracker.chains.joined(protos), null,
-        tracker.infoBuf.buf, tracker.infoBuf.len)
-    else new Dissected(v, tracker.chains.joined(protos), info)
+      new Dissected(v, c, tracker.chains.joined(c), null, tracker.infoBuf.buf, tracker.infoBuf.len)
+    else new Dissected(v, c, tracker.chains.joined(c), info)
   }
 
   /** Ethernet (+optional 802.1Q) from `off` — also the tunnel re-entry
@@ -1174,11 +1374,13 @@ object Dissect {
       wanted: Wanted): String = {
     protos += "eth"
     if (d.length < off + 14) return null
-    v.set(Id_eth_dst, macStr(d, off))
-    v.set(Id_eth_src, macStr(d, off + 6))
-    // "Source or Destination" rendering + the dst group/individual bit
-    v("eth.addr") = s"${macStr(d, off)},${macStr(d, off + 6)}"
-    v("eth.ig") = (u8(d, off) & 0x01) != 0
+    // dst, src, the "Source or Destination" rendering, the dst
+    // group/individual bit
+    val s = tracker.addrs
+    val comma = hexInto(d, off, 6, s, 0)
+    s(comma) = ','
+    putPair(v, Id_eth_dst, Id_eth_src, Id_eth_addr, s, comma, hexInto(d, off + 6, 6, s, comma + 1))
+    v.set(Id_eth_ig, (u8(d, off) & 0x01) != 0)
     var etherType = u16(d, off + 12)
     var l3off = off + 14
     if (etherType == 0x8100 && d.length >= l3off + 4) { // 802.1Q tag
@@ -1585,35 +1787,34 @@ object Dissect {
     val ihl = (d(off) & 0xf) * 4
     val totalLen = u16(d, off + 2)
     val proto = u8(d, off + 9)
-    val src = ipv4Str(d, off + 12)
-    val dst = ipv4Str(d, off + 16)
     v.set(Id_ip_version, ((d(off) >> 4) & 0xf).toLong)
     v.set(Id_ip_hdr_len, ihl.toLong)
     val tos = u8(d, off + 1)
     v.set(Id_ip_dsfield, tos.toLong)
-    v("ip.tos") = tos.toLong
-    v("ip.dsfield.dscp") = (tos >> 2).toLong
-    v("ip.dsfield.ecn") = (tos & 0x3).toLong
+    v.set(Id_ip_tos, tos.toLong)
+    v.set(Id_ip_dsfield_dscp, (tos >> 2).toLong)
+    v.set(Id_ip_dsfield_ecn, (tos & 0x3).toLong)
     v.set(Id_ip_len, totalLen.toLong)
     v.set(Id_ip_id, u16(d, off + 4).toLong)
     val flagsFrag = u16(d, off + 6)
     v.set(Id_ip_flags, ((flagsFrag >> 13) & 0x7).toLong)
-    v("ip.flags.rb") = (flagsFrag & 0x8000) != 0
-    v("ip.flags.df") = (flagsFrag & 0x4000) != 0
-    v("ip.flags.mf") = (flagsFrag & 0x2000) != 0
+    v.set(Id_ip_flags_rb, (flagsFrag & 0x8000) != 0)
+    v.set(Id_ip_flags_df, (flagsFrag & 0x4000) != 0)
+    v.set(Id_ip_flags_mf, (flagsFrag & 0x2000) != 0)
     v.set(Id_ip_frag_offset, (flagsFrag & 0x1fff).toLong)
     v.set(Id_ip_ttl, u8(d, off + 8).toLong)
     v.set(Id_ip_proto, proto.toLong)
     v.set(Id_ip_checksum, u16(d, off + 10).toLong)
-    v.set(Id_ip_src, src)
-    v.set(Id_ip_dst, dst)
     // tshark emits every occurrence comma-joined for -T fields; ip.addr is
     // defined as "Source or Destination" so both values appear ("src,dst").
     // (tcp.port/udp.port get the same treatment in tshark, but those are
     // BIGINT after the reference's type collapse and its std::stoll parse
     // stops at the comma — so source-only IS the reference's observable
     // value there; here ip.addr is VARCHAR and keeps the full string.)
-    v.set(Id_ip_addr, s"$src,$dst")
+    val s = tracker.addrs
+    val comma = ipv4Into(d, off + 12, s, 0)
+    s(comma) = ','
+    putPair(v, Id_ip_src, Id_ip_dst, Id_ip_addr, s, comma, ipv4Into(d, off + 16, s, comma + 1))
     val next = off + ihl
     // payload bounded by IP total length (ethernet padding must not leak in)
     val ipEnd = math.min(off + totalLen, d.length)
@@ -1632,11 +1833,12 @@ object Dissect {
         // protocols never merge
         val id = (proto.toLong << 16) | u16(d, off + 4).toLong
         val part = java.util.Arrays.copyOfRange(d, next, ipEnd)
-        tracker.addFrag(4, src, dst, id, fragOffset * 8, part, last = !mf, proto) match {
+        tracker.addFrag(4, ipv4Str(d, off + 12), ipv4Str(d, off + 16), id, fragOffset * 8, part,
+          last = !mf, proto) match {
           case (reasm, p) =>
             return p match {
-              case 6  => dissectTcp(reasm, 0, reasm.length, src, dst, v, protos, tracker, wanted)
-              case 17 => dissectUdp(reasm, 0, reasm.length, src, dst, v, protos, tracker, wanted)
+              case 6  => dissectTcp(reasm, 0, reasm.length, d, off + 12, 4, v, protos, tracker, wanted)
+              case 17 => dissectUdp(reasm, 0, reasm.length, d, off + 12, 4, v, protos, tracker, wanted)
               case 1  => protos += "icmp"; dissectIcmp(reasm, 0, v)
               case _  => null
             }
@@ -1646,8 +1848,8 @@ object Dissect {
       return s"Fragmented IP protocol (proto=$proto, off=${fragOffset * 8}, ID=${"%04x".format(u16(d, off + 4))})"
     }
     proto match {
-      case 6  => dissectTcp(d, next, ipEnd, src, dst, v, protos, tracker, wanted)
-      case 17 => dissectUdp(d, next, ipEnd, src, dst, v, protos, tracker, wanted)
+      case 6  => dissectTcp(d, next, ipEnd, d, off + 12, 4, v, protos, tracker, wanted)
+      case 17 => dissectUdp(d, next, ipEnd, d, off + 12, 4, v, protos, tracker, wanted)
       case 1  => protos += "icmp"; dissectIcmp(d, next, v)
       case 2  => protos += "igmp"; dissectIgmp(d, next, ipEnd, v, protos)
       case 47 => dissectGre(d, next, ipEnd, v, protos, tracker, wanted)
@@ -1656,7 +1858,7 @@ object Dissect {
       case 46 => dissectRsvp(d, next, ipEnd, v, protos)
       case 103 => dissectPim(d, next, ipEnd, v, protos)
       case 115 => dissectL2tpv3(d, next, ipEnd, v, protos)
-      case 51 => dissectAh(d, next, ipEnd, src, dst, v, protos, tracker, wanted)
+      case 51 => dissectAh(d, next, ipEnd, d, off + 12, 4, v, protos, tracker, wanted)
       case 88  => dissectEigrp(d, next, ipEnd, v, protos)
       case 89  => protos += "ospf"; dissectOspf(d, next, ipEnd, v)
       case 112 => dissectVrrp(d, next, ipEnd, v, protos)
@@ -1736,21 +1938,20 @@ object Dissect {
     protos += "ipv6"
     val payLen = u16(d, off + 4)
     val nxt = u8(d, off + 6)
-    val src = ipv6Str(d, off + 8)
-    val dst = ipv6Str(d, off + 24)
     v.set(Id_ipv6_version, 6L)
     val vtf = u32(d, off)
     val tclass = ((vtf >> 20) & 0xff).toInt
-    v("ipv6.tclass") = tclass.toLong
-    v("ipv6.tclass.dscp") = (tclass >> 2).toLong
-    v("ipv6.tclass.ecn") = (tclass & 0x3).toLong
-    v("ipv6.flow") = vtf & 0xfffffL
+    v.set(Id_ipv6_tclass, tclass.toLong)
+    v.set(Id_ipv6_tclass_dscp, (tclass >> 2).toLong)
+    v.set(Id_ipv6_tclass_ecn, (tclass & 0x3).toLong)
+    v.set(Id_ipv6_flow, vtf & 0xfffffL)
     v.set(Id_ipv6_plen, payLen.toLong)
     v.set(Id_ipv6_nxt, nxt.toLong)
     v.set(Id_ipv6_hlim, u8(d, off + 7).toLong)
-    v.set(Id_ipv6_src, src)
-    v.set(Id_ipv6_dst, dst)
-    v.set(Id_ipv6_addr, s"$src,$dst") // "Source or Destination", like ip.addr
+    val s = tracker.addrs // ipv6.addr is "Source or Destination", like ip.addr
+    val comma = ipv6Into(d, off + 8, s, 0)
+    s(comma) = ','
+    putPair(v, Id_ipv6_src, Id_ipv6_dst, Id_ipv6_addr, s, comma, ipv6Into(d, off + 24, s, comma + 1))
     val next = off + 40
     val end = math.min(next + payLen, d.length)
     // Walk the extension-header chain (hop-by-hop, routing, destination
@@ -1790,12 +1991,12 @@ object Dissect {
         val part = java.util.Arrays.copyOfRange(d, p, end)
         // the upper-layer Next Header is authoritative only in the first
         // fragment (RFC 8200 §4.5) — FragAsm keeps that one
-        tracker.addFrag(6, src, dst, fragId, fragOffB, part, last = !more,
-          if (fragOffB == 0) nxtH else -1) match {
+        tracker.addFrag(6, ipv6Str(d, off + 8), ipv6Str(d, off + 24), fragId, fragOffB, part,
+          last = !more, if (fragOffB == 0) nxtH else -1) match {
           case (reasm, up) =>
             return up match {
-              case 6  => dissectTcp(reasm, 0, reasm.length, src, dst, v, protos, tracker, wanted)
-              case 17 => dissectUdp(reasm, 0, reasm.length, src, dst, v, protos, tracker, wanted)
+              case 6  => dissectTcp(reasm, 0, reasm.length, d, off + 8, 16, v, protos, tracker, wanted)
+              case 17 => dissectUdp(reasm, 0, reasm.length, d, off + 8, 16, v, protos, tracker, wanted)
               case 58 => protos += "icmpv6"; dissectIcmpv6(reasm, 0, reasm.length, v)
               case _  => null
             }
@@ -1805,8 +2006,8 @@ object Dissect {
       return s"IPv6 fragment (nxt=$nxtH, off=$fragOffB, id=0x${"%08x".format(fragId)})"
     }
     nxtH match {
-      case 6  => dissectTcp(d, p, end, src, dst, v, protos, tracker, wanted)
-      case 17 => dissectUdp(d, p, end, src, dst, v, protos, tracker, wanted)
+      case 6  => dissectTcp(d, p, end, d, off + 8, 16, v, protos, tracker, wanted)
+      case 17 => dissectUdp(d, p, end, d, off + 8, 16, v, protos, tracker, wanted)
       case 58 => protos += "icmpv6"; dissectIcmpv6(d, p, end, v)
       case 47 => dissectGre(d, p, end, v, protos, tracker, wanted)
       case 50 => protos += "esp"; dissectEsp(d, p, end, v)
@@ -1814,7 +2015,7 @@ object Dissect {
       case 46 => dissectRsvp(d, p, end, v, protos)
       case 103 => dissectPim(d, p, end, v, protos)
       case 115 => dissectL2tpv3(d, p, end, v, protos)
-      case 51 => dissectAh(d, p, end, src, dst, v, protos, tracker, wanted)
+      case 51 => dissectAh(d, p, end, d, off + 8, 16, v, protos, tracker, wanted)
       case 89  => protos += "ospf"; dissectOspf(d, p, end, v)
       case 132 => dissectSctp(d, p, end, v, protos)
       case 33  => dissectDccp(d, p, end, v, protos)
@@ -1911,9 +2112,11 @@ object Dissect {
     * the plain TCP info applies. */
   private val ClaimedNoInfo: String = new String("claimed-no-info")
 
+  /** `ips[ipAt, ipAt + ipLen)` is the source address, the destination
+    * follows it (see [[ConvKey]]). */
   private def dissectTcp(
       d: Array[Byte], off: Int, ipEnd: Int,
-      srcIp: String, dstIp: String,
+      ips: Array[Byte], ipAt: Int, ipLen: Int,
       v: FieldVec,
       protos: mutable.ArrayBuffer[String],
       tracker: Tracker,
@@ -1933,8 +2136,8 @@ object Dissect {
     val syn = (flags & 0x02) != 0
     val ack = (flags & 0x10) != 0
 
-    val (key, isFwd) = ConvKey.canonical(srcIp, sp, dstIp, dp)
-    val conv = tracker.tcpConv(key)
+    val isFwd = ConvKey.srcFirst(ips, ipAt, ipLen, sp, dp)
+    val conv = tracker.tcpConv(ConvKey(ips, ipAt, ipLen, sp, dp, isFwd))
     val dir = if (isFwd) 0 else 1
     if (conv.isn(dir) < 0) conv.isn(dir) = rawSeq
     if (syn) conv.sawSyn(dir) = true
@@ -1995,7 +2198,7 @@ object Dissect {
     v.set(Id_tcp_checksum, u16(d, off + 16).toLong)
     v.set(Id_tcp_urgent_pointer, u16(d, off + 18).toLong)
     if (wanted.payloads && segLen > 0)
-      v.set(Id_tcp_payload, hexBytes(d, off + hdrLen, math.min(segLen, d.length - off - hdrLen)))
+      putHex(v, Id_tcp_payload, d, off + hdrLen, math.min(segLen, d.length - off - hdrLen))
 
     // Application-layer input. Plain per-packet scan: the raw segment.
     // Under desegment: the seq-ordered run this packet makes available
@@ -2312,7 +2515,7 @@ object Dissect {
       if (msgs.nonEmpty) {
         protos += "fix"
         appInfo = msgs.mkString(", ")
-        v("fix.msgtype") = msgs.head
+        v.set(Id_fix_msgtype, msgs.head)
       } else if (conv.carry(dir).nonEmpty) {
         // mid-PDU segment: tshark-style continuation marker, no fix layer
         appInfo = "[TCP segment of a reassembled PDU]"
@@ -2327,7 +2530,7 @@ object Dissect {
         if (wanted.info)
           appInfo = if (msgs.length == 1) msgs.head else msgs.mkString(", ")
         else appInfo = ""
-        v("fix.msgtype") = msgs.head
+        v.set(Id_fix_msgtype, msgs.head)
       }
     }
     appInfo
@@ -3060,9 +3263,10 @@ object Dissect {
   // compile limit). A ladder part returns the first claiming dissector's
   // info, or null to fall through to the next part.
 
+  /** Addresses as in [[dissectTcp]]. */
   private def dissectUdp(
       d: Array[Byte], off: Int, ipEnd: Int,
-      srcIp: String, dstIp: String,
+      ips: Array[Byte], ipAt: Int, ipLen: Int,
       v: FieldVec,
       protos: mutable.ArrayBuffer[String],
       tracker: Tracker,
@@ -3073,8 +3277,8 @@ object Dissect {
     val dp = u16(d, off + 2)
     val len = u16(d, off + 4)
     val payLen = math.max(0, len - 8)
-    val (key, _) = ConvKey.canonical(srcIp, sp, dstIp, dp)
-    val conv = tracker.udpConv(key)
+    val conv = tracker.udpConv(
+      ConvKey(ips, ipAt, ipLen, sp, dp, ConvKey.srcFirst(ips, ipAt, ipLen, sp, dp)))
     val nowUs = tracker.currentTsMicros
     if (conv.firstTsMicros < 0) conv.firstTsMicros = nowUs
     v.set(Id_udp_time_relative, nowUs - conv.firstTsMicros)
@@ -3085,10 +3289,10 @@ object Dissect {
     v.set(Id_udp_port, sp.toLong)
     v.set(Id_udp_stream, conv.stream)
     v.set(Id_udp_length, len.toLong)
-    udpChecksum(d, off, len, dp, srcIp, dstIp, v)
+    udpChecksum(d, off, len, dp, ips, ipAt, ipLen, v)
     v.set(Id_udp_pdu_size, payLen.toLong)
     if (wanted.payloads && payLen > 0 && off + 8 < d.length)
-      v.set(Id_udp_payload, hexBytes(d, off + 8, math.min(payLen, d.length - off - 8)))
+      putHex(v, Id_udp_payload, d, off + 8, math.min(payLen, d.length - off - 8))
     var info = udpPortsA(d, off, payLen, sp, dp, conv, v, protos, tracker, wanted)
     if (info == null) info = udpPortsB(d, off, payLen, sp, dp, conv, v, protos, tracker, wanted)
     if (info == null) info = udpPortsC(d, off, payLen, sp, dp, conv, v, protos, tracker, wanted)
@@ -3107,7 +3311,7 @@ object Dissect {
   /** udp.checksum and the udp expert items. */
   private def udpChecksum(
       d: Array[Byte], off: Int, len: Int, dp: Int,
-      srcIp: String, dstIp: String,
+      ips: Array[Byte], ipAt: Int, ipLen: Int,
       v: FieldVec): Unit = {
     val ckStored = u16(d, off + 6)
     v.set(Id_udp_checksum, ckStored.toLong)
@@ -3123,39 +3327,33 @@ object Dissect {
     if (dp >= 33434 && dp <= 33633) v("udp.possible_traceroute") =
       "Possible traceroute"
     // verify the checksum over the IPv4 pseudo-header when the datagram is
-    // fully captured (v6 strings are not reparsed; those stay unverified)
-    if (ckStored != 0 && len >= 8 && off + len <= d.length &&
-        srcIp != null && srcIp.indexOf('.') > 0) {
-      val sp4 = srcIp.split('.'); val dp4 = dstIp.split('.')
-      if (sp4.length == 4 && dp4.length == 4) {
-        var sum = 0L
-        def add16(x: Int): Unit = sum += (x & 0xffff)
-        add16((sp4(0).toInt << 8) | sp4(1).toInt)
-        add16((sp4(2).toInt << 8) | sp4(3).toInt)
-        add16((dp4(0).toInt << 8) | dp4(1).toInt)
-        add16((dp4(2).toInt << 8) | dp4(3).toInt)
-        add16(17); add16(len)
-        // checksum-offload detection: a transmitting stack leaves the
-        // UNCOMPLEMENTED pseudo-header sum in the field for the NIC to
-        // finish; seeing exactly that value means a partial checksum
-        var ps = sum
-        while ((ps >> 16) != 0) ps = (ps & 0xffff) + (ps >> 16)
-        if (ckStored == ps.toInt)
-          v("udp.checksum.partial") = "Partial (pseudo header checksum)"
-        var i = off
-        val udpEnd = off + len
-        while (i + 1 < udpEnd) {
-          if (i != off + 6) add16((u8(d, i) << 8) | u8(d, i + 1))
-          i += 2
-        }
-        if (i < udpEnd) add16(u8(d, i) << 8)
-        while ((sum >> 16) != 0) sum = (sum & 0xffff) + (sum >> 16)
-        val calc0 = (~sum).toInt & 0xffff
-        val calc = if (calc0 == 0) 0xffff else calc0
-        v("udp.checksum_calculated") = calc.toLong
-        if (calc != ckStored) v("udp.checksum.bad") = "Bad checksum"
-        v("udp.checksum.status") = if (calc == ckStored) 1L else 0L
+    // fully captured (IPv6 datagrams stay unverified)
+    if (ckStored != 0 && len >= 8 && off + len <= d.length && ipLen == 4) {
+      var sum = 0L
+      def add16(x: Int): Unit = sum += (x & 0xffff)
+      var a = ipAt
+      while (a < ipAt + 8) { add16(u16(ips, a)); a += 2 } // source, destination
+      add16(17); add16(len)
+      // checksum-offload detection: a transmitting stack leaves the
+      // UNCOMPLEMENTED pseudo-header sum in the field for the NIC to
+      // finish; seeing exactly that value means a partial checksum
+      var ps = sum
+      while ((ps >> 16) != 0) ps = (ps & 0xffff) + (ps >> 16)
+      if (ckStored == ps.toInt)
+        v("udp.checksum.partial") = "Partial (pseudo header checksum)"
+      var i = off
+      val udpEnd = off + len
+      while (i + 1 < udpEnd) {
+        if (i != off + 6) add16((u8(d, i) << 8) | u8(d, i + 1))
+        i += 2
       }
+      if (i < udpEnd) add16(u8(d, i) << 8)
+      while ((sum >> 16) != 0) sum = (sum & 0xffff) + (sum >> 16)
+      val calc0 = (~sum).toInt & 0xffff
+      val calc = if (calc0 == 0) 0xffff else calc0
+      v("udp.checksum_calculated") = calc.toLong
+      if (calc != ckStored) v("udp.checksum.bad") = "Bad checksum"
+      v("udp.checksum.status") = if (calc == ckStored) 1L else 0L
     }
   }
 
@@ -6691,7 +6889,7 @@ object Dissect {
     * protected payload dissected in place (transport mode). */
   private def dissectAh(
       d: Array[Byte], off: Int, end: Int,
-      src: String, dst: String,
+      ips: Array[Byte], ipAt: Int, ipLen: Int,
       v: FieldVec,
       protos: mutable.ArrayBuffer[String],
       tracker: Tracker,
@@ -6708,8 +6906,8 @@ object Dissect {
     val hdrLen = (plen + 2) * 4
     val inner =
       if (hdrLen >= 12 && off + hdrLen < end) nxt match {
-        case 6  => dissectTcp(d, off + hdrLen, end, src, dst, v, protos, tracker, wanted)
-        case 17 => dissectUdp(d, off + hdrLen, end, src, dst, v, protos, tracker, wanted)
+        case 6  => dissectTcp(d, off + hdrLen, end, ips, ipAt, ipLen, v, protos, tracker, wanted)
+        case 17 => dissectUdp(d, off + hdrLen, end, ips, ipAt, ipLen, v, protos, tracker, wanted)
         case 1  => protos += "icmp"; dissectIcmp(d, off + hdrLen, v)
         case 50 => protos += "esp"; dissectEsp(d, off + hdrLen, end, v)
         case _  => null

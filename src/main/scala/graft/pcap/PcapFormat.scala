@@ -86,6 +86,18 @@ object PcapFormat {
     recordsAfterHeader(din, header, maxPackets, firstNumber = 1L)
   }
 
+  /** Longest record the buffer pool keeps a buffer for. */
+  final val PoolMaxLen = 65536
+  /** Most bytes one reader's buffer pool holds: every length of a
+    * 1,514-byte-MTU capture fits (about 1.1 MB); a capture with every
+    * length up to [[PoolMaxLen]] would otherwise pin about 2 GB. */
+  final val PoolBytes = 4L << 20
+
+  /** A record iterator; `pooledBytes` is what its buffer pool holds. */
+  abstract class Records extends Iterator[Record] {
+    def pooledBytes: Long
+  }
+
   /** @param maxBytes stop after consuming this many record bytes (16-byte
     *                  header + payload each) — the intra-file split bound
     * @param reuseBuffers reuse payload arrays (keyed by exact length) across
@@ -100,20 +112,21 @@ object PcapFormat {
       maxPackets: Long,
       firstNumber: Long,
       maxBytes: Long = Long.MaxValue,
-      reuseBuffers: Boolean = false): Iterator[Record] =
-    new Iterator[Record] {
+      reuseBuffers: Boolean = false): Records =
+    new Records {
       private var nextRec: Record = _
       private var done = false
       private var advanced = false
       private var n = firstNumber - 1
       private var consumed = 0L
       private val rh = new Array[Byte](16)
-      // exact-length buffer pool: captures carry few distinct frame sizes
-      // (MTU-ful + a handful of control sizes), so keying by length removes
-      // nearly every per-packet payload allocation without length ambiguity
-      // (Record.data.length stays authoritative for the dissector)
-      private val pool =
-        if (reuseBuffers) new java.util.HashMap[Integer, Array[Byte]] else null
+      // exact-length buffer pool, indexed by length: captures carry few
+      // distinct frame sizes (MTU-ful + a handful of control sizes), so
+      // this removes nearly every per-packet payload allocation without
+      // length ambiguity (Record.data.length stays authoritative for the
+      // dissector); past PoolBytes, new lengths allocate per record
+      private val pool = if (reuseBuffers) new Array[Array[Byte]](PoolMaxLen + 1) else null
+      var pooledBytes = 0L
 
       private def advance(): Unit = {
         advanced = true
@@ -136,9 +149,12 @@ object PcapFormat {
         val orig = u32(rh, 12, le).toInt
         if (incl < 0 || incl > 256 * 1024 * 1024) { done = true; return }
         val data =
-          if (pool != null && incl <= 65536) {
-            var b = pool.get(incl)
-            if (b == null) { b = new Array[Byte](incl); pool.put(incl, b) }
+          if (pool != null && incl <= PoolMaxLen) {
+            var b = pool(incl)
+            if (b == null) {
+              b = new Array[Byte](incl)
+              if (pooledBytes + incl <= PoolBytes) { pool(incl) = b; pooledBytes += incl }
+            }
             b
           } else new Array[Byte](incl)
         try din.readFully(data)

@@ -4,6 +4,7 @@ import java.io.DataInputStream
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.spark.util.SerializableConfiguration
 
 /** Driver-side record-boundary index pass for intra-file parallelism
   * (SURVEY §7.3): pcap records are self-delimiting (16-byte header carries
@@ -77,19 +78,12 @@ object PcapIndex {
         // ship the driver's Hadoop settings (s3a credentials, fs.defaultFS,
         // …) to the tasks — a bare `new Configuration()` there would only
         // see defaults and fail on any configured filesystem
-        val confMap: Array[(String, String)] = {
-          val it = conf.iterator()
-          val b = Array.newBuilder[(String, String)]
-          while (it.hasNext) { val e = it.next(); b += (e.getKey -> e.getValue) }
-          b.result()
-        }
+        val shipped = new SerializableConfiguration(conf)
         val results = spark.sparkContext
           .parallelize(ranges, nChunks)
           .map { case (k, start, end) =>
-            val c = new Configuration()
-            confMap.foreach { case (key, value) => c.set(key, value) }
             val p = new Path(file)
-            val s = p.getFileSystem(c).open(p)
+            val s = p.getFileSystem(shipped.value).open(p)
             try {
               val sync =
                 if (k == 0) 24L

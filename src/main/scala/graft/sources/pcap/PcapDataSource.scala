@@ -6,12 +6,15 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.sources.{DataSourceRegister, Filter}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.util.SerializableConfiguration
 
 import graft.pcap.{Glossary, PcapIndex}
 
@@ -82,6 +85,15 @@ object PcapTable {
     raw
   }
 
+  /** The session's Hadoop conf (its `spark.hadoop.*` and filesystem
+    * settings) plus the read options, as one broadcast for the readers. */
+  def hadoopConf(
+      options: CaseInsensitiveStringMap): Broadcast[SerializableConfiguration] = {
+    val session = SparkSession.active
+    session.sparkContext.broadcast(new SerializableConfiguration(
+      session.sessionState.newHadoopConfWithOptions(options.asCaseSensitiveMap.asScala.toMap)))
+  }
+
   def expand(paths: Seq[String], conf: Configuration): Seq[String] =
     paths.flatMap { p =>
       val hp = new Path(p)
@@ -136,7 +148,8 @@ final class PcapScan(
     pushed: Array[Filter])
     extends Scan with Batch with SupportsReportStatistics {
 
-  private val conf = new Configuration()
+  private lazy val shipped = PcapTable.hadoopConf(options)
+  private lazy val conf = shipped.value.value
   private lazy val files: Seq[String] =
     PcapTable.expand(PcapTable.paths(options), conf)
 
@@ -193,8 +206,7 @@ final class PcapScan(
         files.flatMap { f =>
           val ss =
             if (resync)
-              PcapIndex.resyncSplits(f, target, conf,
-                org.apache.spark.sql.SparkSession.active)
+              PcapIndex.resyncSplits(f, target, conf, SparkSession.active)
             else PcapIndex.splits(f, target, conf)
           ss.map(s =>
             PcapInputPartition(f, Long.MaxValue, s.offset, s.length, s.firstNumber): InputPartition)
@@ -209,7 +221,7 @@ final class PcapScan(
     val cfilter = Option(options.get("cfilter")).filter(_.nonEmpty)
     val backend = options.getOrDefault("backend", "native")
     val desegment = options.getBoolean("desegment", false)
-    PcapReaderFactory(requiredSchema, compatStrict, cfilter, pushed, backend, desegment)
+    PcapReaderFactory(requiredSchema, compatStrict, cfilter, pushed, backend, desegment, shipped)
   }
 }
 

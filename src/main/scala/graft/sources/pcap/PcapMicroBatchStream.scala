@@ -2,7 +2,6 @@ package graft.sources.pcap
 
 import scala.collection.mutable
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
@@ -37,7 +36,8 @@ final class PcapMicroBatchStream(
     override def json(): String = batchId.toString
   }
 
-  private val conf = new Configuration()
+  private val shipped = PcapTable.hadoopConf(options)
+  private val conf = shipped.value.value
   private val logDir = new Path(checkpointLocation, "pcap-file-log")
   private val fs = logDir.getFileSystem(conf)
 
@@ -111,7 +111,7 @@ final class PcapMicroBatchStream(
     val cfilter = Option(options.get("cfilter")).filter(_.nonEmpty)
     val backend = options.getOrDefault("backend", "native")
     val desegment = options.getBoolean("desegment", false)
-    PcapReaderFactory(schema, compatStrict, cfilter, Array.empty, backend, desegment)
+    PcapReaderFactory(schema, compatStrict, cfilter, Array.empty, backend, desegment, shipped)
   }
 
   override def commit(end: Offset): Unit = synchronized {

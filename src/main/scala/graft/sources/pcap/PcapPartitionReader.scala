@@ -4,12 +4,14 @@ import java.io.DataInputStream
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory}
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.SerializableConfiguration
 
 import graft.pcap.{Dissect, Glossary, PcapFormat}
 
@@ -25,29 +27,34 @@ final case class PcapReaderFactory(
     compatStrict: Boolean,
     cfilter: Option[String],
     pushed: Array[Filter],
-    backend: String = "native",
-    desegment: Boolean = false)
+    backend: String,
+    desegment: Boolean,
+    hadoopConf: Broadcast[SerializableConfiguration])
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[PcapInputPartition]
     if (backend == "tshark")
       new TsharkPartitionReader(p.file, p.maxPackets, schema, compatStrict, cfilter)
     else
-      new PcapPartitionReader(p, schema, compatStrict, cfilter, pushed, desegment)
+      new PcapPartitionReader(p, schema, compatStrict, cfilter, pushed, desegment,
+        hadoopConf.value.value)
   }
 }
 
+/** @param conf the scan's Hadoop conf; callers outside a scan get one with
+  *   the Hadoop defaults, parsed once per JVM. */
 final class PcapPartitionReader(
     partition: PcapInputPartition,
     schema: StructType,
     compatStrict: Boolean,
     cfilter: Option[String],
     pushed: Array[Filter],
-    desegment: Boolean = false)
+    desegment: Boolean = false,
+    conf: Configuration = PcapPartitionReader.defaultConf)
     extends PartitionReader[InternalRow] {
 
   private val path = new Path(partition.file)
-  private val raw = path.getFileSystem(new Configuration()).open(path)
+  private val raw = path.getFileSystem(conf).open(path)
   private val gzipped = partition.file.endsWith(".gz")
   // zstd via Spark's bundled pure-Java aircompressor — no native lib
   private val zstded =
@@ -134,17 +141,29 @@ final class PcapPartitionReader(
   private var current: InternalRow = _
 
   // The protocols chain repeats across almost every packet of a capture
-  // ("eth:ethertype:ip:tcp:fix" × N) — intern its UTF8String so the
-  // per-row UTF-8 encode + byte[] allocation happens once per distinct
-  // chain, not once per row. UTF8String is immutable, so sharing one
-  // instance across emitted rows is safe; the cap bounds a pathological
-  // capture with thousands of distinct chains.
-  private val chainCache = new java.util.HashMap[String, UTF8String]()
+  // ("eth:ethertype:ip:tcp:fix" × N): one UTF8String per interned chain
+  // slot, rebuilt only when the slot's chain changes. UTF8String is
+  // immutable, so sharing one instance across emitted rows is safe.
+  private val chainStrs = new Array[String](Dissect.ChainSlots)
+  private val chainU8s = new Array[UTF8String](Dissect.ChainSlots)
+  private def chainUtf8(d: Dissect.Dissected): UTF8String = {
+    val c = d.chain
+    if (chainStrs(c) ne d.protocols) {
+      chainU8s(c) = UTF8String.fromString(d.protocols)
+      chainStrs(c) = d.protocols
+    }
+    chainU8s(c)
+  }
+
+  // Short infos repeat heavily (FIX msgtype names, "[TCP segment of a
+  // reassembled PDU]"): intern their UTF8Strings, capped so a capture
+  // with many distinct short infos stays bounded.
+  private val infoCache = new java.util.HashMap[String, UTF8String]()
   private def internedUtf8(s: String): UTF8String = {
-    var u = chainCache.get(s)
+    var u = infoCache.get(s)
     if (u == null) {
       u = UTF8String.fromString(s)
-      if (chainCache.size < 1024) chainCache.put(s, u)
+      if (infoCache.size < 1024) infoCache.put(s, u)
     }
     u
   }
@@ -220,7 +239,7 @@ final class PcapPartitionReader(
     var i = 0
     while (i < fieldNames.length) {
       colIds(i) match {
-        case -1 => row.update(i, internedUtf8(d.protocols))
+        case -1 => row.update(i, chainUtf8(d))
         case -2 =>
           // bytes-only hot path: the dissector rendered straight into its
           // reused UTF-8 buffer — wrap it, zero String/encoder work
@@ -229,10 +248,8 @@ final class PcapPartitionReader(
           else {
             val s = d.info
             if (s == null) row.setNullAt(i)
-            // short infos repeat heavily (FIX msgtype names, "[TCP segment
-            // of a reassembled PDU]") — intern those; long per-row-unique
-            // TCP infos go through the reusable buffer instead
-            else if (s.length <= 48 && chainCache.size < 1024)
+            // long per-row-unique TCP infos go through the reusable buffer
+            else if (s.length <= 48 && infoCache.size < 1024)
               row.update(i, internedUtf8(s))
             else row.update(i, reusedUtf8(i, s))
           }
@@ -248,8 +265,13 @@ final class PcapPartitionReader(
                   if (compatStrict) (micros / 1000000L) * 1000000L else micros)
               } else row.setNullAt(i)
             case 1 =>
-              val s = if (k == 1) vec.objs(id).toString else vec.valueAt(id).toString
-              row.update(i, reusedUtf8(i, s))
+              // kind 5: rendered UTF-8 in the vector's reused slot, wrapped
+              // under the same copy-before-next contract as the info bytes
+              if (k == 5) row.update(i, UTF8String.fromBytes(vec.bytes(id), 0, vec.byteLens(id)))
+              else {
+                val s = if (k == 1) vec.objs(id).toString else vec.valueAt(id).toString
+                row.update(i, reusedUtf8(i, s))
+              }
             case 2 =>
               if (k == 2) row.setLong(i, vec.longs(id)) else row.setNullAt(i)
             case 3 =>
@@ -284,6 +306,10 @@ final class PcapPartitionReader(
 
   override def get(): InternalRow = current
   override def close(): Unit = raw.close()
+}
+
+object PcapPartitionReader {
+  lazy val defaultConf: Configuration = new Configuration()
 }
 
 /** Catalyst v1 Filter evaluation against a dissected packet — the subset
@@ -442,7 +468,7 @@ object DisplayFilter {
       val v = fieldValue(d, target)
       if (v == null) null else valueHex(v.toString)
     } else if (target == "frame") frameHex(d)
-    else if (ProtoPresent(target).eval(d)) frameHex(d)
+    else if (present(d, target)) frameHex(d)
     else null
 
   /** ASCII case transform applied byte-wise to canonical hex — Wireshark's
@@ -469,9 +495,26 @@ object DisplayFilter {
     else if (xf == 'L') v.toLowerCase(java.util.Locale.ROOT)
     else v
 
+  private def inChain(chain: String, p: String): Boolean = chain.split(':').contains(p)
+
+  private def present(d: Dissect.Dissected, p: String): Boolean =
+    inChain(d.protocols, p) || d.values.contains(p)
+
+  /** [[present]], with the chain test memoised per chain slot and the field
+    * id resolved once (a parsed filter belongs to one reader, so no two
+    * threads share the memo). */
   private final case class ProtoPresent(p: String) extends Expr {
-    def eval(d: Dissect.Dissected): Boolean =
-      d.protocols.split(':').contains(p) || d.values.contains(p)
+    private val field = Dissect.FieldIds.id(p)
+    private val chains = new Array[String](Dissect.ChainSlots)
+    private val answers = new Array[Boolean](Dissect.ChainSlots)
+    def eval(d: Dissect.Dissected): Boolean = {
+      val c = d.chain
+      if (chains(c) ne d.protocols) {
+        answers(c) = inChain(d.protocols, p)
+        chains(c) = d.protocols
+      }
+      answers(c) || (field >= 0 && d.vec.kinds(field) != 0)
+    }
   }
 
   private final case class ContainsE(target: String, litH: String,

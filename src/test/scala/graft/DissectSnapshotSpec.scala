@@ -144,9 +144,12 @@ object DissectSnapshot {
     while (i < Dissect.FieldIds.count) {
       val k = v.kinds(i)
       if (k != 0) {
-        sb.append('\u0002').append(Dissect.FieldIds.names(i)).append('\u0001').append(k.toInt)
-          .append('\u0001')
-        if (k == 1) v.objs(i) match {
+        // text is one kind (1) whether the vector holds it as a String or
+        // as UTF-8 bytes (5), so the digests pin values, not storage
+        sb.append('\u0002').append(Dissect.FieldIds.names(i)).append('\u0001')
+          .append(if (k == 5) 1 else k.toInt).append('\u0001')
+        if (k == 5) sb.append(v.valueAt(i))
+        else if (k == 1) v.objs(i) match {
           case s: String => sb.append(s)
           case o => sb.append(o.getClass.getName).append(':').append(o)
         }

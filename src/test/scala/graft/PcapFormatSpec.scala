@@ -1613,4 +1613,33 @@ class PcapFormatSpec extends AnyFunSuite {
     assert(d.info === "Echo (ping) request  id=0x0042, seq=7")
     assert(d.values("icmp.type") === 8L)
   }
+
+  test("a dominant chain after more than 64 rare ones is one interned String") {
+    // IPv6 extension-header runs (hop-by-hop, routing, destination options;
+    // one to four headers) give 3 + 9 + 27 + 81 distinct chains, all seen
+    // before the first IPv4/TCP packet
+    val kinds = Seq(0, 43, 60)
+    val runs = (1 to 4).flatMap { n =>
+      Iterator.iterate(Seq(Seq.empty[Int]))(_.flatMap(r => kinds.map(r :+ _))).drop(n).next()
+    }
+    def extHeaders(run: Seq[Int]): Array[Byte] = {
+      val b = ByteBuffer.allocate(8 * run.length)
+      run.indices.foreach { k =>
+        val next = if (k + 1 < run.length) run(k + 1) else 59 // no next header
+        b.put(next.toByte).put(0.toByte).put(new Array[Byte](6))
+      }
+      b.array()
+    }
+    val rare = runs.map(run => ethIpv6(run.head, extHeaders(run)))
+    val dominant = (0 until 100).map(i => ethIpTcp(40000, 5000, Array.emptyByteArray, seq = 1000 + i))
+    val tracker = new Dissect.Tracker(reuseBuffers = true)
+    val chains = (rare ++ dominant).zipWithIndex.map { case (f, i) =>
+      Dissect.dissect(PcapFormat.Record(i + 1L, 1000000L + i, f.length, f.length, f), 1, tracker)
+        .protocols
+    }
+    assert(chains.take(rare.length).distinct.length === 120)
+    val tcp = chains.drop(rare.length)
+    assert(tcp.head === "eth:ethertype:ip:tcp")
+    assert(tcp.forall(_ eq tcp.head))
+  }
 }

@@ -149,4 +149,36 @@ class PcapWriterSpec extends SparkSpec {
     assert(orig("btsdp") === 2L && rewritten("btsdp") === 2L)
     assert(orig("btrfcomm") === 3L && rewritten("btrfcomm") === 3L)
   }
+
+  test("framing buffer pool stays under its byte cap on thousands of frame lengths") {
+    import graft.pcap.{PcapFormat, PcapWriter}
+    import spark.implicits._
+    val lens = 1 to 3500
+    assert(lens.map(_.toLong).sum > PcapFormat.PoolBytes) // the cap binds
+    val frames = lens.map { n =>
+      val hex = (0 until n).map(k => f"${(k * 31 + n) & 0xff}%02x").mkString(":")
+      (n * 1000L, hex)
+    }.toDF("us", "frame.raw")
+      .select(expr("timestamp_micros(us)").as("frame.time_epoch"), col("`frame.raw`"))
+    val out = java.nio.file.Files.createTempDirectory("pcapwpool").toString
+    PcapWriter.write(frames.coalesce(1), out)
+    val file = new java.io.File(out).listFiles().filter(_.getName.endsWith(".pcap")).head
+
+    def scan(reuse: Boolean)(f: PcapFormat.Records => Unit): Unit = {
+      val in = new java.io.DataInputStream(
+        new java.io.BufferedInputStream(new java.io.FileInputStream(file)))
+      try f(PcapFormat.recordsAfterHeader(in, PcapFormat.readHeader(in), Long.MaxValue, 1L,
+        reuseBuffers = reuse))
+      finally in.close()
+    }
+    // a pooled record's bytes are valid until the next one: copy them out
+    def fields(r: PcapFormat.Record) = (r.number, r.tsMicros, r.inclLen, r.origLen, r.data.toSeq)
+    var plain = Vector.empty[Any]
+    scan(reuse = false)(recs => plain = recs.map(fields).toVector)
+    scan(reuse = true) { recs =>
+      assert(recs.map(fields).toVector === plain)
+      assert(recs.pooledBytes > 0 && recs.pooledBytes <= PcapFormat.PoolBytes)
+    }
+    assert(plain.length === lens.length)
+  }
 }

@@ -19,6 +19,8 @@ object SparkSpec {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config(s"spark.hadoop.fs.${SchemeOnlyFs.Scheme}.impl", classOf[SchemeOnlyFs].getName)
+      .config(s"spark.hadoop.fs.${SchemeOnlyFs.Scheme}.impl.disable.cache", "true")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
