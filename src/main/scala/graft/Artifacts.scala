@@ -71,9 +71,16 @@ object Artifacts {
     if (v != null) v.asInstanceOf[T] else cached(spark, key)(fit)
   }
 
-  /** The catalog base name of the (kind, dir) artifact. */
-  def name(kind: String, dir: String): String =
-    ("graft_" + kind + "_" + dir.replaceAll("[^A-Za-z0-9]", "_")).toLowerCase
+  /** The catalog base name of the (kind, dir) artifact: the dir folded to
+    * a readable identifier, then a hash of the exact dir string, since
+    * folding alone maps `/x/a/b` and `/x/a_b`, or `SF` and `sf`, to one
+    * name. */
+  def name(kind: String, dir: String): String = {
+    val sha = java.security.MessageDigest.getInstance("SHA-256")
+      .digest(dir.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    val tag = sha.take(6).map(b => f"${b & 0xff}%02x").mkString
+    ("graft_" + kind + "_" + dir.replaceAll("[^A-Za-z0-9]", "_")).toLowerCase + "_" + tag
+  }
 
   /** A persisted catalog artifact, written once per (session, kind, dir):
     * drops each `base + part` table and deletes its warehouse path, then

@@ -131,6 +131,9 @@ object Dissect {
     val Id_fix_msgtype: Int = FieldIds.id("fix.msgtype")
   }
 
+  /** The demand mask of a full dissection. */
+  private val EveryField: Array[Boolean] = Array.fill(FieldIds.count)(true)
+
   /** Write-side view: `v.set(Id_tcp_srcport, x)` resolves the field id and
     * stores into flat arrays (unknown names are dropped — the glossary
     * consistency spec keeps that set empty).
@@ -160,6 +163,15 @@ object Dissect {
       * the first occurrence of numeric fields). */
     var nested = false
 
+    /** The fields the scan reads ([[Wanted.fields]]): a write to any other
+      * slot is dropped, so its value is never stored, rendered or cleared.
+      * Set by [[dissect]] per call; all true outside a scan. */
+    private var demand: Array[Boolean] = EveryField
+    private[Dissect] def demanding(fields: Array[Boolean]): Unit =
+      demand = if (fields == null) EveryField else fields
+    /** True when a write to any of the three slots would be kept. */
+    def wantsAny(a: Int, b: Int, c: Int): Boolean = demand(a) || demand(b) || demand(c)
+
     /** Ids whose `kinds` went from 0 to non-zero since the last clear —
       * every set pushes on first write, so a pooled vector resets only the
       * slots a packet wrote, not all of the glossary. */
@@ -183,17 +195,17 @@ object Dissect {
     }
 
     def set(i: Int, value: Long): Unit = {
-      if (i < 0 || (nested && kinds(i) != 0)) return // outer occurrence wins
+      if (i < 0 || !demand(i) || (nested && kinds(i) != 0)) return // outer occurrence wins
       if (kinds(i) == 0) wrote(i)
       longs(i) = value; kinds(i) = 2
     }
     def set(i: Int, value: Boolean): Unit = {
-      if (i < 0 || (nested && kinds(i) != 0)) return
+      if (i < 0 || !demand(i) || (nested && kinds(i) != 0)) return
       if (kinds(i) == 0) wrote(i)
       longs(i) = if (value) 1L else 0L; kinds(i) = 3
     }
     def set(i: Int, value: Double): Unit = {
-      if (i < 0 || (nested && kinds(i) != 0)) return
+      if (i < 0 || !demand(i) || (nested && kinds(i) != 0)) return
       if (kinds(i) == 0) wrote(i)
       longs(i) = java.lang.Double.doubleToRawLongBits(value); kinds(i) = 4
     }
@@ -201,7 +213,7 @@ object Dissect {
       * boxed already (generic code paths); those re-dispatch to the
       * primitive slots so consumers see one representation per kind. */
     def set(i: Int, value: Any): Unit = {
-      if (i < 0) return
+      if (i < 0 || !demand(i)) return
       value match {
         case l: java.lang.Long    => set(i, l.longValue)
         case b: java.lang.Boolean => set(i, b.booleanValue)
@@ -223,9 +235,10 @@ object Dissect {
     /** Opens a kind-5 write of `n` bytes into slot `i` and returns the
       * offset in `bytes(i)` to write them at, or -1 when the write is
       * dropped. Nested writes follow [[set]]: after an outer text value
-      * they append as ",inner"; after a numeric one they drop. */
+      * they append as ",inner"; after a numeric one they drop, and so does
+      * a write to a slot the scan does not read. */
     def reserve(i: Int, n: Int): Int = {
-      if (i < 0) return -1
+      if (i < 0 || !demand(i)) return -1
       var at = 0
       if (kinds(i) == 0) wrote(i)
       else if (nested) {
@@ -371,11 +384,18 @@ object Dissect {
   /** Sentinel info return: "the rendering is in tracker.infoBuf". */
   private[pcap] val InfoInBuf: String = new String("infobuf-sentinel")
 
-  /** Column-pruning hints from the scan: payload hex-encoding and info
-    * rendering are the two per-packet costs worth gating (a jumbo frame's
-    * payload hex string is ~48 KB); everything else is cheap fixed work.
-    * `all` keeps full fidelity for cfilter/pushed-filter evaluation paths
-    * that might reference them. */
+  /** What the scan reads, so dissection does only that work.
+    *
+    * `fields` is the demand mask over [[FieldIds]] (null: every field).
+    * Writes to undemanded slots are dropped; the Ethernet, IPv4 and IPv6
+    * address pairs render only when one of their three columns is
+    * demanded; and the TCP app-layer claim chain runs only when the chain
+    * (`frame.protocols`), the info column or a field of a protocol above
+    * TCP is demanded ([[Wanted.app]]). Conversation state behind the L4
+    * fields (`tcp.stream`, `tcp.analysis.*`, `tcp.time_*`) is kept for
+    * every packet whatever the mask. `payloads`, `info` and `raw` gate the
+    * payload hex, the info rendering and the whole-frame hex; `layers =
+    * false` stops after the frame-header fields. */
   final case class Wanted(
       payloads: Boolean = true,
       info: Boolean = true,
@@ -385,7 +405,33 @@ object Dissect {
       // tracker's reused UTF-8 buffer (Dissected.infoBytes) — no String on
       // the hot path. Off for unit tests, whose Dissected outlives the
       // next dissect call.
-      infoBytes: Boolean = false)
+      infoBytes: Boolean = false,
+      fields: Array[Boolean] = null) {
+    require(fields == null || fields.length == FieldIds.count,
+      s"demand mask has ${fields.length} slots, the glossary ${FieldIds.count}")
+    /** Whether the TCP app-layer claim chain runs: it writes only fields
+      * of protocols above TCP, the chain and the info. */
+    val app: Boolean = fields == null || info ||
+      fields.indices.exists(i => fields(i) && AboveTcp(i))
+  }
+
+  /** Per [[FieldIds]] id: false for the fields the TCP app-layer claim
+    * chain never writes (it re-enters no lower layer). `frame.protocols`
+    * counts as above TCP, since app protocols extend the chain. */
+  private lazy val AboveTcp: Array[Boolean] = {
+    val below = Set("frame", "eth", "vlan", "ip", "ipv6", "tcp", "udp")
+    Glossary.fields.map(f =>
+      f.filter_name == "frame.protocols" || !below(f.protocol_filter_name)).toArray
+  }
+
+  /** A demand mask over [[FieldIds]] with `names` set; names outside the
+    * glossary are ignored. */
+  def demandOf(names: Iterable[String]): Array[Boolean] = {
+    val m = new Array[Boolean](FieldIds.count)
+    names.foreach { n => val i = FieldIds.id(n); if (i >= 0) m(i) = true }
+    m
+  }
+
   val WantAll: Wanted = Wanted()
 
   // --- conversation state ------------------------------------------------
@@ -842,7 +888,7 @@ object Dissect {
     * `fix.msgtype` field only needs the head; the full walk exists for the
     * info column's comma list). */
   private def fixMessages(payload: Array[Byte], off: Int, len: Int,
-      maxMsgs: Int = Int.MaxValue): Seq[String] = {
+      maxMsgs: Int = Int.MaxValue): mutable.ArrayBuffer[String] = {
     val out = mutable.ArrayBuffer.empty[String]
     var i = off
     val end = off + len
@@ -900,7 +946,7 @@ object Dissect {
         }
       } else i += 1
     }
-    out.toSeq
+    out
   }
 
   /** Cap on buffered reassembly bytes per TCP direction; a PDU larger than
@@ -926,7 +972,7 @@ object Dissect {
     * the SOH-terminated checksum field "10=xxx<SOH>").
     * @return (msgtype names of complete messages, bytes consumed) — the
     *   unconsumed tail is either a partial message start or garbage-free. */
-  private def fixCompleteMessages(buf: Array[Byte]): (Seq[String], Int) = {
+  private def fixCompleteMessages(buf: Array[Byte]): (mutable.ArrayBuffer[String], Int) = {
     val out = mutable.ArrayBuffer.empty[String]
     var consumed = 0
     var i = 0
@@ -938,7 +984,7 @@ object Dissect {
       if (i >= n - 4)
         // no further complete start: consume everything except a trailing
         // proper prefix of "8=FIX" (which the next segment may complete)
-        return (out.toSeq, math.max(consumed, fixPrefixStart(buf, n, consumed)))
+        return (out, math.max(consumed, fixPrefixStart(buf, n, consumed)))
       val start = i
       // find terminator <SOH>10=...<SOH>
       var msg: String = null
@@ -952,7 +998,7 @@ object Dissect {
           else j = n // incomplete checksum: stop
         } else j += 1
       }
-      if (end < 0) return (out.toSeq, start) // partial message: carry from its start
+      if (end < 0) return (out, start) // partial message: carry from its start
       // msgtype inside [start, end)
       var m = start
       while (m < end - 3 && msg == null) {
@@ -967,7 +1013,7 @@ object Dissect {
       consumed = end
       i = end
     }
-    (out.toSeq, consumed)
+    (out, consumed)
   }
 
   /** Start index of a trailing proper prefix of "8=FIX" in buf[floor, n),
@@ -987,19 +1033,30 @@ object Dissect {
 
   private val hexDigits: Array[Byte] = "0123456789abcdef".getBytes("ISO-8859-1")
 
+  /** Per byte value, "hh:" as a little-endian int: its fourth byte is
+    * overwritten by the next byte's render. */
+  private val hexColon: Array[Int] = Array.tabulate(256)(b =>
+    hexDigits(b >> 4) | (hexDigits(b & 0xf) << 8) | (':' << 16))
+  private val intLE = java.lang.invoke.MethodHandles.byteArrayViewVarHandle(
+    classOf[Array[Int]], java.nio.ByteOrder.LITTLE_ENDIAN)
+  private val shortLE = java.lang.invoke.MethodHandles.byteArrayViewVarHandle(
+    classOf[Array[Short]], java.nio.ByteOrder.LITTLE_ENDIAN)
+
   /** "0a:1b:…" render of `d[off, off + len)` into `out` at `at`; returns
-    * the end offset (`len * 3 - 1` bytes, none for an empty range). */
-  private def hexInto(d: Array[Byte], off: Int, len: Int, out: Array[Byte], at: Int): Int = {
+    * the end offset (`len * 3 - 1` bytes, none for an empty range). One
+    * 4-byte store per byte but the last, which stores its two digits, so
+    * nothing is written at or past the end offset. */
+  private[pcap] def hexInto(d: Array[Byte], off: Int, len: Int, out: Array[Byte], at: Int): Int = {
+    if (len == 0) return at
     var i = 0
-    while (i < len) {
-      val b = d(off + i) & 0xff
-      val o = at + i * 3
-      if (i > 0) out(o - 1) = ':'
-      out(o) = hexDigits(b >> 4)
-      out(o + 1) = hexDigits(b & 0xf)
+    var o = at
+    while (i < len - 1) {
+      intLE.set(out, o, hexColon(d(off + i) & 0xff))
       i += 1
+      o += 3
     }
-    if (len == 0) at else at + len * 3 - 1
+    shortLE.set(out, o, hexColon(d(off + i) & 0xff).toShort)
+    o + 2
   }
 
   private def hexBytes(d: Array[Byte], off: Int, len: Int): String = {
@@ -1040,6 +1097,7 @@ object Dissect {
         tracker.pooledVec.clear()
         tracker.pooledVec
       } else new FieldVec
+    v.demanding(wanted.fields)
     val protos =
       if (tracker.pooledProtos != null) { tracker.pooledProtos.clear(); tracker.pooledProtos }
       else mutable.ArrayBuffer.empty[String]
@@ -1376,10 +1434,12 @@ object Dissect {
     if (d.length < off + 14) return null
     // dst, src, the "Source or Destination" rendering, the dst
     // group/individual bit
-    val s = tracker.addrs
-    val comma = hexInto(d, off, 6, s, 0)
-    s(comma) = ','
-    putPair(v, Id_eth_dst, Id_eth_src, Id_eth_addr, s, comma, hexInto(d, off + 6, 6, s, comma + 1))
+    if (v.wantsAny(Id_eth_dst, Id_eth_src, Id_eth_addr)) {
+      val s = tracker.addrs
+      val comma = hexInto(d, off, 6, s, 0)
+      s(comma) = ','
+      putPair(v, Id_eth_dst, Id_eth_src, Id_eth_addr, s, comma, hexInto(d, off + 6, 6, s, comma + 1))
+    }
     v.set(Id_eth_ig, (u8(d, off) & 0x01) != 0)
     var etherType = u16(d, off + 12)
     var l3off = off + 14
@@ -1811,10 +1871,12 @@ object Dissect {
     // BIGINT after the reference's type collapse and its std::stoll parse
     // stops at the comma — so source-only IS the reference's observable
     // value there; here ip.addr is VARCHAR and keeps the full string.)
-    val s = tracker.addrs
-    val comma = ipv4Into(d, off + 12, s, 0)
-    s(comma) = ','
-    putPair(v, Id_ip_src, Id_ip_dst, Id_ip_addr, s, comma, ipv4Into(d, off + 16, s, comma + 1))
+    if (v.wantsAny(Id_ip_src, Id_ip_dst, Id_ip_addr)) {
+      val s = tracker.addrs
+      val comma = ipv4Into(d, off + 12, s, 0)
+      s(comma) = ','
+      putPair(v, Id_ip_src, Id_ip_dst, Id_ip_addr, s, comma, ipv4Into(d, off + 16, s, comma + 1))
+    }
     val next = off + ihl
     // payload bounded by IP total length (ethernet padding must not leak in)
     val ipEnd = math.min(off + totalLen, d.length)
@@ -1948,10 +2010,12 @@ object Dissect {
     v.set(Id_ipv6_plen, payLen.toLong)
     v.set(Id_ipv6_nxt, nxt.toLong)
     v.set(Id_ipv6_hlim, u8(d, off + 7).toLong)
-    val s = tracker.addrs // ipv6.addr is "Source or Destination", like ip.addr
-    val comma = ipv6Into(d, off + 8, s, 0)
-    s(comma) = ','
-    putPair(v, Id_ipv6_src, Id_ipv6_dst, Id_ipv6_addr, s, comma, ipv6Into(d, off + 24, s, comma + 1))
+    if (v.wantsAny(Id_ipv6_src, Id_ipv6_dst, Id_ipv6_addr)) {
+      val s = tracker.addrs // ipv6.addr is "Source or Destination", like ip.addr
+      val comma = ipv6Into(d, off + 8, s, 0)
+      s(comma) = ','
+      putPair(v, Id_ipv6_src, Id_ipv6_dst, Id_ipv6_addr, s, comma, ipv6Into(d, off + 24, s, comma + 1))
+    }
     val next = off + 40
     val end = math.min(next + payLen, d.length)
     // Walk the extension-header chain (hop-by-hop, routing, destination
@@ -2217,7 +2281,8 @@ object Dissect {
     if ((analysis & OutOfOrder) != 0) v.set(Id_tcp_analysis_out_of_order, "1")
 
     val appInfo =
-      if (appLen > 0) tcpApp(appBuf, appOff, appLen, sp, dp, conv, dir, v, protos, tracker, wanted)
+      if (appLen > 0 && wanted.app)
+        tcpApp(appBuf, appOff, appLen, sp, dp, conv, dir, v, protos, tracker, wanted)
       else null
     if (appInfo != null) appInfo
     else if (!wanted.info) ""
@@ -11298,6 +11363,13 @@ object Dissect {
     // first question: labels until the 0 terminator, then qtype
     var qname: String = null
     var qtype = -1
+    // the answer rdata the info renders, kept here: a field write may be
+    // dropped when the scan does not read that field
+    var ansA: String = null
+    var ansCname: String = null
+    var svcPrio = -1L
+    var svcTarget: String = null
+    var svcAlpn: String = null
     if (qd > 0) {
       val sb = new StringBuilder
       var i = off + 12
@@ -11332,9 +11404,10 @@ object Dissect {
               v("dns.resp.class") = u16(d, after + 2).toLong
               v("dns.resp.ttl") = ttl
               v("dns.resp.len") = rdlen.toLong
-              if (rtype == 1 && rdlen == 4 && after + 14 <= end)
-                v("dns.a") = ipv4Str(d, after + 10)
-              else if (rtype == 28 && rdlen == 16 && after + 26 <= end)
+              if (rtype == 1 && rdlen == 4 && after + 14 <= end) {
+                ansA = ipv4Str(d, after + 10)
+                v("dns.a") = ansA
+              } else if (rtype == 28 && rdlen == 16 && after + 26 <= end)
                 v("dns.aaaa") = ipv6Str(d, after + 10)
               else if (rtype == 12 && after + 10 + rdlen <= end)
                 readDnsName(d, after + 10, off, end)
@@ -11362,16 +11435,18 @@ object Dissect {
                   .foreach { case (mn, _) => v("dns.soa.mname") = mn }
               else if (rtype == 5 && after + 10 + rdlen <= end)
                 readDnsName(d, after + 10, off, end)
-                  .foreach { case (cn, _) => v("dns.cname") = cn }
+                  .foreach { case (cn, _) => ansCname = cn; v("dns.cname") = cn }
               else if ((rtype == 64 || rtype == 65) && rdlen >= 3 &&
                   after + 10 + rdlen <= end) {
                 // SVCB / HTTPS RR (RFC 9460): SvcPriority, TargetName,
                 // SvcParams (alpn=1 as length-prefixed ids, port=3)
                 val rd = after + 10
                 val rdEnd = rd + rdlen
-                v("dns.svcb.svcpriority") = u16(d, rd).toLong
+                svcPrio = u16(d, rd).toLong
+                v("dns.svcb.svcpriority") = svcPrio
                 readDnsName(d, rd + 2, off, rdEnd).foreach { case (tgt, afterT) =>
-                  v("dns.svcb.target") = if (tgt.isEmpty) "." else tgt
+                  svcTarget = if (tgt.isEmpty) "." else tgt
+                  v("dns.svcb.target") = svcTarget
                   var p = afterT
                   while (p + 4 <= rdEnd) {
                     val key = u16(d, p)
@@ -11387,7 +11462,8 @@ object Dissect {
                             ids += new String(d, a + 1, l, "ISO-8859-1")
                           a += 1 + l
                         }
-                        v("dns.svcb.svcparam.alpn") = ids.mkString(",")
+                        svcAlpn = ids.mkString(",")
+                        v("dns.svcb.svcparam.alpn") = svcAlpn
                       } else if (key == 3 && plen == 2)
                         v("dns.svcb.svcparam.port") = u16(d, pv).toLong
                     }
@@ -11412,15 +11488,13 @@ object Dissect {
     val kind = if (isResponse) "Standard query response" else "Standard query"
     val base = if (qname != null) s"$kind 0x$idHex $typeName $qname" else s"$kind 0x$idHex"
     // tshark appends the answer rdata: "… A example.com A 93.184.216.34"
-    (v.get("dns.a"), v.get("dns.cname"), v.get("dns.svcb.svcpriority")) match {
-      case (Some(a), _, _)  => s"$base A $a"
-      case (_, Some(cn), _) => s"$base CNAME $cn"
-      case (_, _, Some(prio)) =>
-        val tgt = v.get("dns.svcb.target").fold("")(t => s" $t")
-        val alpn = v.get("dns.svcb.svcparam.alpn").fold("")(a => s" alpn=$a")
-        s"$base $typeName $prio$tgt$alpn"
-      case _                => base
-    }
+    if (ansA != null) s"$base A $ansA"
+    else if (ansCname != null) s"$base CNAME $ansCname"
+    else if (svcPrio >= 0) {
+      val tgt = if (svcTarget == null) "" else s" $svcTarget"
+      val alpn = if (svcAlpn == null) "" else s" alpn=$svcAlpn"
+      s"$base $typeName $svcPrio$tgt$alpn"
+    } else base
   }
 
   /** OBEX (IrDA/Bluetooth object exchange, fixture TCP 650): opcode +

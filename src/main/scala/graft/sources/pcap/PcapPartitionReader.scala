@@ -109,24 +109,27 @@ final class PcapPartitionReader(
   private val tracker = new Dissect.Tracker(desegment, reuseBuffers = true)
   private val displayFilter = cfilter.map(DisplayFilter.parse)
 
-  /** Dissection pruning: skip payload hex-encoding / info rendering unless
-    * the pruned schema or a filter actually references them. */
+  /** Demand-driven dissection: the fields the pruned schema, the pushed
+    * filters and the cfilter read, once per scan. The dissector writes,
+    * renders and descends only for those ([[Dissect.Wanted]]). */
   private val wanted = {
     val referenced = schema.fieldNames.toSet ++
-      pushed.flatMap(_.references) ++ cfilter.toSeq
+      pushed.flatMap(_.references).map(PcapFilterEval.attrName) ++
+      displayFilter.fold(Set.empty[String])(_.fields)
     val frameOnly = Set("frame.number", "frame.time_epoch", "frame.time_epoch_ns",
       "frame.len", "frame.cap_len", "frame.time_relative", "frame.time_delta", "frame.raw")
+    val info = referenced.contains("_ws.col.info")
     Dissect.Wanted(
-      payloads = referenced.exists(_.contains("payload")),
-      info = referenced.exists(_.contains("_ws.col.info")),
+      info = info,
       // default TCP/UDP infos render as UTF-8 bytes into the tracker's
       // reused buffer (no java.lang.String); safe because the unsafe
       // projection copies the row out before the next dissect call
-      infoBytes = referenced.exists(_.contains("_ws.col.info")),
+      infoBytes = info,
       layers = referenced.exists(r => !frameOnly.contains(r)),
       // frame-bytes searches (`http contains …`, `frame matches …`,
-      // `frame[0:4] == …`) need the raw hex materialized per packet
-      raw = referenced.contains("frame.raw") || displayFilter.exists(_.needsRaw))
+      // `frame[0:4] == …`) read the raw hex too
+      raw = referenced.contains("frame.raw"),
+      fields = Dissect.demandOf(referenced))
   }
 
   private val fieldNames = schema.fields.map(_.name)
@@ -153,19 +156,6 @@ final class PcapPartitionReader(
       chainStrs(c) = d.protocols
     }
     chainU8s(c)
-  }
-
-  // Short infos repeat heavily (FIX msgtype names, "[TCP segment of a
-  // reassembled PDU]"): intern their UTF8Strings, capped so a capture
-  // with many distinct short infos stays bounded.
-  private val infoCache = new java.util.HashMap[String, UTF8String]()
-  private def internedUtf8(s: String): UTF8String = {
-    var u = infoCache.get(s)
-    if (u == null) {
-      u = UTF8String.fromString(s)
-      if (infoCache.size < 1024) infoCache.put(s, u)
-    }
-    u
   }
 
   // Rendered-string byte-buffer reuse (the 5-col info hot path):
@@ -247,11 +237,7 @@ final class PcapPartitionReader(
             row.update(i, UTF8String.fromBytes(d.infoBytes, 0, d.infoLen))
           else {
             val s = d.info
-            if (s == null) row.setNullAt(i)
-            // long per-row-unique TCP infos go through the reusable buffer
-            else if (s.length <= 48 && infoCache.size < 1024)
-              row.update(i, internedUtf8(s))
-            else row.update(i, reusedUtf8(i, s))
+            if (s == null) row.setNullAt(i) else row.update(i, reusedUtf8(i, s))
           }
         case -3 => row.setNullAt(i) // not a glossary field
         case id =>
@@ -327,7 +313,7 @@ object PcapFilterEval {
   /** Dotted field names (`frame.time_epoch`) arrive backtick-quoted in
     * pushed v1 Filters (Catalyst quotes them so they aren't read as nested
     * struct access) — unquote before the dissected-value lookup. */
-  private def attrName(a: String): String =
+  private[pcap] def attrName(a: String): String =
     if (a.length >= 2 && a.head == '`' && a.last == '`')
       a.substring(1, a.length - 1).replace("``", "`")
     else a
@@ -405,10 +391,17 @@ object DisplayFilter {
   sealed trait Expr {
     def eval(d: Dissect.Dissected): Boolean
 
-    /** True when evaluation reads the whole frame's bytes (`frame.raw`) —
-      * the reader flips `Wanted.raw` on so the dissector materializes them. */
-    def needsRaw: Boolean = false
+    /** The fields evaluation reads: the scan demands them from the
+      * dissector. A protocol target reads the chain and the whole frame's
+      * bytes (`frame.raw`). */
+    def fields: Set[String]
   }
+
+  /** What a byte search or slice on `target` reads (see [[subjectHex]]). */
+  private def subjectFields(target: String): Set[String] =
+    if (target.contains('.')) Set(target)
+    else if (target == "frame") Set("frame.raw")
+    else Set(target, "frame.protocols", "frame.raw")
 
   private def fieldValue(d: Dissect.Dissected, field: String): Any = field match {
     case "frame.protocols" => d.protocols
@@ -504,6 +497,7 @@ object DisplayFilter {
     * id resolved once (a parsed filter belongs to one reader, so no two
     * threads share the memo). */
   private final case class ProtoPresent(p: String) extends Expr {
+    def fields: Set[String] = Set(p, "frame.protocols")
     private val field = Dissect.FieldIds.id(p)
     private val chains = new Array[String](Dissect.ChainSlots)
     private val answers = new Array[Boolean](Dissect.ChainSlots)
@@ -519,7 +513,7 @@ object DisplayFilter {
 
   private final case class ContainsE(target: String, litH: String,
       xf: Char = ' ') extends Expr {
-    override def needsRaw: Boolean = !target.contains('.')
+    def fields: Set[String] = subjectFields(target)
     def eval(d: Dissect.Dissected): Boolean = {
       val subject = caseHex(subjectHex(d, target), xf)
       subject != null && hexContains(subject, litH)
@@ -528,7 +522,7 @@ object DisplayFilter {
 
   private final case class MatchesE(target: String, p: java.util.regex.Pattern,
       xf: Char = ' ') extends Expr {
-    override def needsRaw: Boolean = !target.contains('.')
+    def fields: Set[String] = subjectFields(target)
     def eval(d: Dissect.Dissected): Boolean = {
       val subject: String =
         if (target.contains('.')) {
@@ -565,7 +559,7 @@ object DisplayFilter {
     * relational op to force numeric. */
   private final case class SliceCmp(target: String, from: Int, until: Int,
       op: String, litH: String, num: Option[Long]) extends Expr {
-    override def needsRaw: Boolean = !target.contains('.')
+    def fields: Set[String] = subjectFields(target)
     def eval(d: Dissect.Dissected): Boolean = {
       val subject = subjectHex(d, target)
       if (subject == null) return false
@@ -596,6 +590,7 @@ object DisplayFilter {
 
   private final case class Cmp(field: String, op: String, lit: String,
       xf: Char = ' ') extends Expr {
+    def fields: Set[String] = Set(field)
     def eval(d: Dissect.Dissected): Boolean = {
       val raw0: Any = fieldValue(d, field)
       if (raw0 == null) return false
@@ -638,15 +633,15 @@ object DisplayFilter {
   }
   private final case class Not(e: Expr) extends Expr {
     def eval(d: Dissect.Dissected): Boolean = !e.eval(d)
-    override def needsRaw: Boolean = e.needsRaw
+    def fields: Set[String] = e.fields
   }
   private final case class AndE(l: Expr, r: Expr) extends Expr {
     def eval(d: Dissect.Dissected): Boolean = l.eval(d) && r.eval(d)
-    override def needsRaw: Boolean = l.needsRaw || r.needsRaw
+    def fields: Set[String] = l.fields ++ r.fields
   }
   private final case class OrE(l: Expr, r: Expr) extends Expr {
     def eval(d: Dissect.Dissected): Boolean = l.eval(d) || r.eval(d)
-    override def needsRaw: Boolean = l.needsRaw || r.needsRaw
+    def fields: Set[String] = l.fields ++ r.fields
   }
 
   def parse(s: String): Expr = {

@@ -47,6 +47,18 @@ class ArtifactsSpec extends SparkSpec {
     assert(spark.table(b).count() === 4)
   }
 
+  test("dirs that fold to one identifier still get their own tables") {
+    for (pair <- Seq(Seq("/spec/x/a/b", "/spec/x/a_b"), Seq("/spec/SF", "/spec/sf"))) {
+      val bases = pair.zipWithIndex.map { case (dir, i) =>
+        Artifacts.table(spark, "spec_fold", dir) { b =>
+          spark.range(i + 1).write.saveAsTable(b)
+        }
+      }
+      assert(bases.distinct.size === 2, bases.mkString(" vs "))
+      assert(bases.map(spark.table(_).count()) === Seq(1L, 2L), pair.mkString(" vs "))
+    }
+  }
+
   test("q44 run on dir A, then B, then A again answers the third run from A's tables") {
     val q44 = graft.queries.RelationalQueries.q44BucketedJoin
     val a1 = rows(q44.fn(spark, "/root/testdata/sf0.001"))

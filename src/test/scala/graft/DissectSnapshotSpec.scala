@@ -81,7 +81,7 @@ object DissectSnapshot {
     33433, 33434, 33633, 33634, 34964, 37008, 44818, 47808, 51820, 61613,
     61616)
 
-  private def captures(dir: Path): Seq[Path] =
+  def captures(dir: Path): Seq[Path] =
     Files.list(dir).iterator().asScala
       .filter(_.getFileName.toString.endsWith(".pcap")).toSeq.sortBy(_.getFileName.toString)
 
@@ -96,7 +96,7 @@ object DissectSnapshot {
   /** Payload-bearing Ethernet/IPv4 TCP and UDP frames of the Ethernet
     * fixtures, one per distinct payload head (protocol + first 24 bytes),
     * re-sent with one endpoint port (or both) set to each sweep port. */
-  private def portSweep(caps: Seq[Path]): Vector[PcapFormat.Record] = {
+  def portSweep(caps: Seq[Path]): Vector[PcapFormat.Record] = {
     val seen = new java.util.HashSet[String]
     val frames = caps.flatMap { p =>
       val (lt, recs) = read(p)
