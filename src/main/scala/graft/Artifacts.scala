@@ -71,27 +71,49 @@ object Artifacts {
     if (v != null) v.asInstanceOf[T] else cached(spark, key)(fit)
   }
 
+  /** [[cached]] for a fit derived from the files under `dir`: the key also
+    * carries the dir's [[inputs]] fingerprint, so a dir rewritten inside
+    * the session fits again instead of serving the stale value. */
+  def cached[T <: AnyRef](spark: SparkSession, key: String, dir: String)(fit: => T): T =
+    cached(spark, s"$key:$dir:${inputs(spark, dir)}")(fit)
+
+  /** A fingerprint of the files under `dir`: each one's path, length and
+    * modification time, hashed. Empty for a dir that does not exist. */
+  def inputs(spark: SparkSession, dir: String): String = {
+    val root = new org.apache.hadoop.fs.Path(dir)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(root)) return ""
+    // listStatus, not listFiles: a located status copies the permissions,
+    // which the local filesystem reads by forking `stat` once per file
+    def files(p: org.apache.hadoop.fs.Path): Seq[String] = fs.listStatus(p).toSeq.flatMap(f =>
+      if (f.isDirectory) files(f.getPath)
+      else Seq(s"${f.getPath}\u0000${f.getLen}\u0000${f.getModificationTime}"))
+    hex(files(root).sorted.mkString("\n"), 8)
+  }
+
+  private def hex(s: String, bytes: Int): String =
+    java.security.MessageDigest.getInstance("SHA-256")
+      .digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      .take(bytes).map(b => f"${b & 0xff}%02x").mkString
+
   /** The catalog base name of the (kind, dir) artifact: the dir folded to
     * a readable identifier, then a hash of the exact dir string, since
     * folding alone maps `/x/a/b` and `/x/a_b`, or `SF` and `sf`, to one
     * name. */
-  def name(kind: String, dir: String): String = {
-    val sha = java.security.MessageDigest.getInstance("SHA-256")
-      .digest(dir.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    val tag = sha.take(6).map(b => f"${b & 0xff}%02x").mkString
-    ("graft_" + kind + "_" + dir.replaceAll("[^A-Za-z0-9]", "_")).toLowerCase + "_" + tag
-  }
+  def name(kind: String, dir: String): String =
+    ("graft_" + kind + "_" + dir.replaceAll("[^A-Za-z0-9]", "_")).toLowerCase + "_" + hex(dir, 6)
 
-  /** A persisted catalog artifact, written once per (session, kind, dir):
-    * drops each `base + part` table and deletes its warehouse path, then
-    * runs `write(base)`, which saves exactly those tables. Returns `base`.
+  /** A persisted catalog artifact, written once per (session, kind, dir)
+    * and again whenever the dir's [[inputs]] change: drops each
+    * `base + part` table and deletes its warehouse path, then runs
+    * `write(base)`, which saves exactly those tables. Returns `base`.
     * A warehouse directory left by a PRIOR run is not in this run's
     * in-memory catalog, so the delete is what lets `saveAsTable` recreate
     * it. */
   def table(spark: SparkSession, kind: String, dir: String, parts: Seq[String] = Seq(""))
       (write: String => Unit): String = {
     val base = name(kind, dir)
-    cached(spark, s"table:$kind:$dir") {
+    cached(spark, s"table:$kind", dir) {
       val wh = spark.conf.get("spark.sql.warehouse.dir")
       for (part <- parts) {
         spark.sql(s"DROP TABLE IF EXISTS $base$part")

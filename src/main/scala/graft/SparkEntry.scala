@@ -1,8 +1,11 @@
 package graft
 
+import java.util.concurrent.{Callable, ExecutionException, Executors}
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.api.GraftQuery
+import graft.functions.AnnIndexes
 import graft.queries.{GraphQueries, MultimodalQueries, PcapQueries, RelationalQueries, ScoringQueries, SimilarityQueries, StreamingQueries, TextQueries}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
@@ -32,20 +35,53 @@ object SparkEntry {
     * scheduled one-off jobs, and serving queries load catalog tables.
     * Bench calls this before its measured passes so per-query numbers
     * measure operators, not whichever query touched a shared fit first
-    * (VERDICT r7 #4: dd_minhash_lsh_pairs billed 13.5 s for the fit). */
+    * (VERDICT r7 #4: dd_minhash_lsh_pairs billed 13.5 s for the fit).
+    *
+    * The steps run concurrently, longest first, and are all joined before
+    * this returns; the first failure is rethrown. No ordering is spelled
+    * out: a step that needs another's artifact (`ccBaseTables` the
+    * signature table, the persisted IVF/IVF-PQ indexes the IVF fit) blocks
+    * on that key in [[Artifacts]], which runs each fit once however many
+    * callers want it, and only ever waits on a fit that is running. Each
+    * thread takes the caller's session as its active one and the caller's
+    * job group, description and scheduler pool, so the prep jobs stay
+    * attributed to whoever asked for them. Every step only builds: once the
+    * dir is prepared, a call runs no job at all.
+    *
+    * The steps are driver-bound (planning, code generation, the k-means
+    * fits), and the JIT compiles what they run, so one core is left to it:
+    * with a thread per step on 4 cores the compile work spilled into the
+    * first queries served after prep and made their wall time erratic. */
   def prepareArtifacts(spark: SparkSession, sfDir: String): Unit = {
-    TextQueries.minhashSigTable(spark, sfDir).count()
-    TextQueries.shingleTable(spark, sfDir).count()
-    TextQueries.shingleTableN(spark, sfDir, 3).count()
-    TextQueries.simhashTable(spark, sfDir).count()
-    TextQueries.ccBaseTables(spark, sfDir)
-    GraphQueries.prepare(spark, sfDir)
-    MultimodalQueries.prepare(spark, sfDir)
-    graft.functions.AnnIndexes.ivfPersisted(spark, sfDir, k = 16)
-    graft.functions.AnnIndexes.servingIvf(spark, sfDir)
-    graft.functions.AnnIndexes.ivfPqPersisted(spark, sfDir, m = 8, k = 16)
-    graft.functions.AnnIndexes.int8Persisted(spark, sfDir)
-    ()
+    val steps: Seq[() => Unit] = Seq(
+      () => TextQueries.minhashSigTable(spark, sfDir),
+      () => GraphQueries.prepare(spark, sfDir),
+      () => TextQueries.simhashTable(spark, sfDir),
+      () => TextQueries.shingleTable(spark, sfDir),
+      () => TextQueries.ccBaseTables(spark, sfDir),
+      () => MultimodalQueries.prepare(spark, sfDir),
+      () => AnnIndexes.int8Tables(spark, sfDir),
+      () => TextQueries.shingleTableN(spark, sfDir, 3),
+      () => AnnIndexes.ivfTables(spark, sfDir, k = 16),
+      () => AnnIndexes.ivfPqTables(spark, sfDir, m = 8, k = 16),
+      () => AnnIndexes.ivfTables(spark, sfDir, AnnIndexes.servingCells(spark, sfDir)))
+    val sc = spark.sparkContext
+    val props = Seq("spark.jobGroup.id", "spark.job.description",
+      "spark.job.interruptOnCancel", "spark.scheduler.pool").map(k => k -> sc.getLocalProperty(k))
+    val pool = Executors.newFixedThreadPool(
+      math.max(1, math.min(steps.size, Runtime.getRuntime.availableProcessors - 1)))
+    try {
+      val running = steps.map(step => pool.submit(new Callable[Unit] {
+        override def call(): Unit = {
+          SparkSession.setActiveSession(spark)
+          props.foreach { case (k, v) => sc.setLocalProperty(k, v) }
+          step()
+        }
+      }))
+      val failures = running.flatMap(f =>
+        try { f.get(); None } catch { case e: ExecutionException => Some(e.getCause) })
+      failures.headOption.foreach(e => throw e)
+    } finally pool.shutdown()
   }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on

@@ -21,10 +21,9 @@ object AnnIndexes {
     * reference); the cell-assignment plan is rebuilt per call, which is
     * plan construction only — no refit, no job. */
   def ivf(spark: SparkSession, dir: String, k: Int = 16): Ivf.Index = {
-    val cents = Artifacts.cached(spark, s"ivf:$dir:$k") {
-      Ivf.build(spark, embeddings(spark, dir), k = k).centroids
-    }
-    Ivf.fromCentroids(cents, embeddings(spark, dir))
+    val emb = embeddings(spark, dir)
+    val cents = Artifacts.cached(spark, s"ivf:$k", dir)(Ivf.build(spark, emb, k = k).centroids)
+    Ivf.fromCentroids(cents, emb)
   }
 
   /** Corpus-scaled cell count for the SERVING index (VERDICT r8 #6): a
@@ -51,7 +50,13 @@ object AnnIndexes {
     * more than the probe itself; the catalog table stores the assignment
     * once, cell-bucketed, and serving plans just read it. */
   def servingIvf(spark: SparkSession, dir: String): Ivf.Index =
-    ivfPersisted(spark, dir, k = servingK(embeddings(spark, dir).count()))
+    ivfPersisted(spark, dir, k = servingCells(spark, dir))
+
+  /** [[servingK]] of the dir's corpus, counted once per (session, dir). */
+  private[graft] def servingCells(spark: SparkSession, dir: String): Int =
+    Artifacts.cached(spark, "servingk", dir) {
+      Int.box(servingK(embeddings(spark, dir).count()))
+    }.intValue
 
   /** The PERSISTED-index path: fit once, write the index as catalog
     * tables ([[Ivf.persist]] — tiny centroid table + cell-bucketed
@@ -61,13 +66,15 @@ object AnnIndexes {
     * (session, dir, k) (cache-guarded); the returned Index always comes
     * from the catalog tables, so the query exercises the load path
     * end-to-end. */
-  def ivfPersisted(spark: SparkSession, dir: String, k: Int = 16): Ivf.Index = {
-    val fitted = ivf(spark, dir, k)
-    val name = Artifacts.table(spark, s"ivf$k", dir, Seq("_centroids", "_assigned")) {
-      Ivf.persist(fitted, _)
+  def ivfPersisted(spark: SparkSession, dir: String, k: Int = 16): Ivf.Index =
+    Ivf.loadIndex(spark, ivfTables(spark, dir, k))
+
+  /** Write [[ivfPersisted]]'s tables once; returns their base name. Runs no
+    * job once they exist. */
+  private[graft] def ivfTables(spark: SparkSession, dir: String, k: Int): String =
+    Artifacts.table(spark, s"ivf$k", dir, Seq("_centroids", "_assigned")) {
+      Ivf.persist(ivf(spark, dir, k), _)
     }
-    Ivf.loadIndex(spark, name)
-  }
 
   /** Centroids fitted on the BASE slice only (vec_id % 10 ≠ 7) — the
     * fit that [[graft.queries.SimilarityQueries]]'s index-append query
@@ -75,7 +82,7 @@ object AnnIndexes {
     * production IVF index does not refit per ingest). Shared with the
     * generated oracle so both see identical literals. */
   def ivfBase(spark: SparkSession, dir: String, k: Int = 16): Array[Array[Double]] =
-    Artifacts.cached(spark, s"ivfbase:$dir:$k") {
+    Artifacts.cached(spark, s"ivfbase:$k", dir) {
       Ivf.build(spark,
         embeddings(spark, dir).filter(org.apache.spark.sql.functions.col("vec_id") % 10 =!= 7),
         k = k).centroids
@@ -86,19 +93,22 @@ object AnnIndexes {
     * table — no corpus duplication, [[Pq.persistIvfPq]]), every answer
     * served from [[Pq.loadIvfPq]] with zero k-means jobs in the lineage. */
   def ivfPqPersisted(spark: SparkSession, dir: String, m: Int = 8, k: Int = 16)
-      : (Ivf.Index, Pq.Codebook, org.apache.spark.sql.DataFrame) = {
-    val index = ivf(spark, dir, k)
-    val cb = pq(spark, dir, m, k)
-    val name = Artifacts.table(spark, s"ivfpq_${m}_$k", dir,
-        Seq("_centroids", "_codebook", "_codes")) {
-      Pq.persistIvfPq(index, cb, Pq.encode(index.assigned, cb), _)
+      : (Ivf.Index, Pq.Codebook, org.apache.spark.sql.DataFrame) =
+    Pq.loadIvfPq(spark, ivfPqTables(spark, dir, m, k))
+
+  /** Write [[ivfPqPersisted]]'s tables once; returns their base name. Runs
+    * no job once they exist. */
+  private[graft] def ivfPqTables(spark: SparkSession, dir: String, m: Int, k: Int): String =
+    Artifacts.table(spark, s"ivfpq_${m}_$k", dir, Seq("_centroids", "_codebook", "_codes")) {
+      base =>
+        val index = ivf(spark, dir, k)
+        val cb = pq(spark, dir, m, k)
+        Pq.persistIvfPq(index, cb, Pq.encode(index.assigned, cb), base)
     }
-    Pq.loadIvfPq(spark, name)
-  }
 
   /** The PQ codebook every sim_ann_pq/ivfpq query (and its oracle) shares. */
   def pq(spark: SparkSession, dir: String, m: Int = 8, k: Int = 16): Pq.Codebook =
-    Artifacts.cached(spark, s"pq:$dir:$m:$k") {
+    Artifacts.cached(spark, s"pq:$m:$k", dir) {
       Pq.fit(spark, embeddings(spark, dir), m = m, k = k)
     }
 
@@ -113,8 +123,18 @@ object AnnIndexes {
     * over the persisted codes stay hash-checkable. */
   def int8Persisted(spark: SparkSession, dir: String, dim: Int = 64)
       : (DataFrame, Array[(Double, Double)]) = {
+    val name = int8Tables(spark, dir, dim)
+    val loaded = spark.table(name + "_stats").collect()
+      .map(r => (r.getInt(0), (r.getDouble(1), r.getDouble(2))))
+      .sortBy(_._1).map(_._2)
+    (spark.table(name + "_codes"), loaded)
+  }
+
+  /** Write [[int8Persisted]]'s tables once; returns their base name. Runs
+    * no job once they exist. */
+  private[graft] def int8Tables(spark: SparkSession, dir: String, dim: Int = 64): String = {
     import org.apache.spark.sql.functions._
-    val name = Artifacts.table(spark, "int8", dir, Seq("_codes", "_stats")) { base =>
+    Artifacts.table(spark, "int8", dir, Seq("_codes", "_stats")) { base =>
       val emb = embeddings(spark, dir)
       // exact per-dim min/max — the same comparisons the oracle derives
       val st = emb.select((1 to dim).flatMap(d => Seq(
@@ -134,10 +154,6 @@ object AnnIndexes {
       emb.select(col("vec_id"), col("label"), codeCols.as("codes"))
         .write.mode("overwrite").saveAsTable(base + "_codes")
     }
-    val loaded = spark.table(name + "_stats").collect()
-      .map(r => (r.getInt(0), (r.getDouble(1), r.getDouble(2))))
-      .sortBy(_._1).map(_._2)
-    (spark.table(name + "_codes"), loaded)
   }
 
   /** The corpus in the OPQ-rotated space ([[Vectors.opqRotate]] — exact in
@@ -152,14 +168,14 @@ object AnnIndexes {
     * rotation decorrelates dims across subspaces before the per-subspace
     * k-means, the OPQ idea with a deterministic signed permutation). */
   def opqPq(spark: SparkSession, dir: String, m: Int = 8, k: Int = 16): Pq.Codebook =
-    Artifacts.cached(spark, s"opq:$dir:$m:$k") {
+    Artifacts.cached(spark, s"opq:$m:$k", dir) {
       Pq.fit(spark, rotatedEmbeddings(spark, dir), m = m, k = k)
     }
 
   /** IVF coarse quantizer fitted in the OPQ-rotated space — pairs with
     * [[opqPq]] for the full OPQ + IVF-PQ composition. */
   def opqIvf(spark: SparkSession, dir: String, k: Int = 16): Ivf.Index = {
-    val cents = Artifacts.cached(spark, s"opqivf:$dir:$k") {
+    val cents = Artifacts.cached(spark, s"opqivf:$k", dir) {
       Ivf.build(spark, rotatedEmbeddings(spark, dir), k = k).centroids
     }
     Ivf.fromCentroids(cents, rotatedEmbeddings(spark, dir))

@@ -1,7 +1,5 @@
 package graft.functions
 
-import org.apache.spark.ml.clustering.KMeans
-import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -20,20 +18,15 @@ object Ivf {
   final case class Index(centroids: Array[Array[Double]], assigned: DataFrame)
 
   /** Fit the coarse quantizer and tag every row with its cell id. The
-    * k-means fit never needs the full corpus: a deterministic systematic
-    * sample (`vec_id % stride = 0`, ceil-capped at `fitSample` rows — the
-    * same shape as [[Pq.fit]]) bounds the fit cost independently of corpus
-    * size; cell ASSIGNMENT is a single codegen'd [[cellCol]] pass. */
+    * k-means fit never needs the full corpus: it runs on the driver over
+    * [[KMeans.sample]] (the corpus up to `fitSample` rows, else a
+    * systematic `vec_id % stride = 0` slice of at most that many — the
+    * sample [[Pq.fit]] draws), so the fit costs a few small jobs whatever
+    * the corpus size and does not depend on its partitioning; cell
+    * ASSIGNMENT is a single codegen'd [[cellCol]] pass. */
   def build(spark: SparkSession, emb: DataFrame, k: Int, seed: Long = 42L,
-      fitSample: Long = 100000L): Index = {
-    val n = emb.count()
-    val stride = (n + fitSample - 1) / fitSample // ceil: sample stays <= fitSample rows
-    val base = if (stride > 1) emb.filter(col("vec_id") % stride === 0) else emb
-    val fitInput = base.select(
-      array_to_vector(col("embedding").cast("array<double>")).as("features"))
-    val model = new KMeans().setK(k).setSeed(seed).setMaxIter(10).fit(fitInput)
-    fromCentroids(model.clusterCenters.map(_.toArray), emb)
-  }
+      fitSample: Long = 100000L): Index =
+    fromCentroids(KMeans.fit(KMeans.sample(emb, fitSample), k, seed), emb)
 
   /** Re-attach already-fitted centroids to a corpus frame: assignment is
     * the same codegen'd [[cellCol]] pass, no fit job runs. */

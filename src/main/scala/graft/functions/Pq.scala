@@ -1,7 +1,5 @@
 package graft.functions
 
-import org.apache.spark.ml.clustering.KMeans
-import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -28,35 +26,19 @@ object Pq {
   final case class Codebook(m: Int, dsub: Int, centroids: Array[Array[Array[Double]]])
 
   /** Fit one k-means per subspace. Codebook training never needs the full
-    * corpus — a deterministic systematic sample (`vec_id % stride = 0`,
-    * capped at `fitSample` rows) bounds the fit cost independently of
-    * corpus size, which is the only viable shape at 100 TB. The `m`
-    * independent fits run concurrently (each is a small Spark job; serial
-    * execution made the driver-side job overhead the dominant cost). */
+    * corpus — [[KMeans.sample]] (the corpus up to `fitSample` rows, else a
+    * systematic `vec_id % stride = 0` slice of at most that many) bounds
+    * the fit cost independently of corpus size, which is the only viable
+    * shape at 100 TB. The sample is collected once and all `m` subspaces
+    * fit from it on the driver (subspace `j` seeded with `seed + j`), so
+    * the whole codebook costs a few small jobs. */
   def fit(spark: SparkSession, emb: DataFrame, m: Int = 8, k: Int = 16,
       seed: Long = 42L, fitSample: Long = 100000L): Codebook = {
-    val dim = emb.select(size(col("embedding"))).head().getInt(0)
-    require(dim % m == 0, s"dim $dim not divisible by m=$m")
-    val dsub = dim / m
-    val n = emb.count()
-    val stride = (n + fitSample - 1) / fitSample // ceil: sample stays <= fitSample rows
-    val sample =
-      if (stride > 1) emb.filter(col("vec_id") % stride === 0).cache()
-      else emb // full corpus already small; never cache-pin the whole table
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    implicit val ec: ExecutionContext = ExecutionContext.global
-    val fits = (0 until m).map { j =>
-      Future {
-        val sub = sample.select(array_to_vector(
-          slice(col("embedding"), j * dsub + 1, dsub).cast("array<double>")).as("features"))
-        new KMeans().setK(k).setSeed(seed + j).setMaxIter(10).fit(sub)
-          .clusterCenters.map(_.toArray)
-      }
-    }
-    val centroids = fits.map(f => Await.result(f, Duration.Inf)).toArray
-    if (stride > 1) sample.unpersist()
-    Codebook(m, dsub, centroids)
+    val sample = KMeans.sample(emb, fitSample)
+    require(sample.dim % m == 0, s"dim ${sample.dim} not divisible by m=$m")
+    val dsub = sample.dim / m
+    Codebook(m, dsub, Array.tabulate(m)(j =>
+      KMeans.fit(sample, k, seed + j, off = j * dsub, d = dsub)))
   }
 
   /** Tag every row with its `m` codes. Per-partition batch encode against

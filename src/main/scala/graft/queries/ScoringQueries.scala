@@ -71,7 +71,7 @@ object ScoringQueries {
     * query plan and its generated oracle see the identical quantized
     * table. */
   private def dsirFit(s: SparkSession, dir: String): Array[JBigDecimal] =
-    Artifacts.cached(s, s"dsir:$dir") {
+    Artifacts.cached(s, "dsir", dir) {
       val rows = bigrams(docs(s, dir))
         .select(expr(bucketExpr("bg")).as("bucket"),
           when(col("lang") === "en", 1L).otherwise(0L).as("t"))
@@ -160,7 +160,7 @@ object ScoringQueries {
     * remaining mass; p(w) = (c_w + 1)/(N + 257) so the distribution sums
     * to one. Returns (vocab word → −log2 p quantized, UNK −log2 p). */
   private def lmFit(s: SparkSession, dir: String): (Array[(String, JBigDecimal)], JBigDecimal) =
-    Artifacts.cached(s, s"unigramlm:$dir") {
+    Artifacts.cached(s, "unigramlm", dir) {
       import s.implicits._
       val counts = docs(s, dir)
         .select(explode(expr("filter(split(text, ' '), x -> x != '')")).as("w"))
@@ -246,7 +246,7 @@ object ScoringQueries {
     * default −log2 p), all DECIMAL(12,6)-quantized. */
   private def bigramFit(s: SparkSession, dir: String)
       : (Array[String], Array[(String, String, JBigDecimal)], Array[(String, JBigDecimal)]) =
-    Artifacts.cached(s, s"bigramlm:$dir") {
+    Artifacts.cached(s, "bigramlm", dir) {
       import s.implicits._
       val words = docs(s, dir)
         .select(explode(expr("filter(split(text, ' '), x -> x != '')")).as("w"))
@@ -362,7 +362,7 @@ object ScoringQueries {
     * counts, materialized as INTEGER quotas out of a 100-doc budget —
     * the query side never touches floating point. */
   private def mixFit(s: SparkSession, dir: String): Array[(String, Long)] =
-    Artifacts.cached(s, s"mixquota:$dir") {
+    Artifacts.cached(s, "mixquota", dir) {
       import s.implicits._
       val counts = docs(s, dir).groupBy($"lang").agg(count(lit(1)).as("c"))
         .orderBy($"lang").as[(String, Long)].collect()
@@ -435,7 +435,7 @@ object ScoringQueries {
     * transcendental-free contract as the DSIR/LM fits: the query side only
     * ever sees the quantized literal. */
   private def bm25Fit(s: SparkSession, dir: String): (Long, Long, Seq[(String, JBigDecimal)]) =
-    Artifacts.cached(s, s"bm25:$dir") {
+    Artifacts.cached(s, "bm25", dir) {
       import s.implicits._
       val toks = docs(s, dir)
         .select(expr("filter(split(text, ' '), x -> x != '')").as("w"))
@@ -594,7 +594,7 @@ object ScoringQueries {
     * set is bounded by the longest document (~387 values at sf0.01), a
     * driver-trivial collect at any corpus size. */
   private def entLogFit(s: SparkSession, dir: String): Array[(Long, JBigDecimal)] =
-    Artifacts.cached(s, s"entlog:$dir") {
+    Artifacts.cached(s, "entlog", dir) {
       import s.implicits._
       val d = docs(s, dir).filter(length($"text") >= 1)
       val ks = d

@@ -21,12 +21,17 @@ class ArtifactStoreSourceSpec extends AnyFunSuite {
       "mangles a dir into a table name",
     "WeakReference\\[SparkSession\\]" -> "keeps a second per-session cache")
 
-  test("artifact naming, cleanup and guarding live only in Artifacts.scala") {
-    val root = Paths.get("src/main/scala")
-    val sources: Seq[Path] = Files.walk(root).iterator().asScala
+  private val root = Paths.get("src/main/scala")
+
+  private def sources: Seq[Path] = {
+    val all = Files.walk(root).iterator().asScala
       .filter(_.toString.endsWith(".scala")).toSeq
-    assert(sources.exists(_.getFileName.toString == "Artifacts.scala"),
+    assert(all.exists(_.getFileName.toString == "Artifacts.scala"),
       s"engine sources not found under ${root.toAbsolutePath}")
+    all
+  }
+
+  test("artifact naming, cleanup and guarding live only in Artifacts.scala") {
     val hits = for {
       f <- sources if f.getFileName.toString != "Artifacts.scala"
       (line, n) <- Files.readAllLines(f).asScala.zipWithIndex
@@ -34,5 +39,20 @@ class ArtifactStoreSourceSpec extends AnyFunSuite {
     } yield s"${root.relativize(f)}:${n + 1} $what: ${line.trim}"
     assert(hits.isEmpty, hits.mkString(
       "route derived catalog tables through Artifacts.table instead:\n", "\n", ""))
+  }
+
+  /** The fits stay in-repo and on the caller's threads: Spark ML's k-means
+    * costs a job per seeding step and Lloyd round and depends on the input's
+    * partitioning, and the global execution context's threads carry
+    * whatever session and job group they were created with, not the
+    * caller's. */
+  test("no Spark ML and no global execution context in the engine") {
+    val banned = Seq("org.apache.spark.ml", "ExecutionContext.global")
+    val hits = for {
+      f <- sources
+      (line, n) <- Files.readAllLines(f).asScala.zipWithIndex
+      b <- banned if line.contains(b)
+    } yield s"${root.relativize(f)}:${n + 1}: ${line.trim}"
+    assert(hits.isEmpty, hits.mkString("\n"))
   }
 }

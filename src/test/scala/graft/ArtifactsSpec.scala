@@ -68,6 +68,26 @@ class ArtifactsSpec extends SparkSpec {
     assert(a2 === a1)
   }
 
+  test("an sf dir rewritten mid-session is rebuilt, not served stale") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-rewrite").toString
+    def writeEmbeddings(n: Int, seed: Int): Unit = {
+      val rnd = new scala.util.Random(seed)
+      (0 until n).map(i => (i.toLong, Array.fill(64)(rnd.nextFloat()), s"l${i % 3}"))
+        .toDF("vec_id", "embedding", "label")
+        .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+    }
+    writeEmbeddings(40, 1)
+    val fp1 = Artifacts.inputs(spark, dir)
+    val cents1 = functions.AnnIndexes.ivf(spark, dir, k = 4).centroids
+    assert(functions.AnnIndexes.int8Persisted(spark, dir)._1.count() === 40)
+    writeEmbeddings(60, 2)
+    assert(Artifacts.inputs(spark, dir) !== fp1)
+    assert(functions.AnnIndexes.int8Persisted(spark, dir)._1.count() === 60)
+    val cents2 = functions.AnnIndexes.ivf(spark, dir, k = 4).centroids
+    assert(cents1.map(_.toSeq).toSeq !== cents2.map(_.toSeq).toSeq)
+  }
+
   test("fits nest: a guarded fit may call guarded fits 100 keys deep") {
     val depth = 100
     def nested(i: Int): String = Artifacts.cached(spark, s"spec-nest:$i") {
