@@ -6,7 +6,6 @@ import java.util.concurrent.atomic.AtomicReference
 import scala.collection.concurrent.TrieMap
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Attributes completed-stage metrics to the query named by the active job
   * group (set per query in the sequential pass; AQE re-plan jobs inherit
@@ -67,23 +66,13 @@ final class StageMetricsListener extends SparkListener {
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // optional dev filter (e.g. "dd_,sim_,st_" for the sf1 stress sweep);
     // the driver sets no filter and benches everything
     val only: String => Boolean = sys.env.get("SPARK_GRAFT_BENCH_ONLY") match {
       case Some(p) => val ps = p.split(','); name => ps.exists(name.startsWith)
       case None => _ => true
     }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.scheduler.mode", "FAIR")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     // per-blocking-key member cap for the edit-pair generators (VERDICT
     // r8 #7) — set for stress sweeps on replica-heavy synthetic corpora
     // (e.g. SPARK_GRAFT_GROUP_CAP=16 at sf1); unset = exact, oracle shape

@@ -7,6 +7,7 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
+import graft.functions.{HammingDistance, PqAdcScore, VectorDot}
 import graft.sources.pcap.PcapDataSource
 
 /** Session extensions giving the reference's literal SQL surface
@@ -14,8 +15,13 @@ import graft.sources.pcap.PcapDataSource
   * `src/wireduck_extension.cpp:464-470`) on Spark, via a Catalyst
   * table-function injection (SURVEY §4.3's optional quality-of-life item).
   *
-  * Enable with `.config("spark.sql.extensions", "graft.GraftExtensions")`
-  * or `builder.withExtensions(new GraftExtensions)`.
+  * It also injects the engine's codegen functions ([[GraftExtensions.functions]])
+  * and its two optimizer rules, [[graft.plans.SimJoinBandRewrite]] and
+  * [[graft.plans.RangeJoinBinRewrite]], which run in the operator
+  * optimization batch. The rules exist only in sessions built with the
+  * extension: [[GraftSession]] always adds it; any other session enables it
+  * with `.config("spark.sql.extensions", "graft.GraftExtensions")` or
+  * `builder.withExtensions(new GraftExtensions)`.
   *
   * Supported argument shapes (positional and named):
   * {{{
@@ -34,30 +40,28 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       FunctionIdentifier("initialize_glossary"),
       new ExpressionInfo(classOf[PcapDataSource].getName, "initialize_glossary"),
       (_: Seq[Expression]) => InitializeGlossaryTableFunction.plan()))
-    ext.injectFunction((
-      FunctionIdentifier("hamming_distance"),
-      new ExpressionInfo(classOf[graft.functions.HammingDistance].getName, "hamming_distance"),
-      (args: Seq[Expression]) => {
-        require(args.length == 2, "hamming_distance(a, b) takes exactly 2 arguments")
-        graft.functions.HammingDistance(args.head, args(1))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("vector_dot"),
-      new ExpressionInfo(classOf[graft.functions.VectorDot].getName, "vector_dot"),
-      (args: Seq[Expression]) => {
-        require(args.length == 2, "vector_dot(a, b) takes exactly 2 arguments")
-        graft.functions.VectorDot(args.head, args(1))
-      }))
+    GraftExtensions.functions.foreach(ext.injectFunction)
     ext.injectOptimizerRule(_ => graft.plans.SimJoinBandRewrite)
     ext.injectOptimizerRule(_ => graft.plans.RangeJoinBinRewrite)
-    ext.injectFunction((
-      FunctionIdentifier("pq_adc_score"),
-      new ExpressionInfo(classOf[graft.functions.PqAdcScore].getName, "pq_adc_score"),
-      (args: Seq[Expression]) => {
-        require(args.length == 2, "pq_adc_score(codes, lut) takes exactly 2 arguments")
-        graft.functions.PqAdcScore(args.head, args(1))
-      }))
   }
+}
+
+object GraftExtensions {
+
+  /** The engine's codegen expressions, callable by name from SQL and from
+    * `call_function` (a Column cannot wrap a custom Expression directly).
+    * The extension injects them; [[graft.api.Wireduck.setup]] registers
+    * the same builders on a session built without the extension. */
+  val functions: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
+    binary("vector_dot", classOf[VectorDot])(VectorDot(_, _)),
+    binary("hamming_distance", classOf[HammingDistance])(HammingDistance(_, _)),
+    binary("pq_adc_score", classOf[PqAdcScore])(PqAdcScore(_, _)))
+
+  private def binary(name: String, cls: Class[_])(make: (Expression, Expression) => Expression) =
+    (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), (args: Seq[Expression]) => {
+      require(args.length == 2, s"$name takes exactly 2 arguments")
+      make(args.head, args(1))
+    })
 }
 
 /** `FROM initialize_glossary()` parity (reference `:264-272`, `:430-450`):

@@ -3,37 +3,36 @@ package graft
 import scala.collection.mutable
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
-/** Dev tool (optimization rounds): per-STAGE attribution for one query —
-  * where TimeQ says how much a query costs, this says WHICH stage burns
-  * it. Prints, for each completed stage of an isolated run: task count,
-  * summed executor run time, GC time, records/bytes read and written,
-  * shuffle read/write, and the first line of the stage's call-site name.
-  * Also dumps `.explain("formatted")` to target/plans/<name>.txt so plan
-  * claims in OPTIMIZATION notes come from the exact code measured.
-  * Usage: runMain graft.ProfileQ <query-name>... [-sf <dir>] */
+/** Dev tool (optimization rounds): wall time, task time and per-STAGE
+  * attribution for each named query. Prints, for each completed stage of
+  * an isolated run after a warm run: task count, summed executor run time,
+  * GC time, records/bytes read and written, shuffle read/write, and the
+  * first line of the stage's call-site name. Also writes the measured
+  * run's `.explain("formatted")` to `<out>/<name><suffix>.txt`, so the
+  * before/after plan pairs under `plans/rN/` come from the exact code
+  * measured. Session confs for an experiment are JVM system properties,
+  * which `SparkConf` loads: `sbt 'set run / javaOptions += "-Dspark.k=v"'`
+  * (the keys [[GraftSession]] sets itself keep its values).
+  * Usage: runMain graft.ProfileQ <query-name>... [-sf <dir>]
+  *   [-out <dir> (default target/plans)] [-suffix <s>] */
 object ProfileQ {
   def main(args: Array[String]): Unit = {
-    val dir = args.sliding(2).collectFirst { case Array("-sf", d) => d }
-      .getOrElse("/root/testdata/sf0.1")
-    // positional parse (ADVICE r12): drop the flag and its value by INDEX —
-    // the old value-based filter silently dropped a query whose name
-    // happened to equal the dir string
+    def opt(flag: String): Option[String] =
+      args.sliding(2).collectFirst { case Array(`flag`, v) => v }
+    val dir = opt("-sf").getOrElse("/root/testdata/sf0.1")
+    val out = java.nio.file.Paths.get(opt("-out").getOrElse("target/plans"))
+    val suffix = opt("-suffix").getOrElse("")
+    // positional parse (ADVICE r12): drop each flag and its value by INDEX —
+    // a value-based filter silently drops a query whose name happens to
+    // equal a flag's value
+    val flags = Set("-sf", "-out", "-suffix")
     val names = args.indices
-      .filter(i => args(i) != "-sf" && !(i > 0 && args(i - 1) == "-sf"))
+      .filter(i => !flags(args(i)) && !(i > 0 && flags(args(i - 1))))
       .map(args(_))
     names.filterNot(n => SparkEntry.registry.exists(_.name == n))
       .foreach(n => System.err.println(s"[profile] unknown query: $n"))
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
 
     final case class StageRow(id: Int, name: String, tasks: Int,
       runMs: Long, gcMs: Long, recIn: Long, recShufR: Long, recShufW: Long,
@@ -68,9 +67,8 @@ object ProfileQ {
       stages.synchronized(stages.clear())
       val df = q.fn(spark, dir)
       try {
-        val planDir = java.nio.file.Paths.get("target/plans")
-        java.nio.file.Files.createDirectories(planDir)
-        java.nio.file.Files.writeString(planDir.resolve(s"$name.txt"),
+        java.nio.file.Files.createDirectories(out)
+        java.nio.file.Files.writeString(out.resolve(s"$name$suffix.txt"),
           df.queryExecution.explainString(
             org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
       } catch { case e: Throwable =>

@@ -20,7 +20,8 @@ object Tables {
 
   /** `events.ts` arrives in one of three parquet shapes depending on the
     * generator vintage: TIMESTAMP(NANOS) (vanilla Spark rejects it —
-    * PARQUET_TYPE_ILLEGAL — so with `nanosAsLong` it reads as raw-nanos
+    * PARQUET_TYPE_ILLEGAL — so with `nanosAsLong`, a default of
+    * [[Wireduck.setup]], it reads as raw-nanos
     * LongType, as do MakeSf1's replicas), TIMESTAMP(MICROS) isAdjustedToUTC
     * (TimestampType), or TIMESTAMP_NTZ micros. All three normalize to a
     * microsecond TimestampType: nanos via exact integer division (`div` —
@@ -28,7 +29,6 @@ object Tables {
     * NTZ via a cast that is value-preserving under the UTC session zone.
     * Matches DuckDB's `CAST(ts AS TIMESTAMP)` on the same file. */
   private def loadEvents(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = spark.read.parquet(s"$dir/events.parquet")
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.types.{LongType, TimestampType}

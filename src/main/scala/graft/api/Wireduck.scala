@@ -12,23 +12,32 @@ object Wireduck {
 
   /** Equivalent of `LOAD wireduck`: check tshark (warn only — the native
     * backend needs no tshark, unlike the reference which refuses to load,
-    * `:477-484`), register glossary views and the compat scalar function. */
+    * `:477-484`), register glossary views and the compat scalar function,
+    * the engine's codegen functions ([[graft.GraftExtensions.functions]],
+    * for a session built without the extension) and every
+    * `sessionDefaults` key the session leaves unset. Call it once, before
+    * the first query: queries read this state and never install it. */
   def setup(spark: SparkSession): Unit = {
     if (!Glossary.checkTsharkInstalled())
       spark.log.info("[graft] tshark not detected; native pcap backend only")
     Glossary.register(spark)
     spark.udf.register("check_tshark_installed",
       () => Glossary.checkTsharkInstalled())
-    // the engine's codegen vector/dedup expressions, surfaced to plain-SQL
-    // users (each registration is idempotent)
     val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("vector_dot",
-      es => graft.functions.VectorDot(es.head, es(1)), "built-in")
-    reg.createOrReplaceTempFunction("hamming_distance",
-      es => graft.functions.HammingDistance(es.head, es(1)), "built-in")
-    reg.createOrReplaceTempFunction("pq_adc_score",
-      es => graft.functions.PqAdcScore(es.head, es(1)), "built-in")
+    graft.GraftExtensions.functions.foreach { case (id, info, build) =>
+      reg.registerFunction(id, info, build)
+    }
+    for ((k, v) <- sessionDefaults if !spark.sessionState.conf.contains(k))
+      spark.conf.set(k, v)
   }
+
+  /** Confs the engine's plans rely on: the range-join bin width (1 h in
+    * microseconds, the grain of `q63_range_join_auto`'s sessions), and
+    * `nanosAsLong`, without which Spark refuses the TIMESTAMP(NANOS)
+    * `events.ts` that [[Tables.load]] normalizes. */
+  private val sessionDefaults: Seq[(String, String)] = Seq(
+    graft.plans.RangeJoinBinRewrite.WidthKey -> (3600L * 1000000L).toString,
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true")
 
   /** `initialize_glossary()` parity (A8): returns the two status rows. */
   def initializeGlossary(spark: SparkSession): DataFrame = Glossary.init(spark)

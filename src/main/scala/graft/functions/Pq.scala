@@ -81,20 +81,11 @@ object Pq {
     }(encoder)
   }
 
-  /** Register the codegen'd [[PqAdcScore]] table-scoring expression in the
-    * active session (idempotent; a Column can't wrap a custom Expression
-    * directly — `call_function` resolves it by name at analysis). */
-  private def ensureAdcRegistered(): Unit =
-    SparkSession.active.sessionState.functionRegistry
-      .createOrReplaceTempFunction(
-        "pq_adc_score",
-        exprs => PqAdcScore(exprs.head, exprs(1)),
-        "built-in")
-
-  private def adc(codes: org.apache.spark.sql.Column, lut: org.apache.spark.sql.Column) = {
-    ensureAdcRegistered()
+  /** The codegen'd [[PqAdcScore]] table-scoring expression, resolved by
+    * name at analysis (a Column can't wrap a custom Expression directly);
+    * [[graft.GraftExtensions.functions]] declares it. */
+  private def adc(codes: org.apache.spark.sql.Column, lut: org.apache.spark.sql.Column) =
     call_function("pq_adc_score", codes, lut)
-  }
 
   /** Per-query ADC dot lookup table (Jégou TPAMI 2011 §IV.A), computed on
     * the BROADCAST side — one `m × k` table per query row, so the corpus

@@ -12,20 +12,10 @@ import org.apache.spark.sql.functions._
   */
 object Vectors {
 
-  /** Register `vector_dot` in the active session's function registry
-    * (idempotent; needed because a Column can't wrap a custom Expression
-    * directly — `call_function` resolves it by name at analysis). */
-  private def ensureRegistered(): Unit =
-    org.apache.spark.sql.SparkSession.active.sessionState.functionRegistry
-      .createOrReplaceTempFunction(
-        "vector_dot",
-        exprs => VectorDot(exprs.head, exprs(1)),
-        "built-in")
-
-  def dot(a: Column, b: Column): Column = {
-    ensureRegistered()
-    call_function("vector_dot", a, b)
-  }
+  /** `vector_dot`, resolved by name at analysis (a Column can't wrap a
+    * custom Expression directly); [[graft.GraftExtensions.functions]]
+    * declares it. */
+  def dot(a: Column, b: Column): Column = call_function("vector_dot", a, b)
 
   def norm(a: Column): Column = sqrt(dot(a, a))
 

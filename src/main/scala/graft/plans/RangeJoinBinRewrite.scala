@@ -14,8 +14,9 @@ import org.apache.spark.sql.types.LongType
   * an opposite-direction pair of cross-side `<=`/`<` conjuncts on LONG
   * columns — `l.start <= r.end AND r.start <= l.end`, the canonical
   * interval-overlap predicate — plans as a nested-loop/cartesian O(n·m)
-  * scan. With `spark.graft.rangeJoin.binWidth` set (a positive long in
-  * the column's units; off by default), the rule rewrites it to the
+  * scan. With `spark.graft.rangeJoin.binWidth` positive (a long in the
+  * column's units; [[graft.api.Wireduck.setup]] installs 1 hour in
+  * microseconds unless the session sets it), the rule rewrites it to the
   * binned form the hand-written q60_range_join builds manually: each side
   * explodes into the fixed-width bins its interval covers, the join
   * becomes an EQUI-join on the bin — shuffle-partitionable — and a
@@ -35,7 +36,9 @@ import org.apache.spark.sql.types.LongType
   */
 object RangeJoinBinRewrite extends Rule[LogicalPlan] {
 
-  private val WidthKey = "spark.graft.rangeJoin.binWidth"
+  /** The bin width conf; unset or not positive turns the rule off.
+    * [[graft.api.Wireduck.setup]] installs a default. */
+  val WidthKey = "spark.graft.rangeJoin.binWidth"
 
   /** Exact floor division by the positive literal W (div truncates toward
     * zero, which differs on negatives): (a − pmod(a, W)) ÷ W. */

@@ -25,11 +25,10 @@ import graft.functions.HammingDistance
   * semantics-preserving by construction; the equi-key guard makes it a
   * fixpoint (the rewritten join no longer matches).
   *
-  * Active in extension sessions via
-  * [[graft.GraftExtensions]]`.injectOptimizerRule` and attachable to any
-  * session at runtime through `spark.experimental.extraOptimizations` —
-  * both run after the main optimizer batches, so the threshold literal
-  * is already constant-folded to BIGINT.
+  * Active in sessions built with [[graft.GraftExtensions]], which injects
+  * it into the operator optimization batch; the threshold is matched as a
+  * BIGINT literal, which that batch's constant folding produces before the
+  * fixed point ends.
   */
 object SimJoinBandRewrite extends Rule[LogicalPlan] {
 

@@ -513,10 +513,6 @@ object MultimodalQueries {
     (s, dir) => {
       import s.implicits._
       import org.apache.spark.sql.expressions.Window
-      s.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "hamming_distance",
-        exprs => graft.functions.HammingDistance(exprs.head, exprs(1)),
-        "built-in")
       val hv = phashHalves(s, dir).cache()
       val q = hv.orderBy($"doc_id").limit(3)
         .select($"doc_id".as("query_id"), $"h1".as("q1"), $"h2".as("q2"))
@@ -935,10 +931,6 @@ object MultimodalQueries {
       topK: Int): org.apache.spark.sql.DataFrame = {
     import s.implicits._
     import org.apache.spark.sql.expressions.Window
-    s.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "hamming_distance",
-      exprs => graft.functions.HammingDistance(exprs.head, exprs(1)),
-      "built-in")
     val w = Window.partitionBy($"query_id").orderBy($"dist", $"cand_id")
     corpus.join(broadcast(arriving), $"doc_id" =!= $"query_id")
       .select($"query_id", $"doc_id".as("cand_id"),

@@ -113,13 +113,10 @@ object PcapQueries {
     * the UNIQUE/count invariants are spec-pinned). */
   val pcapGlossary = GraftQuery(
     "pcap_glossary_fields",
-    (s, _) => {
-      Wireduck.setup(s)
-      s.table("glossary_fields")
-        .groupBy(col("protocol_filter_name"))
-        .agg(count(lit(1)).as("n_fields"))
-        .orderBy(col("protocol_filter_name"))
-    })
+    (s, _) => s.table("glossary_fields")
+      .groupBy(col("protocol_filter_name"))
+      .agg(count(lit(1)).as("n_fields"))
+      .orderBy(col("protocol_filter_name")))
 
   /** Packet analytics: per-TCP-stream session stats — echo-oracled
     * aggregate over (stream, len, time, port). */

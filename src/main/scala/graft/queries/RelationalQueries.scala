@@ -2014,8 +2014,9 @@ object RelationalQueries {
     * but the Spark side writes the NAIVE interval-overlap theta join —
     * `s_start ≤ inc_end AND inc_start ≤ s_end`, which would plan as a
     * nested-loop scan — and [[graft.plans.RangeJoinBinRewrite]]
-    * (attached at runtime, `spark.graft.rangeJoin.binWidth` = 1 hour in
-    * micros) rewrites it into the binned EQUI-join with a
+    * (injected by [[graft.GraftExtensions]]; `spark.graft.rangeJoin.binWidth`
+    * defaults to 1 hour in micros through [[graft.api.Wireduck.setup]])
+    * rewrites it into the binned EQUI-join with a
     * first-overlapping-bin predicate. The oracle is the identical naive
     * join in DuckDB, so the hash-match proves the rewrite preserves the
     * exact multiset THROUGH the optimizer — the user writes the obvious
@@ -2025,10 +2026,6 @@ object RelationalQueries {
     "q63_range_join_auto",
     (s, dir) => {
       import s.implicits._
-      if (!s.experimental.extraOptimizations.contains(graft.plans.RangeJoinBinRewrite))
-        s.experimental.extraOptimizations =
-          s.experimental.extraOptimizations :+ graft.plans.RangeJoinBinRewrite
-      s.conf.set("spark.graft.rangeJoin.binWidth", (3600L * 1000000L).toString)
       val ev = t(s, dir, "events")
       val w = Window.partitionBy($"user_id").orderBy($"ts", $"event_id")
       val sess = ev

@@ -1138,10 +1138,6 @@ object TextQueries {
     "dd_simhash_pairs",
     (s, dir) => {
       import s.implicits._
-      s.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "hamming_distance",
-        exprs => graft.functions.HammingDistance(exprs.head, exprs(1)),
-        "built-in")
       val sim = simhashTable(s, dir)
       val blocks = sim
         .select($"doc_id", $"simhash64",
@@ -1182,21 +1178,14 @@ object TextQueries {
     * O(n²) hamming join — and executed as a banded equi-join anyway,
     * because the [[graft.plans.SimJoinBandRewrite]] optimizer rule
     * recognizes `hamming_distance(a, b) <= 3` with no other cross-side
-    * equality and auto-pigeonholes it (attached to any session via
-    * `spark.experimental.extraOptimizations`; PlanShapeSpec pins that no
+    * equality and auto-pigeonholes it (injected by
+    * [[graft.GraftExtensions]]; PlanShapeSpec pins that no
     * cartesian/nested-loop join survives). This is what a USER gets to
     * write at 100 TB while still getting the scalable plan. */
   val ddSimjoinAuto = GraftQuery(
     "dd_simjoin_auto",
     (s, dir) => {
       import s.implicits._
-      s.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "hamming_distance",
-        exprs => graft.functions.HammingDistance(exprs.head, exprs(1)),
-        "built-in")
-      if (!s.experimental.extraOptimizations.contains(graft.plans.SimJoinBandRewrite))
-        s.experimental.extraOptimizations =
-          s.experimental.extraOptimizations :+ graft.plans.SimJoinBandRewrite
       // the persisted simhash artifact: the md5 signature pipeline is a
       // one-off fit, not a per-join-side recompute
       val sim = simhashTable(s, dir).select($"doc_id", $"simhash64")

@@ -83,12 +83,7 @@ object MakeTsharkGolden {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession()
 
     val allProtos = graft.pcap.Glossary.protocols.map(_.filter_name)
     val outDir = Paths.get("src/test/resources/tshark_golden")

@@ -55,4 +55,27 @@ class ArtifactStoreSourceSpec extends AnyFunSuite {
     } yield s"${root.relativize(f)}:${n + 1}: ${line.trim}"
     assert(hits.isEmpty, hits.mkString("\n"))
   }
+
+  /** Session state is installed once: [[GraftSession]] is the only
+    * builder, the optimizer rules come only from [[GraftExtensions]],
+    * functions are registered only there and in `Wireduck.setup`, and no
+    * query, function helper or table loader sets a conf. */
+  test("sessions are built and set up in one place, never at query time") {
+    def rel(f: Path) = root.relativize(f).toString
+    val rules: Seq[(String, Path => Boolean)] = Seq(
+      "SparkSession.builder" -> (f => rel(f) != "graft/GraftSession.scala"),
+      "extraOptimizations" -> (_ => true),
+      "createOrReplaceTempFunction" -> (f =>
+        !Set("graft/GraftExtensions.scala", "graft/api/Wireduck.scala")(rel(f))),
+      "udf.register" -> (f =>
+        !Set("graft/GraftExtensions.scala", "graft/api/Wireduck.scala")(rel(f))),
+      "conf.set(" -> (f => rel(f).startsWith("graft/queries/") ||
+        rel(f).startsWith("graft/functions/") || rel(f) == "graft/api/Tables.scala"))
+    val hits = for {
+      f <- sources
+      (line, n) <- Files.readAllLines(f).asScala.zipWithIndex
+      (token, banned) <- rules if line.contains(token) && banned(f)
+    } yield s"${rel(f)}:${n + 1}: ${line.trim}"
+    assert(hits.isEmpty, hits.mkString("\n"))
+  }
 }

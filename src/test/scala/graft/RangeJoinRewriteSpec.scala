@@ -10,13 +10,14 @@ import org.apache.spark.sql.functions._
   * rows (multiset semantics), empty sides — across several bin widths. */
 class RangeJoinRewriteSpec extends SparkSpec {
 
+  /** Runs `body` at bin width `width` (0 turns the rule off), then puts
+    * back the width the session had, so later suites keep its default. */
   private def withRule[T](width: Long)(body: => T): T = {
-    if (!spark.experimental.extraOptimizations.contains(graft.plans.RangeJoinBinRewrite))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ graft.plans.RangeJoinBinRewrite
-    spark.conf.set("spark.graft.rangeJoin.binWidth", width.toString)
+    val key = graft.plans.RangeJoinBinRewrite.WidthKey
+    val before = spark.conf.getOption(key)
+    spark.conf.set(key, width.toString)
     try body
-    finally spark.conf.set("spark.graft.rangeJoin.binWidth", "0")
+    finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 
   /** Deterministic pseudo-random interval set (no Random — reproducible). */
@@ -61,9 +62,12 @@ class RangeJoinRewriteSpec extends SparkSpec {
         .queryExecution.executedPlan.toString()
     }
     assert(on.contains("Generate explode") && !on.contains("BroadcastNestedLoopJoin"))
-    val off = l.as("l").join(r.as("r"),
-        col("l.s") <= col("r.e") && col("r.s") <= col("l.e"))
-      .queryExecution.executedPlan.toString()
+    val off = withRule(0L) {
+      spark.conf.unset(graft.plans.RangeJoinBinRewrite.WidthKey)
+      l.as("l").join(r.as("r"),
+          col("l.s") <= col("r.e") && col("r.s") <= col("l.e"))
+        .queryExecution.executedPlan.toString()
+    }
     assert(!off.contains("Generate explode"),
       "width unset ⇒ the rule must be a no-op")
   }

@@ -1,0 +1,66 @@
+package graft
+
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+
+/** Session state is installed once, by [[GraftSession]] and
+  * [[graft.api.Wireduck.setup]]: building and running a query leaves the
+  * session's confs, optimizer rules and function registrations as they
+  * were, so a query's plan and result do not depend on which queries ran
+  * before it in the session. */
+class SessionStateSpec extends SparkSpec {
+
+  /** One query per path that used to change the session while it was
+    * built: the two rule appends (and q63's width), the per-query
+    * `hamming_distance` registrations, the glossary query's setup call,
+    * `vector_dot` and `pq_adc_score` registration on every call, the
+    * `nanosAsLong` set on every `events` load, and the pHash probe. */
+  private val formerMutators = Seq(
+    "q63_range_join_auto", "dd_simjoin_auto", "dd_simhash_pairs", "mm_phash_topk",
+    "pcap_glossary_fields", "sim_ann_lsh", "sim_ann_pq", "q14_window_lag",
+    "st_phash_serve")
+
+  private val functions = Seq("vector_dot", "hamming_distance", "pq_adc_score",
+    "check_tshark_installed").map(FunctionIdentifier(_))
+
+  private def state() = (
+    spark.conf.getAll,
+    spark.experimental.extraOptimizations,
+    functions.map(spark.sessionState.functionRegistry.lookupFunctionBuilder))
+
+  /** The optimized plan with the ids Spark numbers per build stripped
+    * (expression ids, lambda variable suffixes, and the identities of the
+    * closures a typed operator captures), and a hash of the rows in a fixed
+    * order. */
+  private def run(name: String): (String, Int) = {
+    val df = SparkEntry.queries(name)(spark, sfDir)
+    val plan = df.queryExecution.optimizedPlan.toString
+      .replaceAll("#\\d+L?", "").replaceAll("@[0-9a-f]+", "")
+      .replaceAll("(lambda \\w+)_\\d+", "$1")
+    (plan, df.collect().map(_.toString).sorted.toSeq.hashCode)
+  }
+
+  test("building and running a query leaves confs, rules and functions unchanged") {
+    val (confs, rules, builders) = state()
+    for (name <- formerMutators) {
+      run(name)
+      val (c, r, b) = state()
+      assert(c === confs, s"$name changed the session confs")
+      assert(r === rules, s"$name changed the optimizer rules")
+      functions.zip(b.zip(builders)).foreach { case (f, (now, was)) =>
+        assert(now.isDefined && was.isDefined && (now.get eq was.get),
+          s"$name re-registered ${f.funcName}")
+      }
+    }
+  }
+
+  test("plans and results do not depend on the order queries run in") {
+    val mixed = Seq("q63_range_join_auto", "sim_ann_pq", "dd_simjoin_auto",
+      "q14_window_lag", "mm_phash_topk", "sim_ann_lsh")
+    val forward = mixed.map(n => n -> run(n)).toMap
+    val reverse = mixed.reverse.map(n => n -> run(n)).toMap
+    for (n <- mixed) {
+      assert(reverse(n)._1 === forward(n)._1, s"$n planned differently")
+      assert(reverse(n)._2 === forward(n)._2, s"$n returned different rows")
+    }
+  }
+}

@@ -11,18 +11,7 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .withExtensions(new graft.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config(s"spark.hadoop.fs.${SchemeOnlyFs.Scheme}.impl", classOf[SchemeOnlyFs].getName)
-      .config(s"spark.hadoop.fs.${SchemeOnlyFs.Scheme}.impl.disable.cache", "true")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val session: SparkSession = GraftSession(
+    s"spark.hadoop.fs.${SchemeOnlyFs.Scheme}.impl" -> classOf[SchemeOnlyFs].getName,
+    s"spark.hadoop.fs.${SchemeOnlyFs.Scheme}.impl.disable.cache" -> "true")
 }

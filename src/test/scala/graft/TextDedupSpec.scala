@@ -211,9 +211,6 @@ class TextDedupSpec extends SparkSpec {
       4L -> 0x1111111111110000L, // far from all
       5L -> 0x1111111111110001L) // dist 1 from #4 — in
       .toDF("id", "sig")
-    if (!spark.experimental.extraOptimizations.contains(graft.plans.SimJoinBandRewrite))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ graft.plans.SimJoinBandRewrite
     val got = sigs.as("a").join(sigs.as("b"),
       col("a.id") < col("b.id") &&
         expr("hamming_distance(a.sig, b.sig) <= 3"))
