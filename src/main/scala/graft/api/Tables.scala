@@ -15,8 +15,15 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    if (name == "events") loadEvents(spark, dir) else
-      spark.read.parquet(s"$dir/$name.parquet")
+    if (name == "events") loadEvents(spark, dir) else parquet(spark, s"$dir/$name.parquet")
+
+  /** A parquet read with its schema given. The footer schema is inferred
+    * once per session and file set (the [[graft.Artifacts.inputs]]
+    * fingerprint: a rewritten table is inferred again), so only the first
+    * load of a table pays Spark's one-task inference job. */
+  private def parquet(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(graft.Artifacts.cached(spark, "parquet-schema", path)(
+      spark.read.parquet(path).schema)).parquet(path)
 
   /** `events.ts` arrives in one of three parquet shapes depending on the
     * generator vintage: TIMESTAMP(NANOS) (vanilla Spark rejects it —
@@ -29,7 +36,7 @@ object Tables {
     * NTZ via a cast that is value-preserving under the UTC session zone.
     * Matches DuckDB's `CAST(ts AS TIMESTAMP)` on the same file. */
   private def loadEvents(spark: SparkSession, dir: String): DataFrame = {
-    val raw = spark.read.parquet(s"$dir/events.parquet")
+    val raw = parquet(spark, s"$dir/events.parquet")
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.types.{LongType, TimestampType}
     val ts = raw.schema("ts").dataType match {

@@ -391,11 +391,13 @@ object Dissect {
     * address pairs render only when one of their three columns is
     * demanded; and the TCP app-layer claim chain runs only when the chain
     * (`frame.protocols`), the info column or a field of a protocol above
-    * TCP is demanded ([[Wanted.app]]). Conversation state behind the L4
-    * fields (`tcp.stream`, `tcp.analysis.*`, `tcp.time_*`) is kept for
-    * every packet whatever the mask. `payloads`, `info` and `raw` gate the
-    * payload hex, the info rendering and the whole-frame hex; `layers =
-    * false` stops after the frame-header fields. */
+    * TCP is demanded ([[Wanted.app]]), and always on SIP's port 5060,
+    * whose SDP bodies register the RTP ports later UDP claims depend on.
+    * Conversation state behind the L4 fields (`tcp.stream`,
+    * `tcp.analysis.*`, `tcp.time_*`) is kept for every packet whatever
+    * the mask. `payloads`, `info` and `raw` gate the payload hex, the info
+    * rendering and the whole-frame hex; `layers = false` stops after the
+    * frame-header fields. */
   final case class Wanted(
       payloads: Boolean = true,
       info: Boolean = true,
@@ -2280,11 +2282,14 @@ object Dissect {
     }
     if ((analysis & OutOfOrder) != 0) v.set(Id_tcp_analysis_out_of_order, "1")
 
+    // SIP's port runs the chain whatever the demand: its SDP registers the
+    // RTP ports that decide later UDP claims, and a UDP claim reaches
+    // lower-layer fields too (a tunnel's inner frame)
     val appInfo =
-      if (appLen > 0 && wanted.app)
+      if (appLen > 0 && (wanted.app || sp == 5060 || dp == 5060))
         tcpApp(appBuf, appOff, appLen, sp, dp, conv, dir, v, protos, tracker, wanted)
       else null
-    if (appInfo != null) appInfo
+    if (appInfo != null && wanted.app) appInfo
     else if (!wanted.info) ""
     else tcpInfo(d, off, hdrLen, sp, dp, flags, relSeq, if (hasAck) relAck else -1L, calcWin,
       segLen, analysis, tracker, wanted)

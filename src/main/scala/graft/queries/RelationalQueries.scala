@@ -1042,8 +1042,10 @@ object RelationalQueries {
     * from (rank, n) alone, and rank distributes: range-partition ONCE on
     * the composite (priority, totalprice, orderkey) — each priority's
     * rows land in contiguous (totalprice, orderkey) ranges across
-    * partitions — take a local row_number per (partition-id, priority),
-    * and add the broadcast per-(priority, pid) prefix offsets. NTILE /
+    * partitions — number the rows inside each sorted partition, and add
+    * the broadcast per-(priority, pid) prefix offsets, which come from a
+    * partial aggregate of at most (partitions × priorities) rows, so the
+    * orders rows cross one exchange before the output sort. NTILE /
     * PERCENT_RANK / CUME_DIST are then replayed from (rank, n) with the
     * engines' exact integer bucketing and IEEE divisions:
     *   ntile: bs = n div 4, rem = n mod 4, first rem buckets get bs+1;
@@ -1053,25 +1055,27 @@ object RelationalQueries {
     "q40_window_distribution",
     (s, dir) => {
       import s.implicits._
-      val base = t(s, dir, "orders")
+      // the one row exchange: after it each priority's rows sit in
+      // contiguous (totalprice, orderkey) ranges, and a partition's sort
+      // plus its row index number them locally
+      val local = t(s, dir, "orders")
         .select($"o_orderkey", $"o_totalprice", $"o_orderpriority")
         .repartitionByRange($"o_orderpriority", $"o_totalprice", $"o_orderkey")
+        .sortWithinPartitions($"o_orderpriority", $"o_totalprice", $"o_orderkey")
         .withColumn("pid", spark_partition_id())
-      val wLocal = Window.partitionBy($"pid", $"o_orderpriority")
-        .orderBy($"o_totalprice", $"o_orderkey")
-      val wCnt = Window.partitionBy($"pid", $"o_orderpriority")
-      val local = base
-        .withColumn("lrn", row_number().over(wLocal).cast(LongType))
-        .withColumn("lcnt", count(lit(1)).over(wCnt))
+        .withColumn("idx", monotonically_increasing_id())
+      // per (partition, priority) run: its size and first index from one
+      // partial-aggregated grouping; the running size over the partitions
+      // is the run's rank offset within its priority
       val wOff = Window.partitionBy($"o_orderpriority").orderBy($"pid")
         .rowsBetween(Window.unboundedPreceding, -1)
-      val wTot = Window.partitionBy($"o_orderpriority")
-      val offsets = local.select($"pid", $"o_orderpriority", $"lcnt").distinct()
+      val runs = local.groupBy($"pid", $"o_orderpriority")
+        .agg(count(lit(1)).as("lcnt"), min($"idx").as("first"))
         .withColumn("off", coalesce(sum($"lcnt").over(wOff), lit(0L)))
-        .withColumn("n", sum($"lcnt").over(wTot))
-        .select($"pid", $"o_orderpriority", $"off", $"n")
-      local.join(broadcast(offsets), Seq("pid", "o_orderpriority"))
-        .withColumn("rank", $"lrn" + $"off")
+        .withColumn("n", sum($"lcnt").over(Window.partitionBy($"o_orderpriority")))
+        .select($"pid", $"o_orderpriority", $"first", $"off", $"n")
+      local.join(broadcast(runs), Seq("pid", "o_orderpriority"))
+        .withColumn("rank", $"idx" - $"first" + 1L + $"off")
         .withColumn("bs", expr("n div 4"))
         .withColumn("rem", $"n" % 4)
         .withColumn("tile",

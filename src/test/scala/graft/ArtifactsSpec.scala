@@ -23,6 +23,28 @@ class ArtifactsSpec extends SparkSpec {
     assert(spark.table(base + "_t").count() === 5)
   }
 
+  test("Tables.load infers a table's schema once, and again once the table is rewritten") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("tables-schema").toString
+    val path = s"$dir/region.parquet"
+    Seq((0L, "a")).toDF("r_regionkey", "r_name").write.parquet(path)
+    val rec = new JobRecorder(spark.sparkContext)
+    try {
+      graft.api.Tables.load(spark, dir, "region")
+      assert(rec.jobs().size === 1, "the first load infers the footer schema")
+      val again = graft.api.Tables.load(spark, dir, "region")
+      assert(rec.jobs().size === 1, "a second load of an unchanged table started a job")
+      assert(again.schema.fieldNames.toSeq === Seq("r_regionkey", "r_name"))
+      Seq((0L, "a", "c")).toDF("r_regionkey", "r_name", "r_comment")
+        .write.mode("overwrite").parquet(path)
+      val written = rec.jobs().size
+      val rewritten = graft.api.Tables.load(spark, dir, "region")
+      assert(rec.jobs().size === written + 1, "a rewritten table must be inferred again")
+      assert(rewritten.schema.fieldNames.toSeq === Seq("r_regionkey", "r_name", "r_comment"))
+      assert(rewritten.collect().map(_.getString(2)).toSeq === Seq("c"))
+    } finally rec.detach()
+  }
+
   test("a second call for the same (kind, dir) runs no write") {
     var writes = 0
     def build(): String = Artifacts.table(spark, "spec_once", "/spec/once") { b =>

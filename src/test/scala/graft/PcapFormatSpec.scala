@@ -10,6 +10,7 @@ import graft.pcap.{Dissect, PcapFormat}
 /** Synthetic-container edge cases (FIXTURES §4): all four magics,
   * truncation, zero-packet files, non-IP ethertypes. */
 class PcapFormatSpec extends AnyFunSuite {
+  import PcapFormatSpec.{ethIpTcp, ethIpUdp}
 
   private def header(le: Boolean, nanos: Boolean, linktype: Int = 1): Array[Byte] = {
     val b = ByteBuffer.allocate(24).order(if (le) ByteOrder.LITTLE_ENDIAN else ByteOrder.BIG_ENDIAN)
@@ -122,20 +123,6 @@ class PcapFormatSpec extends AnyFunSuite {
     Dissect.dissect(rec, 1, new Dissect.Tracker)
   }
 
-  private def ethIpUdp(sp: Int, dp: Int, payload: Array[Byte]): Array[Byte] = {
-    val b = java.nio.ByteBuffer.allocate(14 + 20 + 8 + payload.length)
-    b.put(new Array[Byte](12)).putShort(0x0800.toShort) // eth
-    val iplen = 20 + 8 + payload.length
-    b.put(0x45.toByte).put(0.toByte).putShort(iplen.toShort)
-      .putShort(1.toShort).putShort(0.toShort)
-      .put(64.toByte).put(17.toByte).putShort(0.toShort)
-      .put(Array[Byte](10, 0, 0, 1)).put(Array[Byte](10, 0, 0, 2))
-    b.putShort(sp.toShort).putShort(dp.toShort)
-      .putShort((8 + payload.length).toShort).putShort(0.toShort)
-    b.put(payload)
-    b.array()
-  }
-
   test("ARP request renders Who-has info and fields") {
     val b = java.nio.ByteBuffer.allocate(42)
     b.put(new Array[Byte](12)).putShort(0x0806.toShort)
@@ -166,24 +153,6 @@ class PcapFormatSpec extends AnyFunSuite {
     assert(d.values("dns.qry.type") === 1L)
     assert(d.values("dns.flags.response") === false)
     assert(d.info === "Standard query 0x1234 A example.com")
-  }
-
-  private def ethIpTcp(sp: Int, dp: Int, payload: Array[Byte], seq: Int = 1000,
-      rev: Boolean = false): Array[Byte] = {
-    val b = java.nio.ByteBuffer.allocate(14 + 20 + 20 + payload.length)
-    b.put(new Array[Byte](12)).putShort(0x0800.toShort) // eth
-    val iplen = 20 + 20 + payload.length
-    b.put(0x45.toByte).put(0.toByte).putShort(iplen.toShort)
-      .putShort(1.toShort).putShort(0.toShort)
-      .put(64.toByte).put(6.toByte).putShort(0.toShort)
-    if (rev) b.put(Array[Byte](10, 0, 0, 2)).put(Array[Byte](10, 0, 0, 1))
-    else b.put(Array[Byte](10, 0, 0, 1)).put(Array[Byte](10, 0, 0, 2))
-    b.putShort(sp.toShort).putShort(dp.toShort)
-      .putInt(seq).putInt(0)
-      .put((5 << 4).toByte).put(0x18.toByte) // hdr len 20, PSH+ACK
-      .putShort(8192.toShort).putShort(0.toShort).putShort(0.toShort)
-    b.put(payload)
-    b.array()
   }
 
   test("HTTP request dissects method/uri/host; info is the request line") {
@@ -1641,5 +1610,41 @@ class PcapFormatSpec extends AnyFunSuite {
     val tcp = chains.drop(rare.length)
     assert(tcp.head === "eth:ethertype:ip:tcp")
     assert(tcp.forall(_ eq tcp.head))
+  }
+}
+
+/** Ethernet/IPv4 frames from 10.0.0.1 to 10.0.0.2 (reversed with `rev`),
+  * shared with [[ProjectionMatrixSpec]]. */
+object PcapFormatSpec {
+  def ethIpUdp(sp: Int, dp: Int, payload: Array[Byte]): Array[Byte] = {
+    val b = java.nio.ByteBuffer.allocate(14 + 20 + 8 + payload.length)
+    b.put(new Array[Byte](12)).putShort(0x0800.toShort) // eth
+    val iplen = 20 + 8 + payload.length
+    b.put(0x45.toByte).put(0.toByte).putShort(iplen.toShort)
+      .putShort(1.toShort).putShort(0.toShort)
+      .put(64.toByte).put(17.toByte).putShort(0.toShort)
+      .put(Array[Byte](10, 0, 0, 1)).put(Array[Byte](10, 0, 0, 2))
+    b.putShort(sp.toShort).putShort(dp.toShort)
+      .putShort((8 + payload.length).toShort).putShort(0.toShort)
+    b.put(payload)
+    b.array()
+  }
+
+  def ethIpTcp(sp: Int, dp: Int, payload: Array[Byte], seq: Int = 1000,
+      rev: Boolean = false): Array[Byte] = {
+    val b = java.nio.ByteBuffer.allocate(14 + 20 + 20 + payload.length)
+    b.put(new Array[Byte](12)).putShort(0x0800.toShort) // eth
+    val iplen = 20 + 20 + payload.length
+    b.put(0x45.toByte).put(0.toByte).putShort(iplen.toShort)
+      .putShort(1.toShort).putShort(0.toShort)
+      .put(64.toByte).put(6.toByte).putShort(0.toShort)
+    if (rev) b.put(Array[Byte](10, 0, 0, 2)).put(Array[Byte](10, 0, 0, 1))
+    else b.put(Array[Byte](10, 0, 0, 1)).put(Array[Byte](10, 0, 0, 2))
+    b.putShort(sp.toShort).putShort(dp.toShort)
+      .putInt(seq).putInt(0)
+      .put((5 << 4).toByte).put(0x18.toByte) // hdr len 20, PSH+ACK
+      .putShort(8192.toShort).putShort(0.toShort).putShort(0.toShort)
+    b.put(payload)
+    b.array()
   }
 }

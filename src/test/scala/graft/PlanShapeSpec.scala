@@ -444,6 +444,26 @@ class PlanShapeSpec extends SparkSpec {
       "the sweep must ride the shingle equi-join candidates")
   }
 
+  test("per-document text kernels stay in their rows: the output sort is the only exchange") {
+    for (q <- Seq("tx_repetition", "tx_gopher_filter", "dd_minhash_sig")) {
+      val exchanges = plan(q).linesIterator.filter(_.contains("Exchange")).toSeq
+      assert(exchanges.length === 1 && exchanges.head.contains("Exchange rangepartitioning"),
+        s"$q: tokens must not leave their document's row\n${exchanges.mkString("\n")}")
+    }
+  }
+
+  test("q40 numbers its rows locally: no orders row is hash-partitioned on pid") {
+    val lines = plan("q40_window_distribution").linesIterator.toIndexedSeq
+    assert(!lines.exists(l => l.contains("Window") && l.contains("row_number")),
+      "the local row numbers must not come from a window over (pid, priority)")
+    // the per-(pid, priority) run sizes cross an exchange as partial
+    // aggregates: at most partitions x priorities rows
+    val onPid = lines.indices.filter(i =>
+      lines(i).contains("Exchange hashpartitioning(") && lines(i).contains("pid#"))
+    assert(onPid.nonEmpty && onPid.forall(i => lines(i + 1).contains("partial_count")),
+      lines.mkString("\n"))
+  }
+
   test("tx_c4_filter is shuffle-free until the output sort") {
     val p = plan("tx_c4_filter")
     assert(!p.contains("SortMergeJoin") && !p.contains("BroadcastHashJoin"),

@@ -47,6 +47,29 @@ class ProjectionMatrixSpec extends AnyFunSuite {
 
   private lazy val captures: Seq[Path] = DissectSnapshot.captures(resources)
 
+  /** SIP over TCP whose SDP announces RTP on UDP 4789, then a UDP packet
+    * on that port that is both RTP (version 2) and VXLAN (I flag) around
+    * an inner Ethernet/IPv4/UDP frame, written with [[graft.pcap.PcapWriter]].
+    * With the port registered the packet is RTP; without, VXLAN claims it
+    * and its inner frame adds a second `ip.src`, `udp.srcport`, … */
+  private lazy val sipRtpFile: Path = {
+    import PcapFormatSpec.{ethIpTcp, ethIpUdp}
+    val sdp = "v=0\r\ns=call\r\nc=IN IP4 10.0.0.1\r\nm=audio 4789 RTP/AVP 0\r\n"
+    val sip = ("INVITE sip:bob@10.0.0.2 SIP/2.0\r\nCall-ID: c1\r\nCSeq: 1 INVITE\r\n" +
+      s"Content-Type: application/sdp\r\nContent-Length: ${sdp.length}\r\n\r\n$sdp")
+      .getBytes("ISO-8859-1")
+    val rtpVxlan = Array[Byte](0x88.toByte, 0, 0, 1, 0, 0, 0x2a, 0) ++
+      ethIpUdp(1000, 2000, new Array[Byte](8))
+    val frames = Seq(ethIpTcp(5060, 5060, sip), ethIpUdp(4789, 4789, rtpVxlan))
+    val spark = SparkSpec.session
+    import spark.implicits._
+    val dir = Files.createTempDirectory("projection-sip-rtp")
+    graft.pcap.PcapWriter.write(frames.zipWithIndex.map { case (f, i) =>
+      (new java.sql.Timestamp(1700000000000L + i), f.map(x => f"${x & 0xff}%02x").mkString(":"))
+    }.toDF("frame.time_epoch", "frame.raw").coalesce(1), dir.toString)
+    dir.resolve("part-00000.pcap")
+  }
+
   private def reader(file: Path, schema: StructType, cfilter: Option[String],
       pushed: Array[Filter], desegment: Boolean) =
     new PcapPartitionReader(PcapInputPartition(file.toString, Long.MaxValue),
@@ -122,6 +145,16 @@ class ProjectionMatrixSpec extends AnyFunSuite {
   test("narrow ip,tcp sets, with and without the chain and the info, equal the full scan") {
     for (file <- captures :+ sweepFile; deseg <- Seq(false, true))
       sameAsFull(file, narrowSets, desegment = deseg)
+  }
+
+  test("SIP over TCP registers its RTP port whatever the demand") {
+    val r = reader(sipRtpFile, schemaOf(Seq("frame.protocols")), None, Array.empty, false)
+    val chains = try Iterator.continually(r).takeWhile(_.next())
+      .map(_.get().getUTF8String(0).toString).toList finally r.close()
+    assert(chains.length === 2 && chains(0).contains(":sip") && chains(1).endsWith(":rtp"),
+      s"the fixture must announce the port over SIP and claim the UDP packet as RTP: $chains")
+    val addresses = addressColumns.map(c => c -> schemaOf(Seq(c)))
+    for (deseg <- Seq(false, true)) sameAsFull(sipRtpFile, narrowSets ++ addresses, desegment = deseg)
   }
 
   test("filters on fields the projection does not select see the full values") {

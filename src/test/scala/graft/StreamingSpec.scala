@@ -354,20 +354,17 @@ class StreamingSpec extends SparkSpec {
   test("incremental near-dup: streamed docs flag against the static corpus index") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    import graft.functions.MinHash
-    def bandRows(id: Long, text: String): Seq[(Long, Int, String)] = {
-      val sg = MinHash.signature(text)
-      if (sg == null) Nil else MinHash.bands(sg).map { case (b, bk) => (id, b, bk) }
-    }
+    // the corpus and the stream are signed and banded by the same
+    // per-row Columns the batch dd_incremental uses
+    import graft.queries.TextQueries.{minhashSigned, sigBands}
     val corpus = Seq(
       (1L, "the quick brown fox jumps over the lazy dog tonight"),
       (2L, "completely different corpus text about spark joins and shuffles"))
-    val corpusBands = corpus.flatMap { case (id, t) => bandRows(id, t) }
-      .toDF("corpus_id", "band", "bucket")
+    val corpusBands = sigBands(minhashSigned(corpus.toDF("doc_id", "text")))
+      .withColumnRenamed("doc_id", "corpus_id")
 
     val stream = MemoryStream[(Long, String)]
-    val newBands = stream.toDS().flatMap { case (id, t) => bandRows(id, t) }
-      .toDF("doc_id", "band", "bucket")
+    val newBands = sigBands(minhashSigned(stream.toDS().toDF("doc_id", "text")))
     val flagged = newBands.join(corpusBands, Seq("band", "bucket"))
       .select(col("doc_id")).dropDuplicates("doc_id")
     val q = flagged.writeStream.format("memory").queryName("incdup")

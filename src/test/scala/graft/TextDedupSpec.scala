@@ -164,6 +164,27 @@ class TextDedupSpec extends SparkSpec {
     assert(out(7L) === "top_token")
   }
 
+  test("the per-row MinHash signer equals the exploded definition") {
+    val aggs = (0 until 8).map(h => s"MIN(MD5(CONCAT('$h|', shingle))) AS mh$h").mkString(", ")
+    for (dir <- Seq(sfDir, sfDir.stripSuffix("sf0.001") + "sf0.01")) {
+      val docs = graft.api.Tables.load(spark, dir, "documents")
+      docs.createOrReplaceTempView("minhash_equiv_docs")
+      // the signature as it was defined before the per-row signer: every
+      // distinct 3-token shingle exploded to a row, then grouped by doc_id
+      val exploded = spark.sql(s"""
+        SELECT doc_id, $aggs
+        FROM (SELECT DISTINCT doc_id, shingle
+              FROM (SELECT doc_id, EXPLODE(TRANSFORM(SEQUENCE(1, SIZE(tokens) - 2),
+                             i -> CONCAT_WS(' ', SLICE(tokens, i, 3)))) AS shingle
+                    FROM (SELECT doc_id, SPLIT(text, ' ') AS tokens FROM minhash_equiv_docs)
+                    WHERE SIZE(tokens) >= 3))
+        GROUP BY doc_id""")
+      val perRow = TextQueries.minhashSigned(docs)
+      assert(perRow.count() === exploded.count(), dir)
+      assert(perRow.exceptAll(exploded).isEmpty && exploded.exceptAll(perRow).isEmpty, dir)
+    }
+  }
+
   test("ngram jaccard df-cap: boilerplate creates no pairs, rare overlap still found") {
     val boiler = (0 until 30).map(j => s"b$j").mkString(" ")
     val docs =
