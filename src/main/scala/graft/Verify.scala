@@ -7,20 +7,11 @@ object Verify {
     // optional 3rd arg (dev loops only — the driver passes 2): run only
     // queries whose name starts with one of the comma-separated prefixes
     val Array(sfDir, outDir) = args.take(2)
-    val only: String => Boolean = args.lift(2) match {
-      case Some(prefixes) =>
-        val ps = prefixes.split(',').toSeq; name => ps.exists(name.startsWith)
-      case None => _ => true
-    }
     val spark = GraftSession()
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.foreach { case (name, fn) =>
-      if (only(name))
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
+    Runner.select(args.lift(2)).foreach { q =>
+      Runner.run(spark, q, sfDir, Runner.parquet(s"$outDir/${q.name}"), q.name)
+        .left.foreach(e => System.err.println(s"[verify] ${q.name} failed: ${e.getMessage}"))
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

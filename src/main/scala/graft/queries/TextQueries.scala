@@ -1928,41 +1928,6 @@ object TextQueries {
     * partitionable banded join, DuckDB's is an O(n²) scan, results are
     * identical by construction. `levenshtein` is classic integer DP in
     * both engines, so the verify agrees bit-exactly. */
-  /** Optional per-blocking-key member cap for the edit-distance pair
-    * generators (VERDICT r8 #7): a replica-heavy corpus puts whole
-    * exact-dup families on ONE blocking key, so the candidate join inside
-    * that key densifies quadratically in family size. With
-    * `graft.dedup.group_cap = G` (> 0) each blocking key keeps only its G
-    * lowest-id member documents (dense_rank, so a kept document keeps all
-    * its probe rows) — pair work per key is then ≤ G², deterministic, and
-    * the only dropped pairs are intra-oversized-group ones (documented
-    * recall tradeoff: in a production pipeline exact families are
-    * collapsed by exact dedup BEFORE near-dup pairing, so an oversized
-    * key is pathological input, not signal). Default OFF (0) so the
-    * sf0.01 oracles replay the uncapped join; the sf1 bench sweep runs
-    * cap-on (SPARK_GRAFT_GROUP_CAP). */
-  private def groupCap(s: SparkSession): Int =
-    s.conf.getOption("graft.dedup.group_cap").map(_.trim.toInt).getOrElse(0)
-
-  private def capMembers(df: DataFrame, keys: Seq[String], idCol: String,
-      cap: Int): DataFrame =
-    if (cap <= 0) df
-    else {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(keys.map(col): _*).orderBy(col(idCol))
-      // explicit-width round-robin repartition: the capped frame is tiny
-      // in BYTES, so AQE coalesces the post-window exchange to ONE
-      // partition and converts the candidate join to broadcast — leaving
-      // the CPU-heavy levenshtein probe on a single thread (observed:
-      // 19.5 s of task time serialized at sf1). Round-robin with a
-      // user-specified width is never coalesced, a broadcast probe side
-      // needs no particular distribution, and the shuffle moves ~2 MB.
-      val n = df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-      df.withColumn("__gcap", dense_rank().over(w))
-        .filter(col("__gcap") <= cap).drop("__gcap")
-        .repartition(n)
-    }
-
   val ddEditPairs = GraftQuery(
     "dd_edit_pairs",
     (s, dir) => {
@@ -1970,12 +1935,10 @@ object TextQueries {
       val pre = docs(s, dir)
         .select($"doc_id", substring(lower($"text"), 1, 30).as("pre"))
         .filter(length($"pre") === 30)
-      val banded = capMembers(
-        pre.select($"doc_id", $"pre",
-          posexplode(array(
-            substring($"pre", 1, 10), substring($"pre", 11, 10),
-            substring($"pre", 21, 10))).as(Seq("band_idx", "band_val"))),
-        Seq("band_idx", "band_val"), "doc_id", groupCap(s))
+      val banded = pre.select($"doc_id", $"pre",
+        posexplode(array(
+          substring($"pre", 1, 10), substring($"pre", 11, 10),
+          substring($"pre", 21, 10))).as(Seq("band_idx", "band_val")))
       val l = banded.as("l")
       val r = banded.as("r")
       def firstAgree(a: Column, b: Column): Column =
@@ -2036,13 +1999,11 @@ object TextQueries {
         s"($lCol div 3) + IF($iCol >= 3 - ($lCol % 3), 1, 0)", // len_i
         s"1 + $iCol * ($lCol div 3) + GREATEST(0, $iCol - (3 - ($lCol % 3)))") // start_i
       val (liS, qiS) = layout("ls", "i")
-      val segs = capMembers(
-        p.select($"doc_id".as("id_s"), $"ks".as("ks_s"), $"len".as("ls"),
-            explode(expr("sequence(0, 2)")).as("i"))
-          .withColumn("seg", expr(s"substring(ks_s, $qiS, $liS)"))
-          .filter(length($"seg") > 0)
-          .select($"id_s", $"ks_s", $"ls", $"i", $"seg"),
-        Seq("ls", "i", "seg"), "id_s", groupCap(s))
+      val segs = p.select($"doc_id".as("id_s"), $"ks".as("ks_s"), $"len".as("ls"),
+          explode(expr("sequence(0, 2)")).as("i"))
+        .withColumn("seg", expr(s"substring(ks_s, $qiS, $liS)"))
+        .filter(length($"seg") > 0)
+        .select($"id_s", $"ks_s", $"ls", $"i", $"seg")
       val (liT, qiT) = layout("lseg", "i")
       val probes = p.select($"doc_id".as("id_t"), $"ks".as("ks_t"), $"len".as("lt"),
           explode(expr(s"sequence(greatest(1, len - $k), len)")).as("lseg"))
@@ -2055,11 +2016,9 @@ object TextQueries {
         .filter($"q" >= 1 && $"q" + $"li" - lit(1) <= $"lt" && $"li" > 0)
         .select($"id_t", $"ks_t", $"lt", $"lseg", $"i",
           expr("substring(ks_t, q, li)").as("seg"))
-      val probesCapped = capMembers(probes, Seq("lseg", "i", "seg"), "id_t",
-        groupCap(s))
-      segs.join(probesCapped,
-          $"ls" === $"lseg" && segs("i") === probesCapped("i") &&
-            segs("seg") === probesCapped("seg") && $"id_s" =!= $"id_t")
+      segs.join(probes,
+          $"ls" === $"lseg" && segs("i") === probes("i") &&
+            segs("seg") === probes("seg") && $"id_s" =!= $"id_t")
         .select(
           least($"id_s", $"id_t").as("id_a"),
           greatest($"id_s", $"id_t").as("id_b"),

@@ -94,6 +94,23 @@ object PcapTable {
       session.sessionState.newHadoopConfWithOptions(options.asCaseSensitiveMap.asScala.toMap)))
   }
 
+  /** `climit`: the packets read per file, unlimited when unset. */
+  def climit(options: CaseInsensitiveStringMap): Long =
+    Option(options.get("climit")).map(_.toLong).getOrElse(Long.MaxValue)
+
+  /** The readers of a batch or micro-batch scan of `schema`, under the
+    * read options `compat`, `cfilter`, `backend` and `desegment`. */
+  def readerFactory(schema: StructType, options: CaseInsensitiveStringMap,
+      pushed: Array[Filter],
+      shipped: Broadcast[SerializableConfiguration]): PartitionReaderFactory =
+    PcapReaderFactory(schema,
+      compatStrict = options.getOrDefault("compat", "") == "strict",
+      cfilter = Option(options.get("cfilter")).filter(_.nonEmpty),
+      pushed = pushed,
+      backend = options.getOrDefault("backend", "native"),
+      desegment = options.getBoolean("desegment", false),
+      hadoopConf = shipped)
+
   def expand(paths: Seq[String], conf: Configuration): Seq[String] =
     paths.flatMap { p =>
       val hp = new Path(p)
@@ -191,7 +208,7 @@ final class PcapScan(
     if (files.isEmpty)
       throw new java.io.FileNotFoundException(
         s"read_pcap: no capture files match ${PcapTable.paths(options).mkString(", ")}")
-    val climit = Option(options.get("climit")).map(_.toLong).getOrElse(Long.MaxValue)
+    val climit = PcapTable.climit(options)
     val effLimit =
       if (limit >= 0) math.min(climit, limit.toLong) else climit
     splitBytes match {
@@ -216,13 +233,8 @@ final class PcapScan(
     }
   }
 
-  override def createReaderFactory(): PartitionReaderFactory = {
-    val compatStrict = options.getOrDefault("compat", "") == "strict"
-    val cfilter = Option(options.get("cfilter")).filter(_.nonEmpty)
-    val backend = options.getOrDefault("backend", "native")
-    val desegment = options.getBoolean("desegment", false)
-    PcapReaderFactory(requiredSchema, compatStrict, cfilter, pushed, backend, desegment, shipped)
-  }
+  override def createReaderFactory(): PartitionReaderFactory =
+    PcapTable.readerFactory(requiredSchema, options, pushed, shipped)
 }
 
 final case class PcapInputPartition(

@@ -94,7 +94,7 @@ final class PcapMicroBatchStream(
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val s = start.asInstanceOf[PcapOffset].batchId
     val e = end.asInstanceOf[PcapOffset].batchId
-    val climit = Option(options.get("climit")).map(_.toLong).getOrElse(Long.MaxValue)
+    val climit = PcapTable.climit(options)
     synchronized {
       ((s + 1) to e).flatMap { b =>
         batches.get(b).orElse {
@@ -106,13 +106,8 @@ final class PcapMicroBatchStream(
     }
   }
 
-  override def createReaderFactory(): PartitionReaderFactory = {
-    val compatStrict = options.getOrDefault("compat", "") == "strict"
-    val cfilter = Option(options.get("cfilter")).filter(_.nonEmpty)
-    val backend = options.getOrDefault("backend", "native")
-    val desegment = options.getBoolean("desegment", false)
-    PcapReaderFactory(schema, compatStrict, cfilter, Array.empty, backend, desegment, shipped)
-  }
+  override def createReaderFactory(): PartitionReaderFactory =
+    PcapTable.readerFactory(schema, options, Array.empty, shipped)
 
   override def commit(end: Offset): Unit = synchronized {
     // the durable log stays for replay-after-restart; the in-memory copy

@@ -318,11 +318,8 @@ object PcapFilterEval {
       a.substring(1, a.length - 1).replace("``", "`")
     else a
 
-  private def value(attr: String, d: Dissect.Dissected): Any = attrName(attr) match {
-    case "frame.protocols" => d.protocols
-    case "_ws.col.info"    => d.info
-    case n                 => d.values.getOrElse(n, null)
-  }
+  private def value(attr: String, d: Dissect.Dissected): Any =
+    DisplayFilter.fieldValue(d, attrName(attr))
 
   /** Timestamp columns dissect to epoch micros (Long); Spark pushes their
     * literals as java.sql.Timestamp (or java.time.Instant under the java8
@@ -403,7 +400,10 @@ object DisplayFilter {
     else if (target == "frame") Set("frame.raw")
     else Set(target, "frame.protocols", "frame.raw")
 
-  private def fieldValue(d: Dissect.Dissected, field: String): Any = field match {
+  /** A field's dissected value: the protocol chain, the info column, or
+    * else the field's value (null when absent). Pushed filters read
+    * through it too ([[PcapFilterEval]]). */
+  private[pcap] def fieldValue(d: Dissect.Dissected, field: String): Any = field match {
     case "frame.protocols" => d.protocols
     case "_ws.col.info"    => d.info
     case n                 => d.values.getOrElse(n, null)

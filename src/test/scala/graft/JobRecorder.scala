@@ -10,21 +10,17 @@ import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 
 /** Records the job group of every job the context starts while attached,
   * and the physical plan of every SQL execution. Listener events arrive
-  * asynchronously; [[jobs]] and [[executions]] first run a marker job and
-  * wait until the listener has seen it, and since one listener's events
-  * arrive in posting order, everything started before the marker has been
-  * recorded by then. */
+  * asynchronously; [[jobs]] and [[executions]] first drain the listener
+  * bus ([[Runner.drain]]), whose marker jobs are not recorded. */
 final class JobRecorder(sc: SparkContext) extends SparkListener {
   private val started = new ConcurrentLinkedQueue[(Int, String)]()
   private val plans = new ConcurrentLinkedQueue[String]()
-  private val marker = s"job-recorder-marker-${System.identityHashCode(this)}"
-  @volatile private var markerSeen = false
 
   sc.addSparkListener(this)
 
   override def onJobStart(js: SparkListenerJobStart): Unit = {
     val g = js.properties.getProperty("spark.jobGroup.id")
-    if (g == marker) markerSeen = true else started.add(js.jobId -> g)
+    if (g != Runner.drainGroup) started.add(js.jobId -> g)
   }
 
   override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
@@ -34,27 +30,15 @@ final class JobRecorder(sc: SparkContext) extends SparkListener {
 
   /** (job id, job group or null) of every job started so far. */
   def jobs(): Seq[(Int, String)] = {
-    drain()
+    Runner.drain(sc)
     started.asScala.toSeq
   }
 
   /** The physical plan description of every SQL execution started so
     * far. */
   def executions(): Seq[String] = {
-    drain()
+    Runner.drain(sc)
     plans.asScala.toSeq
-  }
-
-  private def drain(): Unit = {
-    val t = new Thread(() => {
-      sc.setJobGroup(marker, marker)
-      sc.parallelize(Seq(1), 1).count()
-    })
-    t.start(); t.join()
-    val deadline = System.nanoTime() + 60L * 1000000000L
-    while (!markerSeen && System.nanoTime() < deadline) Thread.sleep(20)
-    assert(markerSeen, "listener bus did not deliver the marker job within 60 s")
-    markerSeen = false
   }
 
   def detach(): Unit = sc.removeSparkListener(this)

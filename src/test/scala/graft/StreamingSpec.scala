@@ -505,6 +505,32 @@ class StreamingSpec extends SparkSpec {
     assert(spark.read.parquet(out).count() === 970L)
   }
 
+  test("streaming pcap: cfilter, compat=strict and climit read the rows a batch read does") {
+    val dir = java.nio.file.Files.createTempDirectory("pcapstream3")
+    val ck = java.nio.file.Files.createTempDirectory("pcapck3").toString
+    Seq("fix", "mixed").foreach(n => java.nio.file.Files.copy(
+      java.nio.file.Paths.get(getClass.getResource(s"/$n.pcap").getPath),
+      dir.resolve(s"$n.pcap")))
+    val opts = Map("protocols" -> "tcp", "cfilter" -> "tcp.len > 0",
+      "compat" -> "strict", "climit" -> "300")
+    val q = spark.readStream.format("pcap").options(opts).load(dir.toString)
+      .writeStream.format("memory").queryName("pcapopts")
+      .option("checkpointLocation", ck).start()
+    try q.processAllAvailable() finally q.stop()
+    val streamed = spark.table("pcapopts")
+    val batch = spark.read.format("pcap").options(opts).load(dir.toString)
+    assert(streamed.schema == batch.schema)
+    val n = batch.count()
+    // the limit and the filter both bite: fewer rows than either alone
+    assert(n > 0 && n < spark.read.format("pcap").option("protocols", "tcp")
+      .option("cfilter", "tcp.len > 0").load(dir.toString).count())
+    assert(n < spark.read.format("pcap").option("climit", "300").load(dir.toString).count())
+    assert(streamed.exceptAll(batch).isEmpty && batch.exceptAll(streamed).isEmpty)
+    // whole-second timestamps, as compat=strict emits them
+    assert(streamed.selectExpr("`frame.time_epoch`").collect()
+      .forall(r => r.getTimestamp(0).getTime % 1000 == 0))
+  }
+
   test("funnel pattern: first view→click→purchase chain, state crosses batches") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
