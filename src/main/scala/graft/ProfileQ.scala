@@ -1,10 +1,13 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
+
 /** Dev tool (optimization rounds): wall time, task time and per-STAGE
   * attribution for each named query. Prints, for each completed stage of
   * an isolated run after a warm run: task count, summed executor run time,
   * GC time, records/bytes read and written, shuffle read/write, and the
-  * first line of the stage's call-site name. The warm run also writes
+  * operation scopes of the stage's RDDs; the PROFILE line also carries
+  * the classes the warm run compiled (`codegen=`). The warm run also writes
   * its `.explain("formatted")` (the plan before execution, which the
   * measured run, built by the same code, starts from) to
   * `<out>/<name><suffix>.txt`, so the before/after plan pairs under
@@ -49,15 +52,18 @@ object ProfileQ {
           System.err.println(s"[profile] $name explain failed: ${e.getMessage}") }
         Runner.noop(df)
       }
+      val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
       Runner.run(spark, q, dir, planned, "warmup").left.foreach(e =>
         System.err.println(s"[profile] $name warm failed: ${e.getMessage}"))
+      val codegen = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled
       Runner.run(spark, q, dir, Runner.noop, name) match {
         case Left(e) => System.err.println(s"[profile] $name failed: ${e.getMessage}")
         case Right(wall) =>
           Runner.drain(spark.sparkContext)
           val rows = metrics.stages(name).sortBy(-_.runMs)
           println(f"PROFILE $name wall=$wall%.2f s stages=${rows.size} " +
-            f"taskTime=${rows.map(_.runMs).sum / 1e3}%.1f s gc=${rows.map(_.gcMs).sum / 1e3}%.1f s")
+            f"taskTime=${rows.map(_.runMs).sum / 1e3}%.1f s gc=${rows.map(_.gcMs).sum / 1e3}%.1f s " +
+            s"codegen=$codegen")
           rows.take(30).foreach { r =>
             println(f"  stage ${r.id}%4d run=${r.runMs / 1e3}%7.2fs gc=${r.gcMs / 1e3}%5.2fs " +
               f"tasks=${r.tasks}%3d in=${r.recordsIn}%9d " +

@@ -4,8 +4,9 @@ import scala.collection.concurrent.TrieMap
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 
-/** One completed stage's executor metrics; `name` is the first line of its
-  * call site. */
+/** One completed stage's executor metrics; `name` lists the operation
+  * scopes of its RDDs (`WholeStageCodegen (3)`, `Exchange`, ...), or the
+  * first line of its call site when no RDD has one. */
 final case class StageRow(id: Int, name: String, tasks: Int, runMs: Long,
     gcMs: Long, recordsIn: Long, bytesIn: Long, shuffleReadRecords: Long,
     shuffleReadBytes: Long, shuffleWriteRecords: Long,
@@ -37,7 +38,11 @@ final class StageMetricsListener extends SparkListener {
     val si = sc.stageInfo
     val m = si.taskMetrics
     for (jid <- stageJob.get(si.stageId); g <- jobGroup.get(jid) if m != null) {
-      val row = StageRow(si.stageId, si.name.linesIterator.nextOption().getOrElse(""),
+      val scopes = si.rddInfos.sortBy(_.id).flatMap(_.scope.map(_.name)).distinct
+      val name =
+        if (scopes.nonEmpty) scopes.mkString(", ")
+        else si.name.linesIterator.nextOption().getOrElse("")
+      val row = StageRow(si.stageId, name,
         si.numTasks, m.executorRunTime, m.jvmGCTime,
         m.inputMetrics.recordsRead, m.inputMetrics.bytesRead,
         m.shuffleReadMetrics.recordsRead, m.shuffleReadMetrics.totalBytesRead,

@@ -1091,10 +1091,8 @@ object Media {
   }
 
   /** Banded video signature — see [[videoSignatures]]. `b0..b3` are the
-    * 16-bit band keys; `h1`/`h2` the packed 32-bit halves for codegen
-    * Hamming scoring. */
-  final case class VideoFp(
-      doc_id: Long, b0: Long, b1: Long, b2: Long, b3: Long, h1: Long, h2: Long)
+    * 16-bit band keys. */
+  final case class VideoFp(doc_id: Long, b0: Long, b1: Long, b2: Long, b3: Long)
 
   /** Banded signature over the real video ESSENCE (AVI movi / MP4 mdat
     * contents via [[essenceOf]]) — the video leg of the near-dup ladder,
@@ -1125,8 +1123,7 @@ object Media {
               bands(k) = sum % 65536L
               k += 1
             }
-            Some(VideoFp(id, bands(0), bands(1), bands(2), bands(3),
-              bands(0) * 65536L + bands(1), bands(2) * 65536L + bands(3)))
+            Some(VideoFp(id, bands(0), bands(1), bands(2), bands(3)))
           }
         }
       }

@@ -453,16 +453,13 @@ object AnnOracles {
     * (token-count quality + the salted-md5 Bloom membership chain), the
     * semantic tier (IVF-cell + LSH-bucket cosine gate over literal
     * centroids), and the MEDIA tier (per-modality 4×16-bit banded
-    * near-dup counts over the caller-provided `fps(doc_id, modality,
-    * b0..b3)` CTE chain — image pHash, audio energy fingerprint, video
-    * essence signature), all joined on the shared id space over the
-    * arriving lane (% 10 = 7). */
+    * near-dup counts over [[MultimodalQueries.mediaFpsCteSql]]'s
+    * `fps(doc_id, modality, b0..b3)` — image pHash, audio energy
+    * fingerprint, video essence signature), all joined on the shared id
+    * space over the arriving lane (% 10 = 7). */
   def admissionFunnelSql(cents: Array[Array[Double]], tau: Double,
-      bucketSql: String, mediaFpsCtes: String): String = {
+      bucketSql: String): String = {
     val dim = cents(0).length
-    val bandJoin = (0 until 4).map(k => s"a.b$k = b.b$k").mkString(" OR ")
-    val mdist = (0 until 4).map(k =>
-      s"BIT_COUNT(XOR(a.b$k, b.b$k))").mkString(" + ")
     s"""
       WITH cents(cell, centroid, cn2, cnorm) AS (VALUES
   ${centsValues(cents)}),
@@ -511,15 +508,12 @@ object AnnOracles {
       toks AS (
         SELECT doc_id, CAST(LEN(REGEXP_SPLIT_TO_ARRAY(text, '\\s+')) AS BIGINT) AS n_tokens
         FROM arriving),
-      $mediaFpsCtes,
+      ${MultimodalQueries.mediaFpsCteSql},
       mediahits AS (
-        SELECT a.doc_id, CAST(COUNT(*) AS BIGINT) AS n_media_dups
-        FROM fps a JOIN fps b
-          ON a.modality = b.modality
-         AND a.doc_id % 10 = 7 AND b.doc_id % 10 <> 7
-         AND ($bandJoin)
-        WHERE $mdist <= 3
-        GROUP BY a.doc_id),
+        SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_media_dups
+        FROM (${MultimodalQueries.bandPairsSql("fps", "fps",
+          "a.modality = b.modality AND a.doc_id % 10 = 7 AND b.doc_id % 10 <> 7")})
+        GROUP BY doc_id),
       fpd AS (SELECT DISTINCT doc_id FROM fps WHERE doc_id % 10 = 7)
       SELECT t.doc_id,
              (['image', 'audio', 'video'])[CAST(t.doc_id % 3 + 1 AS INTEGER)]

@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.api.{GraftQuery, Tables}
@@ -19,6 +20,12 @@ import graft.multimodal.Media
   * duration silence samples; avi 100 + payload), which the oracle
   * reproduces arithmetically for n_bytes. */
 object MultimodalQueries {
+
+  /** The media modalities, and the four 16-bit band columns every
+    * modality's fingerprint has (see [[fingerprints]]). Defined first: the
+    * oracle SQL of the queries below reads them while the object loads. */
+  private val modalities = Seq("image", "audio", "video")
+  private val bands = (0 until 4).map(k => s"b$k")
 
   /** Shared oracle CTE: per-document md5-derived generation parameters.
     * Container overheads: png 57 / jpeg+EXIF 77 / gif 14 / tiff 38 /
@@ -202,13 +209,6 @@ object MultimodalQueries {
       GROUP BY 1
       ORDER BY orientation"""))
 
-  /** One hash byte in the oracle: essence bytes 8j..8j+7 MSB-first,
-    * CASE-summed against the floor-mean. */
-  private def phashByteSql(j: Int): String =
-    (0 until 8).map { k =>
-      s"CASE WHEN c[${8 * j + k + 1}] > mean THEN ${1 << (7 - k)} ELSE 0 END"
-    }.mkString("(", " + ", ")")
-
   /** Perceptual hashing over the image subset: Spark walks the REAL
     * container (PNG IDAT chunk iteration / JPEG marker-segment walk /
     * GIF descriptor+trailer bounds — [[Media.imageEssence]]) to recover
@@ -235,22 +235,11 @@ object MultimodalQueries {
         .orderBy($"doc_id")
     },
     Some(s"""
-      WITH img AS (
-        SELECT doc_id, text, CAST((doc_id // 3) % 5 AS INTEGER) AS slot
-        FROM documents
-        WHERE doc_id % 3 = 0 AND (doc_id // 3) % 5 IN (0, 1, 2)
-          AND OCTET_LENGTH(ENCODE(text)) >= 64),
-      codes AS (
-        SELECT doc_id, slot,
-               list_transform(range(1, 65),
-                              i -> ascii(substr(text, CAST(i AS INTEGER), 1))) AS c
-        FROM img),
-      m AS (SELECT doc_id, slot, c, list_sum(c) // 64 AS mean FROM codes)
+      WITH ${fpCteSql("image")}
       SELECT doc_id,
-             (['png', 'jpeg', 'gif'])[slot + 1] AS codec,
-             printf('%02x%02x%02x%02x%02x%02x%02x%02x',
-               ${(0 until 8).map(phashByteSql).mkString(",\n               ")}) AS phash
-      FROM m
+             (['png', 'jpeg', 'gif'])[CAST((doc_id // 3) % 5 AS INTEGER) + 1] AS codec,
+             printf('%04x%04x%04x%04x', b0, b1, b2, b3) AS phash
+      FROM image_fp
       ORDER BY doc_id"""))
 
   /** Container integrity validation: every PNG chunk's CRC32 is
@@ -335,59 +324,10 @@ object MultimodalQueries {
   val mmAudioFingerprint = GraftQuery(
     "mm_audio_fingerprint",
     (s, dir) => {
-      import s.implicits._
       val media = Media.synthesize(Tables.load(s, dir, "documents"))
-      val fps = Media.audioFingerprints(s, media).toDF().cache()
-      val banded = fps.select($"doc_id", $"b0", $"b1", $"b2", $"b3",
-        posexplode(array($"b0", $"b1", $"b2", $"b3")).as(Seq("blk", "key")))
-      val a = banded.select($"blk", $"key", $"doc_id".as("doc_a"),
-        $"b0".as("a0"), $"b1".as("a1"), $"b2".as("a2"), $"b3".as("a3"))
-      val b = banded.select($"blk", $"key", $"doc_id".as("doc_b"),
-        $"b0".as("c0"), $"b1".as("c1"), $"b2".as("c2"), $"b3".as("c3"))
-      val dist = (0 until 4).map(k => s"bit_count(a$k ^ c$k)").mkString(" + ")
-      a.join(b, Seq("blk", "key"))
-        .filter($"doc_a" < $"doc_b")
-        .select($"doc_a", $"doc_b", $"a0", $"a1", $"a2", $"a3",
-          $"c0", $"c1", $"c2", $"c3").distinct()
-        .withColumn("dist", expr(s"CAST($dist AS BIGINT)"))
-        .filter($"dist" <= 3L)
-        .select($"doc_a", $"doc_b", $"dist")
-        .orderBy($"doc_a", $"doc_b")
+      neardupPairs(Media.audioFingerprints(s, media).toDF().cache())
     },
-    Some {
-      val dist = (0 until 4).map(k =>
-        s"BIT_COUNT(XOR(a.b$k, b.b$k))").mkString(" + ")
-      val bandJoin = (0 until 4).map(k => s"a.b$k = b.b$k").mkString(" OR ")
-      s"""
-      WITH aud AS (
-        SELECT doc_id,
-               ASCII(SUBSTR(MD5(text), 5, 1)) * 256 + ASCII(SUBSTR(MD5(text), 6, 1)) AS d
-        FROM documents
-        WHERE doc_id % 3 = 1 AND (doc_id // 3) % 4 = 0),
-      f AS (SELECT doc_id, d FROM aud WHERE d >= 4),
-      band AS (
-        SELECT f.doc_id, t.k,
-               CAST(SUM( ((64 + (f.d * 11 + g.i * 37) % 97) - 128)
-                       * ((64 + (f.d * 11 + g.i * 37) % 97) - 128) )
-                    % 65536 AS BIGINT) AS b
-        FROM f, UNNEST(RANGE(0, 4)) t(k),
-             LATERAL (SELECT UNNEST(GENERATE_SERIES(
-               t.k * f.d // 4, (t.k + 1) * f.d // 4 - 1)) AS i) g
-        GROUP BY 1, 2),
-      fp AS (
-        SELECT doc_id,
-               MAX(CASE WHEN k = 0 THEN b END) AS b0,
-               MAX(CASE WHEN k = 1 THEN b END) AS b1,
-               MAX(CASE WHEN k = 2 THEN b END) AS b2,
-               MAX(CASE WHEN k = 3 THEN b END) AS b3
-        FROM band GROUP BY doc_id)
-      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-             CAST($dist AS BIGINT) AS dist
-      FROM fp a JOIN fp b
-        ON a.doc_id < b.doc_id AND ($bandJoin)
-      WHERE $dist <= 3
-      ORDER BY doc_a, doc_b"""
-    })
+    Some(neardupPairsSql("audio")))
 
   /** PIXEL-level decode: every document becomes a fully decodable
     * grayscale PNG (deflate-compressed scanlines, all five PNG row
@@ -434,149 +374,43 @@ object MultimodalQueries {
   /** Image NEAR-duplicate pairs over the perceptual hash — the multimodal
     * capstone that composes [[mmPhash]]'s real container decode with the
     * text tier's banded near-dup machinery: pHashes within Hamming
-    * distance ≤ 3 are near-dup pairs, generated by the 4×16-bit
-    * pigeonhole band join (with ≤ 3 flipped bits at least one of the 4
-    * 16-bit blocks is intact, so the band equi-join is EXACT, never
-    * all-pairs — the dd_simhash_pairs argument applied to images). Hamming arithmetic is
-    * per-BYTE `bit_count(xor)` over hex-pair substrings, identical and
-    * integer-exact on both engines. The oracle replays the pHash from
-    * the generation bytes (the mm_phash contract), so a match proves
-    * container decode + hash fold + banding + distance end-to-end.
-    * 100 TB shape: decode once (mapPartitions batch), band equi-join on
-    * 16-bit keys, distance only on candidates. */
+    * distance ≤ 3 are near-dup pairs, found by the shared band matcher
+    * ([[bandMatch]]) over the hash's four 16-bit blocks, as the audio and
+    * video ladders do. The oracle replays the pHash from the generation
+    * bytes (the mm_phash contract), so a match proves container decode +
+    * hash fold + banding + distance end-to-end. 100 TB shape: decode once
+    * (mapPartitions batch), band equi-join on 16-bit keys, distance only
+    * on candidates. */
   val mmPhashNeardup = GraftQuery(
     "mm_phash_neardup",
-    (s, dir) => {
-      import s.implicits._
-      val ph = mmPhash.fn(s, dir).select($"doc_id", $"phash").cache()
-      val blocks = ph.select($"doc_id", $"phash",
-        posexplode(array((0 until 4).map(k =>
-          substring($"phash", 1 + 4 * k, 4)): _*)).as(Seq("blk", "key")))
-      val a = blocks.select($"blk", $"key", $"doc_id".as("doc_a"), $"phash".as("ph_a"))
-      val b = blocks.select($"blk", $"key", $"doc_id".as("doc_b"), $"phash".as("ph_b"))
-      val dist = (0 until 8).map(k =>
-        s"bit_count(CAST(conv(substring(ph_a, ${2 * k + 1}, 2), 16, 10) AS INT) ^ " +
-          s"CAST(conv(substring(ph_b, ${2 * k + 1}, 2), 16, 10) AS INT))")
-        .mkString(" + ")
-      a.join(b, Seq("blk", "key"))
-        .filter($"doc_a" < $"doc_b")
-        .select($"doc_a", $"doc_b", $"ph_a", $"ph_b").distinct()
-        .withColumn("dist", expr(s"CAST($dist AS BIGINT)"))
-        .filter($"dist" <= 3L)
-        .select($"doc_a", $"doc_b", $"dist")
-        .orderBy($"doc_a", $"doc_b")
-    },
-    Some {
-      val byteList = (0 until 8).map(phashByteSql).mkString(", ")
-      val blockKeys = (0 until 4).map(k =>
-        s"pb[${2 * k + 1}] * 256 + pb[${2 * k + 2}] AS k$k").mkString(", ")
-      val bandJoin = (0 until 4).map(k => s"a.k$k = b.k$k").mkString(" OR ")
-      val dist = (1 to 8).map(i =>
-        s"BIT_COUNT(XOR(a.pb[$i], b.pb[$i]))").mkString(" + ")
-      s"""
-      WITH img AS (
-        SELECT doc_id, text, CAST((doc_id // 3) % 5 AS INTEGER) AS slot
-        FROM documents
-        WHERE doc_id % 3 = 0 AND (doc_id // 3) % 5 IN (0, 1, 2)
-          AND OCTET_LENGTH(ENCODE(text)) >= 64),
-      codes AS (
-        SELECT doc_id, slot,
-               list_transform(range(1, 65),
-                              i -> ascii(substr(text, CAST(i AS INTEGER), 1))) AS c
-        FROM img),
-      m AS (SELECT doc_id, slot, c, list_sum(c) // 64 AS mean FROM codes),
-      ph AS (SELECT doc_id, [$byteList] AS pb FROM m),
-      keyed AS (SELECT doc_id, pb, $blockKeys FROM ph)
-      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-             CAST($dist AS BIGINT) AS dist
-      FROM keyed a JOIN keyed b
-        ON a.doc_id < b.doc_id AND ($bandJoin)
-      WHERE $dist <= 3
-      ORDER BY doc_a, doc_b"""
-    })
+    (s, dir) => neardupPairs(phashBands(mmPhash.fn(s, dir)).cache()),
+    Some(neardupPairsSql("image")))
 
   /** pHash top-k SERVING (tier: multimodal×ANN crossover): for the three
     * lowest-id query images, the five nearest neighbors by Hamming
     * distance over the full pHash table — "find visually similar images"
-    * as one plan. The 64-bit hex hash splits into two 32-bit halves so
-    * the distance runs through TWO calls of the codegen
-    * [[graft.functions.HammingDistance]] expression (no UDF, stays in
-    * whole-stage codegen); the 3-row query arm broadcasts, and each
-    * query's ranking is a WindowGroupLimit, not a global sort. 100 TB
+    * as one plan, through the shared probe ([[hammingTopK]]). 100 TB
     * shape: identical to the brute-force ANN arm — one corpus scan per
     * query batch, integer math, queries×k rows out; the banded-join
     * variant (mm_phash_neardup) is the scale path when the query set is
-    * the corpus itself. Oracle: the generation-byte pHash replay feeding
-    * BIT_COUNT(XOR(...)) halves — integer-exact end to end. */
+    * the corpus itself. */
   val mmPhashTopk = GraftQuery(
     "mm_phash_topk",
-    (s, dir) => {
-      import s.implicits._
-      import org.apache.spark.sql.expressions.Window
-      val hv = phashHalves(s, dir).cache()
-      val q = hv.orderBy($"doc_id").limit(3)
-        .select($"doc_id".as("query_id"), $"h1".as("q1"), $"h2".as("q2"))
-      val w = Window.partitionBy($"query_id").orderBy($"dist", $"cand_id")
-      hv.join(broadcast(q), $"doc_id" =!= $"query_id")
-        .select($"query_id", $"doc_id".as("cand_id"),
-          expr("hamming_distance(q1, h1) + hamming_distance(q2, h2)").as("dist"))
-        .withColumn("mm_rank", row_number().over(w).cast("long"))
-        .filter($"mm_rank" <= 5)
-        .select($"query_id", $"mm_rank", $"cand_id", $"dist")
-        .orderBy($"query_id", $"mm_rank")
-    },
-    Some {
-      val byteList = (0 until 8).map(phashByteSql).mkString(", ")
-      s"""
-      WITH img AS (
-        SELECT doc_id, text, CAST((doc_id // 3) % 5 AS INTEGER) AS slot
-        FROM documents
-        WHERE doc_id % 3 = 0 AND (doc_id // 3) % 5 IN (0, 1, 2)
-          AND OCTET_LENGTH(ENCODE(text)) >= 64),
-      codes AS (
-        SELECT doc_id, slot,
-               list_transform(range(1, 65),
-                              i -> ascii(substr(text, CAST(i AS INTEGER), 1))) AS c
-        FROM img),
-      m AS (SELECT doc_id, slot, c, list_sum(c) // 64 AS mean FROM codes),
-      ph AS (SELECT doc_id, [$byteList] AS pb FROM m),
-      hv AS (SELECT doc_id,
-               ((CAST(pb[1] AS BIGINT) * 256 + pb[2]) * 256 + pb[3]) * 256 + pb[4] AS h1,
-               ((CAST(pb[5] AS BIGINT) * 256 + pb[6]) * 256 + pb[7]) * 256 + pb[8] AS h2
-             FROM ph),
-      q AS (SELECT doc_id AS query_id, h1 AS q1, h2 AS q2
-            FROM hv ORDER BY doc_id LIMIT 3),
-      scored AS (
-        SELECT q.query_id, c.doc_id AS cand_id,
-               CAST(BIT_COUNT(XOR(q.q1, c.h1)) + BIT_COUNT(XOR(q.q2, c.h2))
-                 AS BIGINT) AS dist
-        FROM hv c CROSS JOIN q WHERE c.doc_id <> q.query_id),
-      r AS (
-        SELECT query_id,
-               CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-                 ORDER BY dist, cand_id) AS BIGINT) AS mm_rank,
-               cand_id, dist
-        FROM scored)
-      SELECT query_id, mm_rank, cand_id, dist FROM r
-      WHERE mm_rank <= 5
-      ORDER BY query_id, mm_rank"""
-    })
+    (s, dir) => servingTopK(s, dir, "image", lane = None, k = 5),
+    Some(topkSql("image", lane = None, k = 5)))
 
   /** PERSISTED media fingerprint artifacts (r12 optimization round): the
     * pHash table, audio fingerprint bands, video essence signature, and
     * decoded media dimensions, each written ONCE per (session, dir)
-    * behind the shared write-once guard — exactly what the serving-lane
-    * comments always declared ("in production the halves are a persisted
-    * artifact, this is its stand-in"): decode/fingerprint once in a
+    * behind the shared write-once guard: decode/fingerprint once in a
     * batch job, serve every probe / admission / funnel pass from the
     * catalog table. The FIT queries (mm_media_meta, mm_phash,
     * mm_audio_fingerprint, mm_video_neardup) still measure the real
     * container decode; only downstream serving consumers read tables.
     * Values are bit-identical: the fingerprints are integers/hex strings
     * and parquet round-trips them exactly. */
-  private def mediaTable(s: org.apache.spark.sql.SparkSession, dir: String,
-      kind: String)(frame: => org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = {
+  private def mediaTable(s: SparkSession, dir: String, kind: String)(
+      frame: => DataFrame): DataFrame = {
     val name = graft.Artifacts.table(s, kind, dir) { base =>
       // parallel file layout at write time: the decode runs over the
       // documents scan's single input split, so an un-repartitioned save
@@ -588,347 +422,93 @@ object MultimodalQueries {
     s.table(name)
   }
 
-  private[queries] def phashTable(s: org.apache.spark.sql.SparkSession,
-      dir: String): org.apache.spark.sql.DataFrame =
+  private[queries] def phashTable(s: SparkSession, dir: String): DataFrame =
     mediaTable(s, dir, "phash")(
       mmPhash.fn(s, dir).select(col("doc_id"), col("phash")))
 
-  private[queries] def afpTable(s: org.apache.spark.sql.SparkSession,
-      dir: String): org.apache.spark.sql.DataFrame =
+  private[queries] def afpTable(s: SparkSession, dir: String): DataFrame =
     mediaTable(s, dir, "afp")(
-      Media.audioFingerprints(s,
-        Media.synthesize(graft.api.Tables.load(s, dir, "documents"))).toDF()
-        .select(col("doc_id"), col("b0"), col("b1"), col("b2"), col("b3")))
+      Media.audioFingerprints(s, Media.synthesize(Tables.load(s, dir, "documents")))
+        .toDF().select(col("doc_id"), col("b0"), col("b1"), col("b2"), col("b3")))
 
-  private[queries] def vsigTable(s: org.apache.spark.sql.SparkSession,
-      dir: String): org.apache.spark.sql.DataFrame =
+  private[queries] def vsigTable(s: SparkSession, dir: String): DataFrame =
     mediaTable(s, dir, "vsig")(
-      Media.videoSignatures(s,
-        Media.synthesize(graft.api.Tables.load(s, dir, "documents"))).toDF())
+      Media.videoSignatures(s, Media.synthesize(Tables.load(s, dir, "documents"))).toDF())
 
-  private[queries] def dimsTable(s: org.apache.spark.sql.SparkSession,
-      dir: String): org.apache.spark.sql.DataFrame =
+  private[queries] def dimsTable(s: SparkSession, dir: String): DataFrame =
     mediaTable(s, dir, "mediameta")(
-      Media.extractMeta(s,
-        Media.synthesize(graft.api.Tables.load(s, dir, "documents"))).toDF())
+      Media.extractMeta(s, Media.synthesize(Tables.load(s, dir, "documents"))).toDF())
 
   /** Build the persisted media artifacts eagerly (the Bench prep step). */
-  private[graft] def prepare(s: org.apache.spark.sql.SparkSession,
-      dir: String): Unit = {
+  private[graft] def prepare(s: SparkSession, dir: String): Unit = {
     phashTable(s, dir); afpTable(s, dir); vsigTable(s, dir); dimsTable(s, dir)
     ()
   }
 
-  /** (doc_id, h1, h2): the 64-bit pHash split into two 32-bit BIGINT
-    * halves — the columnar form every Hamming-distance serving pass
-    * scores against (two codegen hamming_distance calls per pair). */
-  def phashHalves(s: org.apache.spark.sql.SparkSession, dir: String)
-      : org.apache.spark.sql.DataFrame = {
-    import s.implicits._
-    phashTable(s, dir)
-      .select($"doc_id",
-        expr("CAST(conv(substring(phash, 1, 8), 16, 10) AS BIGINT)").as("h1"),
-        expr("CAST(conv(substring(phash, 9, 8), 16, 10) AS BIGINT)").as("h2"))
-  }
+  // ---- the media fingerprint kernel ----------------------------------
+  // Every modality's fingerprint has one shape, (doc_id, b0, b1, b2, b3):
+  // four 16-bit band keys. Near-dup pairs, admission and the funnel run
+  // through one band matcher; every top-k lane through one probe.
 
-  /** The audio fingerprint as two 32-bit halves (h1 = bands 0-1, h2 =
-    * bands 2-3) — the serving-side twin of [[Media.audioFingerprints]],
-    * packed so Hamming distance runs through two calls of the codegen
-    * hamming_distance expression exactly like the pHash lane. */
-  def afpHalves(s: org.apache.spark.sql.SparkSession, dir: String)
-      : org.apache.spark.sql.DataFrame = {
-    import s.implicits._
-    afpTable(s, dir)
-      .select($"doc_id",
-        ($"b0" * 65536L + $"b1").as("h1"),
-        ($"b2" * 65536L + $"b3").as("h2"))
-  }
+  /** The persisted fingerprint `(doc_id, b0..b3)` of one modality:
+    * "image" (the pHash's 16-bit blocks), "audio" (PCM energy bands) or
+    * "video" (essence byte-sum bands). */
+  def fingerprints(s: SparkSession, dir: String, modality: String): DataFrame =
+    modality match {
+      case "image" => phashBands(phashTable(s, dir))
+      case "audio" => afpTable(s, dir)
+      case "video" => vsigTable(s, dir)
+    }
 
-  /** The IMAGE ingest-admission gate — the multimodal mirror of
-    * st_ingest_admission, in ONE declarative plan: an arriving image
-    * (doc_id ending in 0, the st_phash_serve lane) is admitted only when
-    * it passes the resolution-quality gate (width×height ≥ 16384, the
-    * mm_resolution_filter rule) AND has NO corpus pHash within Hamming
-    * distance ≤ 3 (the EXACT 4×16-bit pigeonhole candidate join — never
-    * all-pairs). Both verdicts fuse in one plan: real container decode
-    * for the dimensions, per-byte bit_count distance on candidates, a
-    * broadcast left-join for the duplicate counts. Stateless per batch,
-    * so the identical plan serves under foreachBatch. The oracle replays
-    * dimensions AND pHash from the generation bytes. 100 TB shape:
-    * per-arrival work = its band buckets' occupancy; the corpus blocks
-    * table is a persisted bucketed artifact. */
-  /** The image-admission transform over an ARRIVING (doc_id, phash)
-    * frame against the static corpus blocks + dims artifacts —
-    * input-agnostic (no stateful operator), so the identical transform
-    * runs per micro-batch under foreachBatch (StreamingSpec). */
-  def imageAdmission(s: org.apache.spark.sql.SparkSession,
-      dims: org.apache.spark.sql.DataFrame,
-      corpusBlocks: org.apache.spark.sql.DataFrame,
-      arriving: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    import s.implicits._
-    val arrBlocks = arriving.select($"doc_id", $"phash",
-      posexplode(array((0 until 4).map(k =>
-        substring($"phash", 1 + 4 * k, 4)): _*)).as(Seq("blk", "key")))
-      .select($"blk", $"key", $"doc_id", $"phash".as("ph_a"))
-    val dist = (0 until 8).map(k =>
-      s"bit_count(CAST(conv(substring(ph_a, ${2 * k + 1}, 2), 16, 10) AS INT) ^ " +
-        s"CAST(conv(substring(ph_b, ${2 * k + 1}, 2), 16, 10) AS INT))")
-      .mkString(" + ")
-    val hits = arrBlocks.join(corpusBlocks, Seq("blk", "key"))
-      .select($"doc_id", $"doc_b", $"ph_a", $"ph_b").distinct()
+  /** A `(doc_id, phash)` frame's fingerprint: the 16-hex-digit pHash's
+    * four 4-digit blocks as 16-bit band keys. */
+  def phashBands(ph: DataFrame): DataFrame =
+    ph.select(col("doc_id") +: (0 until 4).map(k => expr(
+      s"CAST(conv(substring(phash, ${1 + 4 * k}, 4), 16, 10) AS BIGINT)").as(bands(k))): _*)
+
+  /** `(doc_id, h1, h2)`: a fingerprint's bands packed into two 32-bit
+    * halves (h1 = b0·2¹⁶ + b1, h2 = b2·2¹⁶ + b3), the form the top-k
+    * probe scores with two codegen hamming_distance calls. */
+  def halves(fp: DataFrame): DataFrame =
+    fp.select(col("doc_id"), (col("b0") * 65536L + col("b1")).as("h1"),
+      (col("b2") * 65536L + col("b3")).as("h2"))
+
+  /** Near-duplicate matches between fingerprint frames `a` and `b` (each
+    * `(doc_id, b0..b3)` plus the extra equi-join `keys`): rows `(doc_id,
+    * doc_b, dist)` at Hamming distance ≤ 3. Three flipped bits leave at
+    * least one of the four 16-bit bands intact, so the (blk, key)
+    * equi-join over the exploded bands finds every match (pigeonhole) and
+    * is never all-pairs; the distance runs only on distinct candidates. */
+  def bandMatch(a: DataFrame, b: DataFrame, keys: Seq[String] = Nil): DataFrame = {
+    def exploded(fp: DataFrame, id: String, p: String) = fp.select(
+      (keys.map(col) :+ col("doc_id").as(id)) ++ bands.indices.map(k =>
+        col(bands(k)).as(s"$p$k")) :+
+        posexplode(array(bands.map(col): _*)).as(Seq("blk", "key")): _*)
+    val ab = (0 until 4).map(k => s"a$k") ++ (0 until 4).map(k => s"c$k")
+    val dist = (0 until 4).map(k => s"bit_count(a$k ^ c$k)").mkString(" + ")
+    exploded(a, "doc_id", "a").join(exploded(b, "doc_b", "c"), keys ++ Seq("blk", "key"))
+      .select("doc_id", "doc_b" +: ab: _*).distinct()
       .withColumn("dist", expr(s"CAST($dist AS BIGINT)"))
-      .filter($"dist" <= 3L)
-      .groupBy($"doc_id").agg(count(lit(1)).as("n_dups"))
-    arriving.select($"doc_id")
-      .join(dims, Seq("doc_id"))
-      .join(broadcast(hits), Seq("doc_id"), "left_outer")
-      .select($"doc_id", $"width", $"height",
-        coalesce($"n_dups", lit(0L)).as("n_dups"))
-      .withColumn("admitted",
-        $"width" * $"height" >= 16384L && $"n_dups" === 0L)
-      .orderBy($"doc_id")
+      .filter(col("dist") <= 3L)
+      .select("doc_id", "doc_b", "dist")
   }
 
-  val stImageAdmission = GraftQuery(
-    "st_image_admission",
-    (s, dir) => {
-      import s.implicits._
-      // serving/admission path: probe the PERSISTED artifacts (the 100 TB
-      // contract this query's scaladoc states), never re-decode per batch
-      val dims = dimsTable(s, dir)
-        .filter($"media_type" === "image")
-        .select($"doc_id", $"width", $"height")
-      val ph = phashTable(s, dir)
-      val corpusBlocks = ph.filter($"doc_id" % 10 =!= 0)
-        .select($"doc_id", $"phash",
-          posexplode(array((0 until 4).map(k =>
-            substring($"phash", 1 + 4 * k, 4)): _*)).as(Seq("blk", "key")))
-        .select($"blk", $"key", $"doc_id".as("doc_b"), $"phash".as("ph_b"))
-      // the admission set is the pHash-able arriving lane (decodable
-      // container slots), joined to its real decoded dimensions
-      imageAdmission(s, dims, corpusBlocks, ph.filter($"doc_id" % 10 === 0))
-    },
-    Some {
-      val byteList = (0 until 8).map(phashByteSql).mkString(", ")
-      val blockKeys = (0 until 4).map(k =>
-        s"pb[${2 * k + 1}] * 256 + pb[${2 * k + 2}] AS k$k").mkString(", ")
-      val bandJoin = (0 until 4).map(k => s"a.k$k = b.k$k").mkString(" OR ")
-      val dist = (1 to 8).map(i =>
-        s"BIT_COUNT(XOR(a.pb[$i], b.pb[$i]))").mkString(" + ")
-      s"""
-      WITH $paramsCte,
-      img AS (
-        SELECT doc_id, text, CAST((doc_id // 3) % 5 AS INTEGER) AS slot
-        FROM documents
-        WHERE doc_id % 3 = 0 AND (doc_id // 3) % 5 IN (0, 1, 2)
-          AND OCTET_LENGTH(ENCODE(text)) >= 64),
-      codes AS (
-        SELECT doc_id, slot,
-               list_transform(range(1, 65),
-                              i -> ascii(substr(text, CAST(i AS INTEGER), 1))) AS c
-        FROM img),
-      m AS (SELECT doc_id, slot, c, list_sum(c) // 64 AS mean FROM codes),
-      phh AS (SELECT doc_id, [$byteList] AS pb FROM m),
-      keyed AS (SELECT doc_id, pb, $blockKeys FROM phh),
-      corpus AS (SELECT * FROM keyed WHERE doc_id % 10 <> 0),
-      arr AS (SELECT * FROM keyed WHERE doc_id % 10 = 0),
-      cand AS (
-        SELECT DISTINCT a.doc_id, b.doc_id AS doc_b,
-               CAST($dist AS BIGINT) AS dist
-        FROM arr a JOIN corpus b ON ($bandJoin)),
-      hits AS (
-        SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_dups
-        FROM cand WHERE dist <= 3 GROUP BY doc_id)
-      SELECT a.doc_id, mt.width, mt.height,
-             COALESCE(h.n_dups, 0) AS n_dups,
-             (mt.width * mt.height >= 16384
-              AND COALESCE(h.n_dups, 0) = 0) AS admitted
-      FROM arr a
-      JOIN meta mt USING (doc_id)
-      LEFT JOIN hits h USING (doc_id)
-      ORDER BY doc_id"""
-    })
+  /** Near-duplicate pairs `(doc_a, doc_b, dist)`, doc_a < doc_b, within one
+    * fingerprint frame. */
+  private def neardupPairs(fp: DataFrame): DataFrame =
+    bandMatch(fp, fp).filter(col("doc_id") < col("doc_b"))
+      .select(col("doc_id").as("doc_a"), col("doc_b"), col("dist"))
+      .orderBy("doc_a", "doc_b")
 
-  /** The shared oracle CTE chain producing hv(doc_id, h1, h2) from the
-    * audio generation formula — the DuckDB twin of [[afpHalves]]. */
-  private[queries] def afpHvCteSql: String = """
-      aud AS (
-        SELECT doc_id,
-               ASCII(SUBSTR(MD5(text), 5, 1)) * 256 + ASCII(SUBSTR(MD5(text), 6, 1)) AS d
-        FROM documents
-        WHERE doc_id % 3 = 1 AND (doc_id // 3) % 4 = 0),
-      f AS (SELECT doc_id, d FROM aud WHERE d >= 4),
-      band AS (
-        SELECT f.doc_id, t.k,
-               CAST(SUM( ((64 + (f.d * 11 + g.i * 37) % 97) - 128)
-                       * ((64 + (f.d * 11 + g.i * 37) % 97) - 128) )
-                    % 65536 AS BIGINT) AS b
-        FROM f, UNNEST(RANGE(0, 4)) t(k),
-             LATERAL (SELECT UNNEST(GENERATE_SERIES(
-               t.k * f.d // 4, (t.k + 1) * f.d // 4 - 1)) AS i) g
-        GROUP BY 1, 2),
-      fpb AS (
-        SELECT doc_id,
-               MAX(CASE WHEN k = 0 THEN b END) AS b0,
-               MAX(CASE WHEN k = 1 THEN b END) AS b1,
-               MAX(CASE WHEN k = 2 THEN b END) AS b2,
-               MAX(CASE WHEN k = 3 THEN b END) AS b3
-        FROM band GROUP BY doc_id),
-      hv AS (SELECT doc_id, b0 * 65536 + b1 AS h1, b2 * 65536 + b3 AS h2
-             FROM fpb)"""
-
-  /** Audio fingerprint top-k SERVING — the audio twin of mm_phash_topk,
-    * completing the audio ladder (fingerprint → near-dup pairs → top-k
-    * serving → streaming twin): for the three lowest-id audio documents,
-    * the five nearest corpus fingerprints by Hamming distance over the
-    * packed 32-bit halves, scored by two codegen hamming_distance calls,
-    * broadcast query arm, per-query WindowGroupLimit. 100 TB shape:
-    * label-once/serve-many over the persisted fingerprint artifact, one
-    * corpus scan per query batch, queries×k rows out. */
-  val mmAfpTopk = GraftQuery(
-    "mm_afp_topk",
-    (s, dir) => {
-      import s.implicits._
-      val hv = afpHalves(s, dir).cache()
-      val q = hv.orderBy($"doc_id").limit(3)
-        .select($"doc_id".as("query_id"), $"h1".as("q1"), $"h2".as("q2"))
-      phashProbe(s, hv, q, topK = 5)
-    },
-    Some(s"""
-      WITH $afpHvCteSql,
-      q AS (SELECT doc_id AS query_id, h1 AS q1, h2 AS q2
-            FROM hv ORDER BY doc_id LIMIT 3),
-      scored AS (
-        SELECT q.query_id, c.doc_id AS cand_id,
-               CAST(BIT_COUNT(XOR(q.q1, c.h1)) + BIT_COUNT(XOR(q.q2, c.h2))
-                 AS BIGINT) AS dist
-        FROM hv c CROSS JOIN q WHERE c.doc_id <> q.query_id),
-      r AS (
-        SELECT query_id,
-               CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-                 ORDER BY dist, cand_id) AS BIGINT) AS mm_rank,
-               cand_id, dist
-        FROM scored)
-      SELECT query_id, mm_rank, cand_id, dist FROM r
-      WHERE mm_rank <= 5
-      ORDER BY query_id, mm_rank"""))
-
-  /** The shared oracle CTE chain producing hv(doc_id, h1, h2) from the
-    * video essence (= the document bytes carried in the AVI movi / MP4
-    * mdat box) — the DuckDB twin of [[Media.videoSignatures]]. The text
-    * is ASCII in the generated corpus, so ascii(substr(..)) IS the
-    * essence byte. */
-  private[queries] def vsigHvCteSql: String = """
-      vid AS (
-        SELECT doc_id, text, LENGTH(text) AS n
-        FROM documents
-        WHERE doc_id % 3 = 2 AND LENGTH(text) >= 4),
-      byteb AS (
-        SELECT v.doc_id, t.k,
-               CAST(SUM(ASCII(SUBSTR(v.text, CAST(g.i AS INTEGER), 1)))
-                    % 65536 AS BIGINT) AS b
-        FROM vid v, UNNEST(RANGE(0, 4)) t(k),
-             LATERAL (SELECT UNNEST(GENERATE_SERIES(
-               t.k * v.n // 4 + 1, (t.k + 1) * v.n // 4)) AS i) g
-        GROUP BY 1, 2),
-      fpb AS (
-        SELECT doc_id,
-               MAX(CASE WHEN k = 0 THEN b END) AS b0,
-               MAX(CASE WHEN k = 1 THEN b END) AS b1,
-               MAX(CASE WHEN k = 2 THEN b END) AS b2,
-               MAX(CASE WHEN k = 3 THEN b END) AS b3
-        FROM byteb GROUP BY doc_id),
-      hv AS (SELECT doc_id, b0 * 65536 + b1 AS h1, b2 * 65536 + b3 AS h2
-             FROM fpb)"""
-
-  /** Video NEAR-duplicate pairs over the banded essence signature — the
-    * video leg of the multimodal dedup ladder, completing the modality
-    * matrix (image pHash, audio energy fingerprint, video essence
-    * signature — all with the same EXACT 4×16-bit pigeonhole band join:
-    * Hamming ≤ 3 leaves ≥ 1 band intact, so the candidate join is never
-    * all-pairs). Oracle replays the essence bytes from the generation
-    * contract (AVI movi / MP4 mdat carry the document bytes). 100 TB
-    * shape: signature once (mapPartitions, no shuffle), band equi-join
-    * on 16-bit keys, distance only on candidates. */
-  val mmVideoNeardup = GraftQuery(
-    "mm_video_neardup",
-    (s, dir) => {
-      import s.implicits._
-      val media = Media.synthesize(Tables.load(s, dir, "documents"))
-      val fps = Media.videoSignatures(s, media).toDF().cache()
-      val banded = fps.select($"doc_id", $"b0", $"b1", $"b2", $"b3",
-        posexplode(array($"b0", $"b1", $"b2", $"b3")).as(Seq("blk", "key")))
-      val a = banded.select($"blk", $"key", $"doc_id".as("doc_a"),
-        $"b0".as("a0"), $"b1".as("a1"), $"b2".as("a2"), $"b3".as("a3"))
-      val b = banded.select($"blk", $"key", $"doc_id".as("doc_b"),
-        $"b0".as("c0"), $"b1".as("c1"), $"b2".as("c2"), $"b3".as("c3"))
-      val dist = (0 until 4).map(k => s"bit_count(a$k ^ c$k)").mkString(" + ")
-      a.join(b, Seq("blk", "key"))
-        .filter($"doc_a" < $"doc_b")
-        .select($"doc_a", $"doc_b", $"a0", $"a1", $"a2", $"a3",
-          $"c0", $"c1", $"c2", $"c3").distinct()
-        .withColumn("dist", expr(s"CAST($dist AS BIGINT)"))
-        .filter($"dist" <= 3L)
-        .select($"doc_a", $"doc_b", $"dist")
-        .orderBy($"doc_a", $"doc_b")
-    },
-    Some {
-      val dist = (0 until 4).map(k =>
-        s"BIT_COUNT(XOR(a.b$k, b.b$k))").mkString(" + ")
-      val bandJoin = (0 until 4).map(k => s"a.b$k = b.b$k").mkString(" OR ")
-      s"""
-      WITH $vsigHvCteSql
-      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-             CAST($dist AS BIGINT) AS dist
-      FROM fpb a JOIN fpb b
-        ON a.doc_id < b.doc_id AND ($bandJoin)
-      WHERE $dist <= 3
-      ORDER BY doc_a, doc_b"""
-    })
-
-  /** Video signature top-k SERVING — the video twin of mm_phash_topk /
-    * mm_afp_topk: for the three lowest-id videos, the five nearest
-    * corpus signatures by Hamming distance over the packed halves; two
-    * codegen hamming_distance calls, broadcast query arm, per-query
-    * WindowGroupLimit. */
-  val mmVsigTopk = GraftQuery(
-    "mm_vsig_topk",
-    (s, dir) => {
-      import s.implicits._
-      val hv = vsigTable(s, dir)
-        .select($"doc_id", $"h1", $"h2").cache()
-      val q = hv.orderBy($"doc_id").limit(3)
-        .select($"doc_id".as("query_id"), $"h1".as("q1"), $"h2".as("q2"))
-      phashProbe(s, hv, q, topK = 5)
-    },
-    Some(s"""
-      WITH $vsigHvCteSql,
-      q AS (SELECT doc_id AS query_id, h1 AS q1, h2 AS q2
-            FROM hv ORDER BY doc_id LIMIT 3),
-      scored AS (
-        SELECT q.query_id, c.doc_id AS cand_id,
-               CAST(BIT_COUNT(XOR(q.q1, c.h1)) + BIT_COUNT(XOR(q.q2, c.h2))
-                 AS BIGINT) AS dist
-        FROM hv c CROSS JOIN q WHERE c.doc_id <> q.query_id),
-      r AS (
-        SELECT query_id,
-               CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-                 ORDER BY dist, cand_id) AS BIGINT) AS mm_rank,
-               cand_id, dist
-        FROM scored)
-      SELECT query_id, mm_rank, cand_id, dist FROM r
-      WHERE mm_rank <= 5
-      ORDER BY query_id, mm_rank"""))
-
-  /** Stream-static pHash probe: arriving (query_id, q1, q2) rows score
-    * the STATIC corpus halves and keep each query's topK by Hamming
-    * distance — per-batch stateless, so the identical plan serves under
-    * Structured Streaming foreachBatch (StreamingSpec pins streaming ==
-    * batch across a batch split). */
-  def phashProbe(s: org.apache.spark.sql.SparkSession,
-      corpus: org.apache.spark.sql.DataFrame,
-      arriving: org.apache.spark.sql.DataFrame,
-      topK: Int): org.apache.spark.sql.DataFrame = {
+  /** Stream-static top-k probe: arriving `(query_id, q1, q2)` rows score
+    * the static corpus halves `(doc_id, h1, h2)` and keep each query's
+    * topK by Hamming distance (ties by candidate id): broadcast arriving
+    * rows, two codegen hamming_distance calls per pair, per-query
+    * WindowGroupLimit. Stateless per batch, so the identical plan serves
+    * under Structured Streaming foreachBatch (StreamingSpec pins
+    * streaming == batch across a batch split). */
+  def hammingTopK(s: SparkSession, corpus: DataFrame, arriving: DataFrame,
+      topK: Int): DataFrame = {
     import s.implicits._
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy($"query_id").orderBy($"dist", $"cand_id")
@@ -941,27 +521,224 @@ object MultimodalQueries {
       .orderBy($"query_id", $"mm_rank")
   }
 
-  /** The shared oracle CTE chain producing hv(doc_id, h1, h2) from the
-    * generation bytes — the DuckDB twin of [[phashHalves]]. */
-  private[queries] def phashHvCteSql: String = {
-    val byteList = (0 until 8).map(phashByteSql).mkString(", ")
-    s"""img AS (
-        SELECT doc_id, text, CAST((doc_id // 3) % 5 AS INTEGER) AS slot
+  /** One modality's top-k serving lane over its persisted fingerprint
+    * (cached: corpus and queries both read it). `lane = None`: the three
+    * lowest ids query the whole corpus; `Some(r)`: the ids ending in r
+    * arrive as queries against the rest. */
+  private[queries] def servingTopK(s: SparkSession, dir: String, modality: String,
+      lane: Option[Int], k: Int): DataFrame = {
+    val hv = halves(fingerprints(s, dir, modality)).cache()
+    val (corpus, arriving) = lane match {
+      case None => (hv, hv.orderBy("doc_id").limit(3))
+      case Some(r) => (hv.filter(col("doc_id") % 10 =!= r), hv.filter(col("doc_id") % 10 === r))
+    }
+    hammingTopK(s, corpus, arriving.select(col("doc_id").as("query_id"),
+      col("h1").as("q1"), col("h2").as("q2")), k)
+  }
+
+  /** The DuckDB twin of [[fingerprints]]: a CTE chain ending in
+    * `<modality>_fp(doc_id, b0..b3)`, replayed from the generation
+    * contract. Image: the 8×8 average hash over the first 64 essence
+    * bytes (MSB-first against the floor-mean), 16 bits per band. Audio:
+    * the waveform 64 + (d·11 + i·37) mod 97 over each quarter's samples,
+    * squared midline deviations summed mod 2¹⁶. Video: the essence (the
+    * ASCII text) byte sums per quarter mod 2¹⁶. */
+  private[queries] def fpCteSql(modality: String): String = {
+    def pivot(src: String) = s"""
+        SELECT doc_id, ${bands.indices.map(k =>
+          s"MAX(CASE WHEN k = $k THEN b END) AS b$k").mkString(", ")}
+        FROM $src GROUP BY doc_id"""
+    modality match {
+      case "image" => s"""
+      img AS (
+        SELECT doc_id, text
         FROM documents
         WHERE doc_id % 3 = 0 AND (doc_id // 3) % 5 IN (0, 1, 2)
           AND OCTET_LENGTH(ENCODE(text)) >= 64),
       codes AS (
-        SELECT doc_id, slot,
+        SELECT doc_id,
                list_transform(range(1, 65),
                               i -> ascii(substr(text, CAST(i AS INTEGER), 1))) AS c
         FROM img),
-      m AS (SELECT doc_id, slot, c, list_sum(c) // 64 AS mean FROM codes),
-      ph AS (SELECT doc_id, [$byteList] AS pb FROM m),
-      hv AS (SELECT doc_id,
-               ((CAST(pb[1] AS BIGINT) * 256 + pb[2]) * 256 + pb[3]) * 256 + pb[4] AS h1,
-               ((CAST(pb[5] AS BIGINT) * 256 + pb[6]) * 256 + pb[7]) * 256 + pb[8] AS h2
-             FROM ph)"""
+      m AS (SELECT doc_id, c, list_sum(c) // 64 AS mean FROM codes),
+      image_fp AS (
+        SELECT doc_id, ${(0 until 4).map(k => (0 until 16).map(i =>
+          s"CASE WHEN c[${16 * k + i + 1}] > mean THEN ${1 << (15 - i)} ELSE 0 END")
+          .mkString("CAST(", " + ", s" AS BIGINT) AS b$k")).mkString(",\n               ")}
+        FROM m)"""
+      case "audio" => s"""
+      aud AS (
+        SELECT doc_id,
+               ASCII(SUBSTR(MD5(text), 5, 1)) * 256 + ASCII(SUBSTR(MD5(text), 6, 1)) AS d
+        FROM documents
+        WHERE doc_id % 3 = 1 AND (doc_id // 3) % 4 = 0),
+      audband AS (
+        SELECT f.doc_id, t.k,
+               CAST(SUM( ((64 + (f.d * 11 + g.i * 37) % 97) - 128)
+                       * ((64 + (f.d * 11 + g.i * 37) % 97) - 128) )
+                    % 65536 AS BIGINT) AS b
+        FROM aud f, UNNEST(RANGE(0, 4)) t(k),
+             LATERAL (SELECT UNNEST(GENERATE_SERIES(
+               t.k * f.d // 4, (t.k + 1) * f.d // 4 - 1)) AS i) g
+        WHERE f.d >= 4
+        GROUP BY 1, 2),
+      audio_fp AS (${pivot("audband")})"""
+      case "video" => s"""
+      vid AS (
+        SELECT doc_id, text, LENGTH(text) AS n
+        FROM documents
+        WHERE doc_id % 3 = 2 AND LENGTH(text) >= 4),
+      vidband AS (
+        SELECT v.doc_id, t.k,
+               CAST(SUM(ASCII(SUBSTR(v.text, CAST(g.i AS INTEGER), 1)))
+                    % 65536 AS BIGINT) AS b
+        FROM vid v, UNNEST(RANGE(0, 4)) t(k),
+             LATERAL (SELECT UNNEST(GENERATE_SERIES(
+               t.k * v.n // 4 + 1, (t.k + 1) * v.n // 4)) AS i) g
+        GROUP BY 1, 2),
+      video_fp AS (${pivot("vidband")})"""
+    }
   }
+
+  /** The DuckDB twin of [[bandMatch]]: `(doc_id, doc_b, dist)` over
+    * fingerprint relations `a` and `b` joined on `on` and any equal band,
+    * at Hamming distance ≤ 3. */
+  private[queries] def bandPairsSql(a: String, b: String, on: String): String = {
+    val dist = bands.map(c => s"BIT_COUNT(XOR(a.$c, b.$c))").mkString(" + ")
+    s"""
+        SELECT a.doc_id, b.doc_id AS doc_b, CAST($dist AS BIGINT) AS dist
+        FROM $a a JOIN $b b
+          ON $on AND (${bands.map(c => s"a.$c = b.$c").mkString(" OR ")})
+        WHERE $dist <= 3"""
+  }
+
+  /** The DuckDB twin of [[neardupPairs]] over one modality's fingerprint. */
+  private def neardupPairsSql(modality: String): String = s"""
+      WITH ${fpCteSql(modality)}
+      SELECT doc_id AS doc_a, doc_b, dist FROM (${
+        bandPairsSql(s"${modality}_fp", s"${modality}_fp", "a.doc_id < b.doc_id")})
+      ORDER BY doc_a, doc_b"""
+
+  /** The DuckDB twin of [[servingTopK]]. */
+  private[queries] def topkSql(modality: String, lane: Option[Int], k: Int): String = {
+    val (corpus, queries) = lane match {
+      case None => ("TRUE", "ORDER BY doc_id LIMIT 3")
+      case Some(r) => (s"doc_id % 10 <> $r", s"WHERE doc_id % 10 = $r")
+    }
+    s"""
+      WITH ${fpCteSql(modality)},
+      hv AS (SELECT doc_id, b0 * 65536 + b1 AS h1, b2 * 65536 + b3 AS h2
+             FROM ${modality}_fp),
+      corpus AS (SELECT * FROM hv WHERE $corpus),
+      q AS (SELECT doc_id AS query_id, h1 AS q1, h2 AS q2 FROM hv $queries),
+      scored AS (
+        SELECT q.query_id, c.doc_id AS cand_id,
+               CAST(BIT_COUNT(XOR(q.q1, c.h1)) + BIT_COUNT(XOR(q.q2, c.h2))
+                 AS BIGINT) AS dist
+        FROM corpus c CROSS JOIN q WHERE c.doc_id <> q.query_id),
+      r AS (
+        SELECT query_id,
+               CAST(ROW_NUMBER() OVER (PARTITION BY query_id
+                 ORDER BY dist, cand_id) AS BIGINT) AS mm_rank,
+               cand_id, dist
+        FROM scored)
+      SELECT query_id, mm_rank, cand_id, dist FROM r
+      WHERE mm_rank <= $k
+      ORDER BY query_id, mm_rank"""
+  }
+
+  /** The IMAGE ingest-admission gate — the multimodal mirror of
+    * st_ingest_admission, in ONE declarative plan: an arriving image
+    * (doc_id ending in 0, the st_phash_serve lane) is admitted only when
+    * it passes the resolution-quality gate (width×height ≥ 16384, the
+    * mm_resolution_filter rule) AND has NO corpus pHash within Hamming
+    * distance ≤ 3 (the shared band matcher — never all-pairs). Both
+    * verdicts fuse in one plan: real container decode for the
+    * dimensions, a broadcast left-join for the duplicate counts. The
+    * oracle replays dimensions AND pHash from the generation bytes.
+    * 100 TB shape: per-arrival work = its band buckets' occupancy. */
+  val stImageAdmission = GraftQuery(
+    "st_image_admission",
+    (s, dir) => {
+      import s.implicits._
+      // serving/admission path: probe the PERSISTED artifacts, never
+      // re-decode per batch; the arriving set is the pHash-able lane
+      // (decodable container slots), joined to its decoded dimensions
+      val dims = dimsTable(s, dir)
+        .filter($"media_type" === "image")
+        .select($"doc_id", $"width", $"height")
+      val fp = fingerprints(s, dir, "image")
+      imageAdmission(s, dims, fp.filter($"doc_id" % 10 =!= 0), fp.filter($"doc_id" % 10 === 0))
+    },
+    Some(s"""
+      WITH $paramsCte, ${fpCteSql("image")},
+      corpus AS (SELECT * FROM image_fp WHERE doc_id % 10 <> 0),
+      arr AS (SELECT * FROM image_fp WHERE doc_id % 10 = 0),
+      hits AS (
+        SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_dups
+        FROM (${bandPairsSql("arr", "corpus", "TRUE")}) GROUP BY doc_id)
+      SELECT a.doc_id, mt.width, mt.height,
+             COALESCE(h.n_dups, 0) AS n_dups,
+             (mt.width * mt.height >= 16384
+              AND COALESCE(h.n_dups, 0) = 0) AS admitted
+      FROM arr a
+      JOIN meta mt USING (doc_id)
+      LEFT JOIN hits h USING (doc_id)
+      ORDER BY doc_id"""))
+
+  /** The image-admission transform: ARRIVING fingerprints against the
+    * static corpus fingerprints and dims artifacts — input-agnostic (no
+    * stateful operator), so the identical transform runs per micro-batch
+    * under foreachBatch (StreamingSpec). */
+  def imageAdmission(s: SparkSession, dims: DataFrame, corpus: DataFrame,
+      arriving: DataFrame): DataFrame = {
+    import s.implicits._
+    val hits = bandMatch(arriving, corpus)
+      .groupBy($"doc_id").agg(count(lit(1)).as("n_dups"))
+    arriving.select($"doc_id")
+      .join(dims, Seq("doc_id"))
+      .join(broadcast(hits), Seq("doc_id"), "left_outer")
+      .select($"doc_id", $"width", $"height",
+        coalesce($"n_dups", lit(0L)).as("n_dups"))
+      .withColumn("admitted",
+        $"width" * $"height" >= 16384L && $"n_dups" === 0L)
+      .orderBy($"doc_id")
+  }
+
+  /** Audio fingerprint top-k SERVING — the audio twin of mm_phash_topk,
+    * completing the audio ladder (fingerprint → near-dup pairs → top-k
+    * serving → streaming twin): for the three lowest-id audio documents,
+    * the five nearest corpus fingerprints by Hamming distance. 100 TB
+    * shape: label-once/serve-many over the persisted fingerprint
+    * artifact, one corpus scan per query batch, queries×k rows out. */
+  val mmAfpTopk = GraftQuery(
+    "mm_afp_topk",
+    (s, dir) => servingTopK(s, dir, "audio", lane = None, k = 5),
+    Some(topkSql("audio", lane = None, k = 5)))
+
+  /** Video NEAR-duplicate pairs over the banded essence signature — the
+    * video leg of the multimodal dedup ladder, completing the modality
+    * matrix (image pHash, audio energy fingerprint, video essence
+    * signature — all through the same band matcher). Oracle replays the
+    * essence bytes from the generation contract (AVI movi / MP4 mdat
+    * carry the document bytes). 100 TB shape: signature once
+    * (mapPartitions, no shuffle), band equi-join on 16-bit keys,
+    * distance only on candidates. */
+  val mmVideoNeardup = GraftQuery(
+    "mm_video_neardup",
+    (s, dir) => {
+      val media = Media.synthesize(Tables.load(s, dir, "documents"))
+      neardupPairs(Media.videoSignatures(s, media).toDF().cache())
+    },
+    Some(neardupPairsSql("video")))
+
+  /** Video signature top-k SERVING — the video twin of mm_phash_topk /
+    * mm_afp_topk: for the three lowest-id videos, the five nearest
+    * corpus signatures by Hamming distance. */
+  val mmVsigTopk = GraftQuery(
+    "mm_vsig_topk",
+    (s, dir) => servingTopK(s, dir, "video", lane = None, k = 5),
+    Some(topkSql("video", lane = None, k = 5)))
 
   /** Shot-boundary (scene-cut) statistics per video: consecutive sampled
     * frames are compared by the Hamming distance of their 60-bit frame
@@ -1120,96 +897,21 @@ object MultimodalQueries {
       GROUP BY dom.band
       ORDER BY dominant_band"""))
 
-  /** The unified per-modality fingerprint frame `(doc_id, modality,
-    * b0..b3)` — image pHash split into 4×16-bit bands, audio energy
-    * fingerprint bands, video essence signature bands. One row per
-    * fingerprintable media item; the common currency of the
-    * cross-modality funnel below. */
-  def mediaFingerprints(s: org.apache.spark.sql.SparkSession, dir: String)
-      : org.apache.spark.sql.DataFrame = {
-    import s.implicits._
-    val img = phashTable(s, dir).select(
-      $"doc_id" +: lit("image").as("modality") +:
-        (0 until 4).map(k => expr(
-          s"CAST(conv(substring(phash, ${1 + 4 * k}, 4), 16, 10) AS BIGINT)")
-          .as(s"b$k")): _*)
-    val aud = afpTable(s, dir)
-      .select($"doc_id", lit("audio").as("modality"), $"b0", $"b1", $"b2", $"b3")
-    val vid = vsigTable(s, dir)
-      .select($"doc_id", lit("video").as("modality"), $"b0", $"b1", $"b2", $"b3")
-    img.unionByName(aud).unionByName(vid)
-  }
+  /** Every modality's fingerprint in one frame, `(doc_id, modality,
+    * b0..b3)`: one row per fingerprintable media item, the common
+    * currency of the cross-modality funnel below. */
+  def mediaFingerprints(s: SparkSession, dir: String): DataFrame =
+    modalities.map(m => fingerprints(s, dir, m)
+      .select(col("doc_id") +: lit(m).as("modality") +: bands.map(col): _*))
+      .reduce(_ unionByName _)
 
-  /** The DuckDB twin of [[mediaFingerprints]]: CTE chain ending in
-    * `fps(doc_id, modality, b0..b3)` — the pHash bytes, the audio band
-    * energies, and the video essence byte sums, each replayed from the
-    * generation contract. */
-  private[queries] def mediaFpsCteSql: String = {
-    val byteList = (0 until 8).map(phashByteSql).mkString(", ")
-    s"""img AS (
-        SELECT doc_id, text, CAST((doc_id // 3) % 5 AS INTEGER) AS slot
-        FROM documents
-        WHERE doc_id % 3 = 0 AND (doc_id // 3) % 5 IN (0, 1, 2)
-          AND OCTET_LENGTH(ENCODE(text)) >= 64),
-      codes AS (
-        SELECT doc_id, slot,
-               list_transform(range(1, 65),
-                              i -> ascii(substr(text, CAST(i AS INTEGER), 1))) AS c
-        FROM img),
-      m AS (SELECT doc_id, slot, c, list_sum(c) // 64 AS mean FROM codes),
-      phh AS (SELECT doc_id, [$byteList] AS pb FROM m),
-      imgfp AS (
-        SELECT doc_id, 'image' AS modality,
-               ${(0 until 4).map(k =>
-                 s"CAST(pb[${2 * k + 1}] * 256 + pb[${2 * k + 2}] AS BIGINT) AS b$k")
-                 .mkString(",\n               ")}
-        FROM phh),
-      aud AS (
-        SELECT doc_id,
-               ASCII(SUBSTR(MD5(text), 5, 1)) * 256 + ASCII(SUBSTR(MD5(text), 6, 1)) AS gd
-        FROM documents
-        WHERE doc_id % 3 = 1 AND (doc_id // 3) % 4 = 0),
-      audf AS (SELECT doc_id, gd FROM aud WHERE gd >= 4),
-      audband AS (
-        SELECT f.doc_id, t.k,
-               CAST(SUM( ((64 + (f.gd * 11 + g.i * 37) % 97) - 128)
-                       * ((64 + (f.gd * 11 + g.i * 37) % 97) - 128) )
-                    % 65536 AS BIGINT) AS b
-        FROM audf f, UNNEST(RANGE(0, 4)) t(k),
-             LATERAL (SELECT UNNEST(GENERATE_SERIES(
-               t.k * f.gd // 4, (t.k + 1) * f.gd // 4 - 1)) AS i) g
-        GROUP BY 1, 2),
-      audfp AS (
-        SELECT doc_id, 'audio' AS modality,
-               MAX(CASE WHEN k = 0 THEN b END) AS b0,
-               MAX(CASE WHEN k = 1 THEN b END) AS b1,
-               MAX(CASE WHEN k = 2 THEN b END) AS b2,
-               MAX(CASE WHEN k = 3 THEN b END) AS b3
-        FROM audband GROUP BY doc_id),
-      vid AS (
-        SELECT doc_id, text, LENGTH(text) AS n
-        FROM documents
-        WHERE doc_id % 3 = 2 AND LENGTH(text) >= 4),
-      vidband AS (
-        SELECT v.doc_id, t.k,
-               CAST(SUM(ASCII(SUBSTR(v.text, CAST(g.i AS INTEGER), 1)))
-                    % 65536 AS BIGINT) AS b
-        FROM vid v, UNNEST(RANGE(0, 4)) t(k),
-             LATERAL (SELECT UNNEST(GENERATE_SERIES(
-               t.k * v.n // 4 + 1, (t.k + 1) * v.n // 4)) AS i) g
-        GROUP BY 1, 2),
-      vidfp AS (
-        SELECT doc_id, 'video' AS modality,
-               MAX(CASE WHEN k = 0 THEN b END) AS b0,
-               MAX(CASE WHEN k = 1 THEN b END) AS b1,
-               MAX(CASE WHEN k = 2 THEN b END) AS b2,
-               MAX(CASE WHEN k = 3 THEN b END) AS b3
-        FROM vidband GROUP BY doc_id),
-      fps AS (
-        SELECT * FROM imgfp
-        UNION ALL SELECT * FROM audfp
-        UNION ALL SELECT * FROM vidfp)"""
-  }
+  /** The DuckDB twin of [[mediaFingerprints]]: the three modality CTE
+    * chains ending in `fps(doc_id, modality, b0..b3)`. */
+  private[queries] def mediaFpsCteSql: String =
+    modalities.map(fpCteSql).mkString(",") + ",\n      fps AS (" +
+      modalities.map(m => s"""
+        SELECT doc_id, '$m' AS modality, ${bands.mkString(", ")} FROM ${m}_fp""")
+        .mkString("\n        UNION ALL") + ")"
 
   /** The CROSS-MODALITY admission capstone (VERDICT r11 #3) — the whole
     * multimodal curation funnel as ONE oracle-checked report: for every
@@ -1217,8 +919,8 @@ object MultimodalQueries {
     * verdicts (token-count quality + exact Bloom membership), the
     * semantic near-dup count (IVF-cell + LSH-bucket cosine gate), the
     * per-modality MEDIA near-dup count (image pHash / audio energy
-    * fingerprint / video essence signature, all through the same EXACT
-    * 4×16-bit pigeonhole band join — never all-pairs), and the final
+    * fingerprint / video essence signature, all through the shared band
+    * matcher [[bandMatch]] — never all-pairs), and the final
     * admit decision. Catalyst fuses every gate arm into one plan: two
     * broadcast model joins (Bloom word map, hit counts), one (cell,
     * bucket) equi-join, one (modality, band, key) equi-join. Stateless
@@ -1259,20 +961,8 @@ object MultimodalQueries {
         .agg(count(lit(1)).as("n_sem_dups"))
       // media tier: per-modality banded near-dup counts
       val fps = mediaFingerprints(s, dir).cache()
-      val banded = fps.select($"modality", $"doc_id", $"b0", $"b1", $"b2", $"b3",
-        posexplode(array($"b0", $"b1", $"b2", $"b3")).as(Seq("blk", "key")))
-      val arrB = banded.filter($"doc_id" % 10 === 7)
-        .select($"modality", $"blk", $"key", $"doc_id",
-          $"b0".as("a0"), $"b1".as("a1"), $"b2".as("a2"), $"b3".as("a3"))
-      val corB = banded.filter($"doc_id" % 10 =!= 7)
-        .select($"modality", $"blk", $"key", $"doc_id".as("doc_b"),
-          $"b0".as("c0"), $"b1".as("c1"), $"b2".as("c2"), $"b3".as("c3"))
-      val mdist = (0 until 4).map(k => s"bit_count(a$k ^ c$k)").mkString(" + ")
-      val mediaHits = arrB.join(corB, Seq("modality", "blk", "key"))
-        .select($"doc_id", $"doc_b", $"a0", $"a1", $"a2", $"a3",
-          $"c0", $"c1", $"c2", $"c3").distinct()
-        .withColumn("dist", expr(s"CAST($mdist AS BIGINT)"))
-        .filter($"dist" <= 3L)
+      val mediaHits = bandMatch(fps.filter($"doc_id" % 10 === 7),
+        fps.filter($"doc_id" % 10 =!= 7), Seq("modality"))
         .groupBy($"doc_id").agg(count(lit(1)).as("n_media_dups"))
       val fingerprinted = fps.filter($"doc_id" % 10 === 7)
         .select($"doc_id").distinct().withColumn("fp", lit(true))
@@ -1297,8 +987,7 @@ object MultimodalQueries {
       graft.functions.AnnIndexes.ivf(s, dir, k = 16).centroids, tau = 0.4,
       SimilarityQueries.duckBucket("embedding",
         SimilarityQueries.neardupBits(
-          Tables.load(s, dir, "embeddings").count())),
-      mediaFpsCteSql)))
+          Tables.load(s, dir, "embeddings").count())))))
 
   val all: Seq[GraftQuery] =
     Seq(mmMediaMeta, mmTypeStats, mmFrameSample, mmCodecStats, mmOrientationStats,

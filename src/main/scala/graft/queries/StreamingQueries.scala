@@ -681,129 +681,40 @@ object StreamingQueries {
   /** Online pHash serving — the streaming twin of mm_phash_topk: every
     * tenth image arrives as a QUERY (doc_id % 10 = 0) and probes the
     * STATIC corpus pHash table for its 3 nearest neighbors by Hamming
-    * distance. The probe ([[MultimodalQueries.phashProbe]]) is stateless
+    * distance. The probe ([[MultimodalQueries.hammingTopK]]) is stateless
     * per batch — broadcast arriving rows, two codegen hamming_distance
     * calls per pair, per-query group-limit — so the identical plan runs
     * under foreachBatch; StreamingSpec pins streaming == batch across a
     * two-batch split. 100 TB shape: label-once/serve-many over the
-    * persisted pHash artifact, arriving side always micro-batch-sized. */
+    * persisted pHash artifact (written with parallel file layout, so the
+    * probe inherits its split count), arriving side always
+    * micro-batch-sized. */
   val stPhashServe = GraftQuery(
     "st_phash_serve",
-    (s, dir) => {
-      import s.implicits._
-      // cache: corpus and arriving both derive from the pHash decode —
-      // without it the image-essence walk runs once per plan arm (the
-      // sf1 sweep measured 27 s uncached vs ~3 s cached; in production
-      // the halves are a persisted artifact, this is its stand-in)
-      // the artifact is written with parallel file layout, so the probe
-      // inherits its split count — no per-query repartition needed
-      val hv = MultimodalQueries.phashHalves(s, dir).cache()
-      val corpus = hv.filter($"doc_id" % 10 =!= 0)
-      val arriving = hv.filter($"doc_id" % 10 === 0)
-        .select($"doc_id".as("query_id"), $"h1".as("q1"), $"h2".as("q2"))
-      MultimodalQueries.phashProbe(s, corpus, arriving, topK = 3)
-    },
-    Some(s"""
-      WITH ${MultimodalQueries.phashHvCteSql},
-      corpus AS (SELECT * FROM hv WHERE doc_id % 10 <> 0),
-      arr AS (SELECT doc_id AS query_id, h1 AS q1, h2 AS q2
-              FROM hv WHERE doc_id % 10 = 0),
-      scored AS (
-        SELECT a.query_id, c.doc_id AS cand_id,
-               CAST(BIT_COUNT(XOR(a.q1, c.h1)) + BIT_COUNT(XOR(a.q2, c.h2))
-                 AS BIGINT) AS dist
-        FROM corpus c CROSS JOIN arr a WHERE c.doc_id <> a.query_id),
-      r AS (
-        SELECT query_id,
-               CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-                 ORDER BY dist, cand_id) AS BIGINT) AS mm_rank,
-               cand_id, dist
-        FROM scored)
-      SELECT query_id, mm_rank, cand_id, dist FROM r
-      WHERE mm_rank <= 3
-      ORDER BY query_id, mm_rank"""))
+    (s, dir) => MultimodalQueries.servingTopK(s, dir, "image", lane = Some(0), k = 3),
+    Some(MultimodalQueries.topkSql("image", lane = Some(0), k = 3)))
 
   /** Online AUDIO fingerprint serving — the streaming twin of
     * mm_afp_topk and the audio mirror of st_phash_serve: every audio
     * document whose doc_id ends in 1 arrives as a QUERY and probes the
-    * STATIC corpus fingerprint table for its 3 nearest neighbors by
-    * Hamming distance over the packed 32-bit halves. Stateless per batch
-    * (broadcast arriving rows, two codegen hamming_distance calls,
-    * per-query group-limit), so the identical plan runs under
-    * foreachBatch; StreamingSpec pins streaming == batch across a
-    * two-batch split. 100 TB: label-once/serve-many over the persisted
-    * fingerprint artifact. */
+    * STATIC corpus fingerprint table for its 3 nearest neighbors. Same
+    * probe, same foreachBatch == batch argument. */
   val stAfpServe = GraftQuery(
     "st_afp_serve",
-    (s, dir) => {
-      import s.implicits._
-      // persisted artifact, parallel file layout (st_phash_serve note)
-      val hv = MultimodalQueries.afpHalves(s, dir).cache()
-      val corpus = hv.filter($"doc_id" % 10 =!= 1)
-      val arriving = hv.filter($"doc_id" % 10 === 1)
-        .select($"doc_id".as("query_id"), $"h1".as("q1"), $"h2".as("q2"))
-      MultimodalQueries.phashProbe(s, corpus, arriving, topK = 3)
-    },
-    Some(s"""
-      WITH ${MultimodalQueries.afpHvCteSql},
-      corpus AS (SELECT * FROM hv WHERE doc_id % 10 <> 1),
-      arr AS (SELECT doc_id AS query_id, h1 AS q1, h2 AS q2
-              FROM hv WHERE doc_id % 10 = 1),
-      scored AS (
-        SELECT a.query_id, c.doc_id AS cand_id,
-               CAST(BIT_COUNT(XOR(a.q1, c.h1)) + BIT_COUNT(XOR(a.q2, c.h2))
-                 AS BIGINT) AS dist
-        FROM corpus c CROSS JOIN arr a WHERE c.doc_id <> a.query_id),
-      r AS (
-        SELECT query_id,
-               CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-                 ORDER BY dist, cand_id) AS BIGINT) AS mm_rank,
-               cand_id, dist
-        FROM scored)
-      SELECT query_id, mm_rank, cand_id, dist FROM r
-      WHERE mm_rank <= 3
-      ORDER BY query_id, mm_rank"""))
+    (s, dir) => MultimodalQueries.servingTopK(s, dir, "audio", lane = Some(1), k = 3),
+    Some(MultimodalQueries.topkSql("audio", lane = Some(1), k = 3)))
 
   /** Online VIDEO signature serving — completes the streaming serving
     * matrix (image st_phash_serve, audio st_afp_serve, video here):
     * every video whose doc_id ends in 2 arrives as a QUERY and probes
-    * the STATIC corpus signature table for its 3 nearest neighbors by
-    * Hamming distance over the packed halves. Stateless per batch, same
-    * foreachBatch == batch argument as its siblings. */
+    * the STATIC corpus signature table for its 3 nearest neighbors. The
+    * brute probe's parallelism is the corpus side's partition count (sf1
+    * r11: 35 s near-serial -> 3 s parallel), which the persisted
+    * artifact's parallel file layout supplies. */
   val stVsigServe = GraftQuery(
     "st_vsig_serve",
-    (s, dir) => {
-      import s.implicits._
-      // the brute probe's parallelism is the STREAMED (corpus) side's
-      // partition count (sf1 r11: 35 s near-serial -> 3 s parallel); the
-      // persisted vsig artifact is WRITTEN with parallel file layout, so
-      // the probe inherits it without a per-query repartition exchange.
-      val hv = MultimodalQueries.vsigTable(s, dir)
-        .select($"doc_id", $"h1", $"h2").cache()
-      val corpus = hv.filter($"doc_id" % 10 =!= 2)
-      val arriving = hv.filter($"doc_id" % 10 === 2)
-        .select($"doc_id".as("query_id"), $"h1".as("q1"), $"h2".as("q2"))
-      MultimodalQueries.phashProbe(s, corpus, arriving, topK = 3)
-    },
-    Some(s"""
-      WITH ${MultimodalQueries.vsigHvCteSql},
-      corpus AS (SELECT * FROM hv WHERE doc_id % 10 <> 2),
-      arr AS (SELECT doc_id AS query_id, h1 AS q1, h2 AS q2
-              FROM hv WHERE doc_id % 10 = 2),
-      scored AS (
-        SELECT a.query_id, c.doc_id AS cand_id,
-               CAST(BIT_COUNT(XOR(a.q1, c.h1)) + BIT_COUNT(XOR(a.q2, c.h2))
-                 AS BIGINT) AS dist
-        FROM corpus c CROSS JOIN arr a WHERE c.doc_id <> a.query_id),
-      r AS (
-        SELECT query_id,
-               CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-                 ORDER BY dist, cand_id) AS BIGINT) AS mm_rank,
-               cand_id, dist
-        FROM scored)
-      SELECT query_id, mm_rank, cand_id, dist FROM r
-      WHERE mm_rank <= 3
-      ORDER BY query_id, mm_rank"""))
+    (s, dir) => MultimodalQueries.servingTopK(s, dir, "video", lane = Some(2), k = 3),
+    Some(MultimodalQueries.topkSql("video", lane = Some(2), k = 3)))
 
   /** The SEMANTIC ingest gate — the serving twin of dd_semantic_dedup
     * and the third admission stage after st_curation_gate's quality

@@ -4,6 +4,7 @@ import java.util
 
 import scala.jdk.CollectionConverters._
 
+import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.broadcast.Broadcast
@@ -75,15 +76,13 @@ final class PcapTable(schema: StructType, options: CaseInsensitiveStringMap)
 object PcapTable {
   /** Resolve `path`/`paths` options, expanding Hadoop globs and
     * directories — closes the reference's single-local-file limitation. */
-  def paths(options: CaseInsensitiveStringMap): Seq[String] = {
-    val raw: Seq[String] =
-      Option(options.get("paths")).map { js =>
-        // simple JSON array of strings as produced by DataFrameReader
-        js.stripPrefix("[").stripSuffix("]").split(",")
-          .map(_.trim.stripPrefix("\"").stripSuffix("\"")).filter(_.nonEmpty).toSeq
-      }.getOrElse(Option(options.get("path")).toSeq)
-    raw
-  }
+  def paths(options: CaseInsensitiveStringMap): Seq[String] =
+    Option(options.get("paths")) match {
+      // DataFrameReader's JSON array of strings: a comma inside a path
+      // is part of that path
+      case Some(js) => new ObjectMapper().readValue(js, classOf[Array[String]]).toSeq.filter(_.nonEmpty)
+      case None => Option(options.get("path")).toSeq
+    }
 
   /** The session's Hadoop conf (its `spark.hadoop.*` and filesystem
     * settings) plus the read options, as one broadcast for the readers. */

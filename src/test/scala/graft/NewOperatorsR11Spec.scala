@@ -41,7 +41,6 @@ class NewOperatorsR11Spec extends SparkSpec {
 
   test("video signature: bands are essence byte sums; a 2-bit-near pair survives the band join") {
     import spark.implicits._
-    import org.apache.spark.sql.functions._
     // two AVI essences differing in ONE byte: band sums 1625 vs 1626 in
     // band 3 (xor = 0x3, 2 bits) — a genuine near-dup the pigeonhole
     // band join must find; a third, far essence must not pair
@@ -57,19 +56,9 @@ class NewOperatorsR11Spec extends SparkSpec {
     assert(fps.map(_.doc_id).toSeq === Seq(1L, 2L, 3L))
     assert(fps(0).b0 === 25L * 65 % 65536)
     assert(fps(1).b3 === (24L * 65 + 66) % 65536)
-    // replicate mm_video_neardup's banded join on this tiny set
+    // mm_video_neardup's band matcher on this tiny set
     val fpDf = fps.toSeq.toDF()
-    val banded = fpDf.select($"doc_id", $"b0", $"b1", $"b2", $"b3",
-      posexplode(array($"b0", $"b1", $"b2", $"b3")).as(Seq("blk", "key")))
-    val a = banded.select($"blk", $"key", $"doc_id".as("doc_a"),
-      $"b0".as("a0"), $"b1".as("a1"), $"b2".as("a2"), $"b3".as("a3"))
-    val b = banded.select($"blk", $"key", $"doc_id".as("doc_b"),
-      $"b0".as("c0"), $"b1".as("c1"), $"b2".as("c2"), $"b3".as("c3"))
-    val pairs = a.join(b, Seq("blk", "key")).filter($"doc_a" < $"doc_b")
-      .select($"doc_a", $"doc_b",
-        expr("CAST(bit_count(a0 ^ c0) + bit_count(a1 ^ c1) + " +
-          "bit_count(a2 ^ c2) + bit_count(a3 ^ c3) AS BIGINT)").as("dist"))
-      .distinct().filter($"dist" <= 3L)
+    val pairs = MultimodalQueries.bandMatch(fpDf, fpDf).filter($"doc_id" < $"doc_b")
       .as[(Long, Long, Long)].collect().toSeq
     assert(pairs === Seq((1L, 2L, 2L)))
   }
@@ -119,21 +108,44 @@ class NewOperatorsR11Spec extends SparkSpec {
     assert(acc.sortBy(key).toSeq === (batch ++ batch).sortBy(key))
   }
 
-  test("mm_audio_fingerprint: pigeonhole band join has no false negatives vs all-pairs") {
-    import spark.implicits._
-    // ground truth: brute-force all-pairs Hamming <= 3 over the fingerprints
-    val media = Media.synthesize(graft.api.Tables.load(spark, sfDir, "documents"))
-    val fps = Media.audioFingerprints(spark, media).collect()
-    val truth = (for {
-      a <- fps; b <- fps
-      if a.doc_id < b.doc_id
-      d = java.lang.Long.bitCount(a.b0 ^ b.b0) + java.lang.Long.bitCount(a.b1 ^ b.b1) +
-        java.lang.Long.bitCount(a.b2 ^ b.b2) + java.lang.Long.bitCount(a.b3 ^ b.b3)
+  /** Brute-force all-pairs Hamming <= 3 over `(doc_id, bands)`. */
+  private def allPairs(fps: Seq[(Long, Seq[Long])]): Seq[(Long, Long, Long)] =
+    (for {
+      (i, a) <- fps; (j, b) <- fps if i < j
+      d = a.zip(b).map { case (x, y) => java.lang.Long.bitCount(x ^ y) }.sum
       if d <= 3
-    } yield (a.doc_id, b.doc_id, d.toLong)).sortBy(p => (p._1, p._2))
-    val got = MultimodalQueries.mmAudioFingerprint.fn(spark, sfDir)
-      .as[(Long, Long, Long)].collect().toSeq
-    assert(got === truth.toSeq)
-    assert(truth.nonEmpty) // the sf0.001 corpus has at least one near-dup pair
-  }
+    } yield (i, j, d.toLong)).sortBy(p => (p._1, p._2))
+
+  for ((query, modality) <- Seq("mm_phash_neardup" -> "image",
+      "mm_audio_fingerprint" -> "audio", "mm_video_neardup" -> "video"))
+    test(s"$query: pigeonhole band join has no false negatives vs all-pairs") {
+      import spark.implicits._
+      // the fingerprints the query decodes, as (doc_id, b0..b3)
+      val media = Media.synthesize(graft.api.Tables.load(spark, sfDir, "documents"))
+      val fp = (modality match {
+        case "image" => MultimodalQueries.phashBands(MultimodalQueries.mmPhash.fn(spark, sfDir))
+        case "audio" => Media.audioFingerprints(spark, media).toDF()
+        case "video" => Media.videoSignatures(spark, media).toDF()
+      }).select("doc_id", "b0", "b1", "b2", "b3")
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.as[(Long, Long, Long, Long, Long)].collect().toSeq
+          .map { case (id, b0, b1, b2, b3) => (id, Seq(b0, b1, b2, b3)) }
+      val fps = rows(fp)
+      val truth = allPairs(fps)
+      val got = SparkEntry.queries(query)(spark, sfDir).as[(Long, Long, Long)].collect().toSeq
+      assert(got === truth)
+      // sf0.001 has image and audio near-dup pairs; its video signatures
+      // are all more than 3 bits apart
+      if (modality != "video") assert(truth.nonEmpty)
+      // the matcher over the corpus plus copies 1-3 bits away, one flipped
+      // bit in each of the first 1-3 bands: every copy must pair
+      val copies = fps.map { case (id, b) => (id + 1000000L, b.indices.map(k =>
+        if (k <= id % 3) b(k) ^ (1L << ((id + 5 * k) % 16)) else b(k))) }
+      val both = (fps ++ copies).map { case (id, b) => (id, b(0), b(1), b(2), b(3)) }
+        .toDF("doc_id", "b0", "b1", "b2", "b3")
+      val matched = MultimodalQueries.bandMatch(both, both).filter($"doc_id" < $"doc_b")
+        .orderBy("doc_id", "doc_b").as[(Long, Long, Long)].collect().toSeq
+      assert(matched === allPairs(fps ++ copies))
+      assert(matched.size >= fps.size)
+    }
 }

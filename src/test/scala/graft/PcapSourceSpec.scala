@@ -137,6 +137,16 @@ class PcapSourceSpec extends SparkSpec {
     assert(df.rdd.getNumPartitions === 2)
   }
 
+  test("multi-path load keeps a path with a comma in it") {
+    val root = java.nio.file.Files.createTempDirectory("pcappaths")
+    val comma = java.nio.file.Files.createDirectories(root.resolve("a,b")).resolve("x.pcap")
+    val plain = root.resolve("y.pcap")
+    java.nio.file.Files.copy(java.nio.file.Paths.get(fixPcap), comma)
+    java.nio.file.Files.copy(java.nio.file.Paths.get(fixPcap), plain)
+    val df = spark.read.format("pcap").load(comma.toString, plain.toString)
+    assert(df.count() === 970)
+  }
+
   test("SQL table function: SELECT * FROM read_pcap(...)") {
     val n = spark.sql(s"SELECT count(*) AS n FROM read_pcap('$fixPcap')")
       .collect()(0).getAs[Long]("n")

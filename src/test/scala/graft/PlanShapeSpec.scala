@@ -189,6 +189,27 @@ class PlanShapeSpec extends SparkSpec {
     }
   }
 
+  test("image fingerprint family: banded equi-join for pairs and admission, broadcast probe + group-limit for serving") {
+    // near-dup pairs and admission: the candidate join must be the (blk,
+    // key) hash equi-join over exploded bands, never a cartesian over
+    // fingerprints
+    for (pq <- Seq("mm_phash_neardup", "st_image_admission")) {
+      val pairs = plan(pq)
+      assert(!pairs.contains("CartesianProduct"), pairs)
+      assert(pairs.contains("Generate posexplode"), pairs)
+    }
+    // serving lanes: broadcast query arm, both half-distances inside the
+    // codegen hamming_distance expression (no UDF), per-query
+    // WindowGroupLimit instead of a global sort
+    for (q <- Seq("mm_phash_topk", "st_phash_serve")) {
+      val p = plan(q)
+      assert(p.contains("BroadcastHashJoin") || p.contains("BroadcastNestedLoopJoin"), p)
+      assert(!p.contains("CartesianProduct"), p)
+      assert(p.contains("hamming_distance"), p)
+      assert(p.contains("WindowGroupLimit"), p)
+    }
+  }
+
   test("pcap ingest admission: broadcast Bloom word map, no shuffle on the arriving probe") {
     val p = plan("pcap_ingest_admission")
     assert(p.contains("BroadcastNestedLoopJoin") || p.contains("BroadcastExchange"), p)

@@ -47,6 +47,21 @@ class RunnerSpec extends SparkSpec {
     } finally sc.removeSparkListener(metrics)
   }
 
+  test("stages are named by their operators, not by the AQE future's call site") {
+    val metrics = new StageMetricsListener
+    val sc = spark.sparkContext
+    sc.addSparkListener(metrics)
+    val q40 = SparkEntry.registry.find(_.name == "q40_window_distribution").get
+    try {
+      assert(Runner.run(spark, q40, sfDir, Runner.noop, "runner-spec-names").isRight)
+      Runner.drain(sc)
+      val rows = metrics.stages("runner-spec-names")
+      assert(rows.nonEmpty)
+      rows.foreach(r => assert(!r.name.contains("CompletableFuture"), r.name))
+      assert(rows.exists(_.name.contains("Exchange")), rows.map(_.name))
+    } finally sc.removeSparkListener(metrics)
+  }
+
   private val names = SparkEntry.registry.map(_.name)
   // as long as Bench's default sf dir
   private val sf = "/data/testdata/sf0.1"

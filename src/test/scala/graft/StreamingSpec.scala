@@ -762,7 +762,8 @@ class StreamingSpec extends SparkSpec {
   test("online pHash serving: foreachBatch streaming result equals batch") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val hv = graft.queries.MultimodalQueries.phashHalves(spark, sfDir)
+    val hv = graft.queries.MultimodalQueries.halves(
+      graft.queries.MultimodalQueries.fingerprints(spark, sfDir, "image"))
     val corpus = hv.filter(col("doc_id") % 10 =!= 0).cache()
     val queries = hv.filter(col("doc_id") % 10 === 0)
       .as[(Long, Long, Long)].collect().toSeq
@@ -778,7 +779,7 @@ class StreamingSpec extends SparkSpec {
     val q = stream.toDF().toDF("query_id", "q1", "q2")
       .writeStream.foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
         val res = graft.queries.MultimodalQueries
-          .phashProbe(spark, corpus, b, topK = 3).collect()
+          .hammingTopK(spark, corpus, b, topK = 3).collect()
         acc.synchronized { acc ++= res.map(_.toSeq) }
         ()
       }.start()
@@ -796,7 +797,8 @@ class StreamingSpec extends SparkSpec {
   test("online audio fingerprint serving: foreachBatch streaming result equals batch") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val hv = graft.queries.MultimodalQueries.afpHalves(spark, sfDir)
+    val hv = graft.queries.MultimodalQueries.halves(
+      graft.queries.MultimodalQueries.fingerprints(spark, sfDir, "audio"))
     val corpus = hv.filter(col("doc_id") % 10 =!= 1).cache()
     val queries = hv.filter(col("doc_id") % 10 === 1)
       .as[(Long, Long, Long)].collect().toSeq
@@ -808,7 +810,7 @@ class StreamingSpec extends SparkSpec {
     val q = stream.toDF().toDF("query_id", "q1", "q2")
       .writeStream.foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
         val res = graft.queries.MultimodalQueries
-          .phashProbe(spark, corpus, b, topK = 3).collect()
+          .hammingTopK(spark, corpus, b, topK = 3).collect()
         acc.synchronized { acc ++= res.map(_.toSeq) }
         ()
       }.start()
@@ -828,8 +830,8 @@ class StreamingSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val media = graft.multimodal.Media.synthesize(
       graft.api.Tables.load(spark, sfDir, "documents"))
-    val hv = graft.multimodal.Media.videoSignatures(spark, media).toDF()
-      .select(col("doc_id"), col("h1"), col("h2"))
+    val hv = graft.queries.MultimodalQueries.halves(
+      graft.multimodal.Media.videoSignatures(spark, media).toDF())
     val corpus = hv.filter(col("doc_id") % 10 =!= 2).cache()
     val queries = hv.filter(col("doc_id") % 10 === 2)
       .as[(Long, Long, Long)].collect().toSeq
@@ -841,7 +843,7 @@ class StreamingSpec extends SparkSpec {
     val q = stream.toDF().toDF("query_id", "q1", "q2")
       .writeStream.foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
         val res = graft.queries.MultimodalQueries
-          .phashProbe(spark, corpus, b, topK = 3).collect()
+          .hammingTopK(spark, corpus, b, topK = 3).collect()
         acc.synchronized { acc ++= res.map(_.toSeq) }
         ()
       }.start()
@@ -859,7 +861,7 @@ class StreamingSpec extends SparkSpec {
   test("image admission: foreachBatch streaming verdicts equal the batch gate") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    // static artifacts fitted ONCE: decoded dimensions + corpus blocks
+    // static artifacts fitted ONCE: decoded dimensions + corpus fingerprints
     val media = graft.multimodal.Media.synthesize(
       graft.api.Tables.load(spark, sfDir, "documents"))
     val dims = graft.multimodal.Media.extractMeta(spark, media).toDF()
@@ -867,12 +869,8 @@ class StreamingSpec extends SparkSpec {
       .select(col("doc_id"), col("width"), col("height")).cache()
     val ph = graft.queries.MultimodalQueries.mmPhash.fn(spark, sfDir)
       .select(col("doc_id"), col("phash")).cache()
-    val corpusBlocks = ph.filter(col("doc_id") % 10 =!= 0)
-      .select(col("doc_id"), col("phash"),
-        posexplode(array((0 until 4).map(k =>
-          substring(col("phash"), 1 + 4 * k, 4)): _*)).as(Seq("blk", "key")))
-      .select(col("blk"), col("key"), col("doc_id").as("doc_b"),
-        col("phash").as("ph_b")).cache()
+    val corpus = graft.queries.MultimodalQueries.phashBands(ph)
+      .filter(col("doc_id") % 10 =!= 0).cache()
     val queries = ph.filter(col("doc_id") % 10 === 0)
       .as[(Long, String)].collect().toSeq
     assert(queries.nonEmpty)
@@ -883,7 +881,8 @@ class StreamingSpec extends SparkSpec {
     val q = stream.toDF().toDF("doc_id", "phash")
       .writeStream.foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
         val res = graft.queries.MultimodalQueries
-          .imageAdmission(spark, dims, corpusBlocks, b).collect()
+          .imageAdmission(spark, dims, corpus,
+            graft.queries.MultimodalQueries.phashBands(b)).collect()
         acc.synchronized { acc ++= res.map(_.toSeq) }
         ()
       }.start()
