@@ -7,9 +7,11 @@ import org.apache.spark.metrics.source.CodegenMetrics
   * an isolated run after a warm run: task count, summed executor run time,
   * GC time, records/bytes read and written, shuffle read/write, and the
   * operation scopes of the stage's RDDs; the PROFILE line also carries
-  * the classes the warm run compiled (`codegen=`). The warm run also writes
-  * its `.explain("formatted")` (the plan before execution, which the
-  * measured run, built by the same code, starts from) to
+  * the classes the warm run compiled (`codegen=`). A PREP line first
+  * profiles the artifact build the same way (wall, task time, shuffle
+  * write and the top stages of the `artifact_prep` group). The warm run
+  * also writes its `.explain("formatted")` (the plan before execution,
+  * which the measured run, built by the same code, starts from) to
   * `<out>/<name><suffix>.txt`, so the before/after plan pairs under
   * `plans/rN/` come from the exact code measured. Session confs for an
   * experiment are JVM system properties, which `SparkConf` loads:
@@ -36,8 +38,11 @@ object ProfileQ {
     val spark = GraftSession()
     val metrics = new StageMetricsListener
     spark.sparkContext.addSparkListener(metrics)
-    // artifacts out of the way so stages measure the operator (Bench shape)
-    Runner.prepare(spark, dir, "profile")
+    // artifacts out of the way so stages measure the operator (Bench shape);
+    // the PREP line profiles their build, the `artifact_prep` group
+    val prepWall = Runner.prepare(spark, dir, "profile")
+    Runner.drain(spark.sparkContext)
+    report(f"PREP wall=$prepWall%.2f s", metrics.stages("artifact_prep"))
 
     for (name <- names.distinct; q <- SparkEntry.registry.find(_.name == name)) {
       // warm run (fills codegen caches), which also writes its plan, then
@@ -60,18 +65,24 @@ object ProfileQ {
         case Left(e) => System.err.println(s"[profile] $name failed: ${e.getMessage}")
         case Right(wall) =>
           Runner.drain(spark.sparkContext)
-          val rows = metrics.stages(name).sortBy(-_.runMs)
-          println(f"PROFILE $name wall=$wall%.2f s stages=${rows.size} " +
-            f"taskTime=${rows.map(_.runMs).sum / 1e3}%.1f s gc=${rows.map(_.gcMs).sum / 1e3}%.1f s " +
-            s"codegen=$codegen")
-          rows.take(30).foreach { r =>
-            println(f"  stage ${r.id}%4d run=${r.runMs / 1e3}%7.2fs gc=${r.gcMs / 1e3}%5.2fs " +
-              f"tasks=${r.tasks}%3d in=${r.recordsIn}%9d " +
-              f"shufR=${r.shuffleReadRecords}%9d/${r.shuffleReadBytes / 1e6}%7.1fMB " +
-              f"shufW=${r.shuffleWriteRecords}%9d/${r.shuffleWriteBytes / 1e6}%7.1fMB  ${r.name.take(70)}")
-          }
+          report(f"PROFILE $name wall=$wall%.2f s", metrics.stages(name), s" codegen=$codegen")
       }
     }
     spark.stop()
+  }
+
+  /** One summary line (`head`, stage count, task, GC and shuffle-write
+    * totals, `tail`), then the 30 stages with the most task time. */
+  private def report(head: String, stages: Seq[StageRow], tail: String = ""): Unit = {
+    val rows = stages.sortBy(-_.runMs)
+    println(f"$head stages=${rows.size} " +
+      f"taskTime=${rows.map(_.runMs).sum / 1e3}%.1f s gc=${rows.map(_.gcMs).sum / 1e3}%.1f s " +
+      f"shufW=${rows.map(_.shuffleWriteBytes).sum / 1e6}%.3f MB" + tail)
+    rows.take(30).foreach { r =>
+      println(f"  stage ${r.id}%4d run=${r.runMs / 1e3}%7.2fs gc=${r.gcMs / 1e3}%5.2fs " +
+        f"tasks=${r.tasks}%3d in=${r.recordsIn}%9d " +
+        f"shufR=${r.shuffleReadRecords}%9d/${r.shuffleReadBytes / 1e6}%7.1fMB " +
+        f"shufW=${r.shuffleWriteRecords}%9d/${r.shuffleWriteBytes / 1e6}%7.1fMB  ${r.name.take(70)}")
+    }
   }
 }

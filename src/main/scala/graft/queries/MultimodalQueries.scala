@@ -209,6 +209,22 @@ object MultimodalQueries {
       GROUP BY 1
       ORDER BY orientation"""))
 
+  /** `(doc_id, codec, phash)` of every image whose essence a walker
+    * recovers, in no particular order: [[mmPhash]] sorts it for output,
+    * while the pHash artifact and [[mmPhashNeardup]] need no order (a
+    * sort would add a range exchange and its bound-sampling job). */
+  private def phashes(s: SparkSession, dir: String): DataFrame = {
+    import s.implicits._
+    Media.synthesize(Tables.load(s, dir, "documents"))
+      .filter($"media_type" === "image")
+      .as[(Long, String, Array[Byte])]
+      .mapPartitions(_.flatMap { case (id, _, payload) =>
+        val h = Media.aHash64(Media.imageEssence(payload))
+        if (h == null) None else Some((id, Media.codecOf(payload), h))
+      })
+      .toDF("doc_id", "codec", "phash")
+  }
+
   /** Perceptual hashing over the image subset: Spark walks the REAL
     * container (PNG IDAT chunk iteration / JPEG marker-segment walk /
     * GIF descriptor+trailer bounds — [[Media.imageEssence]]) to recover
@@ -222,18 +238,7 @@ object MultimodalQueries {
     * drop out (the documented boundary). */
   val mmPhash = GraftQuery(
     "mm_phash",
-    (s, dir) => {
-      import s.implicits._
-      val media = Media.synthesize(Tables.load(s, dir, "documents"))
-      media.filter($"media_type" === "image")
-        .as[(Long, String, Array[Byte])]
-        .mapPartitions(_.flatMap { case (id, _, payload) =>
-          val h = Media.aHash64(Media.imageEssence(payload))
-          if (h == null) None else Some((id, Media.codecOf(payload), h))
-        })
-        .toDF("doc_id", "codec", "phash")
-        .orderBy($"doc_id")
-    },
+    (s, dir) => phashes(s, dir).orderBy(col("doc_id")),
     Some(s"""
       WITH ${fpCteSql("image")}
       SELECT doc_id,
@@ -383,7 +388,7 @@ object MultimodalQueries {
     * on candidates. */
   val mmPhashNeardup = GraftQuery(
     "mm_phash_neardup",
-    (s, dir) => neardupPairs(phashBands(mmPhash.fn(s, dir)).cache()),
+    (s, dir) => neardupPairs(phashBands(phashes(s, dir)).cache()),
     Some(neardupPairsSql("image")))
 
   /** pHash top-k SERVING (tier: multimodal×ANN crossover): for the three
@@ -424,7 +429,7 @@ object MultimodalQueries {
 
   private[queries] def phashTable(s: SparkSession, dir: String): DataFrame =
     mediaTable(s, dir, "phash")(
-      mmPhash.fn(s, dir).select(col("doc_id"), col("phash")))
+      phashes(s, dir).select(col("doc_id"), col("phash")))
 
   private[queries] def afpTable(s: SparkSession, dir: String): DataFrame =
     mediaTable(s, dir, "afp")(
@@ -960,7 +965,7 @@ object MultimodalQueries {
         .groupBy(org.apache.spark.sql.functions.col("a.vec_id").as("doc_id"))
         .agg(count(lit(1)).as("n_sem_dups"))
       // media tier: per-modality banded near-dup counts
-      val fps = mediaFingerprints(s, dir).cache()
+      val fps = mediaFingerprints(s, dir)
       val mediaHits = bandMatch(fps.filter($"doc_id" % 10 === 7),
         fps.filter($"doc_id" % 10 =!= 7), Seq("modality"))
         .groupBy($"doc_id").agg(count(lit(1)).as("n_media_dups"))

@@ -198,6 +198,9 @@ class PlanShapeSpec extends SparkSpec {
       assert(!pairs.contains("CartesianProduct"), pairs)
       assert(pairs.contains("Generate posexplode"), pairs)
     }
+    // the pHashes feed the band join unsorted: a sort on doc_id would add
+    // a range exchange and its bound-sampling job that nothing reads
+    assert(!plan("mm_phash_neardup").contains("rangepartitioning(doc_id"))
     // serving lanes: broadcast query arm, both half-distances inside the
     // codegen hamming_distance expression (no UDF), per-query
     // WindowGroupLimit instead of a global sort
@@ -483,6 +486,38 @@ class PlanShapeSpec extends SparkSpec {
       lines(i).contains("Exchange hashpartitioning(") && lines(i).contains("pid#"))
     assert(onPid.nonEmpty && onPid.forall(i => lines(i + 1).contains("partial_count")),
       lines.mkString("\n"))
+  }
+
+  test("gr_link_predict broadcasts only its 100-row top-k, at sf0.001 and sf0.01") {
+    import org.apache.spark.sql.execution.TakeOrderedAndProjectExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+    object stages extends AdaptiveSparkPlanHelper
+    for (dir <- Seq(sfDir, sfDir.stripSuffix("sf0.001") + "sf0.01")) {
+      val df = SparkEntry.queries("gr_link_predict")(spark, dir)
+      df.collect()
+      val broadcasts = stages.collectWithSubqueries(df.queryExecution.executedPlan) {
+        case b: BroadcastExchangeExec => b
+      }
+      assert(broadcasts.nonEmpty, s"$dir: the top-k must broadcast into the degree joins")
+      // a supplier-degree side also reads at most 100 rows at sf0.01 (it
+      // has 100 suppliers), so the side must also be bounded by the top-k
+      for (b <- broadcasts) {
+        val rows = b.metrics("numOutputRows").value
+        assert(rows <= 100, s"$dir: a broadcast of $rows rows")
+        assert(stages.find(b.child)(_.isInstanceOf[TakeOrderedAndProjectExec]).isDefined,
+          s"$dir: a broadcast side that grows with the data\n${b.child}")
+      }
+    }
+  }
+
+  test("gr_triangles and gr_link_predict read the co-purchase table: no Generate, no join on cust") {
+    for (q <- Seq("gr_triangles", "gr_link_predict")) {
+      val lines = plan(q).linesIterator.toSeq
+      assert(!lines.exists(_.contains("Generate")), s"$q:\n${lines.mkString("\n")}")
+      assert(!lines.exists(l => l.contains("Join") && l.contains("cust#")),
+        s"$q: supplier pairs must come from the persisted table\n${lines.mkString("\n")}")
+    }
   }
 
   test("tx_c4_filter is shuffle-free until the output sort") {

@@ -53,6 +53,29 @@ class SessionStateSpec extends SparkSpec {
     }
   }
 
+  /** The queries of the `sql_pipeline` benchmark workload. */
+  private val pipeline = Seq(
+    "q06_multi_join", "q13_window_running", "q38b_window_range_supp",
+    "q40_window_distribution", "q41_multi_distinct", "q63_range_join_auto",
+    "dd_lsh_eval", "dd_minhash_lsh_pairs", "dd_simjoin_auto", "tx_repetition",
+    "sim_ann_ivf_persisted", "sim_ann_pq",
+    "gr_triangles", "gr_link_predict", "gr_pagerank", "mm_admission_funnel")
+
+  test("the sql_pipeline queries leave no cached relation behind") {
+    // a cached frame outlives its run: a later run of any query that
+    // reads the same relation is then served from memory
+    val cache = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    spark.catalog.clearCache()
+    for (name <- pipeline) {
+      val q = SparkEntry.registry.find(_.name == name).get
+      val ran = Runner.run(spark, q, sfDir, Runner.noop, s"session-state-$name",
+        clearCache = false)
+      assert(ran.isRight, s"$name failed: $ran")
+      assert(cache.isEmpty, s"$name left a cached relation behind")
+    }
+  }
+
   test("plans and results do not depend on the order queries run in") {
     val mixed = Seq("q63_range_join_auto", "sim_ann_pq", "dd_simjoin_auto",
       "q14_window_lag", "mm_phash_topk", "sim_ann_lsh")
